@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import scala.util.control.NonFatal
 
 /** Benchmark main (driver contract): runs every SparkEntry query against
   * SPARK_GRAFT_SF_DIR and prints ONE JSON line with per-query seconds,
@@ -17,46 +17,8 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val warmDir = sys.env.getOrElse("SPARK_GRAFT_WARM_DIR", "/root/testdata/sf0.001")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      // Tiny-task hygiene (guide §2.2, r22): let AQE coalesce shuffle
-      // partitions to the advisory size instead of maximizing
-      // parallelism. With shuffle.partitions = cpus and sub-MB stage
-      // outputs, parallelism-first keeps ~cpus near-empty partitions
-      // per shuffle, so the multi-stage pipelines (q117/q120/q121, ~40
-      // jobs each) schedule thousands of <10 ms tasks; under CPU
-      // contention (the driver runs other work on the same box) that
-      // scheduling overhead BLEW UP superlinearly — measured with a
-      // 32-thread hog: q121 16.6 s -> 8.8 s, q117 9.9 s -> 4.6 s, warm
-      // pass 39 s -> 17.5 s with this setting; a wash (±5%) on an idle
-      // box. At 100 TB the advisory-size posture is the documented
-      // production recommendation (partitions coalesce to ~64 MB
-      // either way); env override keeps it a parameter, not a local
-      // tune.
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        sys.env.getOrElse("SPARK_GRAFT_PARALLELISM_FIRST", "false"))
-      // Advisory size for the coalescer (and every other AQE size
-      // decision). Spark's 64 MB default serializes CPU-DENSE stages
-      // whose bytes are small — measured: q250's inline
-      // positional-slice derivation (arrays explode into lots of CPU,
-      // ~10 MB of shuffle) went 1.38 s -> 2.15 s when 64 MB coalescing
-      // collapsed it to 1-2 tasks; 1 MB restored it (1.11 s) but gave
-      // back half the pipelines' contention win (q121 11.4 s vs 7.0 s
-      // under a 32-thread hog). 8 MB measured best-or-near-best in
-      // BOTH regimes (idle 4-query sum 10.7 s vs 16.1 s at the old
-      // conf; hog 12.2 s vs 42 s) — full matrix in
-      // OPTIMIZATION_r22.md. At cluster scale this knob should ride
-      // data density (bytes per CPU-second, guide §2.2), hence the
-      // env parameter; 8 MB is the LOCAL default tuned for the
-      // bench's CPU-bound, small-byte profile.
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes",
-        sys.env.getOrElse("SPARK_GRAFT_ADVISORY_MB", "8") + "m")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val cpus = Mains.envInt("SPARK_GRAFT_CPUS", 4)
+    val spark = Mains.session(cpus)
     spark.sparkContext.setLogLevel("WARN")
 
     // noop sink: forces full evaluation of every output column (a bare
@@ -72,7 +34,7 @@ object Bench {
         SparkEntry.queries(name)(spark, dir)
           .write.format("noop").mode("overwrite").save()
         None
-      } catch { case t: Throwable => Some(t) }
+      } catch { case NonFatal(t) => Some(t) }
       finally spark.sparkContext.setJobDescription(null)
 
     // cache hygiene (r12 verdict): pipeline entries deliberately leave
@@ -118,8 +80,7 @@ object Bench {
     // two-query profiling session would invert the saving).
     val prewarmThreads =
       if (only.nonEmpty) 1
-      else math.max(1,
-        sys.env.getOrElse("SPARK_GRAFT_PREWARM_THREADS", "4").toInt)
+      else math.max(1, Mains.envInt("SPARK_GRAFT_PREWARM_THREADS", 4))
 
     // warmup: full pass at the small scale factor (codegen compilation,
     // classloading, a cheap preflight that catches a crashing query in
@@ -148,11 +109,10 @@ object Bench {
 
     // best-of-N: single-shot timings on a shared box see multi-second
     // GC/scheduler spikes; the minimum is the steady-state number the
-    // baseline comparison wants. SPARK_GRAFT_BENCH_REPS (alias
-    // SPARK_GRAFT_REPS) raises N; the JSON line carries `reps` so a
-    // reader knows whether contention could have inflated the numbers
-    val reps = math.max(1, sys.env.get("SPARK_GRAFT_BENCH_REPS")
-      .orElse(sys.env.get("SPARK_GRAFT_REPS")).getOrElse("2").toInt)
+    // baseline comparison wants. SPARK_GRAFT_BENCH_REPS raises N; the
+    // JSON line carries `reps` so a reader knows whether contention
+    // could have inflated the numbers
+    val reps = math.max(1, Mains.envInt("SPARK_GRAFT_BENCH_REPS", 2))
     val results = names.map { name =>
       val timings = (1 to reps).map { _ =>
         val t0 = System.nanoTime()
@@ -167,11 +127,11 @@ object Bench {
     // streaming throughput on the same session (r4 verdict task 7: the
     // bench line must carry the streaming numbers every round). A
     // failure here degrades to an error field — batch numbers survive.
-    val streamReplicas = sys.env.getOrElse("SPARK_GRAFT_STREAM_REPLICAS", "10").toInt
+    val streamReplicas = Mains.envInt("SPARK_GRAFT_STREAM_REPLICAS", 10)
     val streaming: Either[Throwable, graft.jobs.StreamBench.Result] =
       if (streamReplicas <= 0) Left(new RuntimeException("disabled"))
       else try Right(graft.jobs.StreamBench.measure(spark, sfDir, streamReplicas))
-      catch { case t: Throwable => Left(t) }
+      catch { case NonFatal(t) => Left(t) }
 
     // ONE compact JSON line. The driver tails a bounded chunk of stdout
     // (r1-r6: the full-name 67-query line overflowed it and "parsed"
@@ -191,9 +151,9 @@ object Bench {
     val streamField = streaming match {
       case Right(r) =>
         s""","streaming":{"stream_events_per_sec":${r.statefulRate},""" +
-          s""""per_core":${r.statefulRate / cpus.toInt},""" +
+          s""""per_core":${r.statefulRate / cpus},""" +
           s""""rocksdb_events_per_sec":${r.rocksRate},""" +
-          s""""per_core_rocksdb":${r.rocksRate / cpus.toInt},""" +
+          s""""per_core_rocksdb":${r.rocksRate / cpus},""" +
           s""""windowed_events_per_sec":${r.windowRate},""" +
           s""""events":${r.events},"dropped_late":${r.dropped},"cores":$cpus}"""
       case Left(t) =>

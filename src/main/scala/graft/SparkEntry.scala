@@ -1,11927 +1,44 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
-import graft.ops._
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.queries._
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
-  *
-  * Each entry in `queries` exercises one operator from SURVEY.md §2 over
-  * the driver's parquet tables; `oracleSql` holds the DuckDB-equivalent
-  * ANSI SQL. Column names and types are aligned on both sides (the
-  * driver's compare sorts columns by name and hashes values). All double
-  * outputs are produced by exact decimal aggregation + round(2) so the
-  * values are bit-identical regardless of partitioning / summation order.
-  *
-  * The `events` table plays the role of the reference's behavior streams
-  * (SURVEY.md §5.3): event_type ∈ {view, click, purchase, signup, error}
-  * maps to pv-views / ad-clicks / pays / order-creates / login-fails, and
-  * the `props` JSON field `k` is the item/ad id.
+/** The query surface: every query the engine answers, each declared
+  * once as a [[Query]] (name, build, check) in its family object under
+  * `graft.queries`. The three name-keyed maps below are views of that
+  * one list, read by the Bench, Verify and Explain mains, the tests and
+  * `perfbench`.
   */
 object SparkEntry {
 
-  /** events with the JSON item id projected out (P1/P5 analogs:
-    * the reference's CSV parse-and-cast map, HotItems.scala:57-67).
+  /** Every query, family by family. */
+  val all: Seq[Query] =
+    CapabilityQueries.all ++ TpchQueries.all ++ ScdQueries.all ++
+      BehaviorQueries.all ++ ProfileQueries.all ++ SketchQueries.all ++
+      DedupQueries.all ++ GraphQueries.all ++ SimilarityQueries.all ++
+      PqQueries.all ++ TextQueries.all ++ SamplingQueries.all ++
+      PipelineQueries.all ++ MultimodalQueries.all ++ SearchQueries.all ++
+      ForgetQueries.all
+
+  /** Each query's build, by name. */
+  val queries: Map[String, (SparkSession, String) => DataFrame] =
+    all.map(q => q.name -> q.build).toMap
+
+  /** The DuckDB oracle SQL of each query that has one, by name; the
+    * Verify main dumps it as `oracle_sql.json`.
     */
-  private def eventsWithItem(s: SparkSession, dir: String): DataFrame =
-    Tables.events(s, dir)
-      .withColumn("item_id", get_json_object(col("props"), "$.k").cast("long"))
+  val oracleSql: Map[String, String] =
+    all.collect { case Query(name, _, Oracle(sql)) => name -> sql }.toMap
 
-  /** Per-user consecutive distinct item transitions — the shared edge
-    * source of the graph family (q208/q225/q226/q227): one
-    * user-partitioned Window, then everything downstream is
-    * edge-scale.
+  /** Each estimate's oracled error-band twin, by name; the Verify main
+    * dumps it as `covered_by.json` next to `oracle_sql.json`, so a
+    * query without an oracle of its own reads as covered, not
+    * unverified.
     */
-  private[graft] def transitionPairs(s: SparkSession, dir: String): DataFrame = {
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
-    eventsWithItem(s, dir)
-      .filter(col("item_id").isNotNull)
-      .select(col("user_id"), col("ts"), col("event_id"), col("item_id"))
-      .withColumn("nxt", lead(col("item_id"), 1).over(w))
-      .filter(col("nxt").isNotNull && col("nxt") =!= col("item_id"))
-  }
-
-  /** The capped serving view over the WRITTEN inverted-index store
-    * ([[Stores.index]]): bucket-file read → zero-Exchange tf-sum merge
-    * → the shared capped read body. The retrieval family's index
-    * source (q203/q206/q207/q223) — postings come off disk, never a
-    * per-query corpus rescan (the store is built once per process;
-    * real engines build it once per ingest, ever).
-    */
-  private def storedIndex(s: SparkSession, dir: String,
-                          maxPostings: Int): DataFrame =
-    Stores.cappedIndex(s, dir, maxPostings)
-
-  /** The merged (src, dst, w) edge view over the WRITTEN edge store
-    * ([[Stores.edges]]) — the graph family's one edge source
-    * (q208/q225/q226/q227/q236/q246/q251): the per-user transition
-    * Window ran once at store build; reads fold src-bucketed count
-    * slices with a zero-Exchange sum.
-    */
-  private def storedEdges(s: SparkSession, dir: String): DataFrame =
-    graft.ops.Graph.edgeMerge(Stores.edges(s, dir))
-
-  /** The phrase/proximity serving view: the positional store
-    * PREFILTERED to the caller's query-token frame (a broadcast
-    * semi-join on token — the bucket scan streams through it) BEFORE
-    * the position-set merge, so the per-query aggregate touches only
-    * the query terms' posting rows, never the whole index. Callers
-    * pass tokens off a persisted term statistic ([[bigramTokens]] for
-    * the two-term reads, [[trigramTerms]] for the k-term ones) —
-    * never a per-query corpus aggregate.
-    */
-  private def storedPositional(s: SparkSession, dir: String,
-                               tokens: DataFrame): DataFrame =
-    TextAnalysis.positionalMergeSlices(
-      Stores.positional(s, dir)
-        .join(broadcast(tokens), Seq("token"), "left_semi"))
-
-  /** The corpus's MinHash band rows off the WRITTEN store
-    * ([[Stores.bands]]) — the near-dup family's serving frame
-    * (q21/q22/q65/q95/q132/q133/q296): the shingle→minhash pipeline
-    * ran once at the store build, never per query.
-    */
-  private def storedBands(s: SparkSession, dir: String): DataFrame =
-    Stores.bands(s, dir)
-      .select(col("doc_id"), col("band_id"), col("band_hash"))
-
-  /** The bigram statistic's distinct tokens — the prefilter frame the
-    * two-term reads pass to [[storedPositional]].
-    */
-  private def bigramTokens(s: SparkSession, dir: String): DataFrame =
-    Stores.topBigram(s, dir)
-      .select(explode(array(col("w1"), col("w2"))).as("token")).distinct()
-
-  /** The trigram statistic as the (ord, token) frame the k-term reads
-    * (q257/q259/q260) consume.
-    */
-  private def trigramTerms(s: SparkSession, dir: String): DataFrame =
-    Stores.topTrigram(s, dir)
-      .select(posexplode(array(col("w1"), col("w2"), col("w3")))
-        .as(Seq("ord", "token")))
-
-  /** The standing erasure request (doc_id % 97 = 0 — the q276/q279
-    * contract) applied through the single-call [[Forget.erase]]
-    * cascade over the WRITTEN stores: every post-forget read
-    * (q286–q291) picks its family's frame off this one derivation, so
-    * the per-family erasure mechanics cannot drift between reads.
-    * Laziness means a read executes only its own family's erasure;
-    * the forgotten texts are ONE request-bounded broadcast semi-join
-    * of the corpus (the q279 content-tombstone derivation).
-    */
-  private def erasedWarehouse(s: SparkSession, dir: String): Forget.Erased = {
-    val ids = Stores.norms(s, dir).filter(col("doc_id") % 97 === 0)
-      .select(col("doc_id"))
-    val forgotten = Tables.documents(s, dir)
-      .join(broadcast(ids), Seq("doc_id"), "left_semi")
-      .select(col("doc_id"), col("text"))
-    Forget.erase(Stores.index(s, dir), Stores.positional(s, dir),
-      Stores.chunkSlices(s, dir), Stores.norms(s, dir),
-      Stores.docMeta(s, dir), Stores.facetIndex(s, dir),
-      Stores.pqCodes(s, dir), Stores.dupMap(s, dir),
-      forgotten, tombSlice = 99L, forgetIds = Some(ids))
-  }
-
-  /** The standing erasure request's POST-FORGET index merges,
-    * materialized once per process (VERDICT r21 item 5): before these,
-    * every forget-family read (q286–q291) re-folded its family's
-    * tombstone merge — the same slice-agnostic tf sum / position union
-    * — per query. The merges derive from [[erasedWarehouse]] (one
-    * erasure code path), so the stored rows are exactly what each
-    * query's inline fold produced; only the request-scale row-erased
-    * families (norms, metadata, facets, codes, dup map — broadcast
-    * anti-joins) still derive inline.
-    */
-  private def erasedIndexMerged(s: SparkSession, dir: String): DataFrame =
-    Stores.materialized(s, dir, "fidxm") {
-      TextAnalysis.indexMergeSlices(erasedWarehouse(s, dir).index)
-    }
-
-  /** The post-forget CAPPED serving index (maxPostings = 1000) — the
-    * shared artifact of the q288/q289 reads: the per-token rank Window
-    * runs once at build, exactly the [[Stores.cappedIndex]] posture
-    * applied to the erased warehouse.
-    */
-  private def erasedIndexCapped(s: SparkSession, dir: String): DataFrame =
-    Stores.materialized(s, dir, "fcidx1000") {
-      TextAnalysis.cappedIndex(erasedIndexMerged(s, dir),
-        maxPostings = 1000)
-    }
-
-  private def erasedChunksMerged(s: SparkSession, dir: String): DataFrame =
-    Stores.materialized(s, dir, "fchm") {
-      TextAnalysis.indexMergeSlices(erasedWarehouse(s, dir).chunks)
-    }
-
-  private def erasedPositionalMerged(s: SparkSession,
-                                     dir: String): DataFrame =
-    Stores.materialized(s, dir, "fpidxm") {
-      TextAnalysis.positionalMergeSlices(erasedWarehouse(s, dir).positional)
-    }
-
-  /** Build the four post-forget materialized merges — the
-    * [[Stores.prewarm]] hook for the erased family (they live here,
-    * not in Stores, because the standing erasure request is this
-    * entry point's contract). Same safety as every prewarm builder:
-    * each build is serve()-locked per table, and the one internal
-    * dependency (capped → merged index) acquires locks in order.
-    */
-  private[graft] def prewarmErased(s: SparkSession, dir: String): Unit = {
-    erasedIndexMerged(s, dir)
-    erasedIndexCapped(s, dir)
-    erasedChunksMerged(s, dir)
-    erasedPositionalMerged(s, dir)
-  }
-
-  /** The corpus's most frequent word n-gram — ONE derivation for the
-    * deterministic query-term statistics (the bigram pair q209/q238
-    * share, the trigram q257 serves): count-desc with full (w1..wn)
-    * lexicographic tie-break so every SF picks the same phrase.
-    */
-  private[graft] def topCorpusNgram(d: DataFrame, n: Int): DataFrame = {
-    require(n >= 2, "an n-gram statistic needs n >= 2")
-    val fields = (1 to n).map(i =>
-      s"element_at(split(text, ' '), i + $i) AS w$i").mkString(", ")
-    d.filter(size(split(col("text"), " ")) >= n)
-      .select(explode(expr(
-        s"transform(sequence(0, size(split(text, ' ')) - $n), " +
-          s"i -> struct($fields))")).as("g"))
-      .groupBy((1 to n).map(i => col(s"g.w$i").as(s"w$i")): _*)
-      .agg(count(lit(1)).as("c"))
-      .orderBy(col("c").desc +: (1 to n).map(i => col(s"w$i").asc): _*)
-      .limit(1)
-      .select((1 to n).map(i => col(s"w$i")): _*)
-  }
-
-  private[graft] def topCorpusBigram(d: DataFrame): DataFrame =
-    topCorpusNgram(d, 2)
-
-  private[graft] def topCorpusTrigram(d: DataFrame): DataFrame =
-    topCorpusNgram(d, 3)
+  val coveredBy: Map[String, String] =
+    all.collect { case Query(name, _, BandTwin(twin)) => name -> twin }.toMap
 
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame =
     queries("q04_hot_items_top5")(spark, "/root/testdata/sf0.001")
-
-  /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-
-    // A3/F2 — hourly PV count (PageView.scala:59-60)
-    "q01_pv_hourly" -> ((s, dir) =>
-      WindowedAgg.tumblingCount(
-        Tables.events(s, dir).filter(col("event_type") === "view"),
-        "ts", "1 hour")),
-
-    // A4 — hourly exact UV (UniqueVisitor.scala:62-83)
-    "q02_uv_hourly" -> ((s, dir) =>
-      WindowedAgg.tumblingDistinct(
-        Tables.events(s, dir).filter(col("event_type") === "view"),
-        "ts", "1 hour", "user_id")),
-
-    // A5 — hourly approx UV via HLL++ (UvWithBloomFilter.scala:103-165);
-    // approximate → no DuckDB oracle (rows-only check)
-    "q03_uv_approx_hourly" -> ((s, dir) =>
-      WindowedAgg.tumblingApproxDistinct(
-        Tables.events(s, dir).filter(col("event_type") === "view"),
-        "ts", "1 hour", "user_id")),
-
-    // A1+T1 — top-5 hot items per sliding 1h/5m window
-    // (HotItems.scala:79-84,132-175)
-    "q04_hot_items_top5" -> ((s, dir) => {
-      val counts = WindowedAgg.slidingCount(
-        eventsWithItem(s, dir).filter(col("event_type") === "view"),
-        "ts", "1 hour", "5 minutes", Seq("item_id"))
-      TopN.perGroup(counts, Seq("window_start"), "cnt", Seq("item_id"), 5)
-        .withColumn("rank", col("rank").cast("long"))
-    }),
-
-    // A6/F3 — keyless sliding marketing total (AppMarketing.scala:38-40);
-    // the reference's dummy-key global agg replaced by keyless aggregation
-    "q05_marketing_total" -> ((s, dir) =>
-      WindowedAgg.slidingCount(
-        Tables.events(s, dir).filter(col("event_type") =!= "error"),
-        "ts", "1 hour", "10 minutes")),
-
-    // A7/P3 — sliding count by channel (AppMarketingByChannel.scala:37-39)
-    "q06_marketing_by_channel" -> ((s, dir) =>
-      WindowedAgg.slidingCount(
-        Tables.events(s, dir).filter(col("event_type") =!= "error"),
-        "ts", "1 hour", "10 minutes", Seq("event_type"))),
-
-    // A8 — sliding ad count per geo (AdStatisticsByGeo.scala:57-60);
-    // province analog = item_id % 10
-    "q07_ad_count_by_geo" -> ((s, dir) =>
-      WindowedAgg.slidingCount(
-        eventsWithItem(s, dir).filter(col("event_type") === "click")
-          .withColumn("province_id", col("item_id") % 10),
-        "ts", "1 hour", "10 minutes", Seq("province_id"))),
-
-    // C1 — click-fraud blacklist: same user clicking same ad >= 2 times in
-    // a day (AdStatisticsByGeo.scala:68-113)
-    "q08_click_blacklist" -> ((s, dir) =>
-      FraudBlacklist.flagDaily(
-        eventsWithItem(s, dir).filter(col("event_type") === "click")
-          .withColumnRenamed("item_id", "ad_id"),
-        "ts", 2, Seq("user_id", "ad_id"))),
-
-    // C2/C3 — consecutive login-fail within 2h (LoginFail.scala:61-119,
-    // intended <=gap semantics per SURVEY Appendix A.1)
-    "q09_login_fail" -> ((s, dir) =>
-      SequenceDetect.consecutiveFails(
-        Tables.events(s, dir), "user_id", "ts", "event_type", "event_id",
-        "error", "2 HOURS")),
-
-    // C4/C5 — order-pay timeout: signup=create, purchase=pay, 24h deadline
-    // (OrderTimeout.scala:50-93)
-    "q10_order_timeout" -> ((s, dir) => {
-      val ev = Tables.events(s, dir)
-      val creates = ev.filter(col("event_type") === "signup")
-        .select(col("event_id").as("id"), col("user_id").as("key"),
-          col("ts").as("create_ts"))
-      val pays = ev.filter(col("event_type") === "purchase")
-        .select(col("user_id").as("key"), col("ts").as("pay_ts"))
-      Timeout.detect(creates, pays, "24 HOURS")
-        .withColumnRenamed("key", "user_id")
-        .withColumnRenamed("id", "order_id")
-    }),
-
-    // C6 — two-stream reconciliation via full-outer join
-    // (TxMatchDetect.scala:88-138): purchases vs clicks per (user, day)
-    "q11_tx_match" -> ((s, dir) => {
-      val ev = Tables.events(s, dir)
-      def side(t: String, cnt: String) = ev.filter(col("event_type") === t)
-        .groupBy(col("user_id"),
-          (floor(unix_timestamp(col("ts")) / 86400) * 86400).cast("long")
-            .as("bucket_start"))
-        .agg(count(lit(1)).as(cnt))
-      StreamMatch.reconcile(side("purchase", "pay_cnt"), side("click", "receipt_cnt"),
-        Seq("user_id", "bucket_start"), "pay_cnt", "receipt_cnt")
-    }),
-
-    // C7 — interval join (TxMatchByJoin.scala:68-71): each purchase joined
-    // to the same user's clicks in the preceding 6h
-    "q12_interval_join" -> ((s, dir) => {
-      val ev = Tables.events(s, dir)
-      val pays = ev.filter(col("event_type") === "purchase")
-        .select(col("event_id").as("pay_id"), col("user_id"),
-          col("ts").as("pay_ts"))
-      val clicks = ev.filter(col("event_type") === "click")
-        .select(col("event_id").as("click_id"), col("user_id"),
-          col("ts").as("click_ts"))
-      StreamMatch.intervalJoin(pays, clicks, "user_id", "pay_ts", "click_ts",
-          "6 HOURS", "0 SECONDS")
-        .select(col("pay_id"), col("click_id"), col("l_key").as("user_id"))
-    }),
-
-    // Batch analytics: TPC-H Q1-style pricing summary over lineitem
-    "q13_pricing_summary" -> ((s, dir) =>
-      Tables.lineitem(s, dir)
-        .groupBy(col("l_returnflag"), col("l_linestatus"))
-        .agg(
-          round(sum(col("l_quantity").cast("decimal(28,10)")), 2)
-            .cast("double").as("sum_qty"),
-          round(sum(col("l_extendedprice").cast("decimal(28,10)")), 2)
-            .cast("double").as("sum_base_price"),
-          round(sum((col("l_extendedprice") * (lit(1.0) - col("l_discount")))
-            .cast("decimal(28,10)")), 2).cast("double").as("sum_disc_price"),
-          count(lit(1)).as("cnt"))),
-
-    // Batch analytics: revenue by nation through the star schema;
-    // nation/region broadcast, orders/lineitem co-partitioned by AQE
-    "q14_revenue_by_nation" -> ((s, dir) => {
-      val li = Tables.lineitem(s, dir)
-      val o = Tables.orders(s, dir)
-      val c = Tables.customer(s, dir)
-      val n = Tables.nation(s, dir)
-      li.join(o, col("l_orderkey") === col("o_orderkey"))
-        .join(c, col("o_custkey") === col("c_custkey"))
-        .join(broadcast(n), col("c_nationkey") === col("n_nationkey"))
-        .groupBy(col("n_name"))
-        .agg(
-          round(sum((col("l_extendedprice") * (lit(1.0) - col("l_discount")))
-            .cast("decimal(28,10)")), 2).cast("double").as("revenue"),
-          count(lit(1)).as("cnt"))
-    }),
-
-    // Batch analytics: top-10 customers by revenue — TakeOrdered (scales;
-    // no global sort / single-partition window)
-    "q15_top_customers" -> ((s, dir) => {
-      val li = Tables.lineitem(s, dir)
-      val o = Tables.orders(s, dir)
-      li.join(o, col("l_orderkey") === col("o_orderkey"))
-        .groupBy(col("o_custkey"))
-        .agg(round(sum((col("l_extendedprice") * (lit(1.0) - col("l_discount")))
-          .cast("decimal(28,10)")), 2).cast("double").as("revenue"))
-        .orderBy(col("revenue").desc, col("o_custkey").asc)
-        .limit(10)
-    }),
-
-    // C3 via the CEP mini-DSL: same semantics as q09 (strict-contiguity
-    // two-step pattern compiled to the NFA) — shares q09's oracle
-    "q16_cep_login_fail" -> ((s, dir) => {
-      import s.implicits._
-      val ev = Tables.events(s, dir).select(
-          col("user_id").cast("string").as("key"), col("ts"),
-          col("event_type").as("eventType"), col("event_id").as("id"))
-        .as[graft.cep.CepEvent]
-      val p = graft.cep.Pattern.begin("first", _.eventType == "error")
-        .next("second", _.eventType == "error")
-        .within("2 hours")
-      graft.cep.CEP.detectBatch(ev, p)
-        .map(m => (m.key.toLong, m.events.last.id,
-          m.events.head.tsMs / 1000, m.events.last.tsMs / 1000))
-        .toDF("user_id", "warn_id", "first_fail", "last_fail")
-    }),
-
-    // C4 via the CEP mini-DSL with timeout side output: same per-create
-    // classification as q10 — shares q10's oracle
-    "q17_cep_order_timeout" -> ((s, dir) => {
-      import s.implicits._
-      val ev = Tables.events(s, dir)
-        .filter(col("event_type").isin("signup", "purchase"))
-        .select(col("user_id").cast("string").as("key"), col("ts"),
-          when(col("event_type") === "signup", "create").otherwise("pay").as("eventType"),
-          col("event_id").as("id"))
-        .as[graft.cep.CepEvent]
-      val p = graft.cep.Pattern.begin("create", _.eventType == "create")
-        .followedBy("pay", _.eventType == "pay")
-        .within("24 hours")
-      graft.cep.CEP.detectBatch(ev, p, emitTimeouts = true)
-        .map(m => (m.events.head.id, m.key.toLong, m.events.head.tsMs / 1000,
-          if (m.timedOut) "timeout" else "payed successfully"))
-        .toDF("order_id", "user_id", "create_ts", "status")
-    }),
-
-    // Session windows (absent in the reference; SURVEY.md §2.10 notes
-    // session_window makes them free): 30-min-gap sessions per user
-    "q18_sessionization" -> ((s, dir) =>
-      Tables.events(s, dir)
-        .groupBy(session_window(col("ts"), "30 minutes"), col("user_id"))
-        .agg(count(lit(1)).as("cnt"))
-        .select(unix_timestamp(col("session_window.start")).as("session_start"),
-          col("user_id"), col("cnt"))),
-
-    // Window-function surface: per-user running total (event-time order,
-    // decimal-exact running sum)
-    "q19_running_total" -> ((s, dir) => {
-      import org.apache.spark.sql.expressions.Window
-      val w = Window.partitionBy(col("user_id"))
-        .orderBy(col("ts"), col("event_id"))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      Tables.events(s, dir).select(col("user_id"), col("event_id"),
-        round(sum(col("value").cast("decimal(18,2)")).over(w), 2)
-          .cast("double").as("running_total"))
-    }),
-
-    // Rollup aggregation surface (free via Catalyst; absent in reference)
-    "q31_rollup_pricing" -> ((s, dir) =>
-      Tables.lineitem(s, dir)
-        .rollup(col("l_returnflag"), col("l_linestatus"))
-        .agg(round(sum(col("l_quantity").cast("decimal(28,10)")), 2)
-          .cast("double").as("sum_qty"), count(lit(1)).as("cnt"))),
-
-    // TPC-H Q3 shape: top-10 open orders by pending revenue (join +
-    // filter + agg + TakeOrdered)
-    "q35_shipping_priority" -> ((s, dir) => {
-      val li = Tables.lineitem(s, dir)
-      val o = Tables.orders(s, dir)
-      li.join(o, col("l_orderkey") === col("o_orderkey"))
-        .filter(col("o_orderstatus") === "O")
-        .groupBy(col("l_orderkey"), col("o_orderdate"), col("o_orderpriority"))
-        .agg(round(sum((col("l_extendedprice") * (lit(1.0) - col("l_discount")))
-          .cast("decimal(28,10)")), 2).cast("double").as("revenue"))
-        .select(col("l_orderkey"),
-          unix_timestamp(col("o_orderdate")).as("o_orderdate"),
-          col("o_orderpriority"), col("revenue"))
-        .orderBy(col("revenue").desc, col("l_orderkey").asc)
-        .limit(10)
-    }),
-
-    // TPC-H Q5 shape: revenue by region through the full star (6-way
-    // join; nation/region broadcast)
-    "q36_region_volume" -> ((s, dir) => {
-      val li = Tables.lineitem(s, dir)
-      val o = Tables.orders(s, dir)
-      val c = Tables.customer(s, dir)
-      val n = Tables.nation(s, dir)
-      val r = Tables.region(s, dir)
-      li.join(o, col("l_orderkey") === col("o_orderkey"))
-        .join(c, col("o_custkey") === col("c_custkey"))
-        .join(broadcast(n), col("c_nationkey") === col("n_nationkey"))
-        .join(broadcast(r), col("n_regionkey") === col("r_regionkey"))
-        .groupBy(col("r_name"))
-        .agg(round(sum((col("l_extendedprice") * (lit(1.0) - col("l_discount")))
-          .cast("decimal(28,10)")), 2).cast("double").as("revenue"),
-          count(lit(1)).as("cnt"))
-    }),
-
-    // TPC-H Q10 shape: top customers by returned-item revenue (filter +
-    // 3-way join + agg + TakeOrdered)
-    "q39_returned_items" -> ((s, dir) => {
-      val li = Tables.lineitem(s, dir)
-      val o = Tables.orders(s, dir)
-      val c = Tables.customer(s, dir)
-      li.filter(col("l_returnflag") === "R")
-        .join(o, col("l_orderkey") === col("o_orderkey"))
-        .join(c, col("o_custkey") === col("c_custkey"))
-        .groupBy(col("c_custkey"), col("c_name"), col("c_mktsegment"))
-        .agg(round(sum((col("l_extendedprice") * (lit(1.0) - col("l_discount")))
-          .cast("decimal(28,10)")), 2).cast("double").as("revenue"))
-        .orderBy(col("revenue").desc, col("c_custkey").asc)
-        .limit(20)
-    }),
-
-    // Decile distribution of order values within each priority class.
-    // NOT a Window: ntile partitioned by the 5-value o_orderpriority
-    // would sort each priority's entire order set on ONE task — the
-    // WindowExec scale-killer. Quantiles.exactNtile computes the
-    // identical assignment via range partitioning + broadcast prefix
-    // offsets (two bounded passes, no per-group single-task sort, no
-    // driver collect); PlanShapeSpec pins the Window-free plan.
-    // Side-effect note: CONSTRUCTING this entry translates the pinned
-    // frame to an RDD, which runs the range sampler (and, under AQE,
-    // the upstream stages) — construction is not free, though nothing
-    // is collected or materialized. The other pin-using entries (q70
-    // k-means, q73 funnel, q77 packing) share this property.
-    "q40_order_deciles" -> ((s, dir) =>
-      Quantiles.exactNtile(
-        Tables.orders(s, dir)
-          .select(col("o_orderpriority"), col("o_totalprice"), col("o_orderkey")),
-        "o_orderpriority", Seq("o_totalprice", "o_orderkey"), 10)
-        .select(col("o_orderpriority"), col("bucket").as("decile"))
-        .groupBy(col("o_orderpriority"), col("decile")).agg(count(lit(1)).as("cnt"))),
-
-    // Join-type surface: semi/anti joins (customers with vs without
-    // any open order)
-    "q37_semi_anti" -> ((s, dir) => {
-      val c = Tables.customer(s, dir)
-      val open = Tables.orders(s, dir).filter(col("o_orderstatus") === "O")
-      val withOpen = c.join(open, col("c_custkey") === col("o_custkey"), "left_semi")
-        .select(col("c_custkey"), lit("has_open").as("tag"))
-      val without = c.join(open, col("c_custkey") === col("o_custkey"), "left_anti")
-        .select(col("c_custkey"), lit("no_open").as("tag"))
-      withOpen.unionByName(without)
-    }),
-
-    // Cube aggregation surface
-    "q38_cube_pricing" -> ((s, dir) =>
-      Tables.lineitem(s, dir)
-        .cube(col("l_returnflag"), col("l_linestatus"))
-        .agg(count(lit(1)).as("cnt"))),
-
-    // As-of join surface (absent from Spark's built-ins; implemented as
-    // union + keyed sort in StreamMatch.asofJoin): each purchase paired
-    // with the user's latest click at-or-before the purchase time
-    "q41_asof_join" -> ((s, dir) => {
-      val ev = Tables.events(s, dir)
-      val pays = ev.filter(col("event_type") === "purchase")
-        .select(col("event_id").as("pay_id"), col("user_id"),
-          col("ts").as("pay_ts"))
-      // dedupe right side per (key, ts) so the as-of winner is unique
-      val clicks = ev.filter(col("event_type") === "click")
-        .groupBy(col("user_id"), col("ts").as("click_ts"))
-        .agg(max(col("event_id")).as("click_id"))
-      StreamMatch.asofJoin(pays, clicks, "user_id", "pay_ts", "click_ts",
-          Seq("click_id"))
-        .select(col("pay_id"), col("user_id"),
-          unix_timestamp(col("pay_ts")).as("pay_ts"), col("click_id"),
-          unix_timestamp(col("asof_click_ts")).as("click_ts"))
-    }),
-
-    // The same as-of semantics through the custom Catalyst operator
-    // (graft.plans.AsofJoin: logical node + injected strategy + merge-
-    // scan exec — one co-partitioning exchange+sort per side, O(1) scan
-    // state, no WindowExec). Shares q41's oracle.
-    "q46_asof_join_native" -> ((s, dir) => {
-      val ev = Tables.events(s, dir)
-      val pays = ev.filter(col("event_type") === "purchase")
-        .select(col("event_id").as("pay_id"), col("user_id"),
-          col("ts").as("pay_ts"))
-      val clicks = ev.filter(col("event_type") === "click")
-        .groupBy(col("user_id"), col("ts").as("click_ts"))
-        .agg(max(col("event_id")).as("click_id"))
-      graft.plans.AsofJoin(pays, clicks, "user_id", "pay_ts", "click_ts",
-          Seq("click_id"))
-        .select(col("pay_id"), col("user_id"),
-          unix_timestamp(col("pay_ts")).as("pay_ts"), col("click_id"),
-          unix_timestamp(col("asof_click_ts")).as("click_ts"))
-    }),
-
-    // ANN end-to-end on the LSH scale path: nearest cosine neighbor per
-    // vector among same-bucket candidates (equi-join blocking, rank-1)
-    "q42_ann_bucket_nearest" -> ((s, dir) =>
-      Similarity.bucketNearest(Tables.embeddings(s, dir), "vec_id", "embedding")),
-
-    // corpus quality scoring: length / lexical-diversity / stopword
-    // heuristics combined into one score + bucket label
-    "q43_quality_score" -> ((s, dir) =>
-      TextAnalysis.qualityScore(Tables.documents(s, dir), "doc_id", "text")),
-
-    // TPC-H Q4 shape: orders with at least one late shipment (semi-join
-    // EXISTS with a correlated range predicate), counted per priority
-    "q44_late_shipment_priority" -> ((s, dir) => {
-      val o = Tables.orders(s, dir)
-      val li = Tables.lineitem(s, dir).select(col("l_orderkey"), col("l_shipdate"))
-      o.join(li, col("o_orderkey") === col("l_orderkey") &&
-          col("l_shipdate") > col("o_orderdate") + expr("INTERVAL 30 DAYS"),
-          "left_semi")
-        .groupBy(col("o_orderpriority"))
-        .agg(count(lit(1)).as("order_count"))
-    }),
-
-    // TPC-H Q7 shape: cross-border trade volume between customer and
-    // supplier nations (6-way join, the constant-size nation table
-    // broadcast twice under two aliases; supplier is SF-proportional so
-    // its join strategy is left to size-based planning / AQE,
-    // dimension-pair grouping)
-    "q49_nation_trade_pairs" -> ((s, dir) => {
-      val li = Tables.lineitem(s, dir)
-      val o = Tables.orders(s, dir)
-      val c = Tables.customer(s, dir)
-      val sup = Tables.supplier(s, dir)
-      val cn = Tables.nation(s, dir)
-        .select(col("n_nationkey").as("cn_key"), col("n_name").as("cust_nation"))
-      val sn = Tables.nation(s, dir)
-        .select(col("n_nationkey").as("sn_key"), col("n_name").as("supp_nation"))
-      li.join(o, col("l_orderkey") === col("o_orderkey"))
-        .join(c, col("o_custkey") === col("c_custkey"))
-        .join(sup, col("l_suppkey") === col("s_suppkey"))
-        .join(broadcast(cn), col("c_nationkey") === col("cn_key"))
-        .join(broadcast(sn), col("s_nationkey") === col("sn_key"))
-        .filter(col("cust_nation") =!= col("supp_nation"))
-        .groupBy(col("cust_nation"), col("supp_nation"))
-        .agg(round(sum((col("l_extendedprice") * (lit(1.0) - col("l_discount")))
-          .cast("decimal(28,10)")), 2).cast("double").as("revenue"),
-          count(lit(1)).as("cnt"))
-    }),
-
-    // TPC-H Q18 shape: large-quantity orders — lineitem pre-aggregated
-    // by order BEFORE the joins (map-side size reduction; the
-    // join-then-aggregate formulation would carry every line through
-    // both joins), exact-decimal HAVING, TakeOrdered top-100
-    "q50_large_orders" -> ((s, dir) => {
-      val big = Tables.lineitem(s, dir)
-        .groupBy(col("l_orderkey"))
-        .agg(sum(col("l_quantity").cast("decimal(28,10)")).as("dq"))
-        .filter(col("dq") > 300)
-      big.join(Tables.orders(s, dir), col("l_orderkey") === col("o_orderkey"))
-        .join(Tables.customer(s, dir), col("o_custkey") === col("c_custkey"))
-        .select(col("o_orderkey"), col("c_custkey"),
-          unix_timestamp(col("o_orderdate")).as("o_orderdate"),
-          round(col("dq"), 2).cast("double").as("total_qty"))
-        .orderBy(col("total_qty").desc, col("o_orderkey").asc)
-        .limit(100)
-    }),
-
-    // Exact interpolated percentiles per priority class (sort-based
-    // aggregate per dimension-sized group; DuckDB quantile_cont is the
-    // same linear interpolation). Guarded: exact percentile buffers a
-    // whole group per aggregation buffer, so the operator pre-checks
-    // group sizes and raises past maxGroupRows, pointing at the
-    // fixed-memory q53 approx path (the 100 TB companion).
-    "q51_price_percentiles" -> ((s, dir) =>
-      Quantiles.guardedExactPercentiles(
-        Tables.orders(s, dir), "o_orderpriority", "o_totalprice",
-        Seq(0.25 -> "p25", 0.5 -> "p50", 0.75 -> "p75"))),
-
-    // The 100 TB companion to q51: approx_percentile (positive-indexed
-    // QuantileSummaries sketch — fixed memory, one pass, mergeable
-    // across partitions) where exact interpolated percentiles would
-    // need a per-group sort. Approximate → rows-only check, like the
-    // other sketches (q03/q32)
-    "q53_price_percentiles_approx" -> ((s, dir) =>
-      Tables.orders(s, dir)
-        .groupBy(col("o_orderpriority"))
-        .agg(
-          approx_percentile(col("o_totalprice"),
-            array(lit(0.25), lit(0.5), lit(0.75)), lit(10000)).as("pcts"),
-          count(lit(1)).as("cnt"))
-        .select(col("o_orderpriority"),
-          round(element_at(col("pcts"), 1), 2).as("p25"),
-          round(element_at(col("pcts"), 2), 2).as("p50"),
-          round(element_at(col("pcts"), 3), 2).as("p75"),
-          col("cnt"))),
-
-    // Set-operation surface (absent from the reference, SURVEY §2.10):
-    // customers holding BOTH open and finished orders (INTERSECT) and
-    // open-only customers (EXCEPT) — planned as semi/anti join shapes
-    "q54_set_ops" -> ((s, dir) => {
-      val o = Tables.orders(s, dir)
-      def custsWith(status: String) = o.filter(col("o_orderstatus") === status)
-        .select(col("o_custkey")).distinct()
-      val both = custsWith("O").intersect(custsWith("F"))
-        .select(col("o_custkey"), lit("open_and_finished").as("tag"))
-      val openOnly = custsWith("O").except(custsWith("F"))
-        .select(col("o_custkey"), lit("open_only").as("tag"))
-      both.unionByName(openOnly)
-    }),
-
-    // Pivot surface: order counts per priority pivoted on order status
-    // (RelationalGroupedDataset.pivot with explicit values — the
-    // two-pass value-discovery variant is the anti-pattern at scale)
-    "q55_pivot_status" -> ((s, dir) =>
-      Tables.orders(s, dir)
-        .groupBy(col("o_orderpriority"))
-        .pivot("o_orderstatus", Seq("O", "F", "P"))
-        .agg(count(lit(1)))
-        .na.fill(0L)
-        .withColumnRenamed("O", "open_cnt")
-        .withColumnRenamed("F", "finished_cnt")
-        .withColumnRenamed("P", "partial_cnt")),
-
-    // Explicit GROUPING SETS through the SQL front end: each dimension
-    // aggregated independently in one pass over the data
-    "q52_grouping_sets" -> ((s, dir) => {
-      Tables.lineitem(s, dir).createOrReplaceTempView("lineitem_v")
-      s.sql("""SELECT l_returnflag, l_linestatus, count(*) AS cnt
-              |FROM lineitem_v
-              |GROUP BY GROUPING SETS ((l_returnflag), (l_linestatus))""".stripMargin)
-    }),
-
-    // TPC-H Q14 shape: promo-part revenue share per ship month — the
-    // part dimension joined in (size-based planning picks broadcast at
-    // small SF; it is SF-proportional, so no hint), conditional revenue
-    // split, ratio computed from the rounded totals so both engines
-    // divide identical doubles
-    "q56_promo_revenue" -> ((s, dir) => {
-      val li = Tables.lineitem(s, dir)
-      val p = Tables.part(s, dir).select(col("p_partkey"), col("p_type"))
-      val rev = (col("l_extendedprice") * (lit(1.0) - col("l_discount")))
-        .cast("decimal(28,10)")
-      li.join(p, col("l_partkey") === col("p_partkey"))
-        .groupBy(unix_timestamp(date_trunc("month", col("l_shipdate")))
-          .as("ship_month"))
-        .agg(
-          round(sum(when(col("p_type") === "PROMO", rev)
-            .otherwise(lit(0).cast("decimal(28,10)"))), 2)
-            .cast("double").as("promo_rev"),
-          round(sum(rev), 2).cast("double").as("total_rev"))
-        .withColumn("promo_share",
-          round(col("promo_rev") / col("total_rev"), 6))
-    }),
-
-    // TPC-H Q12 shape: per ship-month high/low-priority line counts
-    // (join + conditional aggregation)
-    "q45_ship_month_priority_mix" -> ((s, dir) => {
-      val o = Tables.orders(s, dir).select(col("o_orderkey"), col("o_orderpriority"))
-      val li = Tables.lineitem(s, dir).select(col("l_orderkey"), col("l_shipdate"))
-      li.join(o, col("l_orderkey") === col("o_orderkey"))
-        .groupBy(unix_timestamp(date_trunc("month", col("l_shipdate")))
-          .as("ship_month"))
-        .agg(
-          sum(when(col("o_orderpriority").isin("1-URGENT", "2-HIGH"), 1L)
-            .otherwise(0L)).as("high_line_cnt"),
-          sum(when(col("o_orderpriority").isin("1-URGENT", "2-HIGH"), 0L)
-            .otherwise(1L)).as("low_line_cnt"))
-    }),
-
-    // —— LLM-data-pipeline extensions (BASELINE.json north_star) ——
-
-    // exact/near dedup: duplicate groups by canonical content fingerprint
-    "q20_dedup_fingerprint" -> ((s, dir) =>
-      Dedup.fingerprintGroups(Tables.documents(s, dir), "doc_id", "text")),
-
-    // MinHash LSH: shingle → minhash → band buckets (8 hashes, 4 bands)
-    "q21_minhash_bands" -> ((s, dir) => storedBands(s, dir)),
-
-    // near-dup candidate pairs = docs sharing any LSH band bucket.
-    // Uncapped because the DuckDB oracle is uncapped (capped behavior is
-    // spec-tested in MiningSpec instead). SERVED from the WRITTEN pair
-    // edge list (r22): this query IS [[Stores.lshPairs]]'s own
-    // derivation (lshCandidates over the band store, uncapped — the q65
-    // dup-map rule), so the read is the store's rows verbatim; the
-    // band-bucket self-join runs once per process at the store build
-    "q22_lsh_candidates" -> ((s, dir) => Stores.lshPairs(s, dir)),
-
-    // 16-bit SimHash signature per document
-    "q23_simhash" -> ((s, dir) =>
-      Dedup.simhash(Tables.documents(s, dir), "doc_id", "text")),
-
-    // exact word-set Jaccard >= 0.5 within source blocks; the synthetic
-    // corpus is tag-like (vocab <= 64), so opt into the probe → bitmask
-    // fast path (19x on this query at sf0.1). SERVED from the WRITTEN
-    // mask table (r22): the probe memo + mask build run once per
-    // process ([[Stores.wordMasks]], the identical wordMasks
-    // derivation); the adaptive contract is preserved — a >64-word
-    // corpus takes the same inverted-index path it always did
-    "q24_ngram_jaccard" -> ((s, dir) =>
-      if (Stores.tagVocab(s, dir).length <= 64)
-        Dedup.jaccardPairsFromMasks(Stores.wordMasks(s, dir), 0.5)
-      else Dedup.jaccardPairs(Tables.documents(s, dir), "doc_id", "text",
-        "source", 0.5, probeVocab = true)),
-
-    // brute-force cosine top-5 for query vectors 0..9
-    "q25_knn_bruteforce" -> ((s, dir) =>
-      Similarity.cosineKnn(Tables.embeddings(s, dir), "vec_id", "embedding",
-        (0L until 10L).toSeq, 5)),
-
-    // sign-random-projection LSH bucket per embedding (the ANN scale path)
-    "q26_ann_lsh_buckets" -> ((s, dir) =>
-      Similarity.lshBuckets(Tables.embeddings(s, dir), "vec_id", "embedding")),
-
-    // per-document token/char/stopword statistics
-    "q27_text_stats" -> ((s, dir) =>
-      TextAnalysis.stats(Tables.documents(s, dir), "doc_id", "text")),
-
-    // heuristic language ID with per-language hit counts
-    "q28_lang_id" -> ((s, dir) =>
-      TextAnalysis.langId(Tables.documents(s, dir), "doc_id", "text")),
-
-    // document fingerprints (raw + canonicalized)
-    "q29_fingerprints" -> ((s, dir) =>
-      TextAnalysis.fingerprints(Tables.documents(s, dir), "doc_id", "text")),
-
-    // winnowing fingerprints (rolling-hash k-gram + window-min, the
-    // MOSS scheme): any >= window+k-1-char substring shared by two docs
-    // shares a fingerprint — partial-overlap detection (boilerplate,
-    // quotation) that q29's whole-document hashes cannot express
-    "q68_winnow_fingerprints" -> ((s, dir) =>
-      TextAnalysis.winnowFingerprints(Tables.documents(s, dir), "doc_id", "text")),
-
-    // multimodal plumbing: binary payload metadata (checksums computed
-    // over the actual BinaryType column)
-    "q30_multimodal_features" -> ((s, dir) =>
-      Multimodal.attachBinary(Tables.documents(s, dir), "doc_id", "text")
-        .select(col("doc_id"), col("byte_len"), col("checksum"))),
-
-    // multimodal frame sampling: every 2nd 16-byte frame per payload via
-    // the partition-parallel generator (real flatMap plumbing + md5
-    // checksums; byte chunking stubs the codec's frame boundaries).
-    // The operator is byte-based (media payloads); the oracle's substr
-    // is character-based — equivalent here because the documents corpus
-    // is ASCII (DuckDB 1.0 cannot slice or md5 BLOBs)
-    "q48_frame_sample" -> ((s, dir) => {
-      import s.implicits._
-      Multimodal.frameSample(
-        Multimodal.attachBinary(Tables.documents(s, dir), "doc_id", "text")
-          .as[MediaRecord],
-        frameBytes = 16, stride = 2).toDF()
-    }),
-
-    // IVF-style coarse quantization: nearest deterministic centroid per
-    // vector (the k-means-free stand-in for IVF ANN candidate blocking)
-    "q33_ivf_assign" -> ((s, dir) =>
-      Similarity.ivfAssign(Tables.embeddings(s, dir), "vec_id", "embedding",
-        (0L until 8L).toSeq)),
-
-    // end-to-end IVF ANN: probe the 2 nearest of 8 centroid lists per
-    // query, score only those lists' members — the scale path q33's
-    // coarse assignment exists for (q25 is the exact baseline)
-    "q69_ivf_search" -> ((s, dir) =>
-      Similarity.ivfSearch(Tables.embeddings(s, dir), "vec_id", "embedding",
-        centroidIds = (0L until 8L).toSeq, queryIds = (0L until 10L).toSeq,
-        k = 5, nprobe = 2)),
-
-    // Lloyd's k-means (2 deterministic rounds): learned-centroid
-    // assignment, the production upgrade of q33's seed-vector
-    // quantization; the oracle unrolls both rounds. orderedMeans=true
-    // is the bit-exact oracle-parity mode — the DEFAULT (false) is the
-    // scale path (plain partial-aggregating avg, no collect_list)
-    "q70_kmeans_assign" -> ((s, dir) =>
-      Similarity.kmeansAssign(Tables.embeddings(s, dir), "vec_id", "embedding",
-        initIds = (0L until 8L).toSeq, iters = 2, orderedMeans = true)),
-
-    // the production IVF composition: ANN search over LEARNED k-means
-    // centroid lists (q70's Lloyd rounds feeding q69's probe/score
-    // shape) — candidate generation stays an equi-join on centroid_id,
-    // ~nprobe/nlists of the corpus scored per query; the oracle unrolls
-    // both k-means rounds then replays the probe/score pipeline
-    "q78_ivf_learned" -> ((s, dir) => {
-      // centroids off the WRITTEN store (r21): the two-round Lloyd
-      // training ran once at store build (same seeds/rounds/rounding),
-      // the serving read only assigns + probes — q87's recall audit
-      // re-runs this body and inherits the saving
-      val emb = Tables.embeddings(s, dir)
-      Similarity.ivfSearchWith(emb, "vec_id", "embedding",
-        Stores.learnedCentroids(s, dir),
-        queryIds = (0L until 10L).toSeq, k = 5, nprobe = 2)
-    }),
-
-    // PII redaction with synthetic PII injected INSIDE the query (the
-    // corpus itself carries none — ADVICE r7/verdict r7): both engines
-    // prepend the identical email/phone/ip/ssn preamble, redact, and
-    // hash-compare counts + scrubbed text
-    "q79_pii_redact" -> ((s, dir) =>
-      TextAnalysis.redact(
-        Tables.documents(s, dir).select(col("doc_id"),
-          concat(lit("contact u"), col("doc_id").cast("string"),
-            lit("@mail.example.com or +1-555-123-4567 from 10.20.30.40 ssn 123-45-6789 body: "),
-            col("text")).as("text")),
-        "doc_id", "text")),
-
-    // Gopher-style within-document repetition filters: duplicate- and
-    // top-2-gram fractions per document (boilerplate/spam signal the
-    // cross-document dedup family cannot express)
-    "q71_repetition" -> ((s, dir) =>
-      TextAnalysis.repetitionStats(Tables.documents(s, dir), "doc_id", "text")),
-
-    // benchmark-contamination check: shared distinct 3-grams between
-    // the src0 "training" slice and the src1 "benchmark" slice
-    // (inverted-index join; ubiquitous grams df-capped)
-    "q72_contamination" -> ((s, dir) => {
-      val d = Tables.documents(s, dir)
-      TextAnalysis.ngramOverlap(
-        d.filter(col("source") === "src0"),
-        d.filter(col("source") === "src1"),
-        "doc_id", "text", n = 3, maxBenchDf = 1000)
-    }),
-
-    // sliding word-window chunker (context-window prep): 32-word
-    // chunks, 8-word overlap, final partial chunk kept — narrow, no
-    // shuffle, work proportional to words x chunk/(chunk-overlap)
-    "q83_chunk_words" -> ((s, dir) =>
-      TextAnalysis.chunkWords(Tables.documents(s, dir), "doc_id", "text",
-        chunkWords = 32, overlapWords = 8)),
-
-    // deterministic train/val/test split: disjoint + exhaustive hash
-    // bands over the id space — one narrow projection, no RNG
-    "q84_dataset_split" -> ((s, dir) =>
-      Sampling.split(Tables.documents(s, dir), "doc_id",
-          Seq("train" -> 0.9, "val" -> 0.05, "test" -> 0.05))
-        .select(col("doc_id"), col("source"), col("split"))),
-
-    // GLOBAL exact deciles over the quality score — the keyless ntile
-    // (no PARTITION BY): the Window form would sort the whole corpus
-    // on one task; this runs the q40 prefix-sum machinery over one
-    // global sequence. doc_id tie-break makes the order total
-    "q82_quality_deciles" -> ((s, dir) =>
-      Quantiles.exactNtileGlobal(
-        TextAnalysis.qualityScore(Tables.documents(s, dir), "doc_id", "text")
-          .select(col("doc_id"), col("quality")),
-        orderCols = Seq("quality", "doc_id"), buckets = 10)),
-
-    // CCNet-style LM quality filter with corpus-internal stats: mean
-    // unigram log-probability per document (two hash aggs + term join;
-    // per-doc ordered fold for engine-stable double summation)
-    "q80_unigram_logprob" -> ((s, dir) =>
-      TextAnalysis.unigramLogProb(Tables.documents(s, dir), "doc_id", "text")),
-
-    // character-level contamination: shared winnowing fingerprints
-    // between the src0 "training" and src1 "benchmark" slices — the
-    // substring-robust companion of q72's word-3-gram overlap
-    "q81_winnow_contamination" -> ((s, dir) => {
-      val d = Tables.documents(s, dir)
-      TextAnalysis.winnowOverlap(
-        d.filter(col("source") === "src0"),
-        d.filter(col("source") === "src1"),
-        "doc_id", "text", maxBenchDf = 1000)
-    }),
-
-    // windowFunnel (earliest-chain): per user, how deep the
-    // view -> click -> purchase sequence completes within 2 days
-    "q73_window_funnel" -> ((s, dir) =>
-      Funnel.windowFunnel(Tables.events(s, dir), "user_id", "event_type", "ts",
-        Seq("view", "click", "purchase"), "2 DAY")),
-
-    // int8 scalar quantization (SQ8): per-vector scale + quantized
-    // components, exploded — the 4x-memory ANN storage path
-    "q74_quantize_int8" -> ((s, dir) =>
-      Similarity.quantizeInt8(Tables.embeddings(s, dir), "vec_id", "embedding")),
-
-    // weekly cohort retention triangle anchored on the signup event
-    // (cohort week projected to epoch seconds for the oracle compare)
-    "q75_cohort_retention" -> ((s, dir) =>
-      Behavior.cohortRetention(Tables.events(s, dir), "user_id", "event_type",
-          "ts", "signup")
-        .select(unix_timestamp(col("cohort_week")).as("cohort_week_s"),
-          col("week_n"), col("active_users"), col("cohort_size"),
-          col("retention_rate"))),
-
-    // first-order event-type transition matrix (path analysis); ties on
-    // ts broken by event_id so the pairs are engine-deterministic
-    "q76_transitions" -> ((s, dir) =>
-      Behavior.transitionCounts(Tables.events(s, dir), "user_id", "event_type",
-        "ts", "event_id")),
-
-    // sequence packing (concat-and-chunk, ctx=512 BPE-ish tokens):
-    // global token intervals via distributed prefix sums — no
-    // single-partition Window
-    "q77_pack_sequences" -> ((s, dir) =>
-      Packing.packSequences(
-        TextAnalysis.stats(Tables.documents(s, dir), "doc_id", "text")
-          .select(col("doc_id"), col("token_cnt")),
-        "doc_id", "token_cnt", ctxLen = 512)),
-
-    // vocabulary: global top-20 terms by document frequency
-    "q34_top_terms" -> ((s, dir) =>
-      TextAnalysis.topTerms(Tables.documents(s, dir), "doc_id", "text", 20)),
-
-    // deterministic stratified sampling: membership from an id hash, so
-    // the sample is reproducible across runs/partitionings/engines —
-    // a pure pushdown-friendly filter, no RNG state (Sampling.scala)
-    "q47_stratified_sample" -> ((s, dir) =>
-      Sampling.stratifiedHashSample(Tables.documents(s, dir), "doc_id", "source",
-          Map("src0" -> 0.5, "src1" -> 0.25), 0.1)
-        .select(col("doc_id"), col("source"))),
-
-    // A5 bit-parity Bloom sketch UV per hour (reference Redis bitmap
-    // scheme, UvWithBloomFilter.scala:103-121); approximate → rows-only
-    // check (2^17-bit maps here: one buffer per (window, partition))
-    "q32_uv_bloom_hourly" -> ((s, dir) =>
-      Tables.events(s, dir).filter(col("event_type") === "view")
-        .groupBy(window(col("ts"), "1 hour"))
-        .agg(graft.functions.TypedAggs.bloomDistinct(
-          col("user_id").cast("string"), 1 << 17).as("uv_bloom"))
-        .select(unix_timestamp(col("window.start")).as("window_start"),
-          unix_timestamp(col("window.end")).as("window_end"), col("uv_bloom"))),
-
-    // TPC-H Q19 shape: disjunctive multi-predicate join. The equi-key
-    // stays a conjunct OUTSIDE the OR, so Catalyst still plans a hash
-    // join on partkey (broadcast at this dimension size) with the OR as
-    // a join residual — never a cartesian — and extracts each side's
-    // single-side predicate disjunction (e.g. l_quantity ranges) as a
-    // pushed scan filter. Per-brand rows instead of Q19's single scalar
-    // so the oracle hash pins ~25 groups, not 1.
-    "q57_disjunctive_band_revenue" -> ((s, dir) => {
-      val li = Tables.lineitem(s, dir)
-      val p = Tables.part(s, dir)
-      val d1 = col("p_brand") === "Brand#1" && col("p_size").between(1, 15) &&
-        col("l_quantity").between(1, 20)
-      val d2 = col("p_brand") === "Brand#13" &&
-        col("p_type").isin("PROMO", "ECONOMY") &&
-        col("l_quantity").between(10, 30)
-      val d3 = col("p_type") === "LARGE" && col("p_size").between(20, 40) &&
-        col("l_quantity").between(20, 50)
-      li.join(p, col("l_partkey") === col("p_partkey") && (d1 || d2 || d3))
-        .groupBy(col("p_brand"))
-        .agg(
-          round(sum((col("l_extendedprice") * (lit(1.0) - col("l_discount")))
-            .cast("decimal(28,10)")), 2).cast("double").as("revenue"),
-          count(lit(1)).as("cnt"))
-    }),
-
-    // TPC-H Q8 shape: national market share — NATION_2's slice of
-    // STANDARD-part revenue sold to ASIA customers, per order year.
-    // Star plan: lineitem streams through broadcast joins against the
-    // filtered part dimension, nation (twice, aliased), region; orders/
-    // customer/supplier are SF-proportional so size-based planning (and
-    // AQE at runtime) picks broadcast-vs-shuffle per scale. Shares are
-    // derived q56-style from the two rounded sums, not decimal division
-    // (engines disagree on decimal-division scale)
-    "q58_market_share" -> ((s, dir) => {
-      val li = Tables.lineitem(s, dir)
-      val o = Tables.orders(s, dir)
-      val c = Tables.customer(s, dir)
-      val sup = Tables.supplier(s, dir)
-      val n = Tables.nation(s, dir)
-      val r = Tables.region(s, dir)
-      val p = Tables.part(s, dir).filter(col("p_type") === "STANDARD")
-        .select(col("p_partkey"))
-      val custNation = n.select(col("n_nationkey").as("cn_key"),
-        col("n_regionkey").as("cn_region"))
-      val suppNation = n.select(col("n_nationkey").as("sn_key"),
-        col("n_name").as("supp_nation"))
-      val rev = (col("l_extendedprice") * (lit(1.0) - col("l_discount")))
-        .cast("decimal(28,10)")
-      li.join(broadcast(p), col("l_partkey") === col("p_partkey"))
-        .join(o, col("l_orderkey") === col("o_orderkey"))
-        .join(c, col("o_custkey") === col("c_custkey"))
-        .join(broadcast(custNation), col("c_nationkey") === col("cn_key"))
-        .join(broadcast(r.filter(col("r_name") === "ASIA")),
-          col("cn_region") === col("r_regionkey"))
-        .join(sup, col("l_suppkey") === col("s_suppkey"))
-        .join(broadcast(suppNation), col("s_nationkey") === col("sn_key"))
-        .groupBy(year(col("o_orderdate")).cast("long").as("o_year"))
-        .agg(
-          round(sum(when(col("supp_nation") === "NATION_2", rev)
-            .otherwise(lit(0).cast("decimal(28,10)"))), 2)
-            .cast("double").as("nation_rev"),
-          round(sum(rev), 2).cast("double").as("total_rev"))
-        .withColumn("mkt_share", round(col("nation_rev") / col("total_rev"), 6))
-    }),
-
-    // embedding-cosine near-dup pairs: SRP-LSH blocking + exact cosine
-    // verify (the vector-space dedup path; threshold 0.3 because the
-    // synthetic embeddings are near-orthogonal — real corpora use ~0.9)
-    "q59_embedding_near_dup" -> ((s, dir) =>
-      Dedup.embeddingNearDup(Tables.embeddings(s, dir), "vec_id", "embedding", 0.3)),
-
-    // TPC-H Q17 shape: revenue locked in small-quantity orders — line
-    // items whose quantity is under 1/5 of their part's average. The
-    // correlated scalar subquery becomes a pre-aggregation of lineitem
-    // by partkey joined back on the same key (both sides shuffle on
-    // partkey once). The comparison is written sum/count-free of
-    // division — 5·qty·cnt < sum_qty — so it is exact integer-in-double
-    // arithmetic in both engines, immune to avg() type differences
-    "q60_small_quantity_revenue" -> ((s, dir) => {
-      val li = Tables.lineitem(s, dir)
-      val avgQ = li.groupBy(col("l_partkey").as("ap_key"))
-        .agg(sum(col("l_quantity")).as("sum_qty"),
-          count(lit(1)).as("qty_cnt"))
-      val p = Tables.part(s, dir).select(col("p_partkey"), col("p_brand"))
-      li.join(avgQ, col("l_partkey") === col("ap_key"))
-        .filter(col("l_quantity") * lit(5) * col("qty_cnt") < col("sum_qty"))
-        .join(broadcast(p), col("l_partkey") === col("p_partkey"))
-        .groupBy(col("p_brand"))
-        .agg(
-          round(round(sum(col("l_extendedprice").cast("decimal(28,10)")), 2)
-            .cast("double") / lit(7.0), 2).as("avg_yearly"),
-          count(lit(1)).as("cnt"))
-    }),
-
-    // TPC-H Q22 shape: above-average-balance customers with no recent
-    // orders, per market segment. The scalar subquery (positive-balance
-    // average) is a one-row aggregate cross-joined in as a broadcast —
-    // no driver collect; the comparison is division-free
-    // (bal·cnt > sum) so it's engine-exact; NOT EXISTS is a left-anti
-    // join against the date-pruned orders projection
-    "q61_rich_inactive_customers" -> ((s, dir) => {
-      val c = Tables.customer(s, dir)
-      val recent = Tables.orders(s, dir)
-        .filter(col("o_orderdate") >= lit("2000-01-01").cast("date"))
-        .select(col("o_custkey"))
-      val posAgg = c.filter(col("c_acctbal") > 0)
-        .agg(sum(col("c_acctbal").cast("decimal(18,2)")).cast("double").as("sum_pos"),
-          count(lit(1)).as("cnt_pos"))
-      c.crossJoin(broadcast(posAgg))
-        .filter(col("c_acctbal") * col("cnt_pos") > col("sum_pos"))
-        .join(recent, col("c_custkey") === col("o_custkey"), "left_anti")
-        .groupBy(col("c_mktsegment"))
-        .agg(count(lit(1)).as("num_cust"),
-          round(sum(col("c_acctbal").cast("decimal(18,2)")), 2)
-            .cast("double").as("total_bal"))
-    }),
-
-    // TPC-H Q15 shape: the top supplier(s) by revenue in a half-year
-    // ship window. The revenue view is one partial+final aggregate over
-    // the date-pruned scan; the argmax is the same one-row-aggregate
-    // broadcast cross-join as q61 (no driver collect, no window over an
-    // unpartitioned frame); equality is on the 2-digit-rounded double,
-    // engine-stable
-    "q62_top_supplier" -> ((s, dir) => {
-      val sr = Tables.lineitem(s, dir)
-        .filter(col("l_shipdate") >= lit("2000-01-01").cast("date") &&
-          col("l_shipdate") < lit("2000-07-01").cast("date"))
-        .groupBy(col("l_suppkey"))
-        .agg(round(sum((col("l_extendedprice") * (lit(1.0) - col("l_discount")))
-          .cast("decimal(28,10)")), 2).cast("double").as("total_rev"))
-      val top = sr.agg(max(col("total_rev")).as("max_rev"))
-      sr.crossJoin(broadcast(top))
-        .filter(col("total_rev") === col("max_rev"))
-        .join(broadcast(Tables.supplier(s, dir)
-          .select(col("s_suppkey"), col("s_name"))),
-          col("l_suppkey") === col("s_suppkey"))
-        .select(col("s_suppkey"), col("s_name"), col("total_rev"))
-    }),
-
-    // quality-weighted deterministic sampling: keep each doc with
-    // probability = its quality score — a pure hash filter, no RNG
-    "q66_quality_weighted_sample" -> ((s, dir) =>
-      Sampling.weightedHashSample(
-        TextAnalysis.qualityScore(Tables.documents(s, dir), "doc_id", "text"),
-        "doc_id", col("quality"), salt = "wq")
-        .select(col("doc_id"), col("quality"))),
-
-    // TF-IDF term weights — two hash aggregates + a term join + the
-    // corpus size broadcast; work proportional to total tokens
-    "q67_tfidf" -> ((s, dir) =>
-      TextAnalysis.tfIdf(Tables.documents(s, dir), "doc_id", "text")),
-
-    // transitive near-dup clusters: connected components (min-label
-    // propagation) over the LSH candidate pairs — the cluster-level
-    // completion of q22's pairwise output
-    // (uncapped for the same oracle-parity reason as q22)
-    "q65_dup_components" -> ((s, dir) =>
-      // the WRITTEN dup-map store (r21): its build is this exact
-      // derivation (components over the stored LSH pair edges), so the
-      // read is a rename of the store's columns — the component walk
-      // runs once per process, not per query
-      Stores.dupMap(s, dir)
-        .select(col("doc_id").as("id"), col("rep").as("component"))),
-
-    // ANN recall scaling: bucket-nearest over TWO independent SRP plane
-    // families — candidates collide in ANY family, so per-family miss
-    // rates multiply; still equi-join shaped (Σ bucket² per family)
-    "q64_ann_multiprobe" -> ((s, dir) =>
-      Similarity.bucketNearestMulti(Tables.embeddings(s, dir),
-        "vec_id", "embedding", families = 2)),
-
-    // TPC-H Q6 shape: pure scan-filter-aggregate forecast query — every
-    // predicate (date range, discount band, quantity cap) reaches the
-    // parquet scan as a pushed filter; zero joins, one agg exchange
-    "q63_forecast_revenue" -> ((s, dir) =>
-      Tables.lineitem(s, dir)
-        .filter(col("l_shipdate") >= lit("2000-01-01").cast("date") &&
-          col("l_shipdate") < lit("2001-01-01").cast("date") &&
-          col("l_discount").between(0.05, 0.07) &&
-          col("l_quantity") < 24)
-        .agg(round(sum((col("l_extendedprice") * col("l_discount"))
-          .cast("decimal(28,10)")), 2).cast("double").as("revenue"),
-          count(lit(1)).as("cnt"))),
-
-    // the flagship corpus pipeline END-TO-END (jobs/CorpusPipeline.run,
-    // plain mode): sample(0.8) → exact dedup → LSH near-dedup →
-    // quality gate (>= 0.4) → repetition gate (dup_gram_frac <= 0.2).
-    // Output = the final kept (doc_id, source) set PLUS every per-stage
-    // survivor count, all hash-compared against a DuckDB CTE chain that
-    // replays the gates — the "whole pipeline is correct" claim, not
-    // just its stages (each stage is ALSO individually oracled:
-    // q47/q20/q22/q43/q71)
-    "q85_corpus_pipeline" -> ((s, dir) => {
-      val (kept, counts) = graft.jobs.CorpusPipeline.run(
-        Tables.documents(s, dir),
-        sampleFraction = 0.8, qualityThreshold = 0.4, maxDupGramFrac = 0.2)
-      import s.implicits._
-      val stageRows = counts.map { case (stage, n) => ("stage:" + stage, n) }
-        .toDF("kind", "doc_id")
-        .withColumn("source", lit(null).cast("string"))
-      // kept stays CACHED: the stage counts already materialized it,
-      // and the consumer's write would otherwise replay the whole
-      // five-stage lineage a second time (the frame is survivor-sized
-      // — id/source/text rows — not a corpus-scale pin)
-      kept.select(lit("kept").as("kind"), col("doc_id"), col("source"))
-        .unionByName(stageRows)
-    }),
-
-    // deterministic corpus mixture (Sampling.mixture): weights 4:2:1:1
-    // over four strata — the binding stratum (src0, largest share over
-    // equal counts) is kept whole, every other weighted stratum is
-    // hash-sampled down to realize the target proportions; unweighted
-    // strata drop. All shares are powers of two so the driver-side
-    // double arithmetic (share x scale / count) is bit-exact in both
-    // engines
-    "q86_mixture" -> ((s, dir) =>
-      Sampling.mixture(Tables.documents(s, dir), "doc_id", "source",
-        Map("src0" -> 4.0, "src1" -> 2.0, "src2" -> 1.0, "src3" -> 1.0))
-        .select(col("doc_id"), col("source"))),
-
-    // ANN quality audit: recall@5 of the learned-centroid IVF search
-    // (q78, nprobe=2 of 8 lists) against the brute-force exact top-k
-    // (q25), per query — the measured number a user tunes nprobe
-    // against before scaling out. Both inputs are deterministic and
-    // individually hash-exact, so the recall itself is oracled
-    "q87_ivf_recall" -> ((s, dir) => recallAudit(s, dir, "q78_ivf_learned")),
-
-    // product quantization codes: 8 subspaces x 4 learned codes (one
-    // Lloyd round, ordered means for oracle parity) — each 64-float
-    // vector compressed to 8 codes, SERVED from the written code table
-    // (training + encoding run once at store build; the oracle unrolls
-    // the per-subspace k-means — the q70 pattern with `sub` riding as
-    // a grouping column — proving the store against a from-scratch
-    // recompute, the q245 store-vs-log posture)
-    "q88_pq_encode" -> ((s, dir) =>
-      Stores.pqCodes(s, dir).select(col("vec_id"), col("sub"), col("code"))),
-
-    // ADC top-5 per query over the STORED PQ codes: per-query LUT of
-    // partial squared distances, DECIMAL-exact m-term sums — the
-    // compressed-domain ANN scoring path; only the 10 query vectors
-    // leave the embedding table
-    "q89_pq_adc" -> ((s, dir) =>
-      Pq.adcSearchCoded(Stores.pqCodes(s, dir), Tables.embeddings(s, dir),
-        "vec_id", "embedding", Stores.pqCodebooks(s, dir),
-        queryIds = (0L until 10L).toSeq, k = 5,
-        m = Stores.PqM, subDim = Stores.PqSubDim)),
-
-    // deterministic subword tokenization: greedy longest-match
-    // (WordPiece MaxMatch + char fallback) against the corpus top-64
-    // word vocabulary — ONE codegen'd subword_count pass per doc; the
-    // oracle replays the greedy scan with a recursive CTE
-    "q90_subword_count" -> ((s, dir) => {
-      val d = Tables.documents(s, dir)
-      TextAnalysis.subwordCounts(d, "doc_id", "text",
-        TextAnalysis.subwordVocab(d, "text", topK = 64))
-    }),
-
-    // q77 on the tokenizer's currency: sequence packing over SUBWORD
-    // counts (ctx=512) — same prefix-sum machinery, the token budget
-    // real packed-batch writers spend
-    "q91_pack_subword" -> ((s, dir) => {
-      val d = Tables.documents(s, dir)
-      Packing.packSequences(
-        TextAnalysis.subwordCounts(d, "doc_id", "text",
-          TextAnalysis.subwordVocab(d, "text", topK = 64)),
-        "doc_id", "subword_cnt", ctxLen = 512)
-        .withColumnRenamed("token_cnt", "subword_cnt")
-    }),
-
-    // q85 WITH the optional vector-space stage: embedding near-dup
-    // losers (SRP-bucketed, exact in-bucket cosine >= 0.3) dropped
-    // between near-dedup and the quality gate — the complete pipeline
-    // composition including its only previously spec-only stage
-    "q93_corpus_pipeline_emb" -> ((s, dir) => {
-      val (kept, counts) = graft.jobs.CorpusPipeline.run(
-        Tables.documents(s, dir),
-        sampleFraction = 0.8, qualityThreshold = 0.4, maxDupGramFrac = 0.2,
-        embeddings = Some(Tables.embeddings(s, dir)), cosineThreshold = 0.3)
-      import s.implicits._
-      val stageRows = counts.map { case (stage, n) => ("stage:" + stage, n) }
-        .toDF("kind", "doc_id")
-        .withColumn("source", lit(null).cast("string"))
-      // kept stays cached — same reasoning as q85
-      kept.select(lit("kept").as("kind"), col("doc_id"), col("source"))
-        .unionByName(stageRows)
-    }),
-
-    // mergeable UV rollup: hourly DataSketches-HLL sketches UNIONED
-    // into daily estimates — the events scan once, every coarser
-    // granularity derives from the stored fine sketches (exact daily
-    // UV would re-scan per granularity; distinct doesn't add).
-    // Approximate by design (no DuckDB sketch twin): rows-only +
-    // error band vs exact daily UV in ApproxErrorSpec
-    "q100_uv_sketch_daily" -> ((s, dir) =>
-      WindowedAgg.sketchRollupDistinct(
-        Tables.events(s, dir).filter(col("event_type") === "view"),
-        "ts", fine = "1 hour", coarse = "1 day", distinctCol = "user_id")),
-
-    // approximate heavy hitters (Misra–Gries, k=20 counters): fixed
-    // memory — each partition ships ONE k-entry map instead of
-    // shuffling every distinct term. Estimates TOTAL term frequency
-    // (q34's topTerms ranks by DOCUMENT frequency — a different
-    // statistic, not just exact-vs-approx). Approximate by design
-    // (rows-only, like q03/q32): merge order affects which
-    // sub-threshold terms survive; the super-threshold guarantee is
-    // spec-proven (ApproxErrorSpec)
-    "q99_heavy_hitters" -> ((s, dir) =>
-      TextAnalysis.heavyHitters(Tables.documents(s, dir), "text", k = 20)),
-
-    // fixed-size per-stratum sample: exactly 5 docs per source by
-    // salted-hash order — the fixed-N eval-set builder (fraction
-    // samplers drift with stratum size); rank<=n plans as
-    // WindowGroupLimit so partitions pre-prune before the exchange
-    "q101_fixed_size_sample" -> ((s, dir) =>
-      Sampling.fixedSizeSample(Tables.documents(s, dir), "doc_id", "source",
-          n = 5, salt = "eval:")
-        .select(col("doc_id"), col("source"))),
-
-    // bigram LM quality filter: mean conditional log-prob under the
-    // corpus's own bigram distribution — catches word salad that the
-    // unigram filter (q80) passes; one pinned bigram explode, context
-    // totals derived from it, ordered per-doc fold
-    "q97_bigram_logprob" -> ((s, dir) =>
-      TextAnalysis.bigramLogProb(Tables.documents(s, dir), "doc_id", "text")),
-
-    // skew-salted equi-join: the hot-key mitigation (big side salted
-    // from a row-identity column, small side replicated saltFactor
-    // ways) must return EXACTLY the plain join — the oracle is the
-    // plain join; previously spec-only
-    "q96_salted_join" -> ((s, dir) =>
-      Skew.saltedJoin(
-        Tables.lineitem(s, dir).select(col("l_orderkey"), col("l_linenumber"),
-          col("l_suppkey").as("suppkey")),
-        Tables.supplier(s, dir).select(col("s_suppkey").as("suppkey"),
-          col("s_name")),
-        "suppkey", saltFactor = 8, bigSaltSource = "l_orderkey")
-        .select(col("l_orderkey"), col("l_linenumber"), col("suppkey"),
-          col("s_name"))),
-
-    // batch keep-first dedup: one row per user, earliest (ts, event_id)
-    // — the batch twin of dropDuplicatesWithinWatermark, previously
-    // spec-only; the Window partitions on the HIGH-cardinality dedup
-    // key (no low-cardinality WindowExec trap)
-    "q94_keep_first" -> ((s, dir) =>
-      Dedup.keepFirst(Tables.events(s, dir), Seq("user_id"), Seq("ts", "event_id"))
-        .select(col("user_id"), col("event_id").as("first_event"),
-          col("ts").cast("long").as("first_ts"))),
-
-    // the capped-bucket LSH route under a cap SMALL enough to trip
-    // (maxBucketSize=2; sf buckets reach 3): over-cap buckets are
-    // duplicate explosions — group-deduped (keep min id per bucket)
-    // instead of pair-scored; previously the cap path was spec-only
-    "q95_lsh_oversized" -> ((s, dir) =>
-      Dedup.lshOversizedLosers(storedBands(s, dir),
-        maxBucketSize = 2)),
-
-    // IVF-PQ with RESIDUAL encoding — the canonical refinement: codes
-    // quantize (vec − assigned centroid); each query builds a
-    // LIST-LOCAL lookup table from its residual to each probed
-    // centroid, and the LUT's (centroid, sub, code) join key doubles
-    // as the candidate generator. Codebooks seed from the initIds'
-    // residual subvectors (ids 8–11 — non-centroids, so residuals are
-    // nonzero) and train ONE Lloyd round with ordered means — the SAME
-    // regimen as q92's raw-vector codebooks, so the q108-vs-q109
-    // recall comparison is equal-footing (the r10/r11 confound: iters
-    // = 0 here compared an untrained quantizer against a trained one)
-    "q98_ivfpq_residual" -> ((s, dir) =>
-      Pq.ivfPqSearchCoded(Stores.pqResidualCodes(s, dir),
-        Tables.embeddings(s, dir), "vec_id", "embedding",
-        Stores.pqCoarse(s, dir), Stores.pqResidualCodebooks(s, dir),
-        queryIds = (0L until 10L).toSeq, k = 5, nprobe = 2,
-        m = Stores.PqM, subDim = Stores.PqSubDim)),
-
-    // IVF-PQ end-to-end: candidates implicit in the probed
-    // centroid_id join against the STORED code table (a vector lives
-    // in exactly one coarse list, carried as the store's bucket key),
-    // scored in the COMPRESSED domain by ADC — the standard 100 TB
-    // ANN memory layout: ~nprobe/nlists of the code table read per
-    // query, vectors touched only for the queries themselves
-    "q92_ivfpq" -> ((s, dir) =>
-      Pq.adcSearchProbed(Stores.pqCodes(s, dir), Tables.embeddings(s, dir),
-        "vec_id", "embedding", Stores.pqCoarse(s, dir),
-        Stores.pqCodebooks(s, dir), queryIds = (0L until 10L).toSeq,
-        k = 5, nprobe = 2, m = Stores.PqM, subDim = Stores.PqSubDim)),
-
-    // SemDeDup: cluster by nearest seed centroid, pairwise-compare ONLY
-    // within a cluster (work Σ|cluster|² — the LSH-bucket bound, never
-    // all-pairs), drop every member with a lower-id near-identical
-    // cluster-mate. The semantic companion of q59's SRP near-dup:
-    // centroid blocking groups by topic region, catching paraphrased
-    // duplicates SRP sign-buckets split apart
-    "q102_semantic_dedup" -> ((s, dir) =>
-      Dedup.semDedupLosers(Tables.embeddings(s, dir), "vec_id", "embedding",
-        centroidIds = (0L until 8L).toSeq, threshold = 0.3)),
-
-    // DSIR importance resampling: score every doc by its unigram
-    // log-likelihood ratio against the src0 slice's LM, keep with
-    // probability exp(llr/T) by id hash — tilts the corpus toward the
-    // target domain with zero RNG and one token explode
-    "q103_importance_resample" -> ((s, dir) => {
-      val scored = TextAnalysis.importanceScore(Tables.documents(s, dir),
-        "doc_id", "text", col("source") === "src0")
-      Sampling.weightedHashSample(scored, "doc_id",
-        round(exp(col("llr") / 0.01), 6), salt = "dsir")
-        .select(col("doc_id"), col("n_words"), col("llr"))
-    }),
-
-    // token-budget epoching: how many full passes of each source a
-    // 1M-token budget buys at 4:2:1:…:1 weights, plus the hash-picked
-    // fractional-epoch remainder — every keep decision integer-exact
-    // (DECIMAL cross-multiply, no double threshold)
-    "q104_epoch_allocation" -> ((s, dir) =>
-      Sampling.epochAllocation(
-        Tables.documents(s, dir).select(col("doc_id"), col("source"),
-          size(split(col("text"), " ")).cast("long").as("n_words")),
-        "doc_id", "source", "n_words",
-        weights = Map("src0" -> 4L, "src1" -> 2L), defaultWeight = 1L,
-        budget = 1000000L)
-        .withColumnRenamed("stratum", "source")),
-
-    // cluster-balanced eval picks: a fixed 10 per centroid cluster by
-    // salted-hash order — the diversity sampler (uniform sampling
-    // over-represents dense regions; per-cluster quotas cover the
-    // embedding space); rank<=n plans as WindowGroupLimit like q101
-    "q105_cluster_balanced_sample" -> ((s, dir) =>
-      Sampling.fixedSizeSample(
-        Similarity.ivfAssign(Tables.embeddings(s, dir), "vec_id", "embedding",
-          (0L until 8L).toSeq).select(col("vec_id"), col("centroid_id")),
-        "vec_id", "centroid_id", n = 10, salt = "div:")),
-
-    // C4-style boilerplate removal: non-overlapping 3-word spans
-    // counted corpus-wide, every occurrence of a >2-count span dropped,
-    // survivors reassembled in document order — the tfIdf cost class
-    // (explode + hash agg + join back + in-row ordered fold)
-    "q106_drop_repeated_spans" -> ((s, dir) =>
-      TextAnalysis.dropRepeatedSpans(Tables.documents(s, dir), "doc_id", "text",
-        spanWords = 3, maxCount = 2)),
-
-    // per-domain adaptive quality gate: keep each source's own top
-    // quality quartile — a global threshold over-prunes clean domains
-    // and under-prunes noisy ones; the per-source quartile is the
-    // FineWeb-style per-dump threshold. Grouped exact ntile rides the
-    // PrefixSum core (range partition + distributed offsets, no
-    // low-cardinality Window sort — 20 sources would mean 20 tasks)
-    "q107_domain_quality_gate" -> ((s, dir) => {
-      val docs = Tables.documents(s, dir)
-      // quality is a pure per-row projection, so `source` rides along in
-      // the SAME select (qualityScore carryCols) — the previous
-      // join-back shape paid a second full text scan plus an equi-join
-      // shuffle for a column the projection already had in hand
-      val q = TextAnalysis.qualityScore(docs, "doc_id", "text",
-          carryCols = Seq("source"))
-        .select(col("doc_id"), col("source"), col("quality"))
-      Quantiles.exactNtile(q, "source", Seq("quality", "doc_id"), buckets = 4)
-        .filter(col("bucket") === 4)
-        .select(col("doc_id"), col("source"), col("quality"))
-    }),
-
-    // recall@5 of compressed-domain IVF-PQ (q92's ADC over 8-byte
-    // codes) vs exact brute force — quantization loss + coarse-probe
-    // loss in ONE measured number, the ADC counterpart of q87
-    "q108_ivfpq_recall" -> ((s, dir) => recallAudit(s, dir, "q92_ivfpq")),
-
-    // recall@5 of the RESIDUAL IVF-PQ path (q98): the Jégou-canonical
-    // layout quantizes (vec − centroid), which should beat q108's
-    // raw-vector codes on the same data — this row MEASURES that claim
-    // (the audit body and its oracle are shared with q87/q108)
-    "q109_ivfpq_residual_recall" -> ((s, dir) =>
-      recallAudit(s, dir, "q98_ivfpq_residual")),
-
-    // band audit of q03's HLL++ sketch: |estimate − exact| per hourly
-    // window against a 5% band (5× the rsd=0.01 target). HLL register
-    // maxima are commutative/idempotent, so the estimate — hence the
-    // boolean — is DETERMINISTIC under any partitioning; the oracle
-    // computes the exact side and asserts the band holds, turning the
-    // sketch's guarantee into a hash-exact row (the q03 entry itself
-    // stays rows-only: its VALUES are not DuckDB-reproducible)
-    "q110_hll_band" -> ((s, dir) => {
-      val v = Tables.events(s, dir).filter(col("event_type") === "view")
-      sketchBand(
-        WindowedAgg.tumblingApproxDistinct(v, "ts", "1 hour", "user_id"),
-        WindowedAgg.tumblingDistinct(v, "ts", "1 hour", "user_id"),
-        "uv_approx", band = 0.05)
-    }),
-
-    // band audit of q32's bit-parity Bloom sketch (2^17 bits, 3 hashes):
-    // the -m/k·ln(1-X/m) estimate vs exact hourly UV. The band is
-    // max(2, 8%·exact) — measured honestly, NOT the textbook Bloom
-    // bound: the reference's polynomial hash r = r·seed + char maps
-    // every single-char key to the same bit under all 3 seeds (seed
-    // never multiplies in), so tiny ids under-fill the bitmap, and the
-    // rounded estimator is off-by-one at 1–8-user windows (the abs
-    // floor). Measured: ≤1 absolute at sf0.01, ≤6.9% relative at
-    // sf0.1. VALIDITY RANGE: the 8%/absFloor=2 band is a CALIBRATION
-    // at sf0.01/sf0.1, not an analytic bound — per-window distincts
-    // there stay ≪ 2^17 bits so the estimator is near-linear; at a
-    // larger sf (or a smaller bitmap) the fill fraction rises and the
-    // relative error grows, so a q111 failure after an sf bump means
-    // RECALIBRATE THE BAND (re-measure, widen), not a code bug. The
-    // bitmap OR is commutative, the popcount deterministic — same
-    // hash-exact-boolean construction as q110
-    "q111_bloom_band" -> ((s, dir) => {
-      val v = Tables.events(s, dir).filter(col("event_type") === "view")
-      val est = v.groupBy(window(col("ts"), "1 hour"))
-        .agg(graft.functions.TypedAggs.bloomDistinct(
-          col("user_id").cast("string"), 1 << 17).as("uv_bloom"))
-        .select(unix_timestamp(col("window.start")).as("window_start"),
-          unix_timestamp(col("window.end")).as("window_end"), col("uv_bloom"))
-      sketchBand(est,
-        WindowedAgg.tumblingDistinct(v, "ts", "1 hour", "user_id"),
-        "uv_bloom", band = 0.08, absFloor = 2.0)
-    }),
-
-    // band audit of q53's approx_percentile: the sketch value's RANK
-    // must sit within ±max(2, 2n/accuracy) of the target rank p·n —
-    // the QuantileSummaries guarantee (rank error ≤ n/accuracy) with 2×
-    // merge headroom. The ESTIMATE varies with merge order, but the
-    // guarantee holds under ANY order, so the boolean is deterministic
-    // and the row hash-exact — the q53 entry stays rows-only
-    "q112_pctl_band" -> ((s, dir) => {
-      val o = Tables.orders(s, dir)
-      val est = o.groupBy(col("o_orderpriority"))
-        .agg(approx_percentile(col("o_totalprice"),
-          array(lit(0.25), lit(0.5), lit(0.75)), lit(10000)).as("pcts"),
-          count(lit(1)).as("n"))
-      val un = est.select(col("o_orderpriority"), col("n"),
-        explode(array(Seq(("p25", 0.25, 1), ("p50", 0.5, 2), ("p75", 0.75, 3)).map {
-          case (nm, p, i) => struct(lit(nm).as("pct"), lit(p).as("p"),
-            element_at(col("pcts"), i).as("est_v"))
-        }: _*)).as("e"))
-        .select(col("o_orderpriority"), col("n"), col("e.pct").as("pct"),
-          col("e.p").as("p"), col("e.est_v").as("est_v"))
-      val ranks = o.select(col("o_orderpriority"), col("o_totalprice"))
-        .join(broadcast(un), "o_orderpriority")
-        .groupBy(col("o_orderpriority"), col("pct"), col("p"), col("n"))
-        .agg(
-          sum(when(col("o_totalprice") <= col("est_v"), 1L).otherwise(0L)).as("cnt_le"),
-          sum(when(col("o_totalprice") < col("est_v"), 1L).otherwise(0L)).as("cnt_lt"))
-      val d = greatest(lit(2.0), col("n").cast("double") * 2.0 / 10000.0)
-      ranks.select(col("o_orderpriority"), col("pct"), col("n"),
-        (col("cnt_lt").cast("double") <= col("p") * col("n").cast("double") + d &&
-          col("cnt_le").cast("double") >= col("p") * col("n").cast("double") - d)
-          .as("within_band"))
-    }),
-
-    // band audit of q99's Misra–Gries summary, keyed by the TOP-30
-    // EXACT terms (a deterministic key set — which sub-threshold MG
-    // entries survive is merge-order-dependent, so keying on the MG
-    // side would not hash). Per term the guarantee is integer-exact:
-    // present ⇒ cnt − n/(k+1) ≤ est ≤ cnt (cross-multiplied, no
-    // division); absent ⇒ cnt ≤ n/(k+1). Always true under any merge
-    // order ⇒ hash-exact
-    "q113_mg_band" -> ((s, dir) => {
-      val docs = Tables.documents(s, dir)
-      val words = docs.select(explode(split(col("text"), " ")).as("term"))
-        .filter(length(col("term")) > 0)
-      val exact = words.groupBy(col("term")).agg(count(lit(1)).as("cnt"))
-      val tot = exact.agg(sum(col("cnt")).as("n"))
-      val top = exact.orderBy(col("cnt").desc, col("term").asc).limit(30)
-      top.join(TextAnalysis.heavyHitters(docs, "text", k = 20), Seq("term"), "left")
-        .crossJoin(broadcast(tot))
-        .select(col("term"), col("cnt"),
-          when(col("est_cnt").isNotNull,
-            col("est_cnt") <= col("cnt") &&
-              (col("cnt") - col("est_cnt")) * 21 <= col("n"))
-            .otherwise(col("cnt") * 21 <= col("n")).as("within_band"))
-    }),
-
-    // band audit of q100's DataSketches HLL rollup: daily
-    // union-of-hourly-sketches estimate vs exact daily UV, 5% band
-    // (~3× the lgK=12 rsd). Register maxima ⇒ deterministic estimate ⇒
-    // hash-exact boolean, as in q110
-    "q114_sketch_rollup_band" -> ((s, dir) => {
-      val v = Tables.events(s, dir).filter(col("event_type") === "view")
-      sketchBand(
-        WindowedAgg.sketchRollupDistinct(v, "ts", fine = "1 hour",
-          coarse = "1 day", distinctCol = "user_id"),
-        WindowedAgg.tumblingDistinct(v, "ts", "1 day", "user_id"),
-        "uv_approx", band = 0.05)
-    }),
-
-    // per-source heavy hitters: q99's mergeable Misra–Gries summary
-    // under a groupBy — per-domain top terms, the common production
-    // form. Each (partition, source) ships one k-entry map.
-    // APPROXIMATE BY DESIGN (rows-only, like q99): which sub-threshold
-    // terms survive is merge-order-dependent; q116 is its hash-exact
-    // band audit
-    "q115_grouped_heavy_hitters" -> ((s, dir) =>
-      TextAnalysis.heavyHittersBy(Tables.documents(s, dir), "source",
-        "text", k = 10)),
-
-    // band audit of q115, the q113 construction PER GROUP: keyed by
-    // each source's top-10 EXACT terms; per term the per-group MG
-    // guarantee (n_g = the source's own term count, k = 10) is
-    // integer-exact and merge-order-independent, so the boolean
-    // hashes. The per-source rank<=10 pre-prunes as WindowGroupLimit
-    // (the q101 shape); the source totals derive from the exact term
-    // counts — no second corpus explode
-    "q116_grouped_mg_band" -> ((s, dir) => {
-      val docs = Tables.documents(s, dir)
-      val exact = docs
-        .select(col("source"), explode(split(col("text"), " ")).as("term"))
-        .filter(length(col("term")) > 0)
-        .groupBy(col("source"), col("term")).agg(count(lit(1)).as("cnt"))
-      val tot = exact.groupBy(col("source")).agg(sum(col("cnt")).as("n"))
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("source")).orderBy(col("cnt").desc, col("term").asc)
-      val top = exact.withColumn("_rn", row_number().over(w))
-        .filter(col("_rn") <= 10).drop("_rn")
-      top
-        .join(TextAnalysis.heavyHittersBy(docs, "source", "text", k = 10),
-          Seq("source", "term"), "left")
-        .join(broadcast(tot), "source")
-        .select(col("source"), col("term"), col("cnt"),
-          when(col("est_cnt").isNotNull,
-            col("est_cnt") <= col("cnt") &&
-              (col("cnt") - col("est_cnt")) * 11 <= col("n"))
-            .otherwise(col("cnt") * 11 <= col("n")).as("within_band"))
-    }),
-
-    // the data-SELECTION pipeline END-TO-END (jobs/SelectionPipeline
-    // .run): semantic dedup (q102) → per-domain quality gate (q107) →
-    // DSIR resample (q103 — LM trained on the stage's own survivors)
-    // → epoch allocation (q104). Output = the final kept (doc_id,
-    // source) set PLUS every per-stage survivor count PLUS the
-    // allocation table unpivoted into (kind, value, stratum) rows, all
-    // hash-compared against a DuckDB CTE chain that replays the gates
-    // with the SAME parameterized SQL bodies the stage oracles use —
-    // the q85 "whole pipeline is correct" claim for the selection
-    // layer (each stage also individually oracled)
-    "q117_selection_pipeline" -> ((s, dir) => {
-      val (kept, counts, alloc) = graft.jobs.SelectionPipeline.run(
-        Tables.documents(s, dir), Tables.embeddings(s, dir),
-        centroidIds = (0L until 8L).toSeq, semThreshold = 0.3,
-        targetFilter = col("source") === "src0", budget = 1000000L,
-        epochWeights = Map("src0" -> 4L, "src1" -> 2L))
-      import s.implicits._
-      val stageRows = counts.map { case (stage, n) => ("stage:" + stage, n) }
-        .toDF("kind", "doc_id")
-        .withColumn("source", lit(null).cast("string"))
-      // the allocation frame is dimension-sized; ONE stack unpivots
-      // all seven fields in a single pass, stratum riding as `source`
-      val allocRows = alloc.select(col("stratum"),
-          expr("""stack(7,
-                 |  'alloc:wt', wt,
-                 |  'alloc:avail_tokens', avail_tokens,
-                 |  'alloc:target_tokens', target_tokens,
-                 |  'alloc:epochs', epochs,
-                 |  'alloc:rem_tokens', rem_tokens,
-                 |  'alloc:rem_docs', rem_docs,
-                 |  'alloc:rem_kept_tokens', rem_kept_tokens)
-                 |AS (kind, doc_id)""".stripMargin))
-        .select(col("kind"), col("doc_id"), col("stratum").as("source"))
-      // kept stays CACHED (the q85 discipline): the dsir stage count
-      // materialized it, and the consumer's write plus the allocation
-      // both read the cache instead of replaying the three-gate lineage
-      kept.select(lit("kept").as("kind"), col("doc_id"), col("source"))
-        .unionByName(stageRows)
-        .unionByName(allocRows)
-    }),
-
-    // FROZEN per-domain quality gate (streaming/StreamingGate): cut
-    // points = each source's top-quartile minimum quality, frozen in
-    // batch (the q107 computation); the gate itself is the STATELESS
-    // online path — per-row score + broadcast join on the domain +
-    // threshold — here run in batch over the same corpus (one code
-    // path, two modes; StreamingSpec pins batch ≡ streaming). Where
-    // q107 keeps exactly the top quartile with id tie-break, the
-    // frozen form keeps everything AT or above the cut VALUE — the
-    // documented adaptive-vs-frozen difference, exercised by the
-    // oracle's >= join
-    // the cuts come off the WRITTEN calibration table (r22,
-    // [[Stores.frozenCuts]]): frozen-gate semantics say the cut points
-    // are computed once at calibration and broadcast to every gate —
-    // re-deriving the grouped exact ntile per query contradicted the
-    // operator's own contract; the gate's corpus scan is unchanged
-    "q118_frozen_gate" -> ((s, dir) =>
-      graft.streaming.StreamingGate.gateDocs(
-        Tables.documents(s, dir), Stores.frozenCuts(s, dir),
-        "doc_id", "text", "source")),
-
-    // deterministic training-shard manifest (ops/Sharding): shard =
-    // salted 60-bit md5 mod 16 (layout-independent, decorrelated from
-    // upstream samples), per-shard token intervals via the range-
-    // partitioned PrefixSum core — sum() OVER (PARTITION BY shard)
-    // would funnel the corpus through 16 tasks (the low-cardinality
-    // WindowExec trap); the oracle runs exactly that Window form,
-    // proving the distributed offsets equal it
-    "q119_shard_manifest" -> ((s, dir) =>
-      graft.ops.Sharding.shardManifest(
-        Tables.documents(s, dir).withColumn("n_tokens",
-          size(split(col("text"), " ")).cast("long")),
-        "doc_id", "n_tokens", nShards = 16, carryCols = Seq("source"))),
-
-    // incremental (dump-over-dump) dedup: the src2 slice arrives as a
-    // new snapshot and dedups against the fingerprint store of
-    // everything else — in-slice keep-first (hash-agg min id, no
-    // Window) AND novel-against-store (narrow anti-join); the winning
-    // ids gate the full-width rows with NO forced broadcast (the r13
-    // default — AQE broadcasts the gate exactly when it measures
-    // small, as it does here; at survivor scale the gate join would
-    // shuffle the SLICE on id — slice-bounded, never the store — and
-    // a slice pre-bucketed on id avoids even that, per the scaladoc)
-    "q120_incremental_dedup" -> ((s, dir) => {
-      val docs = Tables.documents(s, dir)
-      graft.ops.Dedup.dedupAgainstStore(
-        docs.filter(col("source") === "src2"),
-        graft.ops.Dedup.fingerprintStore(
-          docs.filter(col("source") =!= "src2"), "text"),
-        "doc_id", "text")
-        .select(col("doc_id"), col("source"))
-    }),
-
-    // the FULL STACK end-to-end: CorpusPipeline (q85's clean: sample →
-    // exact-dedup → LSH near-dedup → quality → repetition) feeding
-    // SelectionPipeline (q117's select: sem-dedup → domain gate → DSIR
-    // → epoch allocation) — eleven chained stages, every membership
-    // decision hash-deterministic, oracled as ONE frame (kept set +
-    // both pipelines' stage counts + the allocation) against a DuckDB
-    // chain that nests the SAME parameterized bodies the q85 and q117
-    // oracles use. The "a user can run the whole engine and the result
-    // is bit-reproducible" claim in one row set
-    "q121_full_stack" -> ((s, dir) => {
-      val (cleanRaw, corpusCounts) = graft.jobs.CorpusPipeline.run(
-        Tables.documents(s, dir),
-        sampleFraction = 0.8, qualityThreshold = 0.4, maxDupGramFrac = 0.2)
-      // the HAND-OFF between the two halves is the doc_id-bucketed
-      // corpus table SelectionPipeline's bucketed mode writes: ONE
-      // action materializes the 5-stage corpus lineage (reading the
-      // stage caches), and every selection gate then plans against a
-      // bucket-partitioned LEAF — the same lineage cut the previous
-      // localCheckpoint pin bought (uncut re-analysis measured ~3× the
-      // sum of parts) PLUS zero corpus-side Exchange in the selection
-      // gates, and it exercises the store-shaped hand-off a 100 TB
-      // deployment would actually persist between the two jobs
-      // DELIBERATELY nonce-free (unlike Stores.key): the hand-off is
-      // a transient artifact overwritten on every run — a per-process
-      // nonce would strand one full corpus copy in tmpdir per JVM.
-      // One stable location per source dir keeps the leak bounded at
-      // one copy, which the next run overwrites.
-      val handoffTable = "graft_fullstack_corpus_" + {
-        val p = java.nio.file.Paths.get(dir)
-        val canon =
-          try p.toRealPath().toString
-          catch { case _: Exception => p.normalize().toString }
-        canon.toLowerCase.replaceAll("[^a-z0-9]+", "_")
-          .replaceAll("^_+|_+$", "")
-      }
-      val handoffPath = java.nio.file.Paths.get(
-        System.getProperty("java.io.tmpdir"), handoffTable).toString
-      val (kept, selCounts, alloc) = graft.jobs.SelectionPipeline.run(
-        cleanRaw, Tables.embeddings(s, dir),
-        centroidIds = (0L until 8L).toSeq, semThreshold = 0.3,
-        targetFilter = col("source") === "src0", budget = 1000000L,
-        epochWeights = Map("src0" -> 4L, "src1" -> 2L),
-        bucketStore = Some(handoffPath), bucketTable = handoffTable,
-        // the bucket count is the per-scale knob (Bucketing scaladoc:
-        // size a bucket to an executor core's memory at target scale
-        // — thousands at 100 TB); at bench scale 8 keeps the
-        // hand-off's file count from dominating the write
-        bucketCount = 8)
-      // the corpus half's stage caches fed the one bucketed write —
-      // nothing reads them again
-      cleanRaw.unpersist(false)
-      import s.implicits._
-      val stageRows =
-        (corpusCounts.map { case (st, n) => ("corpus:" + st, n) } ++
-          selCounts.map { case (st, n) => ("select:" + st, n) })
-        .toDF("kind", "doc_id")
-        .withColumn("source", lit(null).cast("string"))
-      val allocRows = alloc.select(col("stratum"),
-          expr("""stack(7,
-                 |  'alloc:wt', wt,
-                 |  'alloc:avail_tokens', avail_tokens,
-                 |  'alloc:target_tokens', target_tokens,
-                 |  'alloc:epochs', epochs,
-                 |  'alloc:rem_tokens', rem_tokens,
-                 |  'alloc:rem_docs', rem_docs,
-                 |  'alloc:rem_kept_tokens', rem_kept_tokens)
-                 |AS (kind, doc_id)""".stripMargin))
-        .select(col("kind"), col("doc_id"), col("stratum").as("source"))
-      // both pipelines' kept frames stay cached (the q85/q117
-      // discipline): their counts materialized them; the final write
-      // and the allocation read the caches, not the 11-stage lineage
-      kept.select(lit("kept").as("kind"), col("doc_id"), col("source"))
-        .unionByName(stageRows)
-        .unionByName(allocRows)
-    }),
-
-    // BPE merge learning (Sennrich 2016): four merge rules from the
-    // corpus — ONE corpus scan into the word-frequency table, then
-    // vocabulary-scale iterations (pair explode + hash agg + a one-row
-    // argmax collect per rule; a merge pass is one codegen'd replace
-    // on the space-joined symbol string). The oracle unrolls the same
-    // loop as CTE triples (pairs → argmax → rewrite)
-    "q122_bpe_merges" -> ((s, dir) =>
-      TextAnalysis.bpeMerges(Tables.documents(s, dir), "text", numMerges = 4)),
-
-    // BPE encode (the apply half of q122): tokenize the corpus with
-    // the learned merge table in rank order and count pieces — learn →
-    // encode → aggregate, all vocabulary-scale after the one corpus
-    // scan. The oracle reuses q122's chain verbatim: on the training
-    // corpus, rank-order application ≡ the trainer's final state, so
-    // the Spark side's SEPARATE encode path (collected rule table,
-    // batched replace folds) is checked against that identity.
-    "q123_bpe_token_counts" -> ((s, dir) => {
-      val docs = Tables.documents(s, dir)
-      val merges = TextAnalysis.bpeMerges(docs, "text", numMerges = 4)
-      TextAnalysis.bpeEncode(docs, "text", merges)
-        .select(explode(col("pieces")).as("piece"), col("cnt"))
-        .groupBy(col("piece")).agg(sum(col("cnt")).as("cnt"))
-    }),
-
-    // Count–Min point-frequency estimates for the corpus's top-30
-    // exact terms (the deterministic key set, the q113 convention).
-    // UNLIKE the Misra–Gries audits this needs no band: CMS counters
-    // are sums, so the sketch is merge-order-independent and the
-    // DuckDB oracle replays the estimate EXACTLY (min over rows of
-    // md5-bucket sums) — an approximate sketch with a hash-exact
-    // oracle. One corpus explode feeds both the exact counts and the
-    // keyless sketch (fixed 3×2048 buffer per partition, vector-add
-    // merge — nothing per-term ever shuffles on the sketch side)
-    "q124_cms_counts" -> ((s, dir) => {
-      val words = Tables.documents(s, dir)
-        .select(explode(split(col("text"), " ")).as("term"))
-        .filter(length(col("term")) > 0)
-      val top = words.groupBy(col("term")).agg(count(lit(1)).as("cnt"))
-        .orderBy(col("cnt").desc, col("term").asc).limit(30)
-      val sk = words.agg(graft.functions.TypedAggs.countMin(col("term")).as("sk"))
-      top.crossJoin(broadcast(sk))
-        .select(col("term"), col("cnt"),
-          graft.functions.TypedAggs.countMinEstimate(col("sk"), col("term")).as("est_cnt"))
-    }),
-
-    // Naive Bayes training = ONE hash aggregate (class-conditional
-    // token counts ARE the model — the fastText-language-ID /
-    // WebText-quality-filter classifier family); labels = lang, train
-    // slice = the q84 hash-split convention under an "nb:" salt
-    // served STORE-FIRST (r22): the training aggregate — the entire
-    // "training procedure" of this classifier family — ran once at the
-    // [[Stores.nbLangCounts]]/[[Stores.nbLangModel]] builds (the same
-    // nbCounts→nbModel derivation); this read is the rounding edge
-    // over the written model rows
-    "q125_nb_train" -> ((s, dir) =>
-      Stores.nbLangModel(s, dir).select(col("label"), col("term"),
-        col("cnt"), round(col("logp"), 6).as("logp"))),
-
-    // the scoring half on the held-out 20%: argmax over per-class
-    // log-posteriors (ordered per-doc folds, max-of-struct argmax —
-    // no Window); the oracle replays the same smoothed model and
-    // tie-break relationally
-    // served STORE-FIRST (r22): model counts from the written
-    // per-regimen store; the held-out slice's (doc_id, term, tf) from
-    // the inverted-index store's merged postings (indexSlices explodes
-    // the identical split(text, ' ') — same multiset, and the
-    // length>0 filter is applied the same way); test ids and per-label
-    // training doc counts from the metadata store. Scoring runs the
-    // SAME core as the inline form (TextAnalysis.nbScoreWith) — only
-    // where the parts are read from changes, never the arithmetic.
-    "q126_nb_classify" -> ((s, dir) => {
-      val isTrain = Stores.nbTrainSplit("nb:")
-      val postings = TextAnalysis.indexMergeSlices(Stores.index(s, dir))
-      TextAnalysis.nbClassifyServe(
-        Stores.nbLangModel(s, dir), Stores.nbLangLabels(s, dir),
-        postings.filter(!isTrain && length(col("token")) > 0)
-          .select(col("doc_id"), col("token").as("term"), col("tf")),
-        Stores.docMeta(s, dir).filter(!isTrain).select(col("doc_id")))
-    }),
-
-    // KMV/bottom-k distinct sketch next to the exact count: per event
-    // type, estimated distinct users from the 64 smallest md5-60
-    // hashes. Like q124 the sketch state is merge-order-independent
-    // (k smallest of a union) and the hash family is cross-engine, so
-    // the oracle replays the ESTIMATE hash-exactly — no band. Each
-    // (partition, group) ships ≤64 longs vs the exact side's
-    // every-user shuffle; KMV (unlike HLL) also supports downstream
-    // set operations over the kept hashes
-    "q127_kmv_distinct" -> ((s, dir) =>
-      Tables.events(s, dir)
-        .groupBy(col("event_type"))
-        .agg(countDistinct(col("user_id")).as("n_exact"),
-          round(graft.functions.TypedAggs.kmvDistinct(
-            col("user_id").cast("string")), 4).as("est_distinct"))),
-
-    // candidates-then-rerank, the production ANN serving layout: q92's
-    // compressed-domain ADC prunes to a 20-candidate shortlist per
-    // query (8-byte codes, ~nprobe/nlists of the corpus scanned), then
-    // ONLY those pairs touch full-precision vectors, scored exactly in
-    // the serving metric (cosine, the shared tail — q25's rounding and
-    // tie-break). Recall becomes shortlist coverage (q129 measures the
-    // recovery over raw ADC's q108)
-    "q128_ivfpq_rerank" -> ((s, dir) => {
-      // served STORE-FIRST (r21): the inline form re-trained the
-      // codebooks (a Lloyd pass) and re-assigned the whole corpus to
-      // coarse lists per query; the stored model/code tables carry the
-      // same regimen (m=8, subDim=8, seeds 0-3, Lloyd-1 ordered means,
-      // coarse = vec_id < 8), and adcSearchProbed is row-for-row the
-      // adcSearch(candidates = ivfCandidates(...)) composition — the
-      // q92 identity, reused here
-      val emb = Tables.embeddings(s, dir)
-      val shortlist = Pq.adcSearchProbed(Stores.pqCodes(s, dir), emb,
-        "vec_id", "embedding", Stores.pqCoarse(s, dir),
-        Stores.pqCodebooks(s, dir), queryIds = (0L until 10L).toSeq,
-        k = 20, nprobe = 2, m = Stores.PqM, subDim = Stores.PqSubDim)
-      Similarity.rerankExact(shortlist, emb, "vec_id", "embedding", k = 5)
-    }),
-
-    // recall@5 of the reranked pipeline (q128) vs exact brute force —
-    // the third column of the q87/q108/q109 recall story: coarse IVF
-    // 0.86, raw ADC ~0.16, ADC shortlist + exact rerank recovers most
-    // of the gap at 20 full-vector reads per query
-    "q129_rerank_recall" -> ((s, dir) =>
-      recallAudit(s, dir, "q128_ivfpq_rerank")),
-
-    // KMV SET operations (the reason to keep hashes, not just an
-    // estimate): pairwise event-type audience overlap from the
-    // per-type bottom-64 sketches alone — combined bottom-k of the
-    // union, Jaccard = K∩/k over it (SIGMOD'07 ρ-estimator),
-    // intersection = ρ·union-est. Every quantity is a deterministic
-    // function of the two hash sets, so the oracle replays all three
-    // estimates hash-exactly. At 100 TB the pairwise stage touches
-    // ONLY dimension-sized sketch rows — the corpus is scanned once
-    // for the sketches, never per pair
-    "q130_kmv_overlap" -> ((s, dir) => {
-      val k = 64
-      val sk = Tables.events(s, dir)
-        .groupBy(col("event_type"))
-        .agg(graft.functions.TypedAggs.kmvHashes(
-          col("user_id").cast("string"), k).as("hs"))
-      sk.select(col("event_type").as("type_a"), col("hs").as("hs_a"))
-        .crossJoin(broadcast(
-          sk.select(col("event_type").as("type_b"), col("hs").as("hs_b"))))
-        .filter(col("type_a") < col("type_b"))
-        .select(col("type_a"), col("type_b"), col("hs_a"), col("hs_b"),
-          expr(s"slice(array_sort(array_union(hs_a, hs_b)), 1, $k)").as("comb"))
-        .select(col("type_a"), col("type_b"),
-          size(col("comb")).as("kk"),
-          expr("size(filter(comb, h -> array_contains(hs_a, h) AND array_contains(hs_b, h)))")
-            .as("k_int"),
-          expr(s"""IF(size(comb) < $k, CAST(size(comb) AS DOUBLE),
-                  |   ${k - 1}D * 1152921504606846976.0D / element_at(comb, $k))"""
-            .stripMargin).as("union_est"))
-        .select(col("type_a"), col("type_b"),
-          round(col("union_est"), 4).as("union_est"),
-          round(col("k_int").cast("double") / col("kk"), 6).as("jaccard_est"),
-          round(col("k_int").cast("double") / col("kk") * col("union_est"), 4)
-            .as("inter_est"))
-    }),
-
-    // NB classifier gate (the GPT-3/WebText quality-filter shape):
-    // train pos=src0 vs neg=rest on an "nbg:"-salted 80% split, score
-    // EVERY document's log-odds, flag the positive side. The binary
-    // head subtracts two per-class scores — one commutative two-term
-    // sum, no new fold-order surface; the kept flag compares the
-    // ROUNDED value so both engines decide on the same number. (On
-    // this synthetic corpus text ⊥ source, so the 1/20 prior dominates
-    // and almost nothing clears 0 — the full score column is the
-    // informative output; the flag documents the policy.)
-    // served STORE-FIRST (r22, the q126 posture): counts from the
-    // "nbg:" regimen store, every document's tf from the index store's
-    // merged postings, ids/labels from the metadata store — the corpus
-    // text is never re-exploded at query time
-    "q131_classifier_gate" -> ((s, dir) => {
-      val postings = TextAnalysis.indexMergeSlices(Stores.index(s, dir))
-      TextAnalysis.nbLogOddsServe(
-        Stores.nbGateModel(s, dir), Stores.nbGateLabels(s, dir),
-        postings.filter(length(col("token")) > 0)
-          .select(col("doc_id"), col("token").as("term"), col("tf")),
-        Stores.docMeta(s, dir).select(col("doc_id")),
-        posLabel = "pos")
-        .select(col("doc_id"), col("log_odds"),
-          (col("log_odds") > 0).as("kept"))
-    }),
-
-    // label-propagation communities over the q22 LSH candidate graph —
-    // the finer sibling of q65's connected components: a majority vote
-    // (count desc, label asc — deterministic total order) keeps
-    // densely-linked dup groups separate across one weak bridge edge
-    // where transitive closure glues them. Three synchronous rounds,
-    // all-integer state, so the oracle unrolls the same rounds as CTEs
-    // and the result hashes
-    "q132_label_propagation" -> ((s, dir) =>
-      Dedup.labelPropagation(
-        Stores.lshPairs(s, dir),
-        "doc_a", "doc_b", iters = 3)),
-
-    // PageRank centrality over the SAME LSH candidate graph as
-    // q65/q132 — the third graph member: CC answers "which group", LPA
-    // "which community", PageRank "which member is most linked" (the
-    // canonical-document pick inside a dup cluster). Fixed-point
-    // INTEGER power iteration (rank units of 1e-9, damping as
-    // 85·Σ div 100): every intermediate is a positive BIGINT, so the
-    // ranks are partition- and summation-order-independent and the
-    // oracle unrolls the identical integer rounds as CTEs
-    "q133_pagerank" -> ((s, dir) =>
-      Graph.pageRank(
-        Stores.lshPairs(s, dir),
-        "doc_a", "doc_b", iters = 3)),
-
-    // cross-document EXACT substring spans (the Lee-et-al suffix-array
-    // dedup signal, resharded as shingles): maximal runs of >= 8
-    // verbatim shared tokens between document pairs, from one shingle
-    // equi-join + a Window-free gaps-and-islands merge on the alignment
-    // diagonal. Hot shingles (> 64 occurrences corpus-wide) are capped
-    // out of matching — the audited Σcnt² bound, same as LSH buckets
-    "q134_substring_spans" -> ((s, dir) =>
-      Dedup.exactSubstringSpans(Tables.documents(s, dir), "doc_id", "text",
-        k = 8, maxOccurrences = 64)),
-
-    // temperature-flattened mixture (UniMax shape): weights ∝ √n per
-    // source — derived from the data, not caller-supplied, so the whole
-    // chain (isqrt weights, cross-multiplied binding argmin, integer
-    // keep thresholds vs the salted hash bucket) stays in exact BIGINT
-    // arithmetic; no double ever decides membership
-    "q135_temperature_mixture" -> ((s, dir) =>
-      Sampling.temperatureMixture(Tables.documents(s, dir), "doc_id", "source")
-        .select(col("doc_id"), col("source"))),
-
-    // Morton (Z-order) key over (l_partkey, l_suppkey) — the layout
-    // key Bucketing.zOrderWrite range-partitions on so a 100 TB table
-    // prunes files on EITHER filter column. Pure codegen'd bit
-    // interleave (shift/and), bit-reproducible in any engine — this
-    // entry oracles the key itself; BucketingSpec drives the write and
-    // measures the file skipping
-    "q136_zorder_key" -> ((s, dir) =>
-      Tables.lineitem(s, dir)
-        .select(col("l_orderkey"), col("l_linenumber").cast("long"),
-          Bucketing.zValue(col("l_partkey"), col("l_suppkey"), bits = 16)
-            .as("zval"))),
-
-    // personalized PageRank: teleport + initial mass only on the seed
-    // set — rank_units measures proximity to the seeds ("documents
-    // related to THESE"), where q133 measures global centrality. The
-    // seed set is a declarative PREDICATE over the node id (here: every
-    // 10th doc), not a literal list — no driver-side lookup, and the
-    // oracle replays the rule verbatim; same all-BIGINT rounds as q133
-    "q137_personalized_pagerank" -> ((s, dir) =>
-      Graph.personalizedPageRank(
-        Stores.lshPairs(s, dir),
-        "doc_a", "doc_b", seedPred = col("id") % 10 === 0, iters = 3)),
-
-    // tokenizer fertility audit (pieces per word, by source): the
-    // number a tokenizer owner watches per domain — a domain whose
-    // fertility spikes is being shredded to char-fallback. One
-    // codegen'd subword_count pass (q90's greedy MaxMatch against the
-    // corpus top-64 vocab) + one hash aggregate; sums are exact longs,
-    // the ratio rounds at 6 digits (the engine-stable convention).
-    // broadcastVocab = true runs the SCALE path (SubwordCountBound:
-    // vocab ships as a torrent broadcast, plan size O(1) in |vocab|)
-    // through the hash gate itself — same countWith core as the
-    // literal form, hash unchanged (the r12 verdict's wiring item)
-    "q138_tokenizer_fertility" -> ((s, dir) => {
-      val d = Tables.documents(s, dir)
-      val sc = TextAnalysis.subwordCounts(d, "doc_id", "text",
-        TextAnalysis.subwordVocab(d, "text", topK = 64),
-        broadcastVocab = true)
-      d.select(col("doc_id"), col("source"),
-          size(split(col("text"), " ")).cast("long").as("w"))
-        .join(sc, "doc_id")
-        .groupBy(col("source"))
-        .agg(count(lit(1)).as("docs"), sum(col("w")).as("words"),
-          sum(col("subword_cnt")).as("pieces"))
-        .withColumn("fertility",
-          round(col("pieces").cast("double") / col("words"), 6))
-    }),
-
-    // C4's ACTUAL span-dedup rule — keep ONE copy: the first occurrence
-    // (min (doc_id, pos), a total order) of every 3-word span survives,
-    // later occurrences are cut; q106's sibling drops ALL occurrences
-    // of over-count spans (chrome eradication vs content preservation)
-    "q139_span_keep_first" -> ((s, dir) =>
-      TextAnalysis.dedupSpansKeepFirst(Tables.documents(s, dir), "doc_id",
-        "text", spanWords = 3)),
-
-    // dump-over-dump snapshot diff by content fingerprint: narrow
-    // full-outer join, only differing rows emitted. The two "dumps"
-    // are deterministic slices of the corpus: A drops every 7th doc,
-    // B drops every 5th and edits every 3rd (appends a novel token)
-    "q140_snapshot_diff" -> ((s, dir) => {
-      val d = Tables.documents(s, dir)
-      val a = d.filter(col("doc_id") % 7 =!= 0)
-      val b = d.filter(col("doc_id") % 5 =!= 0)
-        .withColumn("text", when(col("doc_id") % 3 === 0,
-          concat(col("text"), lit(" zzedit"))).otherwise(col("text")))
-      Dedup.snapshotDiff(a, b, "doc_id", "text")
-    }),
-
-    // drift histogram between two slices (even vs odd doc ids) over
-    // n_chars: cut points = exact decile maxima of the reference
-    // (PrefixSum ntile, no single-task Window sort), BOTH slices
-    // bucketed by the same cuts; counts + 6-digit proportions only —
-    // ln() is not engine-reproducible, so the PSI fold stays with the
-    // consumer (Drift.scala's scaladoc)
-    "q141_drift_histogram" -> ((s, dir) => {
-      val d = Tables.documents(s, dir)
-      Drift.histogramShift(d.filter(col("doc_id") % 2 === 0),
-        d.filter(col("doc_id") % 2 === 1), "doc_id", "n_chars")
-    }),
-
-    // 1-bit-signature ANN: sign-packed 64-bit signatures, brute-force
-    // popcount(XOR) top-5 — the 8-byte-per-vector first pass of a
-    // binary serving stack (rerank exact over the shortlist, q128's
-    // pattern); all-integer scores, so ranks replay exactly
-    "q142_hamming_topk" -> ((s, dir) =>
-      Similarity.hammingTopK(Tables.embeddings(s, dir), "vec_id",
-        "embedding", queryIds = (0L until 10L).toSeq, k = 5)),
-
-    // binary-signature serving pipeline: 20-wide Hamming shortlist
-    // (8 bytes/vector scanned), exact cosine over ONLY those pairs —
-    // the q128 candidates-then-rerank layout with the cheapest
-    // possible first pass
-    "q143_hamming_rerank" -> ((s, dir) => {
-      val emb = Tables.embeddings(s, dir)
-      Similarity.rerankExact(
-        Similarity.hammingTopK(emb, "vec_id", "embedding",
-          queryIds = (0L until 10L).toSeq, k = 20),
-        emb, "vec_id", "embedding", k = 5)
-    }),
-
-    // recall@5 of the binary pipeline vs exact brute force — the
-    // fourth column of the recall story (IVF 0.86 / raw ADC ~0.16 /
-    // ADC+rerank ~0.44 / binary+rerank measured here): on isotropic
-    // random vectors 1-bit signatures quantize angles coarsely, so
-    // this measures the floor of the compression spectrum
-    "q144_hamming_recall" -> ((s, dir) =>
-      recallAudit(s, dir, "q143_hamming_rerank")),
-
-    // near-dup ingest gate: arrivals (odd ids) flagged by how many of
-    // their MinHash bands collide with the frozen band store of the
-    // kept corpus (even ids) — the high-recall stateless pre-filter a
-    // production ingest runs before paying for exact verification; the
-    // streaming form is the same function inside foreachBatch
-    "q145_near_dup_gate" -> ((s, dir) => {
-      val d = Tables.documents(s, dir)
-      Dedup.nearDupFlags(d.filter(col("doc_id") % 2 === 1),
-        Dedup.bandStore(d.filter(col("doc_id") % 2 === 0), "doc_id", "text"),
-        "doc_id", "text")
-    }),
-
-    // TRUE multi-probe ANN (Lv 2007): each vector probes its own SRP
-    // bucket plus the 2 buckets behind its least-confident sign bits
-    // (smallest |margin| — where a true neighbor most likely flipped).
-    // The OTHER recall lever from q64's stacked families: families buy
-    // recall with memory, probing buys it with compute on ONE table
-    "q146_ann_bitprobe" -> ((s, dir) =>
-      Similarity.bucketNearestProbed(Tables.embeddings(s, dir), "vec_id",
-        "embedding", probes = 2)),
-
-    // weighted PageRank over the SAME candidate graph, edge weight =
-    // n_bands (collision strength q133 throws away): a node's rank
-    // splits across neighbors ∝ weight — strong dup links pull more
-    // rank than a single-band brush. Same all-BIGINT rounds
-    "q149_pagerank_weighted" -> ((s, dir) =>
-      Graph.pageRankWeighted(
-        Stores.lshPairs(s, dir),
-        "doc_a", "doc_b", weightCol = "n_bands", iters = 3)),
-
-    // half-life recency sampling for retrain-set assembly: keep
-    // probability halves every 3 days of age vs the 2024-02-01 anchor
-    // (integer 10000 >> k thresholds — no exp(), every decision
-    // engine-exact; the events span Jan 2024, so k runs 0..10)
-    "q147_decayed_sample" -> ((s, dir) =>
-      Sampling.decayedSample(Tables.events(s, dir), "event_id", "ts",
-          anchorEpochS = 1706745600L, halfLifeS = 259200L)
-        .select(col("event_id"), col("user_id"), col("event_type"))),
-
-    // behavior log → sequential training data: one row per (user,
-    // 30-min-gap session) with the item sequence in (ts, event_id)
-    // order — the assembly step for next-item-prediction corpora and
-    // the bridge from the reference's behavior analytics to this
-    // engine's training-data side
-    "q148_session_sequences" -> ((s, dir) =>
-      Behavior.sessionSequences(eventsWithItem(s, dir), "user_id",
-        "item_id", "ts", "event_id")),
-
-    // REAL image decode (JDK javax.imageio — the r12 verdict's top
-    // item): a PNG is synthesized per doc (dims + every pixel are pure
-    // integer functions of doc_id), every 10th payload is "rot" (raw
-    // text bytes, not an image), and the decode runs partition-parallel
-    // ImageIO.read emitting exact dims/channels/pixel sums, with the
-    // tagged deterministic fallback row for unreadable payloads. PNG is
-    // lossless, so the oracle replays the generative pixel formula
-    // relationally — the engine's decode is verified against bytes it
-    // really encoded, wrote to a binary column, and re-read
-    "q150_image_decode" -> ((s, dir) => {
-      import s.implicits._
-      val d = Tables.documents(s, dir)
-      val good = Multimodal.imageRecords(
-        d.filter(col("doc_id") % 10 =!= 0), "doc_id")
-      val rot = Multimodal.attachBinary(
-        d.filter(col("doc_id") % 10 === 0), "doc_id", "text").as[MediaRecord]
-      Multimodal.decodeImageFeatures(good.unionByName(rot)).toDF()
-    }),
-
-    // session_window session sequences — BATCH mode of the exact code
-    // path the live streaming twin runs (StreamingSessions; StreamingSpec
-    // pins stream ≡ batch on it), so the streaming corpus assembler gets
-    // a DuckDB gate of its own next to the lag-based q148. Same strict->
-    // gap rule as q148, compared at full microsecond precision (q148
-    // floors to seconds first); window end = last event + gap
-    "q151_session_window_seq" -> ((s, dir) =>
-      graft.streaming.StreamingSessions.sessionSequences(
-        eventsWithItem(s, dir), "user_id", "item_id", "ts", "event_id")),
-
-    // KMV sketch WAREHOUSE: per-(event_type, day) bottom-64 sketch rows
-    // — the unit a store persists (SketchStoreSpec drives the bucketed
-    // write + zero-Exchange store-merge + store⊕slice ≡ full-rescan) —
-    // merged down to one state per type and read as (n_slices,
-    // estimate). Bottom-k of a union of bottom-k's IS the union's
-    // bottom-k, so the merged estimate replays hash-exactly against the
-    // raw corpus (the q127 oracle) and n_slices pins the store shape
-    "q152_kmv_warehouse" -> ((s, dir) => {
-      val slices = SketchStore.kmvSlices(
-        Tables.events(s, dir)
-          .withColumn("day", to_date(col("ts")))
-          .withColumn("u", col("user_id").cast("string")),
-        Seq("event_type"), "day", col("u"))
-      SketchStore.kmvMergeSlices(slices, Seq("event_type"))
-        .select(col("event_type"), col("n_slices"),
-          round(SketchStore.kmvEstimate(col("hs")), 4).as("est_distinct"))
-    }),
-
-    // Count–Min WAREHOUSE: per-source CMS matrices over document terms
-    // (the q124 sketch, sliced), vector-added to one store state and
-    // point-read for the exact top-30 terms. Counters are sums, so the
-    // merged matrix ≡ the full-corpus matrix bit-exactly — same
-    // hash-exact oracle as q124, plus the slice count
-    "q153_cms_warehouse" -> ((s, dir) => {
-      // r22 measured-and-reverted: pinning the token explode (it feeds
-      // both the sketch build and the exact top-30) read 1.32 -> 1.50 s
-      // isolated best-of-5 — the localCheckpoint block write costs more
-      // than the duplicated explode saves at this row width; the two
-      // subtree scans stay
-      val words = Tables.documents(s, dir)
-        .select(col("source"), explode(split(col("text"), " ")).as("term"))
-        .filter(length(col("term")) > 0)
-      val merged = SketchStore.cmsMergeSlices(
-        SketchStore.cmsSlices(words, Nil, "source", col("term")), Nil)
-      val top = words.groupBy(col("term")).agg(count(lit(1)).as("cnt"))
-        .orderBy(col("cnt").desc, col("term").asc).limit(30)
-      top.crossJoin(broadcast(merged))
-        .select(col("term"), col("cnt"), col("n_slices"),
-          graft.functions.TypedAggs.countMinEstimate(col("sk"), col("term"))
-            .as("est_cnt"))
-    }),
-
-    // three-dimensional Morton key (q136's sibling over (l_partkey,
-    // l_suppkey, l_quantity)): round-robin bit interleave — column i
-    // owns positions 3b+i — so ONE layout write serves filters on any
-    // of the three columns; same codegen'd shift/and fold,
-    // bit-reproducible in any engine (BucketingSpec drives the 3-dim
-    // write and proves the box pruning)
-    "q154_zorder3_key" -> ((s, dir) =>
-      Tables.lineitem(s, dir)
-        .select(col("l_orderkey"), col("l_linenumber").cast("long"),
-          Bucketing.zValueN(Seq(col("l_partkey"), col("l_suppkey"),
-            col("l_quantity")), bits = 16).as("zval3"))),
-
-    // perceptual image hash over DECODED pixels (the multimodal dedup
-    // primitive): bit p = pixel p's integer luma strictly above the
-    // image mean, compared cross-multiplied so the whole hash is
-    // integer-exact; computed by the REAL codec pass (decode once,
-    // hash in place). The oracle replays the generative pixels — the
-    // round-trip must reproduce them bit-for-bit for the hash to match
-    "q155_image_phash" -> ((s, dir) => {
-      import s.implicits._
-      Multimodal.imagePHash(
-        Multimodal.imageRecords(Tables.documents(s, dir), "doc_id"))
-        .toDF().select(col("doc_id"), col("width"), col("height"),
-          col("phash"))
-    }),
-
-    // image near-dup serving: per probe image (ids 0..9), Hamming
-    // top-3 among SAME-dimension images — integer popcount(XOR) over
-    // q155's hashes, the q142 binary-serving pattern applied to the
-    // decoded-pixel space (dims partition the corpus, so the scored
-    // set is the probe's dim class, not all-pairs)
-    "q156_image_neardup" -> ((s, dir) => {
-      import org.apache.spark.sql.expressions.Window
-      // SERVED from the WRITTEN pHash table (r22): q155's decode+DCT
-      // pass ran once per process at the store build — before this the
-      // join's two sides re-decoded the image corpus twice per query
-      val hashes = Stores.imagePhash(s, dir)
-      val probes = hashes.filter(col("doc_id") < 10)
-        .select(col("doc_id").as("query_id"), col("width"), col("height"),
-          col("phash").as("q_hash"))
-      val scored = hashes.join(broadcast(probes), Seq("width", "height"))
-        .filter(col("doc_id") =!= col("query_id"))
-        .select(col("query_id"), col("doc_id").as("neighbor_id"),
-          expr("bit_count(q_hash ^ phash)").cast("long").as("hamming"))
-      val w = Window.partitionBy(col("query_id"))
-        .orderBy(col("hamming").asc, col("neighbor_id").asc)
-      scored.withColumn("rank", row_number().over(w).cast("long"))
-        .filter(col("rank") <= 3)
-    }),
-
-    // block-packed Hamming ANN (the binarySignPacked wide-vector path:
-    // dims pack blockDim per BIGINT into an ARRAY, score = Σ popcount
-    // per block): blockDim 16 over the 64-dim corpus forces 4 real
-    // blocks through the gate, and the ranks must equal q142's —
-    // same bits, same total popcount — so the oracle IS q142's SQL
-    "q157_hamming_blocks" -> ((s, dir) =>
-      Similarity.hammingTopKBlocks(Tables.embeddings(s, dir), "vec_id",
-        "embedding", queryIds = (0L until 10L).toSeq, k = 5,
-        blockDim = 16)),
-
-    // HLL register warehouse — the third sketch type (q152 KMV, q153
-    // CMS): per-(type, day) 64-register vectors, element-wise-max
-    // merged, RAW estimate read from the merged registers. Register
-    // max is merge-order-independent and the harmonic sum is an exact
-    // integer, so even the float estimate replays hash-exactly (the
-    // ln()-dependent small-range correction is deliberately absent —
-    // SketchStore.hllEstimate scaladoc)
-    "q158_hll_warehouse" -> ((s, dir) => {
-      val slices = SketchStore.hllSlices(
-        Tables.events(s, dir)
-          .withColumn("day", to_date(col("ts")))
-          .withColumn("u", col("user_id").cast("string")),
-        Seq("event_type"), "day", col("u"))
-      SketchStore.hllMergeSlices(slices, Seq("event_type"))
-        .select(col("event_type"), col("n_slices"),
-          round(SketchStore.hllEstimate(col("regs")), 4).as("est_distinct"))
-    }),
-
-    // REAL image resize: nearest-neighbor resample to 4×4 (integer
-    // coordinate map — no interpolation kernels, which are platform-
-    // dependent), re-encoded through the real PNG codec, then decoded
-    // AGAIN by the real codec — the oracle replays the resampled
-    // generative pixels, so the whole decode→resample→encode→decode
-    // chain must be bit-faithful
-    "q159_image_resize" -> ((s, dir) => {
-      import s.implicits._
-      Multimodal.decodeImageFeatures(
-        Multimodal.resizeImages(
-          Multimodal.imageRecords(Tables.documents(s, dir), "doc_id"),
-          targetW = 4, targetH = 4)).toDF()
-    }),
-
-    // asymmetric containment pairs (q24's missing half): |A∩B|/|A|
-    // catches a short doc living inside a long one, where Jaccard's
-    // union denominator buries it — the boilerplate/quotation case
-    // document dedup actually hunts. Inverted-index shape WITHOUT the
-    // length filter (unequal sizes are the signal); blocked by source
-    // probeVocab: this corpus is tag-like (vocab <= 64), so the
-    // bitmask plan scores each pair in O(1) — containment gains more
-    // than q24 did, having no length filter to prune with (the
-    // inverted path benched 3.0s at sf0.1)
-    // SERVED from the WRITTEN mask table (r22, the q24 rule): one
-    // mask build per process; containment gains more — it has no
-    // length filter, so before this every same-block pair re-derived
-    // masks per query on top of the scoring join
-    "q160_containment" -> ((s, dir) =>
-      if (Stores.tagVocab(s, dir).length <= 64)
-        Dedup.containmentPairsFromMasks(Stores.wordMasks(s, dir),
-          threshold = 0.8)
-      else Dedup.containmentPairs(Tables.documents(s, dir), "doc_id",
-        "text", "source", threshold = 0.8, probeVocab = true)),
-
-    // fill-in-the-middle training transform (Bavarian 2022): 50% of
-    // docs (salted-hash chosen, no RNG) split at two hash-derived
-    // character cuts and re-emitted PSM (<PRE>p<SUF>s<MID>m); pure
-    // projection — scan-speed at any corpus size; reassembly invariant
-    // spec-pinned, every string replayed by the oracle's substr math
-    "q161_fim_transform" -> ((s, dir) =>
-      TextAnalysis.fimTransform(Tables.documents(s, dir), "doc_id", "text")),
-
-    // epoch-deterministic global shuffle: two epochs' reproducible
-    // permutations of the corpus, ranks via the PrefixSum core (no
-    // single-task global sort); the oracle runs the row_number Window
-    // form, proving the distributed ranks equal it exactly
-    "q162_epoch_shuffle" -> ((s, dir) => {
-      val d = Tables.documents(s, dir)
-      (1 to 2).map(e => Sampling.epochShuffle(d, "doc_id", e)
-          .select(lit(e.toLong).as("epoch"), col("doc_id"),
-            col("shuffle_rank")))
-        .reduce(_ unionByName _)
-    }),
-
-    // the cheap middle tier of dedup verification: LSH proposes (q22),
-    // per-doc bottom-16 KMV sketches FILTER — jaccard/containment
-    // estimates from sketch rows alone (the q130 SIGMOD'07 math
-    // per-document, pairs × 16 longs at any corpus size, no text
-    // re-read) — and the exact verify (q24/q160) runs only on
-    // survivors; every estimate is deterministic, so all three
-    // columns replay hash-exactly
-    // maxBucketSize = MaxValue: the DuckDB oracle joins band buckets
-    // with no size cap, so the oracle-gated entry must not cap either
-    // (the q22 convention); production callers keep the default 10k cap
-    "q163_sketch_verify" -> ((s, dir) =>
-      Dedup.sketchVerifyPairs(Tables.documents(s, dir), "doc_id", "text",
-        maxBucketSize = Int.MaxValue)),
-
-    // n-gram novelty (memorization-risk audit): fraction of each doc's
-    // distinct shingles that occur nowhere else — low scores flag the
-    // template/boilerplate variants a model will over-memorize (Lee
-    // 2021); shingle universe = the dedup pipeline's (q21 convention)
-    "q164_ngram_novelty" -> ((s, dir) =>
-      TextAnalysis.ngramNovelty(Tables.documents(s, dir), "doc_id", "text")),
-
-    // REAL audio decode (q150's audio twin — the r13 verdict's top
-    // pick): WAV payloads synthesized per doc (format + every 16-bit
-    // sample are integer functions of doc_id) through the JDK-native
-    // javax.sound.sampled encoder, every 10th doc deliberate rot (text
-    // bytes, not a WAV); the decode is a real per-partition
-    // AudioSystem read emitting exact format metadata + amplitude
-    // sums, tagged fallback rows for rot. WAV PCM is lossless, so the
-    // oracle replays the generative sample formula relationally
-    "q165_audio_decode" -> ((s, dir) => {
-      import s.implicits._
-      val d = Tables.documents(s, dir)
-      val good = Multimodal.audioRecords(
-        d.filter(col("doc_id") % 10 =!= 0), "doc_id")
-      val rot = Multimodal.attachBinary(
-        d.filter(col("doc_id") % 10 === 0), "doc_id", "text",
-        modality = "audio").as[MediaRecord]
-      Multimodal.decodeAudioFeatures(good.unionByName(rot)).toDF()
-    }),
-
-    // REAL audio frame extraction: sample-aligned windows over the
-    // decoded PCM (frameLen=5 PCM frames, every 2nd window) — the
-    // q48 byte-chunk stand-in replaced by real codec frames for the
-    // audio modality; each window's sample count, exact amplitude sum,
-    // AND md5 over the canonical decimal rendering of its interleaved
-    // samples replay relationally (the checksum itself is oracled)
-    "q166_audio_frames" -> ((s, dir) => {
-      import s.implicits._
-      Multimodal.audioFrames(
-        Multimodal.audioRecords(Tables.documents(s, dir), "doc_id"),
-        frameLen = 5, stride = 2).toDF()
-    }),
-
-    // incremental ANN-store ingest ≡ full rebuild at fixed centroids:
-    // the store is built from the history slice and the fresh slice is
-    // ingested against the SAME centroids (ivfStoreRows is the one
-    // shared body of writeIvfBucketed and ivfIngest), so the union of
-    // the two slices' store rows must equal assigning the WHOLE corpus
-    // in one pass — which is exactly what the oracle computes (q33's
-    // assignment with q25's zero-norm guard). `ingested` tags which
-    // lifecycle path produced each row; AnnStoreSpec drives the
-    // PHYSICAL append (old bucket files untouched, post-ingest search
-    // ≡ rebuilt-store search); jobs.IngestStaleness measures the
-    // recall decay that tells the operator when to re-centroid
-    "q167_ivf_ingest" -> ((s, dir) => {
-      val emb = Tables.embeddings(s, dir)
-      val centroids = emb.filter(col("vec_id") < 8)
-        .select(col("vec_id").as("centroid_id"), col("embedding").as("c_vec"))
-      val history = emb.filter(col("vec_id") % 5 =!= 0)
-      val fresh = emb.filter(col("vec_id") % 5 === 0)
-      Similarity.ivfStoreRows(history, "vec_id", "embedding", centroids)
-        .withColumn("ingested", lit(false))
-        .unionByName(
-          Similarity.ivfStoreRows(fresh, "vec_id", "embedding", centroids)
-            .withColumn("ingested", lit(true)))
-        .select(col("vec_id"), col("centroid_id"),
-          round(col("norm2"), 6).as("norm2"), col("ingested"))
-    }),
-
-    // histogram sketch WAREHOUSE — the quantile member (q152 KMV, q153
-    // CMS, q158 HLL): per-(source, slice) fixed-bin doc-length
-    // histograms, element-wise-added to one store state, percentile
-    // bounds read by integer rank arithmetic (p50/p90/p99). Counters
-    // are sums, so slice+merge ≡ full rescan bit-exactly; the read's
-    // bin lower bound provably brackets the exact rank statistic
-    // (bound ≤ exact < bound + width for middle bins), and the in-bin
-    // audit columns pin that against exact percentiles computed
-    // relationally on BOTH engines — the q112 band pattern with a
-    // tautology-by-construction band, which is precisely what catches
-    // off-by-one rank arithmetic
-    "q168_hist_warehouse" -> ((s, dir) => {
-      import org.apache.spark.sql.expressions.Window
-      val docs = Tables.documents(s, dir)
-        .select(col("source"), (col("doc_id") % 3).as("slice"),
-          length(col("text")).cast("long").as("len"))
-      val merged = SketchStore.histMergeSlices(
-        SketchStore.histSlices(docs, Seq("source"), "slice", col("len"),
-          lo = 0L, width = 16L, nBins = 40), Seq("source"),
-        lo = 0L, width = 16L, nBins = 40)
-      val reads = merged.select(col("source"), col("n_slices"),
-        aggregate(col("cs"), lit(0L), (a, x) => a + x).as("n_docs"),
-        SketchStore.histPercentileBound(col("cs"), 0.5, 0L, 16L).as("p50_bound"),
-        SketchStore.histPercentileBound(col("cs"), 0.9, 0L, 16L).as("p90_bound"),
-        SketchStore.histPercentileBound(col("cs"), 0.99, 0L, 16L).as("p99_bound"))
-      // exact rank statistics (audit side, query-scale sort per group):
-      // min len whose cumulative count reaches rank ⌈p·n⌉
-      val cum = docs.groupBy(col("source"), col("len"))
-        .agg(count(lit(1)).as("c"))
-        .withColumn("cum", sum(col("c")).over(
-          Window.partitionBy(col("source")).orderBy(col("len"))))
-      val tot = docs.groupBy(col("source")).agg(count(lit(1)).as("n"))
-      val exact = cum.join(tot, "source")
-        .select(col("source"), col("len"), col("cum"), col("n"),
-          explode(array(lit(0.5), lit(0.9), lit(0.99))).as("pp"))
-        .filter(col("cum") >=
-          ceil(col("pp") * col("n").cast("double")).cast("long"))
-        .groupBy(col("source"), col("pp")).agg(min(col("len")).as("v"))
-        .groupBy(col("source")).agg(
-          max(when(col("pp") === 0.5, col("v"))).as("p50_exact"),
-          max(when(col("pp") === 0.9, col("v"))).as("p90_exact"),
-          max(when(col("pp") === 0.99, col("v"))).as("p99_exact"))
-      reads.join(exact, "source")
-        .select(col("source"), col("n_slices"), col("n_docs"),
-          col("p50_bound"), col("p90_bound"), col("p99_bound"),
-          col("p50_exact"), col("p90_exact"), col("p99_exact"),
-          (col("p50_exact") >= col("p50_bound") &&
-            col("p50_exact") < col("p50_bound") + 16L).as("p50_in_bin"),
-          (col("p90_exact") >= col("p90_bound") &&
-            col("p90_exact") < col("p90_bound") + 16L).as("p90_in_bin"),
-          (col("p99_exact") >= col("p99_bound") &&
-            col("p99_exact") < col("p99_bound") + 16L).as("p99_in_bin"))
-    }),
-
-    // LIVE novelty ingest gate (q164's live form, the q145 posture):
-    // arrivals (odd ids) scored against the frozen shingle-DF store of
-    // the kept corpus (even ids) — a shingle is novel iff the store
-    // has never seen it; low novelty = boilerplate relative to
-    // everything kept, diverted BEFORE exact dedup pays for it. The
-    // streaming twin runs this same function per micro-batch
-    // (StreamingSpec pins per-batch ≡ batch rescan at each horizon)
-    "q169_novelty_gate" -> ((s, dir) => {
-      val d = Tables.documents(s, dir)
-      TextAnalysis.noveltyAgainstStore(
-        d.filter(col("doc_id") % 2 === 1),
-        TextAnalysis.shingleDfStore(d.filter(col("doc_id") % 2 === 0),
-          "doc_id", "text"),
-        "doc_id", "text")
-    }),
-
-    // training-batch EXPORT — the last mile in one entry: q90's
-    // subword counts → q162's epoch-1 shuffle → q91's interval packing
-    // in SHUFFLE order → q119-style shard split (round-robin over the
-    // sequence index). Every stage hash-derived/integer, so the whole
-    // (shard, batch, sequence) assignment replays relationally — the
-    // oracle nests the three stages' own oracle bodies as CTEs (the
-    // q121 composition lesson)
-    "q170_training_export" -> ((s, dir) => {
-      val d = Tables.documents(s, dir)
-      Packing.trainingExport(
-        TextAnalysis.subwordCounts(d, "doc_id", "text",
-          TextAnalysis.subwordVocab(d, "text", topK = 64)),
-        "doc_id", "subword_cnt", epoch = 1, ctxLen = 512, nShards = 16)
-    }),
-
-    // small-range-corrected HLL reading (q158's documented bias gap
-    // closed as an OPT-IN): per event_type over a deliberately small
-    // value universe (user_id mod 37 → 37 distinct) so the linear-
-    // counting branch genuinely fires — raw ≈ 1.3·n biased high at
-    // n ≪ m, corrected ≈ n. ln() is not engine-reproducible, so this
-    // entry is rows-only BY DESIGN (the q03 convention); q172 is its
-    // hash-exact band sibling
-    "q171_hll_corrected" -> ((s, dir) => {
-      val slices = SketchStore.hllSlices(
-        Tables.events(s, dir)
-          .withColumn("day", to_date(col("ts")))
-          .withColumn("u", (col("user_id") % 37).cast("string")),
-        Seq("event_type"), "day", col("u"))
-      SketchStore.hllMergeSlices(slices, Seq("event_type"))
-        .select(col("event_type"), col("n_slices"),
-          round(SketchStore.hllEstimate(col("regs")), 4).as("est_raw"),
-          round(SketchStore.hllEstimateCorrected(col("regs")), 4)
-            .as("est_corrected"))
-    }),
-
-    // q171's band audit (the q110 pattern): the zero-register count
-    // and exact distinct replay as integers; the branch decision is
-    // engine-exact (raw = one division of identical integer operands),
-    // and the band edge (20%) sits orders of magnitude beyond any ulp
-    // divergence in ln() — so the boolean hashes
-    "q172_hll_corrected_band" -> ((s, dir) => {
-      val ev = Tables.events(s, dir)
-        .withColumn("u", (col("user_id") % 37).cast("string"))
-      val est = SketchStore.hllMergeSlices(
-        SketchStore.hllSlices(ev.withColumn("day", to_date(col("ts"))),
-          Seq("event_type"), "day", col("u")),
-        Seq("event_type"))
-        .select(col("event_type"),
-          size(filter(col("regs"), r => r === 0L)).cast("long").as("v_zero"),
-          SketchStore.hllEstimateCorrected(col("regs")).as("est"))
-      val exact = ev.groupBy(col("event_type"))
-        .agg(countDistinct(col("u")).as("uv"))
-      est.join(exact, "event_type")
-        .select(col("event_type"), col("uv"), col("v_zero"),
-          (abs(col("est") - col("uv").cast("double")) <=
-            lit(0.2) * col("uv").cast("double")).as("within_band"))
-    }),
-
-    // delta-sign audio fingerprint over DECODED PCM (q155's audio
-    // twin, the Chromaprint shape reduced to its oracle-checkable
-    // core): mono-mix each frame, bit i = mix(i+1) > mix(i) strictly —
-    // gain-invariant by construction; computed by the real codec pass
-    // (decode once, fingerprint in place), rot payloads tagged zeros.
-    // The generative wave is pseudo-noise (frame step 40503 wraps mod
-    // 2^16), so prints genuinely differ per clip
-    "q173_audio_fp" -> ((s, dir) => {
-      import s.implicits._
-      val d = Tables.documents(s, dir)
-      val good = Multimodal.audioRecords(
-        d.filter(col("doc_id") % 10 =!= 0), "doc_id")
-      val rot = Multimodal.attachBinary(
-        d.filter(col("doc_id") % 10 === 0), "doc_id", "text",
-        modality = "audio").as[MediaRecord]
-      Multimodal.audioFingerprint(good.unionByName(rot)).toDF()
-    }),
-
-    // audio near-dup serving: per probe clip (ids 1..9 — 0 is rot),
-    // Hamming top-3 among SAME-format clips (channels × frame-count
-    // classes partition the corpus, the q156 dim-class rule) — integer
-    // popcount(XOR) over q173's prints
-    "q174_audio_neardup" -> ((s, dir) => {
-      import org.apache.spark.sql.expressions.Window
-      val d = Tables.documents(s, dir)
-      def prints(docs: org.apache.spark.sql.DataFrame) =
-        Multimodal.audioFingerprint(
-          Multimodal.audioRecords(docs, "doc_id")).toDF()
-      // rot ids (%10 = 0) excluded at the source — equivalent to
-      // q173's decoded filter (every synthesized payload decodes), and
-      // the probe branch synthesizes only ITS 9 clips: the decode is a
-      // mapPartitions codec pass, so a post-hoc filter cannot prune it
-      // (r14 self-review — the full corpus ran twice)
-      val fps = prints(d.filter(col("doc_id") % 10 =!= 0))
-      val probes = prints(
-        d.filter(col("doc_id") < 10 && col("doc_id") % 10 =!= 0))
-        .select(col("doc_id").as("query_id"), col("channels"),
-          col("n_frames"), col("fp").as("q_fp"))
-      val scored = fps.join(broadcast(probes), Seq("channels", "n_frames"))
-        .filter(col("doc_id") =!= col("query_id"))
-        .select(col("query_id"), col("doc_id").as("neighbor_id"),
-          expr("bit_count(q_fp ^ fp)").cast("long").as("hamming"))
-      val w = Window.partitionBy(col("query_id"))
-        .orderBy(col("hamming").asc, col("neighbor_id").asc)
-      scored.withColumn("rank", row_number().over(w).cast("long"))
-        .filter(col("rank") <= 3)
-    }),
-
-    // REAL audio resample (q159's audio twin — normalize every clip
-    // to 16 kHz): nearest-neighbor rate conversion (integer coordinate
-    // map, no interpolation kernels), re-encoded through the real WAV
-    // codec, then decoded AGAIN by the real codec — the oracle replays
-    // the resampled generative samples, so the whole
-    // decode→resample→encode→decode chain must be bit-faithful
-    "q175_audio_resample" -> ((s, dir) => {
-      import s.implicits._
-      Multimodal.decodeAudioFeatures(
-        Multimodal.resampleAudio(
-          Multimodal.audioRecords(Tables.documents(s, dir), "doc_id"),
-          targetRate = 16000)).toDF()
-    }),
-
-    // multimodal SAMPLE ASSEMBLY — the training-row join the modality
-    // ops exist for: per document, text stats + the REAL image-decode
-    // features (q150) + the REAL audio-decode features (q165) in one
-    // row, with per-modality decode flags, a completeness flag (all
-    // modalities decoded — rot in ANY modality marks the sample
-    // incomplete), and the keep gate a curator applies. Equi-joins on
-    // doc_id — at 100 TB each feature table is narrow (the payloads
-    // never join); reusing the oracled q150/q165 entries (the q156
-    // rule) keeps the assembly and its parts from drifting
-    "q176_multimodal_assembly" -> ((s, dir) => {
-      val txt = Tables.documents(s, dir)
-        .select(col("doc_id"), length(col("text")).cast("long").as("n_chars"),
-          size(split(col("text"), " ")).cast("long").as("n_words"))
-      // SERVED from the per-modality decode stores (r22): the stores
-      // materialize the DECLARED q150/q165 outputs once per process
-      // (the q189 scorecard posture), so the assembly joins two narrow
-      // store scans instead of re-running both binary decode passes
-      val img = Stores.imageDecode(s, dir)
-        .select(col("doc_id"), col("decoded").as("img_ok"), col("pixel_sum"))
-      val aud = Stores.audioDecode(s, dir)
-        .select(col("doc_id"), col("decoded").as("aud_ok"), col("amp_sum"))
-      txt.join(img, "doc_id").join(aud, "doc_id")
-        .withColumn("complete", col("img_ok") && col("aud_ok"))
-        .withColumn("keep", col("complete") && col("n_words") >= 5)
-    }),
-
-    // REAL video container demux — the parseable half of the video
-    // modality (the box walk a pipeline runs BEFORE the codec, which
-    // remains the one genuinely absent piece): ISO-BMFF-layout
-    // payloads synthesized per doc (ftyp + moov + one mdat per frame,
-    // sizes and payload bytes integer functions of doc_id), walked by
-    // size/type headers; every box's type, size, and exact payload
-    // byte sum replay relationally. Rot payloads (id % 10 = 0, text
-    // bytes) fail the walk deterministically (first "size" word reads
-    // ≥ 0x20202020, past the payload) → the tagged parsed=false row
-    "q177_video_demux" -> ((s, dir) => {
-      import s.implicits._
-      val d = Tables.documents(s, dir)
-      val good = Multimodal.videoRecords(
-        d.filter(col("doc_id") % 10 =!= 0), "doc_id")
-      val rot = Multimodal.attachBinary(
-        d.filter(col("doc_id") % 10 === 0), "doc_id", "text",
-        modality = "video").as[MediaRecord]
-      Multimodal.parseVideoBoxes(good.unionByName(rot)).toDF()
-    }),
-
-    // container-AWARE frame sampling: every 2nd mdat box — real
-    // demuxed frame boundaries replacing q48's arbitrary byte chunks;
-    // only decoding the payload stays stubbed. Rot ids (%10 = 0) are
-    // excluded at the source like q177's, so a doc q177 reports
-    // unparseable can never ship frames here (r14 second review — the
-    // per-modality rot convention must agree across the pair)
-    "q178_video_frames" -> ((s, dir) => {
-      import s.implicits._
-      Multimodal.videoFrames(
-        Multimodal.videoRecords(
-          Tables.documents(s, dir).filter(col("doc_id") % 10 =!= 0),
-          "doc_id"),
-        stride = 2).toDF()
-    }),
-
-    // hard-negative mining (the DPR recipe): per anchor, top-5
-    // negatives among the top-50 cosine candidates whose score lies in
-    // [0.05, 0.5) — the ceiling excludes near-dups that would be FALSE
-    // negatives, the floor excludes uninformative tail. Brute-force
-    // candidate head at gate scale; the band+rank tail composes with
-    // ANN candidates unchanged at corpus scale
-    "q179_hard_negatives" -> ((s, dir) =>
-      Similarity.hardNegatives(Tables.embeddings(s, dir), "vec_id",
-        "embedding", queryIds = (0L until 10L).toSeq, candidateK = 50,
-        simLo = 0.05, simHi = 0.5, k = 5)),
-
-    // DECONTAMINATED train split (Lee et al. 2021's recommendation
-    // operationalized): q84's hash split, then any TRAIN doc whose
-    // MinHash bands collide with the val/test band store is flagged
-    // contaminated and dropped from the kept set — eval leakage removed
-    // by near-dup, not just exact match; val/test rows always keep
-    "q180_decontaminated_split" -> ((s, dir) => {
-      val sp = Sampling.split(Tables.documents(s, dir), "doc_id",
-          Seq("train" -> 0.9, "val" -> 0.05, "test" -> 0.05))
-        .select(col("doc_id"), col("text"), col("split"))
-      val evalBands = Dedup.bandStore(
-        sp.filter(col("split") =!= "train"), "doc_id", "text")
-      val flags = Dedup.nearDupFlags(
-        sp.filter(col("split") === "train"), evalBands, "doc_id", "text")
-        .select(col("doc_id"), col("hit_bands"))
-      sp.select(col("doc_id"), col("split"))
-        .join(flags, Seq("doc_id"), "left")
-        .select(col("doc_id"), col("split"),
-          coalesce(col("hit_bands"), lit(0L)).as("hit_bands"),
-          (col("split") === "train" &&
-            coalesce(col("hit_bands"), lit(0L)) > 0).as("contaminated"),
-          (col("split") =!= "train" ||
-            coalesce(col("hit_bands"), lit(0L)) === 0).as("kept"))
-    }),
-
-    // cluster-representative selection: q65's transitive near-dup
-    // components + keep-the-LONGEST member per component (tie: min
-    // id), singletons keep themselves — the curator's standard move
-    // after pairwise detection; the argmax is a hash aggregate, no
-    // Window (uncapped candidates for the q65 oracle-parity reason)
-    "q181_cluster_keep_best" -> ((s, dir) => {
-      val d = Tables.documents(s, dir)
-      Dedup.keepBestPerCluster(d, "doc_id", length(col("text")).cast("long"),
-        Stores.lshPairs(s, dir))
-    }),
-
-    // item-affinity lift (market-basket over the behavior log): pairs
-    // co-touched by >= 2 distinct users, lift = N·n_ab/(n_a·n_b) over
-    // the bot-capped distinct (user, item) frame — integer counts,
-    // one rounded division, fully relational
-    "q182_item_lift" -> ((s, dir) =>
-      graft.ops.Behavior.itemLift(eventsWithItem(s, dir), "user_id",
-        "item_id")),
-
-    // CMS join-size estimation (the AMS inner product): |src1 words ⋈
-    // src2 words| answered from two warehouse sketch rows — min over
-    // depth rows of the bucket-wise counter product; collisions only
-    // add, so never_under must hold and the ratio quantifies the
-    // overshoot. Exact side computed relationally on both engines
-    "q183_cms_join_size" -> ((s, dir) => {
-      val words = Tables.documents(s, dir)
-        .filter(col("source").isin("src1", "src2"))
-        .select(col("source"), explode(split(col("text"), " ")).as("term"))
-        .filter(length(col("term")) > 0)
-      val sk = words.groupBy(col("source"))
-        .agg(graft.functions.TypedAggs.countMin(col("term"))("counts")
-          .as("counts"))
-      val a = sk.filter(col("source") === "src1")
-        .select(col("counts").as("ca"))
-      val b = sk.filter(col("source") === "src2")
-        .select(col("counts").as("cb"))
-      val exact = words.filter(col("source") === "src1")
-        .groupBy(col("term")).agg(count(lit(1)).as("na"))
-        .join(words.filter(col("source") === "src2")
-          .groupBy(col("term")).agg(count(lit(1)).as("nb")), "term")
-        .agg(coalesce(sum(col("na") * col("nb")), lit(0L)).as("exact_join"))
-      a.crossJoin(b).crossJoin(exact) // three 1-row frames
-        .select(col("exact_join"),
-          SketchStore.cmsInnerProduct(col("ca"), col("cb")).as("est_join"))
-        .withColumn("ratio", round(col("est_join").cast("double") /
-          col("exact_join").cast("double"), 6))
-        .withColumn("never_under", col("est_join") >= col("exact_join"))
-    }),
-
-    // q182's cap made observable (the q95 rule — an invisible cap is
-    // a silent result change): the users a cap of 50 would exclude,
-    // with their distinct-item counts
-    "q184_item_lift_capped" -> ((s, dir) =>
-      graft.ops.Behavior.itemLiftCappedUsers(eventsWithItem(s, dir),
-        "user_id", "item_id", maxItemsPerUser = 50)),
-
-    // dataset CARD (the datasheet rollup a corpus release ships): per
-    // source — doc count, token mass, mean doc length, language
-    // spread, and the dominant language by a deterministic struct
-    // argmax (count, then lexicographic) — two hash aggregates and a
-    // dimension join, no Window; the one-page answer to "what is in
-    // this corpus"
-    "q185_dataset_card" -> ((s, dir) => {
-      val d = Tables.documents(s, dir)
-        .select(col("source"), col("lang"),
-          length(col("text")).cast("long").as("n_chars"),
-          size(split(col("text"), " ")).cast("long").as("n_words"))
-      val base = d.groupBy(col("source")).agg(
-        count(lit(1)).as("n_docs"),
-        sum(col("n_words")).as("total_words"),
-        round(sum(col("n_chars")).cast("double") / count(lit(1)), 2)
-          .as("avg_chars"),
-        countDistinct(col("lang")).as("n_langs"))
-      val topLang = d.groupBy(col("source"), col("lang"))
-        .agg(count(lit(1)).as("c"))
-        .groupBy(col("source"))
-        .agg(max(struct(col("c"), col("lang"))).as("m"))
-        .select(col("source"), col("m.lang").as("top_lang"),
-          col("m.c").as("top_lang_docs"))
-      base.join(topLang, "source")
-    }),
-
-    // delta-sign VIDEO fingerprint over the DEMUXED container (q173's
-    // video twin — closes the multimodal decode/demux → signature →
-    // near-dup matrix): the per-frame signal is each mdat payload's
-    // exact byte sum (already computed while walking the box grammar —
-    // dedup WITHOUT decoding), bit i = sum(i+1) > sum(i) strictly.
-    // Same rot convention as q177: text payloads fail the walk → the
-    // tagged parsed=false zero row
-    "q186_video_fp" -> ((s, dir) => {
-      import s.implicits._
-      val d = Tables.documents(s, dir)
-      val good = Multimodal.videoRecords(
-        d.filter(col("doc_id") % 10 =!= 0), "doc_id")
-      val rot = Multimodal.attachBinary(
-        d.filter(col("doc_id") % 10 === 0), "doc_id", "text",
-        modality = "video").as[MediaRecord]
-      Multimodal.videoFingerprint(good.unionByName(rot)).toDF()
-    }),
-
-    // video near-dup serving (q174's video twin): per probe clip (ids
-    // 1..9 — 0 is rot), Hamming top-3 among SAME-format clips (the
-    // n_frames class partitions the corpus — prints of different
-    // lengths aren't comparable), integer popcount(XOR) over q186's
-    // prints; only clean demuxes serve (walk_complete gate — every
-    // synthesized clip walks complete, so the filter is the honest
-    // posture, not a result change). Rot ids excluded at the source:
-    // the demux is a mapPartitions pass a post-hoc filter can't prune
-    // (the q174 single-decode rule)
-    "q187_video_neardup" -> ((s, dir) => {
-      import org.apache.spark.sql.expressions.Window
-      val d = Tables.documents(s, dir)
-      def prints(docs: org.apache.spark.sql.DataFrame) =
-        Multimodal.videoFingerprint(
-          Multimodal.videoRecords(docs, "doc_id")).toDF()
-          .filter(col("walk_complete"))
-      val fps = prints(d.filter(col("doc_id") % 10 =!= 0))
-      val probes = prints(
-        d.filter(col("doc_id") < 10 && col("doc_id") % 10 =!= 0))
-        .select(col("doc_id").as("query_id"), col("n_frames"),
-          col("fp").as("q_fp"))
-      val scored = fps.join(broadcast(probes), Seq("n_frames"))
-        .filter(col("doc_id") =!= col("query_id"))
-        .select(col("query_id"), col("doc_id").as("neighbor_id"),
-          expr("bit_count(q_fp ^ fp)").cast("long").as("hamming"))
-      val w = Window.partitionBy(col("query_id"))
-        .orderBy(col("hamming").asc, col("neighbor_id").asc)
-      scored.withColumn("rank", row_number().over(w).cast("long"))
-        .filter(col("rank") <= 3)
-    }),
-
-    // Bloom MEMBERSHIP warehouse — the fifth sketch type (q152 KMV,
-    // q153 CMS, q158 HLL, q168 HIST): per-(type, day) bit vectors over
-    // user ids, bitwise-OR merged to one store state per type. The
-    // md5-60 hash family is cross-engine, so every merged WORD replays
-    // hash-exactly (emitted as rows — the full state is the result,
-    // not just a derived estimate)
-    "q188_bloom_warehouse" -> ((s, dir) => {
-      val slices = SketchStore.bloomSlices(
-        Tables.events(s, dir)
-          .withColumn("day", to_date(col("ts")))
-          .withColumn("u", col("user_id").cast("string")),
-        Seq("event_type"), "day", col("u"), mBits = 65536)
-      SketchStore.bloomMergeSlices(slices, Seq("event_type"),
-          mBits = 65536)
-        .select(col("event_type"), col("n_slices"),
-          posexplode(col("bits")).as(Seq("word_idx", "word")))
-        .select(col("event_type"), col("n_slices"),
-          col("word_idx").cast("long").as("word_idx"), col("word"))
-    }),
-
-    // the q188 store PROBED — membership is deterministic (same md5-60
-    // positions both engines), so unlike the estimate sketches this
-    // audit is fully hash-exact: every member must hit (no false
-    // negatives — the Bloom contract), and 500 known non-member probes
-    // measure the false-positive rate against a 5% band (m=65536,
-    // k=3 at these cardinalities sits orders of magnitude below it)
-    "q191_bloom_membership" -> ((s, dir) => {
-      val ev = Tables.events(s, dir)
-        .withColumn("day", to_date(col("ts")))
-        .withColumn("u", col("user_id").cast("string"))
-      val store = SketchStore.bloomMergeSlices(
-        SketchStore.bloomSlices(ev, Seq("event_type"), "day", col("u"),
-          mBits = 65536),
-        Seq("event_type"), mBits = 65536)
-        .select(col("event_type"), col("bits"))
-      val mem = ev.select(col("event_type"), col("u")).distinct()
-        .join(broadcast(store), "event_type")
-        .select(col("event_type"),
-          SketchStore.bloomContains(col("bits"), col("u"), 65536).as("hit"))
-        .groupBy(col("event_type"))
-        .agg(count(lit(1)).as("n_members"),
-          (count(lit(1)) === sum(when(col("hit"), 1L).otherwise(0L)))
-            .as("fn_free"))
-      // "probe_<i>" strings can never collide with numeric user ids —
-      // guaranteed non-members at every scale factor
-      val probes = ev.select(col("event_type")).distinct()
-        .crossJoin(s.range(500)
-          .select(concat(lit("probe_"), col("id")).as("u")))
-      val fp = probes.join(broadcast(store), "event_type")
-        .select(col("event_type"),
-          SketchStore.bloomContains(col("bits"), col("u"), 65536).as("hit"))
-        .groupBy(col("event_type"))
-        .agg(sum(when(col("hit"), 1L).otherwise(0L)).as("fp_count"))
-        .select(col("event_type"), col("fp_count"),
-          round(col("fp_count").cast("double") / lit(500.0), 6).as("fpr"),
-          (col("fp_count") <= lit(25L)).as("fpr_ok"))
-      mem.join(fp, "event_type")
-    }),
-
-    // dataset card × assembly completeness (the r14 verdict's
-    // datasheet column): per source, the REAL per-modality
-    // decode/demux success rates — image (q150's codec flag), audio
-    // (q165's), video (q186's demux + completeness witness) — and the
-    // all-modalities complete rate a multimodal release publishes.
-    // Reusing the oracled entries (the q156/q176 rule) keeps the card
-    // and the decode passes from drifting; still hash aggregates + a
-    // dimension join, no Window
-    "q189_card_completeness" -> ((s, dir) => {
-      // served STORE-FIRST (r22): the three decode passes ran once at
-      // the per-modality store builds (which invoke the DECLARED
-      // q150/q165/q186 queries — one code path); this scorecard joins
-      // three narrow flag tables instead of re-decoding every payload
-      val src = Stores.docMeta(s, dir).select(col("doc_id"), col("source"))
-      val img = Stores.imageDecode(s, dir)
-        .select(col("doc_id"), col("decoded").as("img_ok"))
-      val aud = Stores.audioDecode(s, dir)
-        .select(col("doc_id"), col("decoded").as("aud_ok"))
-      val vid = Stores.videoFp(s, dir)
-        .select(col("doc_id"),
-          (col("parsed") && col("walk_complete")).as("vid_ok"))
-      def rate(flag: Column): Column =
-        round(sum(when(flag, 1L).otherwise(0L)).cast("double") /
-          count(lit(1)), 6)
-      src.join(img, "doc_id").join(aud, "doc_id").join(vid, "doc_id")
-        .groupBy(col("source"))
-        .agg(count(lit(1)).as("n_docs"),
-          rate(col("img_ok")).as("img_ok_rate"),
-          rate(col("aud_ok")).as("aud_ok_rate"),
-          rate(col("vid_ok")).as("video_demux_rate"),
-          rate(col("img_ok") && col("aud_ok") && col("vid_ok"))
-            .as("complete_rate"))
-    }),
-
-    // conversion ATTRIBUTION (the reference's channel-marketing jobs'
-    // analytics sibling): purchases credit the click/view touch that
-    // preceded them within 7 days — last-touch (q41's as-of semantics
-    // with a horizon) and first-touch in ONE hash aggregate (max/min
-    // of (ts, id, channel) structs — no Window); channel derived
-    // deterministically from the event props; zero-touch conversions
-    // attribute to "(none)"
-    "q190_attribution" -> ((s, dir) => {
-      val ev = Tables.events(s, dir)
-      val convs = ev.filter(col("event_type") === "purchase")
-        .select(col("user_id"), col("event_id").as("conv_id"),
-          col("ts").as("conv_ts"))
-      val touches = ev.filter(col("event_type").isin("click", "view"))
-        .select(col("user_id"), col("event_id").as("touch_id"),
-          col("ts").as("touch_ts"),
-          concat(lit("ch"),
-            (get_json_object(col("props"), "$.k").cast("long") % 4)
-              .cast("string")).as("channel"))
-      graft.ops.Behavior.attribution(convs, touches, "user_id",
-          "conv_id", "conv_ts", "touch_id", "touch_ts", "channel",
-          windowSec = 7L * 24 * 3600)
-        .select(col("user_id"), col("conv_id"),
-          unix_timestamp(col("conv_ts")).as("conv_ts"), col("n_touches"),
-          col("last_channel"), col("last_touch_id"),
-          col("first_channel"), col("first_touch_id"))
-    }),
-
-    // container-level video SUBSAMPLE (q175's video twin — completes
-    // the per-modality transform row: image resize, audio resample,
-    // video frame-stride): keep every 2nd mdat, rewrite the moov frame
-    // count, re-emit a VALID container — then demux the OUTPUT through
-    // the same box walk, so the whole demux→drop→remux→demux chain
-    // must be byte-faithful. Rot payloads pass through unchanged and
-    // still fail the walk into tagged rows (the q159 posture)
-    "q192_video_subsample" -> ((s, dir) => {
-      import s.implicits._
-      val d = Tables.documents(s, dir)
-      val good = Multimodal.videoRecords(
-        d.filter(col("doc_id") % 10 =!= 0), "doc_id")
-      val rot = Multimodal.attachBinary(
-        d.filter(col("doc_id") % 10 === 0), "doc_id", "text",
-        modality = "video").as[MediaRecord]
-      Multimodal.parseVideoBoxes(
-        Multimodal.videoStrideSubsample(good.unionByName(rot), stride = 2))
-        .toDF()
-    }),
-
-    // LINEAR attribution rollup (q190's multi-touch sibling): every
-    // touch in the 7-day window earns 1/n of its conversion's credit,
-    // summed per channel — credit as integer micro-shares (10^6 div n;
-    // a float 1/n fold would sum order-dependently and break replay)
-    "q193_linear_attribution" -> ((s, dir) => {
-      val ev = Tables.events(s, dir)
-      val convs = ev.filter(col("event_type") === "purchase")
-        .select(col("user_id"), col("event_id").as("conv_id"),
-          col("ts").as("conv_ts"))
-      val touches = ev.filter(col("event_type").isin("click", "view"))
-        .select(col("user_id"), col("event_id").as("touch_id"),
-          col("ts").as("touch_ts"),
-          concat(lit("ch"),
-            (get_json_object(col("props"), "$.k").cast("long") % 4)
-              .cast("string")).as("channel"))
-      graft.ops.Behavior.linearAttribution(convs, touches, "user_id",
-        "conv_id", "conv_ts", "touch_id", "touch_ts", "channel",
-        windowSec = 7L * 24 * 3600)
-    }),
-
-    // funnel latency percentiles FROM THE QUANTILE WAREHOUSE (q69's
-    // funnel × q168's histogram store): per user, seconds from first
-    // signup to first subsequent purchase, histogrammed into day bins
-    // per signup-day slice, merged, and read as p50/p90/p99 bin
-    // bounds — the time-to-convert dashboard answered from sketch
-    // rows alone; integer rank arithmetic replays hash-exactly
-    "q194_funnel_latency_hist" -> ((s, dir) => {
-      val ev = Tables.events(s, dir)
-      val su = ev.filter(col("event_type") === "signup")
-        .groupBy(col("user_id")).agg(min(col("ts")).as("signup_ts"))
-      val pu = ev.filter(col("event_type") === "purchase")
-        .select(col("user_id"), col("ts").as("p_ts"))
-      val lat = su.join(pu, "user_id")
-        .filter(col("p_ts") >= col("signup_ts"))
-        .groupBy(col("user_id"), col("signup_ts"))
-        .agg(min(col("p_ts")).as("first_purchase_ts"))
-        .select(col("user_id"),
-          (unix_timestamp(col("first_purchase_ts")) -
-            unix_timestamp(col("signup_ts"))).as("latency_sec"),
-          to_date(col("signup_ts")).as("day"))
-      val merged = SketchStore.histMergeSlices(
-        SketchStore.histSlices(lat, Nil, "day", col("latency_sec"),
-          lo = 0L, width = 86400L, nBins = 30),
-        Nil, lo = 0L, width = 86400L, nBins = 30)
-      merged.select(col("n_slices"),
-        aggregate(col("cs"), lit(0L), (a, x) => a + x).as("n_users"),
-        SketchStore.histPercentileBound(col("cs"), 0.5, 0L, 86400L)
-          .as("p50_bound"),
-        SketchStore.histPercentileBound(col("cs"), 0.9, 0L, 86400L)
-          .as("p90_bound"),
-        SketchStore.histPercentileBound(col("cs"), 0.99, 0L, 86400L)
-          .as("p99_bound"))
-    }),
-
-    // Bloom PRE-FILTER audit on the q120 ingest gate (the two-tier
-    // 100 TB posture: a kilobyte broadcast vector clears "definitely
-    // new" arrivals at scan speed; only flagged ones consult the
-    // store). fn_free pins the no-false-negative invariant row by
-    // row — a cleared doc can NEVER be an exact dup, so the tiered
-    // gate keeps exactly the one-tier set
-    "q195_bloom_prefilter" -> ((s, dir) => {
-      val docs = Tables.documents(s, dir)
-      graft.ops.Dedup.bloomPrefilterAudit(
-        docs.filter(col("source") === "src2"),
-        graft.ops.Dedup.fingerprintStore(
-          docs.filter(col("source") =!= "src2"), "text"),
-        "doc_id", "text")
-    }),
-
-    // POSITION-BASED (U-shaped, 40/20/40) attribution — with q190
-    // (last/first) and q193 (linear), the canonical model family;
-    // first/last identified by the same (ts, id) tie-break as q190,
-    // middles share 20% by integer division
-    "q196_position_attribution" -> ((s, dir) => {
-      val ev = Tables.events(s, dir)
-      val convs = ev.filter(col("event_type") === "purchase")
-        .select(col("user_id"), col("event_id").as("conv_id"),
-          col("ts").as("conv_ts"))
-      val touches = ev.filter(col("event_type").isin("click", "view"))
-        .select(col("user_id"), col("event_id").as("touch_id"),
-          col("ts").as("touch_ts"),
-          concat(lit("ch"),
-            (get_json_object(col("props"), "$.k").cast("long") % 4)
-              .cast("string")).as("channel"))
-      graft.ops.Behavior.positionAttribution(convs, touches, "user_id",
-        "conv_id", "conv_ts", "touch_id", "touch_ts", "channel",
-        windowSec = 7L * 24 * 3600)
-    }),
-
-    // TIME-DECAY attribution: weight = 10^6 >> full days before the
-    // conversion — the one decay schedule that is pure integer
-    // arithmetic (2^(-age/λ) needs exp(), not engine-reproducible)
-    "q197_decay_attribution" -> ((s, dir) => {
-      val ev = Tables.events(s, dir)
-      val convs = ev.filter(col("event_type") === "purchase")
-        .select(col("user_id"), col("event_id").as("conv_id"),
-          col("ts").as("conv_ts"))
-      val touches = ev.filter(col("event_type").isin("click", "view"))
-        .select(col("user_id"), col("event_id").as("touch_id"),
-          col("ts").as("touch_ts"),
-          concat(lit("ch"),
-            (get_json_object(col("props"), "$.k").cast("long") % 4)
-              .cast("string")).as("channel"))
-      graft.ops.Behavior.decayAttribution(convs, touches, "user_id",
-        "conv_id", "conv_ts", "touch_id", "touch_ts", "channel",
-        windowSec = 7L * 24 * 3600)
-    }),
-
-    // KMV SET ANALYTICS from the warehouse (q183's sibling planning
-    // question: "how much do these corpora OVERLAP?"): per source
-    // pair, Jaccard and intersection-size estimates read from the two
-    // stored bottom-64 sketches alone — the union's bottom-k members
-    // present in both sketches estimate ρ = J — audited against the
-    // exact term overlap computed relationally. Sketch frames are
-    // dimension-sized (one row per source), so the pair join is a
-    // broadcast of kilobytes at any corpus scale
-    "q199_kmv_set_stats" -> ((s, dir) => {
-      val words = Tables.documents(s, dir)
-        .select(col("source"), explode(split(col("text"), " ")).as("term"))
-        .filter(length(col("term")) > 0)
-      val sk = words.groupBy(col("source"))
-        .agg(graft.functions.TypedAggs.kmvHashes(col("term"), 64).as("hs"))
-      val pairs = sk.select(col("source").as("src_a"), col("hs").as("ha"))
-        .join(sk.select(col("source").as("src_b"), col("hs").as("hb")),
-          col("src_a") < col("src_b"))
-      val ex = words.select(col("source"), col("term")).distinct()
-      val exact = ex.select(col("source").as("src_a"), col("term"))
-        .join(ex.select(col("source").as("src_b"), col("term")), "term")
-        .filter(col("src_a") < col("src_b"))
-        .groupBy(col("src_a"), col("src_b"))
-        .agg(countDistinct(col("term")).as("exact_intersection"))
-      pairs
-        .withColumn("st", SketchStore.kmvSetStats(col("ha"), col("hb")))
-        .join(exact, Seq("src_a", "src_b"), "left")
-        .select(col("src_a"), col("src_b"), col("st.n_common"),
-          col("st.est_union"), col("st.est_jaccard"),
-          col("st.est_intersection"),
-          coalesce(col("exact_intersection"), lit(0L))
-            .as("exact_intersection"))
-    }),
-
-    // MMR diversified top-3 over the top-20 cosine candidates
-    // (Carbonell & Goldstein 1998 — the retrieval-diversification
-    // staple after ANN): greedy λ·rel − μ·max-sim-to-picked with
-    // λ = 0.7, μ = 0.3 passed as SEPARATE literals (1.0 − 0.7 is a
-    // different double than 0.3 — the literal-operand float rule);
-    // ties break by neighbor id, every score 6-digit-rounded before
-    // the greedy arithmetic
-    "q198_mmr_topk" -> ((s, dir) =>
-      Similarity.mmrTopK(Tables.embeddings(s, dir), "vec_id", "embedding",
-        queryIds = (0L until 10L).toSeq, candidateK = 20, k = 3,
-        lambdaRel = 0.7, lambdaDiv = 0.3)),
-
-    // RFM segmentation over the order log: the log reduces to one row
-    // per customer first, then three PrefixSum ntiles on the
-    // dimension-scale frame (never a single-task global Window)
-    "q200_rfm_segments" -> ((s, dir) =>
-      Behavior.rfmSegments(Tables.orders(s, dir), "o_custkey",
-        "o_orderdate", "o_totalprice", buckets = 5)),
-
-    // A/B read-out: salted-hash arm assignment (replayable, unlike
-    // rand() splits), two-proportion z from +,-,×,÷,sqrt only — all
-    // correctly-rounded IEEE ops, so the oracle's identical
-    // expression tree reproduces the doubles bit-for-bit
-    "q201_ab_test" -> ((s, dir) =>
-      Behavior.abTest(Tables.events(s, dir), "user_id", "event_type",
-        "purchase")),
-
-    // capped inverted index: WindowGroupLimit pre-prunes the
-    // per-token rank below the shuffle (the q04 plan); df keeps any
-    // truncation observable (df > cap ⇒ truncated)
-    "q202_inverted_index" -> ((s, dir) =>
-      TextAnalysis.invertedIndex(Tables.documents(s, dir), "doc_id",
-        "text", maxPostings = 5)),
-
-    // AND-query served from the capped view over the WRITTEN index
-    // store: the two highest-df terms (the worst-case intersection),
-    // top-20 by combined tf; everything after the vocab argmax runs
-    // at serving scale, and the corpus text is never rescanned
-    "q203_and_query" -> ((s, dir) =>
-      TextAnalysis.andQuery(storedIndex(s, dir, maxPostings = 1000),
-        k = 20)),
-
-    // inverted-index WAREHOUSE: each doc's text arrives split across
-    // two slices (the append-log case — first-half words in slice 0,
-    // rest in slice 1; short docs whole), per-slice postings
-    // store-merge by tf-sum, capped view rebuilt through the SHARED
-    // read body — the oracle is the full-corpus q202 index, proving
-    // store-merge ≡ rescan relationally
-    "q204_index_store" -> ((s, dir) => {
-      val d = Tables.documents(s, dir).select(col("doc_id"), col("text"))
-      val words = split(col("text"), " ")
-      val n = size(words)
-      val whole = d.filter(size(split(col("text"), " ")) < 4)
-        .select(col("doc_id"), lit(0).as("slice"), col("text"))
-      val big = d.filter(size(split(col("text"), " ")) >= 4)
-      // integer halving: Column `/` is double division, and the
-      // implicit double→int truncation drops the last word of every
-      // odd-length doc (n=5 → lengths 2.5/3.5/2.5) — floor to int
-      val half = floor(n / 2).cast("int")
-      val partA = big.select(col("doc_id"), lit(0).as("slice"),
-        array_join(slice(words, lit(1), half), " ").as("text"))
-      val partB = big.select(col("doc_id"), lit(1).as("slice"),
-        array_join(slice(words, half + 1, n - half), " ").as("text"))
-      val store = TextAnalysis.indexSlices(
-        whole.unionByName(partA).unionByName(partB),
-        "doc_id", "text", "slice")
-      TextAnalysis.cappedIndex(
-        TextAnalysis.indexMergeSlices(store), maxPostings = 5)
-    }),
-
-    // index-store COMPACTION: generation 0 (slices 0+1 — the q204
-    // split, so doc tokens SPAN the compacted slices) folds into one
-    // replacement slice, generation 1 (whole short docs, slice 2)
-    // stays; the re-merged read must land on the full-corpus q202
-    // index — compaction commutes with reads because the merge is an
-    // associative tf sum
-    "q205_index_compaction" -> ((s, dir) => {
-      val d = Tables.documents(s, dir).select(col("doc_id"), col("text"))
-      val words = split(col("text"), " ")
-      val n = size(words)
-      val whole = d.filter(size(split(col("text"), " ")) < 4)
-        .select(col("doc_id"), lit(2).as("slice"), col("text"))
-      val big = d.filter(size(split(col("text"), " ")) >= 4)
-      val half = floor(n / 2).cast("int")
-      val partA = big.select(col("doc_id"), lit(0).as("slice"),
-        array_join(slice(words, lit(1), half), " ").as("text"))
-      val partB = big.select(col("doc_id"), lit(1).as("slice"),
-        array_join(slice(words, half + 1, n - half), " ").as("text"))
-      val slices = TextAnalysis.indexSlices(
-        whole.unionByName(partA).unionByName(partB),
-        "doc_id", "text", "slice")
-      val gen0 = TextAnalysis.indexCompact(
-        slices.filter(col("slice") < 2), newSlice = 100L)
-      val gen1 = slices.filter(col("slice") === 2)
-        .select(col("slice").cast("long").as("slice"), col("token"),
-          col("doc_id"), col("tf"))
-      TextAnalysis.cappedIndex(
-        TextAnalysis.indexMergeSlices(gen0.unionByName(gen1)),
-        maxPostings = 5)
-    }),
-
-    // BM25-family scoring read on the capped index: tf-saturation ×
-    // rational idf surrogate, both exact integer ratios (k1 = 6/5, no
-    // ln/exp), summed by cross-multiplication — ONE correctly-rounded
-    // double division ranks, so both engines sort identical doubles
-    // index AND corpus count both come off the store pair (postings +
-    // norms file) — the query plan touches no corpus text at all
-    "q206_bm25" -> ((s, dir) =>
-      TextAnalysis.bm25Query(storedIndex(s, dir, maxPostings = 1000),
-        Stores.norms(s, dir)
-          .agg(countDistinct(col("doc_id")).as("n_docs")), k = 20)),
-
-    // full BM25 with length normalization (b = 3/4, k1 = 6/5): the
-    // norms store supplies dl and the corpus scalars; each term's
-    // score is ONE correctly-rounded division of exact integers and
-    // the OR sum ONE addition in fixed order — bit-exact both engines
-    "q207_bm25_full" -> ((s, dir) =>
-      TextAnalysis.bm25FullQuery(storedIndex(s, dir, maxPostings = 1000),
-        Stores.norms(s, dir), k = 20)),
-
-    // PageRank over the item-transition graph (integer micro-ranks,
-    // 3 power iterations, d = 0.85 exact): which items anchor the
-    // browsing graph — edges are per-user consecutive item pairs
-    // (ts, event_id ordered; self-transitions dropped), weights are
-    // transition counts; every round is an equi-join + hash aggregate
-    "q208_pagerank" -> ((s, dir) =>
-      // SERVED FROM the written edge store (the graph family's one
-      // edge source — q225/q226/q227/q236/q246 read the same store);
-      // the oracle re-derives edges from the raw log, so green =
-      // store read ≡ log read
-      graft.ops.Graph.pageRankDirected(storedEdges(s, dir), "src",
-          "dst", "w", iters = 3, scale = 1000000L)
-        .select(col("id").as("node"), col("rank_units").as("rank_micro"))),
-
-    // phrase query SERVED FROM the written positional store (the
-    // q206 posture — postings come off bucket files, the corpus is
-    // never posexploded at query time): the corpus's most frequent
-    // bigram (count desc, lexicographic tie-break — deterministic at
-    // every SF) served as an exact-adjacency phrase match; the >= 2
-    // filter guards Spark's descending sequence(0, -1) on 1-word docs
-    "q209_phrase_query" -> ((s, dir) =>
-      TextAnalysis.phraseQuery(
-        storedPositional(s, dir, bigramTokens(s, dir)),
-        Stores.topBigram(s, dir), k = 20)),
-
-    // the q209 phrase relaxed to "within 3 tokens after" — same
-    // positional store read, same query terms, in-row pair counting
-    "q238_proximity_query" -> ((s, dir) =>
-      TextAnalysis.proximityQuery(
-        storedPositional(s, dir, bigramTokens(s, dir)),
-        Stores.topBigram(s, dir), k = 20, slop = 3)),
-
-    // traffic-spike detection: hourly series counts vs their trailing
-    // 24-bucket window, the integer cross-multiply cnt·n > 2·Σ — no
-    // division anywhere, the trailing witnesses ride along
-    "q210_traffic_spikes" -> ((s, dir) =>
-      Behavior.trafficSpikes(Tables.events(s, dir), "event_type", "ts")),
-
-    // top-20 three-step item journeys (the Sankey read): per-user
-    // consecutive triples ordered by (ts, event_id), counted, ranked
-    "q211_journey_paths" -> ((s, dir) =>
-      Behavior.journeyPaths(
-        eventsWithItem(s, dir).filter(col("item_id").isNotNull),
-        "user_id", "item_id", "ts", "event_id", k = 20)),
-
-    // index tombstone DELETES (the LSM posture): every doc_id % 10 = 0
-    // doc is deleted by appending its negated postings; the merged
-    // capped read must equal the index over the corpus WITHOUT those
-    // docs — deletes cancel exactly, history files untouched
-    "q212_index_tombstones" -> ((s, dir) => {
-      val d = Tables.documents(s, dir).select(col("doc_id"), col("text"))
-      // the ingest half reads the WRITTEN index store (r21): the merge
-      // is slice-agnostic (sums by (token, doc_id)), so the store's
-      // generation tagging produces the identical merged frame as an
-      // inline slice-0 rebuild — only the tombstone slice (request-
-      // scale) derives from the corpus per query
-      val ingest = Stores.index(s, dir)
-      val tomb = TextAnalysis.indexTombstones(
-        d.filter(col("doc_id") % 10 === 0).withColumn("slice", lit(9L)),
-        "doc_id", "text", "slice")
-      TextAnalysis.cappedIndex(
-        TextAnalysis.indexMergeSlices(ingest.unionByName(tomb)),
-        maxPostings = 5)
-    }),
-
-    // vector-store tombstone DELETES (q212's id-addressed sibling):
-    // every vec_id % 7 = 0 vector is deleted via the read-time
-    // anti-join; the IVF search must serve as if they were never
-    // stored — store files untouched, deleted ids can still QUERY
-    "q213_ann_tombstones" -> ((s, dir) => {
-      val emb = Tables.embeddings(s, dir)
-      val centroids = emb.filter(col("vec_id") < 8)
-        .select(col("vec_id").as("centroid_id"),
-          col("embedding").as("c_vec"))
-      val store = Similarity.ivfStoreRows(emb, "vec_id", "embedding",
-        centroids)
-      val tomb = emb.filter(col("vec_id") % 7 === 0).select(col("vec_id"))
-      Similarity.ivfSearchBucketed(
-        Similarity.applyTombstones(store, tomb, "vec_id"), emb,
-        "vec_id", "embedding", centroids,
-        queryIds = (0L until 10L).toSeq, k = 5, nprobe = 2)
-    }),
-
-    // TWAP per event-type series: step-interpolated value × holding
-    // seconds, DECIMAL-folded numerator, ONE final division — the
-    // monitoring/market read over irregular observations
-    "q214_twap" -> ((s, dir) =>
-      Behavior.twap(Tables.events(s, dir), "event_type", "ts",
-        "event_id", "value")),
-
-    // vector-store COMPACTION: the rebuild-minus-tombstones rewrite
-    // must serve exactly what the tombstone READ (q213) serves — the
-    // same oracle proves both (the q205 compaction-commutes rule
-    // applied to the id-addressed store)
-    "q215_ann_compaction" -> ((s, dir) => {
-      val emb = Tables.embeddings(s, dir)
-      val centroids = emb.filter(col("vec_id") < 8)
-        .select(col("vec_id").as("centroid_id"),
-          col("embedding").as("c_vec"))
-      val compacted = Similarity.ivfStoreRows(
-        emb.filter(col("vec_id") % 7 =!= 0), "vec_id", "embedding",
-        centroids)
-      Similarity.ivfSearchBucketed(compacted, emb, "vec_id",
-        "embedding", centroids,
-        queryIds = (0L until 10L).toSeq, k = 5, nprobe = 2)
-    }),
-
-    // seasonal-baseline spikes: each hour compares to the SAME hour of
-    // the prior 7 days (partition (series, hour-of-day)) — the diurnal
-    // baseline; same integer cross-multiply and witnesses as q210
-    "q216_seasonal_spikes" -> ((s, dir) =>
-      Behavior.seasonalSpikes(Tables.events(s, dir), "event_type", "ts")),
-
-    // week-over-week top-20 item movers: two sort-limit leaderboards
-    // anchored at the log's max ts, full-outer joined, tagged
-    // entered/left/up/down/flat; rank 0 = outside that week's top-k
-    "q217_top_movers" -> ((s, dir) =>
-      Behavior.topMovers(
-        eventsWithItem(s, dir).filter(col("item_id").isNotNull),
-        "item_id", "ts", k = 20)),
-
-    // exact table profile of the events feed — per-column row/null/
-    // distinct counts and typed min/max in ONE aggregate pass; the
-    // data-quality audit a warehouse runs before trusting a feed
-    "q218_profile" -> ((s, dir) =>
-      graft.ops.Profile.table(Tables.events(s, dir),
-        numCols = Seq("event_id", "user_id", "value"),
-        strCols = Seq("event_type", "props"),
-        tsCols = Seq("ts"))),
-
-    // SCD2 dimension build from the account-state change log
-    // (signup/error events): consecutive same-state rows collapse,
-    // versions carry right-open validity intervals, null valid_to =
-    // current (timestamps projected to epoch seconds — the q75 rule)
-    "q219_scd2" -> ((s, dir) =>
-      graft.ops.Scd.scd2(
-        Tables.events(s, dir)
-          .filter(col("event_type").isin("signup", "error")),
-        "user_id", "ts", "event_id", "event_type")
-        .select(col("user_id"), col("state"),
-          unix_timestamp(col("valid_from")).as("valid_from_s"),
-          unix_timestamp(col("valid_to")).as("valid_to_s"),
-          col("is_current"), col("version"))),
-
-    // point-in-time join: each purchase picks the account-state
-    // version valid AT purchase time (the feature-store leakage
-    // guard); purchases before any version surface as "(none)"
-    "q220_pit_join" -> ((s, dir) => {
-      val ev = Tables.events(s, dir)
-      val dim = graft.ops.Scd.scd2(
-        ev.filter(col("event_type").isin("signup", "error")),
-        "user_id", "ts", "event_id", "event_type")
-      val facts = ev.filter(col("event_type") === "purchase")
-        .select(col("event_id"), col("user_id"), col("ts"))
-      graft.ops.Scd.pointInTime(facts, dim, "user_id", "ts")
-        .select(col("event_id"), col("user_id"),
-          coalesce(col("state"), lit("(none)")).as("state"),
-          coalesce(unix_timestamp(col("valid_from")), lit(-1L))
-            .as("valid_from_s"))
-    }),
-
-    // CDC type-1 state store: split the log at its epoch midpoint,
-    // build the tombstone-retaining LWW artifact from the pre slice,
-    // fold the post slice in with cdcApply, serve — the oracle is the
-    // ONE-SHOT LWW over the full log, so the green row proves
-    // apply(state(pre), post) ≡ state(pre ∪ post) relationally
-    // (argmax associativity; errors act as deletes)
-    "q221_cdc_state" -> ((s, dir) => {
-      val ev = Tables.events(s, dir)
-        .select(col("user_id"), col("ts"), col("event_id"),
-          col("event_type"),
-          when(col("event_type") === "error", lit("delete"))
-            .otherwise(lit("upsert")).as("op"))
-      val cut = ev.agg(((min(unix_timestamp(col("ts"))) +
-        max(unix_timestamp(col("ts")))) / 2).cast("long").as("cut"))
-      val wc = ev.crossJoin(broadcast(cut))
-      val pre = wc.filter(unix_timestamp(col("ts")) < col("cut"))
-      val post = wc.filter(unix_timestamp(col("ts")) >= col("cut"))
-      val state = graft.ops.Scd.cdcState(pre, "user_id", "ts",
-        "event_id", "event_type", "op")
-      graft.ops.Scd.cdcServe(graft.ops.Scd.cdcApply(state, post,
-          "user_id", "ts", "event_id", "event_type", "op"))
-        .select(col("user_id"), col("state"),
-          unix_timestamp(col("ts")).as("ts_s"),
-          col("tie").as("event_id"))
-    }),
-
-    // incremental SCD2 maintenance: dimension built from the pre slice,
-    // post slice folded in with scd2Apply (current versions re-seed the
-    // collapse, closed history passes through); oracle = the q219
-    // one-shot rebuild over the full log — incremental ≡ rebuild
-    "q222_scd2_apply" -> ((s, dir) => {
-      val ev = Tables.events(s, dir)
-        .filter(col("event_type").isin("signup", "error"))
-      val cut = ev.agg(((min(unix_timestamp(col("ts"))) +
-        max(unix_timestamp(col("ts")))) / 2).cast("long").as("cut"))
-      val wc = ev.crossJoin(broadcast(cut))
-      val pre = wc.filter(unix_timestamp(col("ts")) < col("cut"))
-      val post = wc.filter(unix_timestamp(col("ts")) >= col("cut"))
-      val dim = graft.ops.Scd.scd2(pre, "user_id", "ts", "event_id",
-        "event_type")
-      graft.ops.Scd.scd2Apply(dim, post, "user_id", "ts", "event_id",
-          "event_type")
-        .select(col("user_id"), col("state"),
-          unix_timestamp(col("valid_from")).as("valid_from_s"),
-          unix_timestamp(col("valid_to")).as("valid_to_s"),
-          col("is_current"), col("version"))
-    }),
-
-    // threshold-algorithm CERTIFIED pruned retrieval: score only each
-    // query term's top-256 impact postings, prove kth score > τ (the
-    // Fagin bound — a failed certificate raises, never mis-serves; the
-    // flat-tf corpus needs m ≈ 120 at sf0.1, measured, so 256 carries
-    // margin while still pruning the ≤1000-posting lists), and the
-    // oracle is the EXHAUSTIVE q206 scoring: green = the pruned read
-    // provably returns the exhaustive top-20
-    "q223_ta_topk" -> ((s, dir) =>
-      TextAnalysis.taTopK(storedIndex(s, dir, maxPostings = 1000),
-        Stores.norms(s, dir)
-          .agg(countDistinct(col("doc_id")).as("n_docs")),
-        k = 20, m = 256)),
-
-    // LOCF gap-fill: the dense per-series hourly grid with missing
-    // hours carrying the last observed count forward, observed=false
-    // as the fill witness — the read every chart/model joins against
-    "q224_gap_fill" -> ((s, dir) =>
-      Behavior.gapFill(Tables.events(s, dir), "event_type", "ts")
-        .select(col("series"), unix_timestamp(col("bucket")).as("bucket_s"),
-          col("cnt"), col("observed"))),
-
-    // per-item triangle counts over the transition graph (the q208
-    // edge set, undirected): degree-oriented wedge closing — the
-    // clustering read; wedge count bounded by sum outdeg^2
-    "q225_triangles" -> ((s, dir) =>
-      graft.ops.Graph.triangles(storedEdges(s, dir), "src", "dst")),
-
-    // local clustering coefficient: triangles normalized by wedge
-    // capacity 2T/(d(d-1)) — exact integer counts, ONE
-    // correctly-rounded division; every deg>=2 node emits
-    "q226_clustering_coeff" -> ((s, dir) =>
-      graft.ops.Graph.clusteringCoefficient(storedEdges(s, dir),
-        "src", "dst")),
-
-    // 3 synchronized k-core peel rounds (k=10) with the converged
-    // witness — true at every SF here (measured), with real peeling
-    // at sf0.001; the oracle unrolls the same rounds as CTEs
-    "q227_kcore" -> ((s, dir) =>
-      graft.ops.Graph.kCorePeel(storedEdges(s, dir), "src",
-        "dst", k = 10, rounds = 3)),
-
-    // fuzzy title join: all pairs within Levenshtein 2 on 40-char
-    // titles, candidates from each title's 7 RAREST trigrams (the
-    // Ed-Join prefix filter); the oracle joins EXHAUSTIVELY, so green
-    // proves the filter lost no pair; doc_id%10<3 keeps the
-    // quadratic oracle tractable (the op itself never goes quadratic)
-    "q228_fuzzy_join" -> ((s, dir) =>
-      Dedup.editDistancePairs(
-        Tables.documents(s, dir).filter(col("doc_id") % 10 < 3)
-          .select(col("doc_id"), substring(col("text"), 1, 40).as("title")),
-        "doc_id", "title", maxDist = 2, gramLen = 3)),
-
-    // hierarchical rollup datasheet: (source), (source, lang) and
-    // grand-total composition rows in ONE Expand+aggregate pass;
-    // gid disambiguates rolled-up "(all)" from data values
-    "q229_rollup_sheet" -> ((s, dir) =>
-      graft.ops.Profile.rollupSheet(Tables.documents(s, dir),
-        Seq("source", "lang"), "n_chars")),
-
-    // gap-fill served FROM the hourly-count warehouse — same body as
-    // q224 (one code path), merge of two slice generations feeds it:
-    // the stored grid read never re-scans events
-    "q230_gap_fill_store" -> ((s, dir) => {
-      val ev = Tables.events(s, dir)
-      val sliced = Behavior.hourCountSlices(
-        ev.withColumn("slice", col("event_id") % 2), "event_type", "ts",
-        "slice")
-      Behavior.gapFillFromCounts(Behavior.hourCountMerge(sliced))
-        .select(col("series"), unix_timestamp(col("bucket")).as("bucket_s"),
-          col("cnt"), col("observed"))
-    }),
-
-    // as-of value lookup on the event log: each purchase picks the
-    // user's latest prior non-purchase value — latestPerKeyTs pins
-    // equal-ts winners by event_id, then the EXISTING union-window
-    // asofJoin (one shuffle, no range join) serves the lookup;
-    // DuckDB replays with its native ASOF JOIN (first such oracle)
-    "q231_asof_join" -> ((s, dir) => {
-      val ev = Tables.events(s, dir)
-      val facts = ev.filter(col("event_type") === "purchase")
-        .select(col("event_id"), col("user_id"), col("ts"))
-      val quotes = graft.ops.Scd.latestPerKeyTs(
-        ev.filter(col("event_type") =!= "purchase")
-          .select(col("user_id"), col("ts").as("qts"), col("event_id"),
-            coalesce(col("value"), lit(-1.0)).as("value")),
-        "user_id", "qts", "event_id", "value")
-      StreamMatch.asofJoin(facts, quotes, "user_id", "ts", "qts",
-          Seq("value"))
-        .select(col("event_id"), col("user_id"),
-          unix_timestamp(col("ts")).as("ts_s"),
-          unix_timestamp(col("asof_qts")).as("q_ts_s"),
-          col("value").as("q_value"))
-    }),
-
-    // daily growth accounting: every day's active base decomposed into
-    // new/retained/resurrected plus the churned count on the day the
-    // user went silent — the growth identity dashboards reconcile
-    "q232_growth_accounting" -> ((s, dir) =>
-      Behavior.growthAccounting(Tables.events(s, dir), "user_id", "ts")
-        // DATE hashes engine-differently in the compare; timestamp is
-        // the proven cross-engine dtype (the q210 bucket precedent)
-        .withColumn("day", col("day").cast("timestamp"))),
-
-    // DAU/WAU/MAU + the DAU/MAU stickiness ratio as exact ppm; the
-    // trailing distincts come from the monthDays× user-day expansion,
-    // never a per-day range join over the log
-    "q233_stickiness" -> ((s, dir) =>
-      Behavior.stickiness(Tables.events(s, dir), "user_id", "ts")
-        .withColumn("day", col("day").cast("timestamp"))),
-
-    // key-skew audit: top-20 hottest keys with exact ppm shares and
-    // running concentration — the pre-shuffle operability read that
-    // decides when q96's salting is warranted
-    "q234_skew_audit" -> ((s, dir) =>
-      graft.ops.Profile.skewAudit(Tables.events(s, dir), "user_id", 20)),
-
-    // small-file compaction plan over the per-source doc manifest:
-    // ordered start-offset binning at 8 KiB keeps every bin a
-    // contiguous doc_id range (clustering survives the rewrite)
-    "q235_compaction_plan" -> ((s, dir) =>
-      graft.ops.Profile.compactionPlan(Tables.documents(s, dir),
-        "source", "doc_id", "n_chars", targetBytes = 8192L)),
-
-    // 3-hop BFS blast radius from the flagged items (item_id % 10 = 0)
-    // over the q225 transition graph — synchronous frontier expansion,
-    // min-dist fold per round; the oracle unrolls the rounds as CTEs
-    "q236_khop" -> ((s, dir) =>
-      graft.ops.Graph.kHopDistances(storedEdges(s, dir), "src",
-        "dst",
-        eventsWithItem(s, dir)
-          .filter(col("item_id").isNotNull && col("item_id") % 10 === 0),
-        "item_id", rounds = 3)),
-
-    // top-20 collocations by PMI-ordered lift — observed/expected on
-    // the corpus bigram table, positional marginals, no ln anywhere
-    "q237_pmi_collocations" -> ((s, dir) =>
-      TextAnalysis.pmiCollocations(Tables.documents(s, dir), "text",
-        k = 20, minCount = 5L)),
-
-    // referential-integrity matrix: three real TPC-H FK edges (the
-    // value is the zero-orphan green) plus a deliberately-incomplete
-    // parent (customers capped at key 100) proving the orphan counter
-    // (the left join's null-parent branch) actually counts at the gate
-    "q239_fk_audit" -> ((s, dir) => {
-      val P = graft.ops.Profile
-      P.fkAudit(Tables.lineitem(s, dir), "l_orderkey",
-          Tables.orders(s, dir), "o_orderkey",
-          "lineitem.l_orderkey->orders")
-        .unionByName(P.fkAudit(Tables.orders(s, dir), "o_custkey",
-          Tables.customer(s, dir), "c_custkey",
-          "orders.o_custkey->customer"))
-        .unionByName(P.fkAudit(Tables.customer(s, dir), "c_nationkey",
-          Tables.nation(s, dir), "n_nationkey",
-          "customer.c_nationkey->nation"))
-        .unionByName(P.fkAudit(Tables.events(s, dir), "user_id",
-          Tables.customer(s, dir).filter(col("c_custkey") <= 100),
-          "c_custkey", "events.user_id->top100_customers"))
-    }),
-
-    // exact p50/p90/p99 of the time-to-next-action after each event
-    // type — consecutive same-user gaps in whole seconds through the
-    // q51 guarded-exact-percentile body
-    "q240_gap_percentiles" -> ((s, dir) =>
-      Quantiles.guardedExactPercentiles(
-        Behavior.interEventGaps(Tables.events(s, dir), "user_id",
-          "event_type", "ts", "event_id"),
-        "event_type", "gap_s",
-        Seq(0.5 -> "p50", 0.9 -> "p90", 0.99 -> "p99"))),
-    // daily bounce rate: single-event sessions / sessions started that
-    // day, the q18 gap-sessionization rule, rate as integer ppm
-    "q241_bounce_rate" -> ((s, dir) =>
-      Behavior.bounceRate(Tables.events(s, dir), "user_id", "ts",
-          "event_id")
-        .withColumn("day", col("day").cast("timestamp"))),
-
-    // trending top-20: per-event weight 2^20 >> age_days (clamped 63 —
-    // the decayAttribution shift lesson), integer-exact, sort-limit
-    "q242_trending_items" -> ((s, dir) =>
-      Behavior.trendingItems(eventsWithItem(s, dir), "item_id", "ts",
-        k = 20)),
-
-    // orders-per-customer histogram INCLUDING the zero bucket (the
-    // left join is the point: silent customers are the finding)
-    "q243_orders_per_customer" -> ((s, dir) =>
-      Tables.customer(s, dir).select(col("c_custkey"))
-        .join(Tables.orders(s, dir)
-          .select(col("o_custkey").as("c_custkey"), col("o_orderkey")),
-          Seq("c_custkey"), "left")
-        .groupBy(col("c_custkey"))
-        .agg(count(col("o_orderkey")).as("n_orders"))
-        .groupBy(col("n_orders"))
-        .agg(count(lit(1)).as("n_customers"))),
-
-    // exact basket-size percentiles (lines per order) by priority —
-    // the q51 guarded-exact body over an order-grain pre-aggregate
-    "q244_basket_percentiles" -> ((s, dir) => {
-      val sz = Tables.lineitem(s, dir).groupBy(col("l_orderkey"))
-        .agg(count(lit(1)).as("n_lines"))
-      Quantiles.guardedExactPercentiles(
-        Tables.orders(s, dir)
-          .select(col("o_orderkey").as("l_orderkey"),
-            col("o_orderpriority"))
-          .join(sz, "l_orderkey"),
-        "o_orderpriority", "n_lines", Seq(0.5 -> "p50", 0.9 -> "p90"))
-    }),
-
-    // dup-cluster size histogram over the q65 components, singletons
-    // folded from the corpus total — the dedup observability read
-    // SERVED from the WRITTEN dup map (r22): the histogram's component
-    // frame is exactly [[Stores.dupMap]]'s rows (components over the
-    // stored LSH pair edges — the q65 read), so the per-query component
-    // walk AND the band-bucket pairing both collapse to a store scan;
-    // only the corpus-count cross join (two 1-row aggregates) runs here
-    "q248_dup_cluster_sizes" -> ((s, dir) => {
-      val docs = Tables.documents(s, dir)
-      Dedup.clusterSizeHistogram(docs, "doc_id",
-        Stores.dupMap(s, dir)
-          .select(col("doc_id").as("id"), col("rep").as("component")))
-    }),
-
-    // median/MAD robust anomaly flags on the daily series counts —
-    // level-shift-proof where q210's trailing mean is not; the flag is
-    // the exact integer cross-multiply 2*dev2 > 3*mad4
-    "q247_robust_anomalies" -> ((s, dir) =>
-      Behavior.robustAnomalies(Tables.events(s, dir), "event_type", "ts")
-        .withColumn("day", col("day").cast("timestamp"))),
-
-    // next-item serving table: top-3 successors per item SERVED FROM
-    // the written edge store (the counts ARE the store rows),
-    // probability as exact ppm
-    "q246_next_item" -> ((s, dir) =>
-      Behavior.nextItemFromCounts(storedEdges(s, dir), "src", "dst",
-        "w", k = 3)),
-
-    // q242 SERVED FROM the item-hour count warehouse (slices split by
-    // event_id % 3, merged, read by the decay body) — the oracle
-    // recomputes from the raw log, so green = store read ≡ log read
-    "q245_trending_store" -> ((s, dir) => {
-      val ev = eventsWithItem(s, dir).filter(col("item_id").isNotNull)
-        .withColumn("slice", col("event_id") % 3)
-      Behavior.trendingFromCounts(
-        Behavior.hourCountMerge(
-          Behavior.hourCountSlices(ev, "item_id", "ts", "slice")),
-        k = 20)
-    }),
-
-    // positional-index WAREHOUSE: each long doc's text arrives split
-    // across two slices, part B carrying its start OFFSET (the q204
-    // append-log case applied to positions — local posexplode pos +
-    // offset = the global position a rescan would assign); the merged
-    // read serves the q209 phrase. The oracle recomputes from the raw
-    // corpus, so green = offset-merge ≡ rescan — including bigrams
-    // that SPAN the slice boundary
-    // SERVED from the WRITTEN split-slice store (r22): the two-way doc
-    // split + posexplode aggregation runs once per process at
-    // [[Stores.splitPositional]]'s build (the identical derivation —
-    // offsets carried, one positionalSlices code path); this read is
-    // the merge + phrase over the token-bucketed rows. The merge groups
-    // by (token, doc_id) and never reads the slice tag, so the store's
-    // q250-layout tags (whole docs at slice 2, not 0) serve this
-    // query's rows exactly — whole and split docs are disjoint id sets
-    "q249_pidx_store" -> ((s, dir) =>
-      TextAnalysis.phraseQuery(
-        TextAnalysis.positionalMergeSlices(Stores.splitPositional(s, dir)),
-        Stores.topBigram(s, dir), k = 20)),
-
-    // positional-store COMPACTION: generation 0 (the split slices 0+1)
-    // folds into one replacement slice, generation 1 (whole short
-    // docs, slice 2) stays; the re-merged read serves the q238
-    // proximity — compaction commutes with reads because the merge is
-    // an associative position-set union
-    // the generation slices come off the WRITTEN split-slice store
-    // (r22, same layout: gen 0 = slices 0+1, gen 1 = whole docs at
-    // slice 2); the compaction fold itself — the operation this query
-    // proves commutes with reads — still runs here, per read, only its
-    // INPUT slices stop being re-derived from the corpus per query
-    "q250_pidx_compaction" -> ((s, dir) => {
-      val slices = Stores.splitPositional(s, dir)
-      val gen0 = TextAnalysis.positionalCompact(
-        slices.filter(col("slice") < 2), newSlice = 100L)
-      val gen1 = slices.filter(col("slice") === 2)
-        .select(col("slice").cast("long").as("slice"), col("token"),
-          col("doc_id"), col("tf"), col("positions"))
-      TextAnalysis.proximityQuery(
-        TextAnalysis.positionalMergeSlices(gen0.unionByName(gen1)),
-        Stores.topBigram(s, dir), k = 20, slop = 3)
-    }),
-
-    // edge-WAREHOUSE lifecycle: the transition-pair log arrives split
-    // across three slices (event_id % 3 — an arbitrary interleave, so
-    // most (src, dst) pairs span slices), per-slice edge counts
-    // sum-merge, and the PageRank read must land on the full-log q208
-    // ranks — the oracle recomputes from the raw log, proving
-    // slice-merge ≡ one-pass edge derivation relationally
-    "q251_edge_slices" -> ((s, dir) => {
-      // raw pairs off the WRITTEN transitions store (the per-user
-      // Window ran once at store build) — the slice tagging and the
-      // whole lifecycle proof are unchanged, only the pair source is
-      val sliced = Stores.transitions(s, dir)
-        .withColumn("slice", col("event_id") % 3)
-      graft.ops.Graph.pageRankDirected(
-          graft.ops.Graph.edgeMerge(graft.ops.Graph.edgeSlices(
-            sliced, "item_id", "nxt", "slice")),
-          "src", "dst", "w", iters = 3, scale = 1000000L)
-        .select(col("id").as("node"), col("rank_units").as("rank_micro"))
-    }),
-
-    // the 100×-scale profile: q218 with HLL++ estimates in place of
-    // the exact-distinct Expand — approximate → rows-only check here,
-    // the q253 band audit is the hash-exact sibling (the q03/q110
-    // pairing)
-    "q252_profile_approx" -> ((s, dir) =>
-      graft.ops.Profile.approxTable(Tables.events(s, dir),
-        numCols = Seq("event_id", "user_id", "value"),
-        strCols = Seq("event_type", "props"),
-        tsCols = Seq("ts"))),
-
-    // q252's band audit: per profiled column, the HLL++ estimate must
-    // sit within max(2, 10%) of the exact distinct count — the exact
-    // side is DuckDB-reproducible and the estimate deterministic
-    // (HLL register merges are order-independent), so the whole row
-    // hashes
-    "q253_profile_approx_band" -> ((s, dir) => {
-      val exact = queries("q218_profile")(s, dir)
-        .select(col("column"), col("n_distinct"))
-      val est = queries("q252_profile_approx")(s, dir)
-        .select(col("column"), col("n_distinct").as("_est"))
-      exact.join(est, "column")
-        .select(col("column"), col("n_distinct"),
-          (abs(col("_est").cast("double") -
-            col("n_distinct").cast("double")) <=
-            greatest(lit(2.0),
-              lit(0.1) * col("n_distinct").cast("double")))
-            .as("within_band"))
-    }),
-
-    // positional-store DELETES (the q213 id-addressed posture —
-    // position sets don't cancel arithmetically the way tf sums do):
-    // every doc_id % 10 = 0 doc is deleted via the read-time
-    // anti-join against an append-only delete log; the phrase read
-    // must serve as if they were never ingested. Query TERMS still
-    // derive from the full corpus (deleting docs must not move the
-    // deterministic term pick) — the oracle restricts only the
-    // positional side
-    "q254_pidx_tombstones" -> ((s, dir) => {
-      // the slice frame reads the WRITTEN positional store (r21): the
-      // tombstone anti-join is by doc_id and the position-set merge is
-      // slice-agnostic, so the store's generation tagging produces the
-      // identical merged frame as an inline slice-0 rebuild — the
-      // corpus is no longer posexploded per query
-      val slices = Stores.positional(s, dir)
-      val deletes = Tables.documents(s, dir)
-        .filter(col("doc_id") % 10 === 0)
-        .select(col("doc_id"))
-      TextAnalysis.phraseQuery(
-        TextAnalysis.positionalMergeSlices(
-          TextAnalysis.positionalApplyTombstones(slices, deletes)),
-        Stores.topBigram(s, dir), k = 20)
-    }),
-
-    // edge-store RETRACTIONS (the LSM cancel-to-zero posture applied
-    // to edge counts): every user_id % 7 = 0 user's transition pairs
-    // are retracted by appending their NEGATED per-slice counts; the
-    // merged PageRank must equal the walk over the remaining users'
-    // log — per-user pairs are independent, so the oracle just
-    // filters the ev CTE
-    "q255_edge_retraction" -> ((s, dir) => {
-      // raw pairs off the WRITTEN transitions store (q251's reasoning;
-      // this entry reads `pairs` twice — ingest + retraction — so the
-      // store also replaces two Window runs, not one)
-      val pairs = Stores.transitions(s, dir)
-      val ingest = graft.ops.Graph.edgeSlices(
-        pairs.withColumn("slice", lit(0L)), "item_id", "nxt", "slice")
-      val retract = graft.ops.Graph.edgeTombstones(
-        pairs.filter(col("user_id") % 7 === 0).withColumn("slice", lit(1L)),
-        "item_id", "nxt", "slice")
-      graft.ops.Graph.pageRankDirected(
-          graft.ops.Graph.edgeMerge(ingest.unionByName(retract)),
-          "src", "dst", "w", iters = 3, scale = 1000000L)
-        .select(col("id").as("node"), col("rank_units").as("rank_micro"))
-    }),
-
-    // edge-store COMPACTION: generations 0+1 (of the q251 three-way
-    // interleave) fold into one replacement slice, generation 2
-    // stays; the next-item read over the re-merge must land on the
-    // full-log q246 table — sum-merge associativity is the proof
-    // obligation, the shared oracle the proof
-    "q256_edge_compaction" -> ((s, dir) => {
-      // raw pairs off the WRITTEN transitions store (q251's reasoning)
-      val sliced = Stores.transitions(s, dir)
-        .withColumn("slice", col("event_id") % 3)
-      val slices = graft.ops.Graph.edgeSlices(sliced, "item_id", "nxt",
-        "slice")
-      val gen0 = graft.ops.Graph.edgeCompact(
-        slices.filter(col("slice") < 2), newSlice = 100L)
-      val gen1 = slices.filter(col("slice") === 2)
-      Behavior.nextItemFromCounts(
-        graft.ops.Graph.edgeMerge(gen0.unionByName(gen1)),
-        "src", "dst", "w", k = 3)
-    }),
-
-    // k-TERM exact phrase (k = 3): the corpus's most frequent trigram
-    // served off the positional store — every posting position maps
-    // to its candidate anchor (pos − ord) and an anchor seen under
-    // all three ords is an occurrence; the general form of the q209
-    // two-term intersect. Store-prefiltered to the (≤3) distinct
-    // query tokens, terms off the persisted trigram statistic
-    "q257_phrase_trigram" -> ((s, dir) => {
-      val terms = trigramTerms(s, dir)
-      TextAnalysis.phraseQueryK(
-        storedPositional(s, dir, terms.select(col("token")).distinct()),
-        terms, k = 20)
-    }),
-
-    // store-slice datasheet over the index warehouse (slices split by
-    // doc_id % 3 + a tombstone slice deleting doc_id % 10 = 0): per
-    // slice the row/key counts, tf sum, and tombstone-row count — the
-    // "how many generations, how big, is it compaction time" audit.
-    // The datasheet op itself is ONE hash aggregate at store scale;
-    // this ENTRY derives the slice frame from the corpus inline (the
-    // q249 lifecycle-proof shape) so the oracle can replay it — a
-    // deployment reads the written slice table instead
-    "q258_store_datasheet" -> ((s, dir) => {
-      val d = Tables.documents(s, dir).select(col("doc_id"), col("text"))
-      val ingest = TextAnalysis.indexSlices(
-        d.withColumn("slice", col("doc_id") % 3), "doc_id", "text",
-        "slice")
-      val tomb = TextAnalysis.indexTombstones(
-        d.filter(col("doc_id") % 10 === 0).withColumn("slice", lit(9L)),
-        "doc_id", "text", "slice")
-      graft.ops.Profile.sliceDatasheet(ingest.unionByName(tomb),
-        "slice", Seq("token", "doc_id"), "tf")
-    }),
-
-    // k-term conjunctive retrieval: docs carrying ALL distinct tokens
-    // of the top trigram, ranked by summed tf — the AND-k membership
-    // test is a hash aggregate (distinct matched tokens == k), never
-    // a k-way join chain; served from the materialized capped index
-    "q259_and_trigram" -> ((s, dir) =>
-      TextAnalysis.andQueryK(storedIndex(s, dir, maxPostings = 1000),
-        trigramTerms(s, dir),
-        k = 20)),
-
-    // k-term BM25 OR ranking over the trigram's terms: per term ONE
-    // correctly-rounded division of the exact q206 rational, the
-    // 3-way sum folded LEFT in fixed ord order so the oracle replays
-    // the identical float expression tree; served from the
-    // materialized capped index + norms store
-    "q260_bm25_trigram" -> ((s, dir) =>
-      TextAnalysis.bm25QueryK(storedIndex(s, dir, maxPostings = 1000),
-        Stores.norms(s, dir)
-          .agg(countDistinct(col("doc_id")).as("n_docs")),
-        trigramTerms(s, dir),
-        nTerms = 3, k = 20)),
-
-    // store MAINTENANCE decision over the ACTUAL written serving
-    // tables (q258's datasheet derives its slice frame inline so the
-    // oracle can replay it; this is the deployment form): per-
-    // generation sliceDatasheet rows of the written index, positional,
-    // and edge warehouses feed the compaction planner, emitting one
-    // "compact generations [gen_lo..gen_hi]" row per planned rewrite
-    // bin. The oracle recomputes generation sizes from the raw corpus
-    // and replays the binning (the q245 store-vs-log posture), so a
-    // green row proves the written generations hold exactly what a
-    // from-scratch derivation assigns them — the read an operator
-    // schedules nightly; work ∝ the 12-row manifest, never the data
-    "q261_store_maintenance" -> ((s, dir) => {
-      def sheet(label: String, slices: DataFrame,
-                keys: Seq[String], w: String) =
-        graft.ops.Profile.sliceDatasheet(slices, "slice", keys, w)
-          .select(lit(label).as("store"), col("slice"), col("n_rows"))
-      val sheets =
-        sheet("idx", Stores.index(s, dir), Seq("token", "doc_id"), "tf")
-          .unionByName(sheet("pidx", Stores.positional(s, dir),
-            Seq("token", "doc_id"), "tf"))
-          .unionByName(sheet("edges", Stores.edges(s, dir),
-            Seq("src", "dst"), "w"))
-      graft.ops.Profile.compactionPlan(sheets, "store", "slice",
-          "n_rows", targetBytes = 5000L)
-        .select(col("grp").as("store"), col("bin"),
-          col("n_files").as("n_gens"), col("bytes").as("n_rows"),
-          col("id_lo").as("gen_lo"), col("id_hi").as("gen_hi"))
-    }),
-
-    // LITERAL user-query search — what a person types into a search
-    // box, not a corpus-derived statistic: "hash join window" parsed
-    // by searchTerms (whitespace tokens, first-occurrence ords),
-    // ranked by the k-term BM25 OR sum off the materialized capped
-    // index + norms store. The user story every other retrieval
-    // entry's deterministic term pick stands in for
-    "q262_search_literal" -> ((s, dir) =>
-      TextAnalysis.bm25QueryK(storedIndex(s, dir, maxPostings = 1000),
-        Stores.norms(s, dir)
-          .agg(countDistinct(col("doc_id")).as("n_docs")),
-        TextAnalysis.searchTerms(s, "hash join window"),
-        nTerms = 3, k = 20)),
-
-    // snippet/highlight extraction — the serving step AFTER ranking
-    // that every result page needs: for the q209 phrase top-10, the
-    // ±2-token window around each doc's FIRST phrase occurrence plus
-    // its 0-based anchor. Hits broadcast into ONE documents join
-    // (text touched only for the 10 result docs); anchor scan and
-    // window slice are in-row higher-order functions
-    "q263_phrase_snippets" -> ((s, dir) =>
-      TextAnalysis.phraseSnippets(
-        Tables.documents(s, dir),
-        TextAnalysis.phraseQuery(
-          storedPositional(s, dir, bigramTokens(s, dir)),
-          Stores.topBigram(s, dir), k = 10),
-        Stores.topBigram(s, dir), context = 2)),
-
-    // prefix autocomplete — the search-box suggestion read: terms
-    // starting with the literal "s", ranked by df, served from the
-    // WRITTEN term dictionary (token-sorted, so the pushed StartsWith
-    // prunes row groups). Dictionary-scale work: no postings, no
-    // corpus, regardless of corpus size
-    "q264_prefix_search" -> ((s, dir) =>
-      TextAnalysis.prefixSearch(Stores.vocab(s, dir), "s", k = 10)),
-
-    // fuzzy term lookup ("did you mean") for the literal misspelling
-    // "sow": the SymSpell deletion-neighborhood store turns the query
-    // into |q|+1 pushed variant probes; levenshtein verifies the
-    // CANDIDATES only — never an edit-distance scan of the vocabulary
-    "q265_fuzzy_term" -> ((s, dir) =>
-      TextAnalysis.fuzzyTerms(Stores.deletions(s, dir), "sow", k = 10)),
-
-    // batched infix (wildcard *q*) search over the char-trigram index
-    // store: seven literal infixes in ONE read — gram-AND candidates,
-    // contains-verify on candidates only, per-query df rank. "uery"
-    // exercises the multi-gram AND; "zzz" proves zero-match queries
-    // emit nothing
-    "q266_infix_search" -> ((s, dir) =>
-      TextAnalysis.infixSearch(Stores.trigrams(s, dir),
-        Seq("oin", "ort", "rea", "ble", "alu", "uery", "zzz"), k = 5)),
-
-    // the full "did you mean" serving path: the misspelling "sow" is
-    // corrected to the top fuzzy suggestion off the deletion-
-    // neighborhood store, and the corrected term runs the capped-index
-    // BM25 read — three written stores composed (delneigh → cidx +
-    // norms), the corpus touched by none of them
-    "q267_corrected_search" -> ((s, dir) =>
-      TextAnalysis.bm25QueryK(storedIndex(s, dir, maxPostings = 1000),
-        Stores.norms(s, dir)
-          .agg(countDistinct(col("doc_id")).as("n_docs")),
-        TextAnalysis.fuzzyTerms(Stores.deletions(s, dir), "sow", k = 1)
-          .select(lit(0).as("ord"), col("token")),
-        nTerms = 1, k = 20)),
-
-    // typo-tolerant multi-term search — the full search box: the
-    // literal "hash joi windo" parses to three terms, EVERY term is
-    // batch-corrected against the deletion-neighborhood store in one
-    // broadcast join (hash stays hash at lev 0; joi→join,
-    // windo→window at lev 1; a term with no lev<=1 match would just
-    // drop — scoring 0, as an unknown word should), and the corrected
-    // frame runs the q262 k-term BM25 body off the capped index
-    "q268_typo_search" -> ((s, dir) =>
-      TextAnalysis.bm25QueryK(storedIndex(s, dir, maxPostings = 1000),
-        Stores.norms(s, dir)
-          .agg(countDistinct(col("doc_id")).as("n_docs")),
-        TextAnalysis.correctTerms(Stores.deletions(s, dir),
-          "hash joi windo"),
-        nTerms = 3, k = 20)),
-
-    // faceted search — the counts a result page shows beside its
-    // hits: every doc matching >= 1 term of the q262 literal query
-    // (the capped-index match set), counted once per (lang, source)
-    // facet value off the narrow metadata store. Corpus text touched
-    // nowhere; one join + one aggregate for both facet dimensions
-    "q269_faceted_search" -> ((s, dir) =>
-      TextAnalysis.facetCounts(
-        storedIndex(s, dir, maxPostings = 1000)
-          .join(broadcast(TextAnalysis.searchTerms(s, "hash join window")
-            .select(col("token"))), Seq("token")),
-        Stores.docMeta(s, dir), Seq("lang", "source"))),
-
-    // filtered search — the q262 literal query restricted to lang=en:
-    // the facet-value doc list comes off the PARTITIONED facet index
-    // (directory pruning — the scan lists only lang=en files), the
-    // restriction is a semi-join on the cap-bounded hit set, scoring
-    // statistics stay global, and the rank runs within the filter
-    "q270_filtered_search" -> ((s, dir) =>
-      TextAnalysis.bm25QueryK(storedIndex(s, dir, maxPostings = 1000),
-        Stores.norms(s, dir)
-          .agg(countDistinct(col("doc_id")).as("n_docs")),
-        TextAnalysis.searchTerms(s, "hash join window"),
-        nTerms = 3, k = 20,
-        allowed = Some(Stores.facetIndex(s, dir)
-          .filter(col("facet") === "lang" && col("value") === "en")))),
-
-    // hybrid retrieval — the lexical+vector merge every modern search
-    // stack runs: the q262 literal BM25 top-20 fused with the exact
-    // cosine top-20 for query vector 0 (the id spaces align by
-    // construction) via reciprocal-rank fusion, 1/(60+rank) summed
-    // where present. RRF needs only RANKS — no calibration between
-    // the BM25 scale and the cosine scale — which is why serving
-    // stacks fuse this way
-    "q271_hybrid_rrf" -> ((s, dir) =>
-      Similarity.rrfFuse(
-        TextAnalysis.bm25QueryK(storedIndex(s, dir, maxPostings = 1000),
-          Stores.norms(s, dir)
-            .agg(countDistinct(col("doc_id")).as("n_docs")),
-          TextAnalysis.searchTerms(s, "hash join window"),
-          nTerms = 3, k = 20)
-          .select(col("doc_id"), col("rk").as("rank")),
-        Similarity.cosineKnn(Tables.embeddings(s, dir), "vec_id",
-          "embedding", Seq(0L), 20)
-          .select(col("neighbor_id").as("doc_id"), col("rank")),
-        k = 10)),
-
-    // the planner's read BEFORE touching postings: the literal query's
-    // terms in AND-intersection order (df asc — drive from the rarest
-    // list) with the expected candidate count after each step under
-    // independence, all off the dictionary store — work ∝ |terms|
-    "q272_query_plan" -> ((s, dir) =>
-      TextAnalysis.queryPlanEstimate(Stores.vocab(s, dir),
-        Stores.norms(s, dir)
-          .agg(countDistinct(col("doc_id")).as("n_docs")),
-        "hash join window")),
-
-    // "more like this": doc 0 becomes the query — its top-3 terms by
-    // (tf desc, df asc) probe the capped index via the k-term BM25
-    // read with the seed excluded; one pushed doc fetch + dictionary
-    // probes + the cap-bounded retrieval, corpus rescanned nowhere
-    "q273_more_like_this" -> ((s, dir) =>
-      TextAnalysis.moreLikeThis(storedIndex(s, dir, maxPostings = 1000),
-        Stores.norms(s, dir)
-          .agg(countDistinct(col("doc_id")).as("n_docs")),
-        Stores.vocab(s, dir),
-        Tables.documents(s, dir), "doc_id", "text",
-        docId = 0L, m = 3, k = 10)),
-
-    // tiered retrieval: the lexical recall stage nominates its top 100
-    // off the capped index, the precision stage rescores ONLY those
-    // candidates with the exact cosine against the query vector — the
-    // cascade shape (cheap corpus-wide recall, expensive bounded
-    // rerank) vs q271's rank-only fusion of two independent lists
-    "q274_rerank_cosine" -> ((s, dir) =>
-      Similarity.rerankCosine(
-        TextAnalysis.bm25QueryK(storedIndex(s, dir, maxPostings = 1000),
-          Stores.norms(s, dir)
-            .agg(countDistinct(col("doc_id")).as("n_docs")),
-          TextAnalysis.searchTerms(s, "hash join window"),
-          nTerms = 3, k = 100)
-          .select(col("doc_id"), col("rk").as("rank")),
-        Tables.embeddings(s, dir), "vec_id", "embedding",
-        queryId = 0L, k = 10)),
-
-    // field-collapsed search: the same literal BM25 candidates, one
-    // result per near-dup cluster (the written dup map's components),
-    // each cluster represented by its best-scoring doc — the "group
-    // similar results" read off two stores, corpus touched nowhere
-    "q275_collapse_search" -> ((s, dir) =>
-      TextAnalysis.collapseSearch(storedIndex(s, dir, maxPostings = 1000),
-        Stores.norms(s, dir)
-          .agg(countDistinct(col("doc_id")).as("n_docs")),
-        TextAnalysis.searchTerms(s, "hash join window"),
-        nTerms = 3, k = 10, dupMap = Stores.dupMap(s, dir))),
-
-    // right-to-be-forgotten cascade audit: one erasure request
-    // (doc_id % 97 = 0) audited against EVERY warehouse family — the
-    // record a GDPR request is answered with and the pre-flight
-    // sizing for the per-family tombstone writes; one store scan per
-    // family, forget set broadcast, corpus touched nowhere
-    "q276_forget_audit" -> ((s, dir) => {
-      val forget = Stores.norms(s, dir)
-        .filter(col("doc_id") % 97 === 0).select(col("doc_id"))
-      // two consumers (postings audit + vocabulary extinction)
-      val postings = graft.ops.Checkpoints.pin(
-        TextAnalysis.indexMergeSlices(Stores.index(s, dir)),
-        None, eager = false)
-      Seq(
-        Forget.familyAudit("index_postings", postings, "doc_id", forget),
-        Forget.familyAudit("positional_positions",
-          TextAnalysis.positionalMergeSlices(Stores.positional(s, dir)),
-          "doc_id", forget, weight = col("tf")),
-        Forget.familyAudit("norms", Stores.norms(s, dir), "doc_id",
-          forget),
-        Forget.familyAudit("doc_meta", Stores.docMeta(s, dir), "doc_id",
-          forget),
-        Forget.familyAudit("facets", Stores.facetIndex(s, dir),
-          "doc_id", forget),
-        Forget.familyAudit("pq_codes", Stores.pqCodes(s, dir), "vec_id",
-          forget),
-        Forget.familyAudit("dup_map", Stores.dupMap(s, dir), "doc_id",
-          forget),
-        // rows whose REP (cluster label) references a forgotten id —
-        // surviving members would keep the erased id as their group
-        // label after a member-only delete; execution must reassign
-        // these reps ([[Forget.dupMapErase]]), and the audit surfaces
-        // them (ADVICE r18)
-        Forget.familyAudit("dup_map_reps", Stores.dupMap(s, dir), "rep",
-          forget),
-        Forget.vocabAudit(postings, forget)
-      ).reduce(_.unionByName(_))
-    }),
-
-    // query expansion: the seed term's strongest collocation partners
-    // (off the WRITTEN collocation dictionary, both bigram directions,
-    // max lift per partner) join the query as OR-terms — "hash" plus
-    // its two best partners through the k-term BM25 read; one pushed
-    // store probe, dictionary-scale work before the cap-bounded read
-    "q278_expansion_search" -> ((s, dir) =>
-      TextAnalysis.bm25QueryK(storedIndex(s, dir, maxPostings = 1000),
-        Stores.norms(s, dir)
-          .agg(countDistinct(col("doc_id")).as("n_docs")),
-        TextAnalysis.expandTerms(Stores.collocations(s, dir),
-          seed = "hash", e = 2),
-        nTerms = 3, k = 10)),
-
-    // collocation-dictionary MAINTENANCE (the q212 lifecycle applied
-    // to this family): an ingest slice plus a content-addressed
-    // tombstone slice for every doc_id % 10 = 0 document merge to the
-    // lift table a corpus-minus rescan builds — marginals and the
-    // total shift automatically because the read derives them from
-    // the merged counts; top-20 by (lift desc, w1, w2)
-    "q280_colloc_maintenance" -> ((s, dir) => {
-      val d = Tables.documents(s, dir).select(col("doc_id"), col("text"))
-      val ingest = TextAnalysis.collocSlices(
-        d.withColumn("slice", lit(0L)), "text", "slice")
-      val tomb = TextAnalysis.collocTombstones(
-        d.filter(col("doc_id") % 10 === 0).withColumn("slice", lit(1L)),
-        "text", "slice")
-      TextAnalysis.collocationTableFrom(
-          TextAnalysis.collocMergeSlices(ingest.unionByName(tomb)),
-          minCount = 5L)
-        .orderBy(col("lift").desc, col("w1").asc, col("w2").asc)
-        .limit(20)
-    }),
-
-    // the forget EXECUTION read (q276's serving sibling): the
-    // id-addressed erasure request fetches its texts by broadcast
-    // semi-join (the content-addressed tombstone derivation), the
-    // tombstone slice unions against the WRITTEN store, and the same
-    // literal search serves with df/n_docs recomputed — results as if
-    // the forgotten docs were never ingested; history files untouched
-    "q279_forget_search" -> ((s, dir) => {
-      val forget = Stores.norms(s, dir)
-        .filter(col("doc_id") % 97 === 0).select(col("doc_id"))
-      val tomb = TextAnalysis.indexTombstones(
-        Tables.documents(s, dir)
-          .join(broadcast(forget), Seq("doc_id"), "left_semi")
-          .withColumn("slice", lit(99L)),
-        "doc_id", "text", "slice")
-      val merged = graft.ops.Checkpoints.pin(
-        TextAnalysis.indexMergeSlices(
-          Stores.index(s, dir).unionByName(tomb)),
-        None, eager = false) // two consumers: capped view + n_docs
-      TextAnalysis.bm25QueryK(
-        TextAnalysis.cappedIndex(merged, maxPostings = 1000),
-        merged.agg(countDistinct(col("doc_id")).as("n_docs")),
-        TextAnalysis.searchTerms(s, "hash join window"),
-        nTerms = 3, k = 10)
-    }),
-
-    // negative search terms (the "-term" operator): "hash join
-    // -window" — BM25 over the positives off the capped index, docs
-    // carrying the negative term excluded via its FULL uncapped
-    // posting list (a capped exclusion would leak; one pushed token
-    // probe on the written store, then the semi-down/anti-back
-    // broadcast pattern — no doc-scale shuffle)
-    "q281_negative_search" -> ((s, dir) =>
-      TextAnalysis.bm25QueryK(storedIndex(s, dir, maxPostings = 1000),
-        Stores.norms(s, dir)
-          .agg(countDistinct(col("doc_id")).as("n_docs")),
-        TextAnalysis.searchTerms(s, "hash join"),
-        nTerms = 2, k = 10,
-        blocked = Some(TextAnalysis.indexMergeSlices(
-          Stores.index(s, dir).filter(col("token") === "window"))
-          .select(col("doc_id"))))),
-
-    // passage retrieval (the RAG read): chunks are the retrieval unit
-    // — the literal query scores CHUNKS off the written chunk-level
-    // capped index (df/N in the chunk domain), docs rank by their
-    // best chunk (MaxP), and the winning chunk_id rides along
-    "q282_passage_search" -> ((s, dir) =>
-      TextAnalysis.passageSearch(
-        Stores.chunkIndex(s, dir, maxPostings = 1000),
-        Stores.chunkStats(s, dir),
-        TextAnalysis.searchTerms(s, "hash join window"),
-        nTerms = 3, k = 10, chunkKeyBase = Stores.ChunkKeyBase)),
-
-    // statistics drift between generations: df as-of gen 2 vs the
-    // live df, top movers by gained documents — the observability
-    // read that tells a relevance owner WHICH terms' idf shifted
-    // after an ingest (both sides off the written slice store; the
-    // dictionary derivation is the shared termDictionary body)
-    "q285_df_drift" -> ((s, dir) => {
-      val store = Stores.index(s, dir)
-      def dfOf(sl: DataFrame) = TextAnalysis.termDictionary(
-        TextAnalysis.indexMergeSlices(sl))
-        .select(col("token"), col("df"))
-      TopN.globalRanked(
-        dfOf(store).select(col("token"), col("df").as("df_new"))
-          .join(dfOf(store.filter(col("slice") <= 2L))
-            .select(col("token"), col("df").as("df_old")),
-            Seq("token"), "left")
-          .select(col("token"),
-            coalesce(col("df_old"), lit(0L)).as("df_old"),
-            col("df_new"),
-            (col("df_new") - coalesce(col("df_old"), lit(0L)))
-              .as("delta")),
-        20, col("delta").desc, col("token").asc)
-    }),
-
-    // batched multi-query retrieval: three query strings answered in
-    // ONE pass over the capped index (the offline-eval / query-log-
-    // replay read); per-query rank is a qid-PARTITIONED window
-    // (WindowGroupLimit — more queries = more partitions, never more
-    // single-task work)
-    "q284_search_batch" -> ((s, dir) =>
-      TextAnalysis.bm25QueryBatch(storedIndex(s, dir, maxPostings = 1000),
-        Stores.norms(s, dir)
-          .agg(countDistinct(col("doc_id")).as("n_docs")),
-        TextAnalysis.searchTermsBatch(s,
-          Seq("hash join window", "sort merge", "filter scan")),
-        nTerms = 3, k = 10)),
-
-    // RAG context assembly: the passage read's top-5 winning chunks
-    // fetch their TEXT from the written chunk table (stored fields
-    // beside postings — the context a generation pipeline consumes);
-    // hits broadcast into one store join, corpus touched nowhere
-    "q283_rag_context" -> ((s, dir) =>
-      Stores.chunkTable(s, dir)
-        .join(broadcast(TextAnalysis.passageSearch(
-          Stores.chunkIndex(s, dir, maxPostings = 1000),
-          Stores.chunkStats(s, dir),
-          TextAnalysis.searchTerms(s, "hash join window"),
-          nTerms = 3, k = 5, chunkKeyBase = Stores.ChunkKeyBase)),
-          Seq("doc_id", "chunk_id"))
-        .select(col("doc_id"), col("chunk_id"), col("n_terms_hit"),
-          col("score"), col("rk"), col("chunk"))),
-
-    // time travel: the index store's slice tags ARE the history — an
-    // as-of-generation read filters the written slices (one pushed
-    // predicate on the bucket files), re-derives the capped view AND
-    // its df/n_docs statistics from the surviving slices (statistics
-    // must never straddle the as-of boundary), and serves the same
-    // literal search the live read answers
-    "q277_asof_search" -> ((s, dir) => {
-      val merged = graft.ops.Checkpoints.pin(
-        TextAnalysis.indexMergeSlices(
-          Stores.index(s, dir).filter(col("slice") <= 2L)),
-        None, eager = false) // two consumers: capped view + n_docs
-      TextAnalysis.bm25QueryK(
-        TextAnalysis.cappedIndex(merged, maxPostings = 1000),
-        merged.agg(countDistinct(col("doc_id")).as("n_docs")),
-        TextAnalysis.searchTerms(s, "hash join window"),
-        nTerms = 3, k = 10)
-    }),
-
-    // forget execution, POSITIONAL family: the cascade's id-addressed
-    // delete log applied to the written positional store (position
-    // sets don't cancel arithmetically — the q213 anti-join posture),
-    // then the q209 phrase read serves as if the forgotten docs were
-    // never ingested; terms stay the persisted corpus statistic
-    "q286_forget_phrase" -> ((s, dir) =>
-      // the erased positional MERGE is the shared per-process artifact
-      // (r22); the token prefilter moves from before the fold to a
-      // pushed semi-join on the written merge — value-identical, the
-      // fold is per-(token, doc) independent
-      TextAnalysis.phraseQuery(
-        erasedPositionalMerged(s, dir)
-          .join(broadcast(bigramTokens(s, dir)), Seq("token"),
-            "left_semi"),
-        Stores.topBigram(s, dir), k = 20)),
-
-    // forget execution, CHUNK family: content tombstones over the
-    // shared guarded chunk projection cancel the forgotten docs'
-    // chunk postings in the written slice store; cap, df and the
-    // chunk count all re-derive from the surviving merge (statistics
-    // never straddle the erasure boundary), then the q282 passage
-    // read serves
-    "q287_forget_passage" -> ((s, dir) => {
-      // both consumers read the per-process erased-chunk merge table
-      // (r22) — no per-query fold, no pin needed over a parquet read
-      val merged = erasedChunksMerged(s, dir)
-      TextAnalysis.passageSearch(
-        TextAnalysis.cappedIndex(merged, maxPostings = 1000),
-        merged.agg(countDistinct(col("doc_id")).as("n_chunks")),
-        TextAnalysis.searchTerms(s, "hash join window"),
-        nTerms = 3, k = 10, chunkKeyBase = Stores.ChunkKeyBase)
-    }),
-
-    // forget execution, METADATA family: the q269 faceted read with
-    // BOTH sides erased — hits off the tombstone-merged re-capped
-    // index, counts off the row-erased metadata store
-    "q288_forget_facets" -> ((s, dir) => {
-      // hits off the per-process erased CAPPED index table (r22 — the
-      // rank Window ran once at build); counts off the row-erased
-      // metadata store, inline as before (request-scale anti-join)
-      TextAnalysis.facetCounts(
-        erasedIndexCapped(s, dir)
-          .join(broadcast(TextAnalysis.searchTerms(s, "hash join window")
-            .select(col("token"))), Seq("token")),
-        erasedWarehouse(s, dir).docMeta, Seq("lang", "source"))
-    }),
-
-    // forget execution, DUP-MAP family: the q275 collapsed read over
-    // the erased index AND the rep-reassigned cluster map (forgotten
-    // members dropped, groups relabeled by their new min surviving
-    // member, sub-pair groups dropped — no erased id survives as a
-    // group label, the ADVICE-r18 closure executed)
-    "q289_forget_collapse" -> ((s, dir) => {
-      // capped view and n_docs read the two per-process erased-index
-      // tables (r22); the rep-reassigned cluster map stays inline
-      // (membership-scale)
-      TextAnalysis.collapseSearch(
-        erasedIndexCapped(s, dir),
-        erasedIndexMerged(s, dir)
-          .agg(countDistinct(col("doc_id")).as("n_docs")),
-        TextAnalysis.searchTerms(s, "hash join window"),
-        nTerms = 3, k = 10, dupMap = erasedWarehouse(s, dir).dupMap)
-    }),
-
-    // forget execution, VECTOR family: the q89 ADC read over the
-    // row-erased code table (id-addressed — the id spaces align by
-    // construction); the CODEBOOKS stay, a trained model is not
-    // per-row data and retraining is a store rewrite. Queries are
-    // surviving ids (a forgotten user's vector cannot be a query)
-    "q290_forget_ann" -> ((s, dir) =>
-      Pq.adcSearchCoded(
-        erasedWarehouse(s, dir).pqCodes,
-        Tables.embeddings(s, dir), "vec_id", "embedding",
-        Stores.pqCodebooks(s, dir),
-        queryIds = Seq(1L, 2L, 3L, 4L, 5L), k = 5,
-        m = Stores.PqM, subDim = Stores.PqSubDim)),
-
-    // forget execution, the WHOLE-WAREHOUSE record: one row per
-    // family counting what actually SURVIVES the executed cascade
-    // (not before-minus-removed arithmetic — each count runs over the
-    // erased frame itself); the oracle recomputes every family from
-    // the corpus minus the forget set, so a green row proves
-    // erased-store ≡ corpus-minus-F rebuild across all nine families
-    // in one read. Derived families (dictionary) re-derive from the
-    // erased index — counted here off that derivation
-    "q291_forget_execute" -> ((s, dir) => {
-      val e = erasedWarehouse(s, dir)
-      def cnt(family: String, agged: DataFrame) =
-        agged.select(lit(family).as("family"),
-          col("rows_after").cast("long").as("rows_after"))
-      // the three index-family merges read the per-process erased
-      // tables (r22) — every fold ran once at its store build
-      val idx = erasedIndexMerged(s, dir)
-      Seq(
-        cnt("index_postings", idx.agg(count(lit(1)).as("rows_after"))),
-        cnt("positional_positions",
-          erasedPositionalMerged(s, dir)
-            .agg(coalesce(sum(col("tf")), lit(0L)).as("rows_after"))),
-        cnt("chunk_postings",
-          erasedChunksMerged(s, dir)
-            .agg(count(lit(1)).as("rows_after"))),
-        cnt("norms", e.norms.agg(count(lit(1)).as("rows_after"))),
-        cnt("doc_meta", e.docMeta.agg(count(lit(1)).as("rows_after"))),
-        cnt("facets", e.facets.agg(count(lit(1)).as("rows_after"))),
-        cnt("pq_codes", e.pqCodes.agg(count(lit(1)).as("rows_after"))),
-        cnt("dup_map", e.dupMap.agg(count(lit(1)).as("rows_after"))),
-        cnt("vocab_terms", TextAnalysis.termDictionary(idx)
-          .agg(count(lit(1)).as("rows_after")))
-      ).reduce(_.unionByName(_))
-    }),
-
-    // dictionary-store MAINTENANCE (the q280 lifecycle applied to the
-    // term dictionary): an ingest generation plus a tombstone
-    // generation of df/cf DELTAS (dictSlices over the same posting
-    // slices the index family writes — one code path) merge to
-    // exactly the dictionary a corpus-minus rescan builds, extinct
-    // terms dropping; an ingest batch updates the store by appending
-    // one batch-vocabulary-sized slice, never a rebuild. Top-20 by df
-    "q292_dict_maintenance" -> ((s, dir) => {
-      val d = Tables.documents(s, dir).select(col("doc_id"), col("text"))
-      // measured r21: deriving the deltas from the 4-slice store made
-      // this SLOWER (4× delta rows through the merge) — the inline
-      // single-slice derivation stays
-      val ing = TextAnalysis.dictSlices(TextAnalysis.indexSlices(
-        d.withColumn("slice", lit(0L)), "doc_id", "text", "slice"))
-      val tomb = TextAnalysis.dictSlices(TextAnalysis.indexTombstones(
-        d.filter(col("doc_id") % 10 === 0).withColumn("slice", lit(1L)),
-        "doc_id", "text", "slice"))
-      TopN.globalRanked(
-        TextAnalysis.dictMergeSlices(ing.unionByName(tomb)),
-        20, col("df").desc, col("token").asc)
-    }),
-
-    // the SymSpell store under the same slice lifecycle: the fuzzy
-    // "did you mean" read served from the deletion-neighborhood
-    // DELTAS' fold after a tombstone generation — variant expansion
-    // commutes with the delta sum, so the slice-derived store answers
-    // exactly what a rebuilt store over the surviving corpus would
-    "q293_fuzzy_maintenance" -> ((s, dir) => {
-      val d = Tables.documents(s, dir).select(col("doc_id"), col("text"))
-      // measured r21: store-derived deltas were SLOWER here (4× rows
-      // through the variant expansion) — the inline form stays, see
-      // q292
-      val ing = TextAnalysis.dictSlices(TextAnalysis.indexSlices(
-        d.withColumn("slice", lit(0L)), "doc_id", "text", "slice"))
-      val tomb = TextAnalysis.dictSlices(TextAnalysis.indexTombstones(
-        d.filter(col("doc_id") % 10 === 0).withColumn("slice", lit(1L)),
-        "doc_id", "text", "slice"))
-      TextAnalysis.fuzzyTerms(
-        TextAnalysis.delneighMergeSlices(
-          TextAnalysis.delneighSlices(ing.unionByName(tomb))),
-        "sow", k = 10)
-    }),
-
-    // term-highlight snippets for the literal k-term search — the
-    // serving step after q262's ranking (q263 anchors on a phrase;
-    // this is the no-phrase form): per hit, the ±2-token window
-    // showing the most DISTINCT query terms, ties to the earliest
-    // anchor; hits broadcast into ONE documents join, the anchor scan
-    // and argmax fold in-row higher-order functions
-    "q294_term_snippets" -> ((s, dir) =>
-      TextAnalysis.termSnippets(
-        Tables.documents(s, dir),
-        TextAnalysis.bm25QueryK(storedIndex(s, dir, maxPostings = 1000),
-          Stores.norms(s, dir)
-            .agg(countDistinct(col("doc_id")).as("n_docs")),
-          TextAnalysis.searchTerms(s, "hash join window"),
-          nTerms = 3, k = 20),
-        TextAnalysis.searchTerms(s, "hash join window"),
-        window = 2)),
-
-    // batched passage retrieval: three RAG queries in ONE pass over
-    // the written chunk-level capped index (the q284 batch pattern
-    // applied to q282's MaxP read); per-query rank is a
-    // qid-partitioned WindowGroupLimit
-    "q295_passage_batch" -> ((s, dir) =>
-      TextAnalysis.passageSearchBatch(
-        Stores.chunkIndex(s, dir, maxPostings = 1000),
-        Stores.chunkStats(s, dir),
-        TextAnalysis.searchTermsBatch(s,
-          Seq("hash join window", "sort merge", "filter scan")),
-        nTerms = 3, k = 10, chunkKeyBase = Stores.ChunkKeyBase)),
-
-    // incremental near-dup: the newest generation (doc_id % 4 = 3 —
-    // "today's crawl slice") computes ONLY its own MinHash bands and
-    // probes the WRITTEN band store's buckets as of the prior
-    // generations (pushed slice <= 2 — the q277 as-of posture); the
-    // corpus is never re-shingled. Emits each new doc's near-dup
-    // matches in the standing corpus with colliding-band counts —
-    // the drop-the-recrawl decision input
-    "q296_neardup_ingest" -> ((s, dir) =>
-      graft.ops.Dedup.nearDupAgainstStore(
-        Tables.documents(s, dir).filter(col("doc_id") % 4 === 3),
-        "doc_id", "text",
-        Stores.bands(s, dir).filter(col("slice") <= 2L))),
-
-    // incremental dup-map maintenance: the standing map's star edges
-    // plus the new generation's candidate pairs (both sides off the
-    // WRITTEN band store — the corpus is never re-shingled, never
-    // re-clustered) walk to EXACTLY the map a full rebuild produces,
-    // including bridge merges and new-min relabels; the oracle IS the
-    // full-corpus rebuild. The as-of map derivation stands in for the
-    // previous generation's written artifact
-    "q297_dupmap_ingest" -> ((s, dir) => {
-      val bands = Stores.bands(s, dir)
-        .select(col("doc_id"), col("band_id"), col("band_hash"))
-      // the standing map is the WRITTEN previous-generation artifact
-      // (r21, Stores.dupMapAsOf) — the component walk it stands in
-      // for ran once at store build, never per read
-      val oldMap = Stores.dupMapAsOf(s, dir)
-      val nb = Stores.bands(s, dir).filter(col("slice") === 3L)
-        .select(col("doc_id").as("doc_a"), col("band_id"),
-          col("band_hash"))
-      val pairs = nb
-        .join(bands.select(col("doc_id").as("doc_b"), col("band_id"),
-          col("band_hash")), Seq("band_id", "band_hash"))
-        .filter(col("doc_a") =!= col("doc_b"))
-        .select(col("doc_a"), col("doc_b")).distinct()
-      Dedup.dupMapIngest(oldMap, pairs)
-    }),
-
-    // the vector-family RETRAIN lifecycle end-to-end (train model A →
-    // ingest the corpus at it → erase two ids through the delete log →
-    // retrain at model B on the survivors), read back through the
-    // serving ADC path. The oracle recomputes a ONE-SHOT encode at
-    // model B over the surviving vectors — the retrain-≡-rebuild
-    // identity, with the pre-retrain erasures carried across the
-    // rewrite (VERDICT r19 item 2)
-    "q298_vector_retrain" -> ((s, dir) => {
-      val t = Stores.retrainedVectorWarehouse(s, dir)
-      graft.jobs.ServingWarehouse.annRead(s, t,
-        Tables.embeddings(s, dir), queryIds = (0L until 10L).toSeq,
-        k = 5)
-    }),
-
-    // the vector family's DRIFT MONITOR as a first-class read (the
-    // retrain trigger): probe the surviving corpus against the
-    // retrained warehouse's WRITTEN model and emit one exact
-    // reconstruction-statistics row — count, mean squared PQ
-    // quantization error, mean squared distance to the assigned
-    // coarse centroid. DECIMAL partial sums keep the fold
-    // engine-exact, so the monitor itself is oracled
-    "q299_model_audit" -> ((s, dir) => {
-      val t = Stores.retrainedVectorWarehouse(s, dir)
-      graft.jobs.ServingWarehouse.vectorModelAudit(s, t,
-        graft.ops.Forget.rowErase(
-          Tables.embeddings(s, dir).select(col("vec_id"),
-            col("embedding")),
-          "vec_id", s.table(t.deletes)))
-    }),
-
-    // recall@5 of the retrained store's serving ADC read against
-    // exact cosine kNN over the SURVIVING corpus — the q108-shape
-    // recall audit pointed at the LIVE warehouse (the drift number an
-    // operator trends next to q299's reconstruction error; both are
-    // deterministic, so the recall itself is oracled)
-    "q300_retrain_recall" -> ((s, dir) => {
-      val t = Stores.retrainedVectorWarehouse(s, dir)
-      recallOf(
-        queries("q298_vector_retrain")(s, dir),
-        Similarity.cosineKnn(
-          graft.ops.Forget.rowErase(
-            Tables.embeddings(s, dir).select(col("vec_id"),
-              col("embedding")),
-            "vec_id", s.table(t.deletes)),
-          "vec_id", "embedding", (0L until 10L).toSeq, 5))
-    }),
-  )
-
-  /** Shared body of the distinct-count band audits (q110/q111/q114):
-    * join the sketch estimate to the exact per-window count and emit
-    * (window bounds, exact uv, |est − exact| ≤ max(absFloor,
-    * band·exact)). The exact side is DuckDB-reproducible and the
-    * boolean deterministic (the estimates are partition-independent),
-    * so the whole row hashes. `absFloor` covers integer round-off at
-    * tiny cardinalities, where a relative band is meaningless (a
-    * 3-user window estimated as 2 is a count-off-by-one, not a 33%
-    * sketch failure).
-    */
-  private def sketchBand(est: DataFrame, exact: DataFrame,
-                         estCol: String, band: Double,
-                         absFloor: Double = 0.0): DataFrame =
-    est.join(exact, Seq("window_start", "window_end"))
-      .select(col("window_start"), col("window_end"), col("uv"),
-        (abs(col(estCol).cast("double") - col("uv").cast("double")) <=
-          greatest(lit(absFloor), lit(band) * col("uv").cast("double")))
-          .as("within_band"))
-
-  /** recall@k audit body shared by q87 (learned IVF) and q108
-    * (IVF-PQ/ADC): per-query hit count of the approximate result
-    * against the exact brute-force baseline (q25), left-joined so a
-    * zero-recall query still emits a row. One body — a rounding or
-    * coalesce change cannot silently diverge the two audits (the SQL
-    * side shares q25KnnSql / q92IvfPqSql the same way).
-    */
-  private def recallOf(approx: DataFrame, bf0: DataFrame): DataFrame = {
-    val bf = bf0.select(col("query_id"), col("neighbor_id"))
-    val hits = approx.select(col("query_id"), col("neighbor_id"))
-      .join(bf, Seq("query_id", "neighbor_id"), "left_semi")
-      .groupBy(col("query_id")).agg(count(lit(1)).as("hits"))
-    bf.groupBy(col("query_id")).agg(count(lit(1)).as("k"))
-      .join(hits, Seq("query_id"), "left")
-      .select(col("query_id"),
-        round(coalesce(col("hits"), lit(0L)).cast("double") /
-          col("k").cast("double"), 6).as("recall_at_5"))
-  }
-
-  private def recallAudit(s: SparkSession, dir: String,
-                          approxName: String): DataFrame =
-    recallOf(queries(approxName)(s, dir),
-      queries("q25_knn_bruteforce")(s, dir))
-
-  /** Shared DuckDB CTE body: minhash band buckets over relation `rel`
-    * (mirrors Dedup.minhashBands with numHashes=8, bandSize=2,
-    * shingleSize=3 — the md5-derived 60-bit hash is engine-independent,
-    * see graft.functions.Hashing). Defines CTEs s, h, m, b; prepend
-    * `WITH ` (or splice after earlier CTEs) at the use site.
-    */
-  private def duckBandsBody(rel: String): String = {
-    val M = graft.functions.Hashing.AffineMod
-    val mh = (0 until 8).map { h =>
-      val (a, b) = graft.functions.Hashing.affine(h)
-      s"    list_min(list_transform(hs, x -> ($a * x + $b) % $M)) AS mh$h"
-    }.mkString(",\n")
-    val bands = (0 until 4).map { b =>
-      val (i, j) = (2 * b, 2 * b + 1)
-      s"  SELECT doc_id, $b::BIGINT AS band_id, md5(mh$i::VARCHAR || ',' || mh$j::VARCHAR) AS band_hash FROM m"
-    }.mkString("\n  UNION ALL\n")
-    s"""s AS (
-       |  SELECT doc_id,
-       |    CASE WHEN len(string_split(text, ' ')) >= 3
-       |      THEN list_transform(generate_series(1, len(string_split(text, ' ')) - 2),
-       |             i -> array_to_string((string_split(text, ' '))[i:i+2], ' '))
-       |      ELSE [text] END AS shingles
-       |  FROM $rel),
-       |h AS (
-       |  SELECT doc_id,
-       |    list_transform(shingles, s -> ('0x'||substr(md5(s),1,15))::BIGINT % $M) AS hs
-       |  FROM s),
-       |m AS (
-       |  SELECT doc_id,
-       |$mh
-       |  FROM h),
-       |b AS (
-       |$bands)""".stripMargin
-  }
-
-  private val duckBandsCte: String = "WITH " + duckBandsBody("documents")
-
-  /** The symmetrized LSH candidate edge set over the `b` bands CTE
-    * (q65's derivation) — shared by the graph-family oracles
-    * q65 / q132 / q133 so the three operate on provably the same graph.
-    */
-  private val duckEdgesBody: String =
-    """cand AS (
-      |  SELECT a.doc_id AS doc_a, b2.doc_id AS doc_b
-      |  FROM b a JOIN b b2
-      |    ON a.band_id = b2.band_id AND a.band_hash = b2.band_hash
-      |   AND a.doc_id < b2.doc_id
-      |  GROUP BY 1, 2),
-      |edges AS (
-      |  SELECT doc_a AS s, doc_b AS t FROM cand
-      |  UNION SELECT doc_b, doc_a FROM cand)""".stripMargin
-
-
-  /** q25's DuckDB SQL, shared with the q87 recall audit. */
-  /** The cosine brute-force kNN chain, parameterized over the corpus
-    * filter (q300 ranks ground truth over the corpus MINUS the erased
-    * ids); the default instance ([[q25KnnSql]]) is the q25/q87/q108
-    * ground truth verbatim.
-    */
-  private def q25KnnSqlFor(surviving: String): String =
-    s"""WITH e AS (
-      |  SELECT * FROM (
-      |    SELECT vec_id, embedding,
-      |           list_sum(list_transform(embedding, x -> x::DOUBLE * x::DOUBLE)) AS norm2
-      |    FROM embeddings WHERE $surviving)
-      |  WHERE norm2 > 0),
-      |q AS (
-      |  SELECT vec_id AS query_id, embedding AS q_emb, norm2 AS q_norm2
-      |  FROM e WHERE vec_id < 10),
-      |sc AS (
-      |  SELECT q.query_id, e.vec_id AS neighbor_id,
-      |         round(list_sum(list_transform(generate_series(1, len(e.embedding)),
-      |                 i -> q.q_emb[i]::DOUBLE * e.embedding[i]::DOUBLE))
-      |               / sqrt(q.q_norm2 * e.norm2), 6) AS score
-      |  FROM e CROSS JOIN q WHERE e.vec_id <> q.query_id),
-      |r AS (
-      |  SELECT query_id, neighbor_id, score,
-      |         row_number() OVER (PARTITION BY query_id
-      |                            ORDER BY score DESC, neighbor_id) AS rank
-      |  FROM sc)
-      |SELECT query_id, neighbor_id, score, rank FROM r WHERE rank <= 5""".stripMargin
-
-  private val q25KnnSql: String = q25KnnSqlFor("TRUE")
-
-  /** q78's DuckDB SQL (both Lloyd rounds unrolled into the probe/score
-    * shape), shared with the q87 recall audit. */
-  /** q69's IVF-search replay with the ASSIGNMENT side excluding the
-    * deleted vec_id % 7 = 0 vectors — shared verbatim by q213
-    * (tombstone read) and q215 (compaction rewrite): the two delete
-    * mechanisms must be indistinguishable to a reader.
-    */
-  private val q213TombstoneIvfSql: String =
-    """WITH e AS (SELECT vec_id, embedding FROM embeddings),
-      |c AS (SELECT vec_id AS centroid_id, embedding AS c_vec FROM e WHERE vec_id < 8),
-      |cd AS (
-      |  SELECT e.vec_id, c.centroid_id,
-      |         round(sqrt(list_sum(list_transform(generate_series(1, len(e.embedding)),
-      |           i -> (e.embedding[i]::DOUBLE - c.c_vec[i]::DOUBLE)
-      |              * (e.embedding[i]::DOUBLE - c.c_vec[i]::DOUBLE)))), 6) AS dist
-      |  FROM e CROSS JOIN c),
-      |assign AS (
-      |  SELECT vec_id AS neighbor_id, centroid_id FROM (
-      |    SELECT vec_id, centroid_id,
-      |           row_number() OVER (PARTITION BY vec_id ORDER BY dist, centroid_id) AS rn
-      |    FROM cd WHERE vec_id % 7 <> 0) WHERE rn = 1),
-      |probes AS (
-      |  SELECT vec_id AS query_id, centroid_id FROM (
-      |    SELECT vec_id, centroid_id,
-      |           row_number() OVER (PARTITION BY vec_id ORDER BY dist, centroid_id) AS rn
-      |    FROM cd WHERE vec_id < 10) WHERE rn <= 2),
-      |n AS (
-      |  SELECT * FROM (
-      |    SELECT vec_id, embedding,
-      |           list_sum(list_transform(embedding, x -> x::DOUBLE * x::DOUBLE)) AS norm2
-      |    FROM embeddings)
-      |  WHERE norm2 > 0),
-      |cand AS (
-      |  SELECT p.query_id, a.neighbor_id
-      |  FROM probes p JOIN assign a USING (centroid_id)
-      |  WHERE p.query_id <> a.neighbor_id),
-      |sc AS (
-      |  SELECT cand.query_id, cand.neighbor_id,
-      |         round(list_sum(list_transform(generate_series(1, len(nb.embedding)),
-      |                 i -> q.embedding[i]::DOUBLE * nb.embedding[i]::DOUBLE))
-      |               / sqrt(q.norm2 * nb.norm2), 6) AS score
-      |  FROM cand
-      |  JOIN n q ON q.vec_id = cand.query_id
-      |  JOIN n nb ON nb.vec_id = cand.neighbor_id),
-      |r AS (
-      |  SELECT query_id, neighbor_id, score,
-      |         row_number() OVER (PARTITION BY query_id ORDER BY score DESC, neighbor_id) AS rank
-      |  FROM sc)
-      |SELECT query_id, neighbor_id, score, rank FROM r WHERE rank <= 5""".stripMargin
-
-  private val q78IvfSql: String =
-    """WITH e AS (SELECT vec_id, embedding FROM embeddings),
-        |c0 AS (SELECT vec_id AS centroid_id,
-        |              list_transform(embedding, x -> round(x::DOUBLE, 6)) AS c_vec
-        |       FROM e WHERE vec_id < 8),
-        |d1 AS (SELECT e.vec_id, c.centroid_id,
-        |              round(sqrt(list_sum(list_transform(generate_series(1, 64),
-        |                i -> (e.embedding[i]::DOUBLE - c.c_vec[i]) * (e.embedding[i]::DOUBLE - c.c_vec[i])))), 6) AS dist
-        |       FROM e CROSS JOIN c0 c),
-        |a1 AS (SELECT vec_id, centroid_id FROM (
-        |         SELECT vec_id, centroid_id,
-        |                row_number() OVER (PARTITION BY vec_id ORDER BY dist, centroid_id) AS rn
-        |         FROM d1) WHERE rn = 1),
-        |m1 AS (SELECT a.centroid_id, t.d,
-        |              round(list_sum(list(e.embedding[t.d]::DOUBLE ORDER BY e.vec_id)) / count(*), 6) AS m
-        |       FROM a1 a JOIN e USING (vec_id) CROSS JOIN generate_series(1, 64) t(d)
-        |       GROUP BY a.centroid_id, t.d),
-        |c1 AS (SELECT c0.centroid_id, coalesce(u.c_vec, c0.c_vec) AS c_vec
-        |       FROM c0 LEFT JOIN (
-        |         SELECT centroid_id, list(m ORDER BY d) AS c_vec FROM m1 GROUP BY centroid_id) u
-        |       USING (centroid_id)),
-        |d2 AS (SELECT e.vec_id, c.centroid_id,
-        |              round(sqrt(list_sum(list_transform(generate_series(1, 64),
-        |                i -> (e.embedding[i]::DOUBLE - c.c_vec[i]) * (e.embedding[i]::DOUBLE - c.c_vec[i])))), 6) AS dist
-        |       FROM e CROSS JOIN c1 c),
-        |a2 AS (SELECT vec_id, centroid_id FROM (
-        |         SELECT vec_id, centroid_id,
-        |                row_number() OVER (PARTITION BY vec_id ORDER BY dist, centroid_id) AS rn
-        |         FROM d2) WHERE rn = 1),
-        |m2 AS (SELECT a.centroid_id, t.d,
-        |              round(list_sum(list(e.embedding[t.d]::DOUBLE ORDER BY e.vec_id)) / count(*), 6) AS m
-        |       FROM a2 a JOIN e USING (vec_id) CROSS JOIN generate_series(1, 64) t(d)
-        |       GROUP BY a.centroid_id, t.d),
-        |c2 AS (SELECT c1.centroid_id, coalesce(u.c_vec, c1.c_vec) AS c_vec
-        |       FROM c1 LEFT JOIN (
-        |         SELECT centroid_id, list(m ORDER BY d) AS c_vec FROM m2 GROUP BY centroid_id) u
-        |       USING (centroid_id)),
-        |cd AS (SELECT e.vec_id, c.centroid_id,
-        |              round(sqrt(list_sum(list_transform(generate_series(1, 64),
-        |                i -> (e.embedding[i]::DOUBLE - c.c_vec[i]) * (e.embedding[i]::DOUBLE - c.c_vec[i])))), 6) AS dist
-        |       FROM e CROSS JOIN c2 c),
-        |assign AS (
-        |  SELECT vec_id AS neighbor_id, centroid_id FROM (
-        |    SELECT vec_id, centroid_id,
-        |           row_number() OVER (PARTITION BY vec_id ORDER BY dist, centroid_id) AS rn
-        |    FROM cd) WHERE rn = 1),
-        |probes AS (
-        |  SELECT vec_id AS query_id, centroid_id FROM (
-        |    SELECT vec_id, centroid_id,
-        |           row_number() OVER (PARTITION BY vec_id ORDER BY dist, centroid_id) AS rn
-        |    FROM cd WHERE vec_id < 10) WHERE rn <= 2),
-        |n AS (
-        |  SELECT * FROM (
-        |    SELECT vec_id, embedding,
-        |           list_sum(list_transform(embedding, x -> x::DOUBLE * x::DOUBLE)) AS norm2
-        |    FROM embeddings)
-        |  WHERE norm2 > 0),
-        |cand AS (
-        |  SELECT p.query_id, a.neighbor_id
-        |  FROM probes p JOIN assign a USING (centroid_id)
-        |  WHERE p.query_id <> a.neighbor_id),
-        |sc AS (
-        |  SELECT cand.query_id, cand.neighbor_id,
-        |         round(list_sum(list_transform(generate_series(1, len(nb.embedding)),
-        |                 i -> q.embedding[i]::DOUBLE * nb.embedding[i]::DOUBLE))
-        |               / sqrt(q.norm2 * nb.norm2), 6) AS score
-        |  FROM cand
-        |  JOIN n q ON q.vec_id = cand.query_id
-        |  JOIN n nb ON nb.vec_id = cand.neighbor_id),
-        |r AS (
-        |  SELECT query_id, neighbor_id, score,
-        |         row_number() OVER (PARTITION BY query_id ORDER BY score DESC, neighbor_id) AS rank
-        |  FROM sc)
-        |SELECT query_id, neighbor_id, score, rank FROM r WHERE rank <= 5""".stripMargin
-
-  /** Shared DuckDB CTE body for the PQ family (q88/q89): subvector
-    * expansion, one Lloyd round of per-subspace codebooks (the q70
-    * unroll with `sub` as a grouping column; ordered means), and the
-    * final code assignment. Defines CTEs e, sv, c0, d1, a1, m1, cb,
-    * dd, codes.
-    */
-  /** The PQ train+encode CTE chain, parameterized: `surviving` filters
-    * the corpus (q298 trains model B on the corpus MINUS the erased
-    * ids), `seedPred` picks the codebook seed vectors (model A seeds
-    * 0–3; the retrained model B seeds 4–7). The default instance
-    * ([[duckPqBody]]) is the q88/q89/q92 store regimen verbatim.
-    */
-  private def duckPqBodyFor(surviving: String, seedPred: String): String =
-    s"""e AS (SELECT vec_id, embedding FROM embeddings WHERE $surviving),
-      |sv AS (SELECT vec_id, j.sub, list_transform(embedding[j.sub*8+1 : j.sub*8+8], x -> x::DOUBLE) AS v
-      |       FROM e CROSS JOIN generate_series(0, 7) j(sub)),
-      |c0 AS (SELECT sub, vec_id AS code, list_transform(v, x -> round(x, 6)) AS c_vec
-      |       FROM sv WHERE $seedPred),
-      |d1 AS (SELECT s.vec_id, s.sub, c.code,
-      |              round(sqrt(list_sum(list_transform(generate_series(1, 8),
-      |                i -> (s.v[i] - c.c_vec[i]) * (s.v[i] - c.c_vec[i])))), 6) AS dist
-      |       FROM sv s JOIN c0 c ON s.sub = c.sub),
-      |a1 AS (SELECT vec_id, sub, code FROM (
-      |         SELECT vec_id, sub, code,
-      |                row_number() OVER (PARTITION BY vec_id, sub ORDER BY dist, code) AS rn
-      |         FROM d1) WHERE rn = 1),
-      |m1 AS (SELECT a.sub, a.code, t.d,
-      |              round(list_sum(list(s.v[t.d] ORDER BY s.vec_id)) / count(*), 6) AS mn
-      |       FROM a1 a JOIN sv s ON a.vec_id = s.vec_id AND a.sub = s.sub
-      |       CROSS JOIN generate_series(1, 8) t(d)
-      |       GROUP BY a.sub, a.code, t.d),
-      |cb AS (SELECT c0.sub, c0.code, coalesce(u.c_vec, c0.c_vec) AS c_vec
-      |       FROM c0 LEFT JOIN (
-      |         SELECT sub, code, list(mn ORDER BY d) AS c_vec FROM m1 GROUP BY sub, code) u
-      |       ON c0.sub = u.sub AND c0.code = u.code),
-      |dd AS (SELECT s.vec_id, s.sub, c.code,
-      |              round(sqrt(list_sum(list_transform(generate_series(1, 8),
-      |                i -> (s.v[i] - c.c_vec[i]) * (s.v[i] - c.c_vec[i])))), 6) AS dist
-      |       FROM sv s JOIN cb c ON s.sub = c.sub),
-      |codes AS (SELECT vec_id, sub, code FROM (
-      |            SELECT vec_id, sub, code,
-      |                   row_number() OVER (PARTITION BY vec_id, sub ORDER BY dist, code) AS rn
-      |            FROM dd) WHERE rn = 1)""".stripMargin
-
-  private val duckPqBody: String = duckPqBodyFor("TRUE", "vec_id < 4")
-
-  /** q298's DuckDB SQL (the retrained-store ADC ≡ one-shot rebuild at
-    * model B), shared with the q300 recall audit's nested CTE.
-    */
-  private lazy val q298RetrainSql: String =
-    s"""WITH ${duckPqBodyFor("vec_id NOT IN (11, 13)",
-                             "vec_id >= 4 AND vec_id < 8")},
-       |lut AS (SELECT s.vec_id AS query_id, s.sub, c.code,
-       |               round(list_sum(list_transform(generate_series(1, 8),
-       |                 i -> (s.v[i] - c.c_vec[i]) * (s.v[i] - c.c_vec[i]))), 6)::DECIMAL(28,10) AS pd
-       |        FROM sv s JOIN cb c ON s.sub = c.sub WHERE s.vec_id < 10),
-       |sc AS (SELECT l.query_id, cd.vec_id AS neighbor_id, sum(l.pd)::DOUBLE AS approx_dist
-       |       FROM codes cd JOIN lut l ON cd.sub = l.sub AND cd.code = l.code
-       |       WHERE cd.vec_id <> l.query_id
-       |       GROUP BY 1, 2),
-       |r AS (SELECT query_id, neighbor_id, approx_dist,
-       |             row_number() OVER (PARTITION BY query_id
-       |                                ORDER BY approx_dist, neighbor_id) AS rank
-       |      FROM sc)
-       |SELECT query_id, neighbor_id, approx_dist, rank FROM r WHERE rank <= 5""".stripMargin
-
-  /** q98's DuckDB SQL (residual IVF-PQ end-to-end), shared with the
-    * q109 recall audit's nested CTE. The d1r/a1r/m1r/cbr block is ONE
-    * Lloyd round over the residual subvectors — the duckPqBody d1/a1/
-    * m1/cb unroll verbatim with `rsv`/`c0r` in place of `sv`/`c0` —
-    * so the residual codebooks train under the SAME regimen as q92's
-    * raw-vector codebooks (iters = 1, ordered means) and the q108 vs
-    * q109 recall comparison is equal-footing.
-    */
-  private val q98ResidualSql: String =
-    """WITH e AS (SELECT vec_id, embedding FROM embeddings),
-        |cents AS (SELECT vec_id AS centroid_id, embedding AS c_vec FROM e WHERE vec_id < 8),
-        |cvd AS (
-        |  SELECT e.vec_id, c.centroid_id,
-        |         round(sqrt(list_sum(list_transform(generate_series(1, 64),
-        |           i -> (e.embedding[i]::DOUBLE - c.c_vec[i]::DOUBLE)
-        |              * (e.embedding[i]::DOUBLE - c.c_vec[i]::DOUBLE)))), 6) AS dist
-        |  FROM e CROSS JOIN cents c),
-        |assign AS (
-        |  SELECT vec_id, centroid_id FROM (
-        |    SELECT vec_id, centroid_id,
-        |           row_number() OVER (PARTITION BY vec_id ORDER BY dist, centroid_id) AS rn
-        |    FROM cvd) WHERE rn = 1),
-        |rv AS (
-        |  SELECT e.vec_id, a.centroid_id,
-        |         list_transform(generate_series(1, 64),
-        |           i -> e.embedding[i]::DOUBLE - c.c_vec[i]::DOUBLE) AS rvec
-        |  FROM e JOIN assign a USING (vec_id)
-        |  JOIN cents c ON a.centroid_id = c.centroid_id),
-        |rsv AS (
-        |  SELECT vec_id, centroid_id, j.sub, rvec[j.sub*8+1 : j.sub*8+8] AS v
-        |  FROM rv CROSS JOIN generate_series(0, 7) j(sub)),
-        |c0r AS (
-        |  SELECT sub, vec_id AS code, list_transform(v, x -> round(x, 6)) AS c_vec
-        |  FROM rsv WHERE vec_id IN (8, 9, 10, 11)),
-        |d1r AS (
-        |  SELECT s.vec_id, s.sub, c.code,
-        |         round(sqrt(list_sum(list_transform(generate_series(1, 8),
-        |           i -> (s.v[i] - c.c_vec[i]) * (s.v[i] - c.c_vec[i])))), 6) AS dist
-        |  FROM rsv s JOIN c0r c ON s.sub = c.sub),
-        |a1r AS (
-        |  SELECT vec_id, sub, code FROM (
-        |    SELECT vec_id, sub, code,
-        |           row_number() OVER (PARTITION BY vec_id, sub ORDER BY dist, code) AS rn
-        |    FROM d1r) WHERE rn = 1),
-        |m1r AS (
-        |  SELECT a.sub, a.code, t.d,
-        |         round(list_sum(list(s.v[t.d] ORDER BY s.vec_id)) / count(*), 6) AS mn
-        |  FROM a1r a JOIN rsv s ON a.vec_id = s.vec_id AND a.sub = s.sub
-        |  CROSS JOIN generate_series(1, 8) t(d)
-        |  GROUP BY a.sub, a.code, t.d),
-        |cbr AS (
-        |  SELECT c0r.sub, c0r.code, coalesce(u.c_vec, c0r.c_vec) AS c_vec
-        |  FROM c0r LEFT JOIN (
-        |    SELECT sub, code, list(mn ORDER BY d) AS c_vec FROM m1r GROUP BY sub, code) u
-        |  ON c0r.sub = u.sub AND c0r.code = u.code),
-        |codes AS (
-        |  SELECT vec_id, centroid_id, sub, code FROM (
-        |    SELECT s.vec_id, s.centroid_id, s.sub, c.code,
-        |           row_number() OVER (PARTITION BY s.vec_id, s.sub
-        |             ORDER BY round(sqrt(list_sum(list_transform(generate_series(1, 8),
-        |               i -> (s.v[i] - c.c_vec[i]) * (s.v[i] - c.c_vec[i])))), 6), c.code) AS rn
-        |    FROM rsv s JOIN cbr c ON s.sub = c.sub) WHERE rn = 1),
-        |probes AS (
-        |  SELECT vec_id AS query_id, centroid_id FROM (
-        |    SELECT vec_id, centroid_id,
-        |           row_number() OVER (PARTITION BY vec_id ORDER BY dist, centroid_id) AS rn
-        |    FROM cvd WHERE vec_id < 10) WHERE rn <= 2),
-        |rq AS (
-        |  SELECT p.query_id, p.centroid_id,
-        |         list_transform(generate_series(1, 64),
-        |           i -> e.embedding[i]::DOUBLE - c.c_vec[i]::DOUBLE) AS rvec
-        |  FROM probes p JOIN e ON e.vec_id = p.query_id
-        |  JOIN cents c ON p.centroid_id = c.centroid_id),
-        |lut AS (
-        |  SELECT r.query_id, r.centroid_id, j.sub, c.code,
-        |         round(list_sum(list_transform(generate_series(1, 8),
-        |           i -> (r.rvec[j.sub*8+i] - c.c_vec[i]) * (r.rvec[j.sub*8+i] - c.c_vec[i]))), 6)::DECIMAL(28,10) AS pd
-        |  FROM rq r CROSS JOIN generate_series(0, 7) j(sub)
-        |  JOIN cbr c ON c.sub = j.sub),
-        |sc AS (
-        |  SELECT l.query_id, cd.vec_id AS neighbor_id, sum(l.pd)::DOUBLE AS approx_dist
-        |  FROM codes cd
-        |  JOIN lut l ON l.centroid_id = cd.centroid_id
-        |            AND l.sub = cd.sub AND l.code = cd.code
-        |  WHERE cd.vec_id <> l.query_id
-        |  GROUP BY 1, 2),
-        |r2 AS (
-        |  SELECT query_id, neighbor_id, approx_dist,
-        |         row_number() OVER (PARTITION BY query_id
-        |                            ORDER BY approx_dist, neighbor_id) AS rank
-        |  FROM sc)
-        |SELECT query_id, neighbor_id, approx_dist, rank FROM r2 WHERE rank <= 5""".stripMargin
-
-  /** Full q92 IVF-PQ SQL (coarse probes over the seed centroids + ADC
-    * scoring over the q88 codes) — shared by the q92 map entry and the
-    * q108 recall audit's nested CTE.
-    */
-  /** q142's full SQL parameterized by k — the q143 rerank oracle nests
-    * it at k=20. DuckDB checks `1::BIGINT << 63` as an overflow where
-    * Spark's shiftleft wraps to MIN_VALUE silently; the sign bit needs
-    * the explicit two's-complement literal.
-    */
-  private def q142HammingSql(k: Int = 5): String =
-    s"""WITH s AS (
-       |  SELECT vec_id,
-       |         coalesce(list_sum(list_transform(generate_series(0, least(len(embedding) - 1, 63)),
-       |           i -> CASE WHEN embedding[i + 1] < 0 THEN 0::BIGINT
-       |                     WHEN i = 63 THEN (-9223372036854775807 - 1)::BIGINT
-       |                     ELSE (1::BIGINT << i) END)), 0)::BIGINT AS sig
-       |  FROM embeddings),
-       |q AS (SELECT vec_id AS query_id, sig AS q_sig FROM s WHERE vec_id < 10),
-       |sc AS (SELECT q.query_id, s.vec_id AS neighbor_id,
-       |              bit_count(xor(q.q_sig, s.sig))::BIGINT AS hamming
-       |       FROM s CROSS JOIN q WHERE s.vec_id <> q.query_id),
-       |r AS (SELECT query_id, neighbor_id, hamming,
-       |             row_number() OVER (PARTITION BY query_id
-       |                                ORDER BY hamming, neighbor_id) AS rank
-       |      FROM sc)
-       |SELECT query_id, neighbor_id, hamming, rank FROM r WHERE rank <= $k""".stripMargin
-
-  /** q143's full SQL: the binary shortlist at k=20, exact cosine over
-    * only those pairs, final top-5 — q128's tail verbatim with the
-    * Hamming chain as the candidate source.
-    */
-  private lazy val q143HammingRerankSql: String =
-    s"""WITH hm AS (${q142HammingSql(20)}),
-       |en AS (
-       |  SELECT * FROM (
-       |    SELECT vec_id, embedding,
-       |           list_sum(list_transform(embedding, x -> x::DOUBLE * x::DOUBLE)) AS norm2
-       |    FROM embeddings)
-       |  WHERE norm2 > 0),
-       |sc2 AS (
-       |  SELECT a.query_id, a.neighbor_id,
-       |         round(list_sum(list_transform(generate_series(1, len(n.embedding)),
-       |                 i -> q.embedding[i]::DOUBLE * n.embedding[i]::DOUBLE))
-       |               / sqrt(q.norm2 * n.norm2), 6) AS score
-       |  FROM hm a JOIN en q ON q.vec_id = a.query_id
-       |            JOIN en n ON n.vec_id = a.neighbor_id),
-       |r2 AS (
-       |  SELECT query_id, neighbor_id, score,
-       |         row_number() OVER (PARTITION BY query_id
-       |                            ORDER BY score DESC, neighbor_id) AS rank
-       |  FROM sc2)
-       |SELECT query_id, neighbor_id, score, rank FROM r2 WHERE rank <= 5""".stripMargin
-
-  /** q128's full SQL: the q92 IVF-PQ chain widened to a 20-candidate
-    * shortlist, exact cosine (q25's expression) over only those pairs,
-    * final top-5. A val so the q129 recall audit nests it verbatim.
-    */
-  private lazy val q128RerankSql: String =
-    s"""WITH adc AS (${q92IvfPqSql(20)}),
-       |en AS (
-       |  SELECT * FROM (
-       |    SELECT vec_id, embedding,
-       |           list_sum(list_transform(embedding, x -> x::DOUBLE * x::DOUBLE)) AS norm2
-       |    FROM embeddings)
-       |  WHERE norm2 > 0),
-       |sc AS (
-       |  SELECT a.query_id, a.neighbor_id,
-       |         round(list_sum(list_transform(generate_series(1, len(n.embedding)),
-       |                 i -> q.embedding[i]::DOUBLE * n.embedding[i]::DOUBLE))
-       |               / sqrt(q.norm2 * n.norm2), 6) AS score
-       |  FROM adc a JOIN en q ON q.vec_id = a.query_id
-       |             JOIN en n ON n.vec_id = a.neighbor_id),
-       |r AS (
-       |  SELECT query_id, neighbor_id, score,
-       |         row_number() OVER (PARTITION BY query_id
-       |                            ORDER BY score DESC, neighbor_id) AS rank
-       |  FROM sc)
-       |SELECT query_id, neighbor_id, score, rank FROM r WHERE rank <= 5""".stripMargin
-
-  private def q92IvfPqSql(k: Int = 5): String =
-    s"""WITH $duckPqBody,
-       |cents AS (SELECT vec_id AS centroid_id, embedding AS c_vec FROM e WHERE vec_id < 8),
-       |cvd AS (
-       |  SELECT e.vec_id, c.centroid_id,
-       |         round(sqrt(list_sum(list_transform(generate_series(1, len(e.embedding)),
-       |           i -> (e.embedding[i]::DOUBLE - c.c_vec[i]::DOUBLE)
-       |              * (e.embedding[i]::DOUBLE - c.c_vec[i]::DOUBLE)))), 6) AS dist
-       |  FROM e CROSS JOIN cents c),
-       |assign AS (
-       |  SELECT vec_id AS neighbor_id, centroid_id FROM (
-       |    SELECT vec_id, centroid_id,
-       |           row_number() OVER (PARTITION BY vec_id ORDER BY dist, centroid_id) AS rn
-       |    FROM cvd) WHERE rn = 1),
-       |probes AS (
-       |  SELECT vec_id AS query_id, centroid_id FROM (
-       |    SELECT vec_id, centroid_id,
-       |           row_number() OVER (PARTITION BY vec_id ORDER BY dist, centroid_id) AS rn
-       |    FROM cvd WHERE vec_id < 10) WHERE rn <= 2),
-       |cand AS (
-       |  SELECT p.query_id, a.neighbor_id
-       |  FROM probes p JOIN assign a USING (centroid_id)
-       |  WHERE p.query_id <> a.neighbor_id),
-       |lut AS (SELECT s.vec_id AS query_id, s.sub, c.code,
-       |               round(list_sum(list_transform(generate_series(1, 8),
-       |                 i -> (s.v[i] - c.c_vec[i]) * (s.v[i] - c.c_vec[i]))), 6)::DECIMAL(28,10) AS pd
-       |        FROM sv s JOIN cb c ON s.sub = c.sub WHERE s.vec_id < 10),
-       |sc AS (SELECT ca.query_id, ca.neighbor_id, sum(l.pd)::DOUBLE AS approx_dist
-       |       FROM cand ca
-       |       JOIN codes cd2 ON cd2.vec_id = ca.neighbor_id
-       |       JOIN lut l ON l.query_id = ca.query_id
-       |                 AND l.sub = cd2.sub AND l.code = cd2.code
-       |       GROUP BY 1, 2),
-       |r AS (SELECT query_id, neighbor_id, approx_dist,
-       |             row_number() OVER (PARTITION BY query_id
-       |                                ORDER BY approx_dist, neighbor_id) AS rank
-       |      FROM sc)
-       |SELECT query_id, neighbor_id, approx_dist, rank FROM r WHERE rank <= $k""".stripMargin
-
-  /** Shared DuckDB CTE prefix for the corpus-pipeline replays
-    * (q85/q93): sample(0.8) → exact-dedup → band collisions →
-    * near-dedup survivors. Defines sampled, exg, ex, the bands body
-    * (s/h/m/b), cand, nd. Prepend `WITH `.
-    */
-  private lazy val duckCorpusPrefix: String =
-    s"""sampled AS MATERIALIZED (
-       |  SELECT doc_id, source, text FROM documents
-       |  WHERE ('0x'||substr(md5(doc_id::VARCHAR),1,15))::BIGINT % 10000 < 8000),
-       |exg AS MATERIALIZED (
-       |  SELECT md5(text) AS text_hash, min(doc_id) AS keep_id
-       |  FROM sampled GROUP BY 1 HAVING count(*) >= 2),
-       |ex AS MATERIALIZED (
-       |  SELECT sa.doc_id, sa.source, sa.text FROM sampled sa
-       |  LEFT JOIN exg ON md5(sa.text) = exg.text_hash
-       |  WHERE exg.text_hash IS NULL OR sa.doc_id = exg.keep_id),
-       |${duckBandsBody("ex")},
-       |cand AS MATERIALIZED (
-       |  SELECT a.doc_id AS doc_a, b2.doc_id AS doc_b
-       |  FROM b a JOIN b b2
-       |    ON a.band_id = b2.band_id AND a.band_hash = b2.band_hash
-       |   AND a.doc_id < b2.doc_id
-       |  GROUP BY 1, 2),
-       |nd AS MATERIALIZED (
-       |  SELECT * FROM ex WHERE doc_id NOT IN (SELECT doc_b FROM cand))""".stripMargin
-
-  /** Shared DuckDB CTE tail for the corpus-pipeline replays: quality
-    * gate (>= 0.4) then repetition gate (dup_gram_frac <= 0.2,
-    * violators-only) over relation `rel`. Defines cq, qk, gr, rv, rk.
-    *
-    * The top-level CTEs here and in [[duckCorpusPrefix]] are
-    * MATERIALIZED: DuckDB inlines plain CTEs transitively, so the q121
-    * composition (this chain feeding the q117 chain) re-expanded every
-    * upstream stage per reference — exponential scans, "too many open
-    * files" at eleven stages. Results are identical; only the plan
-    * changes. Caveat that forced the `cq` name: DuckDB 1.0 resolves a
-    * nested subquery's plain CTE against a SAME-NAMED outer
-    * MATERIALIZED CTE (outer q shadowed the domain-gate body's inner
-    * q), so materialized top-level names must not collide with any
-    * nested parameterized body's internals.
-    */
-  private def duckCorpusTail(rel: String): String =
-    s"""cq AS MATERIALIZED (
-       |  SELECT doc_id,
-       |    round(0.4 * least(len(string_split(text, ' '))::DOUBLE / 100.0, 1.0)
-       |        + 0.4 * (len(list_distinct(string_split(text, ' ')))::DOUBLE
-       |                 / len(string_split(text, ' '))::DOUBLE)
-       |        + 0.2 * least(5.0 * len(list_filter(string_split(text, ' '),
-       |              w -> list_contains(['the','a','of','and','in','to','is','on','for','with'], w)))::DOUBLE
-       |                 / len(string_split(text, ' '))::DOUBLE, 1.0), 6) AS quality
-       |  FROM $rel),
-       |qk AS MATERIALIZED (
-       |  SELECT $rel.* FROM $rel JOIN cq USING (doc_id) WHERE cq.quality >= 0.4),
-       |gr AS MATERIALIZED (
-       |  SELECT doc_id, gram, count(*) AS cnt
-       |  FROM (SELECT doc_id, ws[i] || ' ' || ws[i+1] AS gram
-       |        FROM (SELECT doc_id, string_split(text, ' ') AS ws,
-       |                     unnest(generate_series(1, len(string_split(text, ' ')) - 1)) AS i
-       |              FROM qk))
-       |  GROUP BY doc_id, gram),
-       |rv AS MATERIALIZED (
-       |  SELECT doc_id FROM gr GROUP BY doc_id
-       |  HAVING round(sum(CASE WHEN cnt >= 2 THEN cnt ELSE 0 END)::DOUBLE
-       |               / sum(cnt)::DOUBLE, 6) > 0.2),
-       |rk AS MATERIALIZED (
-       |  SELECT * FROM qk WHERE doc_id NOT IN (SELECT doc_id FROM rv))""".stripMargin
-
-  /** Shared DuckDB CTE body for the subword tokenizer (q90/q91):
-    * corpus words, the top-64 vocab (count desc, word asc), a
-    * RECURSIVE greedy longest-match scan per distinct word (advance by
-    * the longest matching vocab piece, else one char — exactly
-    * functions.SubwordCount), and per-doc sums. Prepend
-    * `WITH RECURSIVE `. Defines w, vocab, dw, seg, tk, sc.
-    */
-  private val duckSubwordBody: String =
-    """w AS (
-      |  SELECT doc_id, unnest(string_split(text, ' ')) AS word FROM documents),
-      |vocab AS (
-      |  SELECT word AS piece FROM (
-      |    SELECT word, count(*) AS cnt FROM w WHERE len(word) > 0 GROUP BY 1)
-      |  ORDER BY cnt DESC, word LIMIT 64),
-      |dw AS (SELECT DISTINCT word FROM w),
-      |seg AS (
-      |  SELECT word, 1::BIGINT AS pos, 0::BIGINT AS tokens FROM dw
-      |  UNION ALL
-      |  SELECT word,
-      |         pos + coalesce((SELECT max(len(piece)) FROM vocab
-      |                         WHERE piece = substr(word, pos, len(piece))), 1),
-      |         tokens + 1
-      |  FROM seg WHERE pos <= len(word)),
-      |tk AS (SELECT word, max(tokens) AS n FROM seg GROUP BY 1),
-      |sc AS (SELECT w.doc_id, sum(tk.n)::BIGINT AS subword_cnt
-      |       FROM w JOIN tk USING (word) GROUP BY 1)""".stripMargin
-
-  /** q102's DuckDB SQL (SemDeDup losers over the embeddings: q33's
-    * assignment head, q59's pairwise-cosine body scoped to the cluster,
-    * min-id keeper per loser) — shared with the q117 selection-pipeline
-    * chain's nested CTE.
-    */
-  private val q102SemDedupSql: String =
-    """WITH e0 AS (SELECT vec_id, embedding FROM embeddings),
-      |c AS (SELECT vec_id AS centroid_id, embedding AS c_vec FROM e0 WHERE vec_id < 8),
-      |sc AS (
-      |  SELECT e0.vec_id, c.centroid_id,
-      |         round(sqrt(list_sum(list_transform(generate_series(1, len(e0.embedding)),
-      |           i -> (e0.embedding[i]::DOUBLE - c.c_vec[i]::DOUBLE)
-      |              * (e0.embedding[i]::DOUBLE - c.c_vec[i]::DOUBLE)))), 6) AS dist
-      |  FROM e0 CROSS JOIN c),
-      |assign AS (
-      |  SELECT vec_id, centroid_id FROM (
-      |    SELECT vec_id, centroid_id,
-      |           row_number() OVER (PARTITION BY vec_id ORDER BY dist, centroid_id) AS rn
-      |    FROM sc) WHERE rn = 1),
-      |e AS (
-      |  SELECT * FROM (
-      |    SELECT e0.vec_id, e0.embedding, a.centroid_id,
-      |           list_sum(list_transform(e0.embedding, x -> x::DOUBLE * x::DOUBLE)) AS norm2
-      |    FROM e0 JOIN assign a USING (vec_id))
-      |  WHERE norm2 > 0),
-      |pairs AS (
-      |  SELECT l.vec_id AS vec_a, r.vec_id AS vec_b, l.centroid_id,
-      |         round(list_sum(list_transform(generate_series(1, len(l.embedding)),
-      |             i -> l.embedding[i]::DOUBLE * r.embedding[i]::DOUBLE))
-      |           / sqrt(l.norm2 * r.norm2), 6) AS cosine
-      |  FROM e l JOIN e r ON l.centroid_id = r.centroid_id AND l.vec_id < r.vec_id)
-      |SELECT vec_b AS vec_id, centroid_id, vec_a AS dup_of, cosine FROM (
-      |  SELECT vec_b, centroid_id, vec_a, cosine,
-      |         row_number() OVER (PARTITION BY vec_b ORDER BY vec_a) AS rn
-      |  FROM pairs WHERE cosine >= 0.3) WHERE rn = 1""".stripMargin
-
-  /** q122's DuckDB oracle, generated for `numMerges` iterations: the
-    * Spark BPE loop unrolled as CTE triples — p_i counts adjacent
-    * symbol pairs over state s_(i-1), m_i argmaxes with the (count
-    * desc, left, right) tie-break and the pairs-must-repeat floor, s_i
-    * rewrites via the same left-to-right non-overlapping `replace`.
-    * An exhausted m_i leaves s_i = s_(i-1) and every later m empty —
-    * the Spark early-stop, replayed declaratively. MATERIALIZED per
-    * the duckCorpusTail lesson (each s_i is referenced by p_(i+1),
-    * s_(i+1), and the rewrite subqueries — plain CTEs would re-expand
-    * the whole prefix per reference). Returns the full `WITH …` prefix
-    * ending at s_numMerges; [[duckBpeSql]] (merge table) and
-    * [[duckBpeEncodeSql]] (token counts) differ only in the tail.
-    */
-  private def duckBpeChain(numMerges: Int): String = {
-    val base =
-      """s0 AS MATERIALIZED (
-        |  SELECT count(*)::BIGINT AS cnt,
-        |         ' ' || regexp_replace(word, '(.)', '\1 ', 'g') AS state
-        |  FROM (SELECT unnest(string_split(text, ' ')) AS word FROM documents)
-        |  WHERE len(word) > 0 GROUP BY word)""".stripMargin
-    val iters = (1 to numMerges).map { i =>
-      s"""p$i AS MATERIALIZED (
-         |  SELECT syms[i] AS l, syms[i+1] AS r, sum(cnt)::BIGINT AS pc
-         |  FROM (SELECT cnt, syms, unnest(generate_series(1, len(syms) - 1)) AS i
-         |        FROM (SELECT cnt, string_split(trim(state), ' ') AS syms FROM s${i - 1}))
-         |  GROUP BY 1, 2),
-         |m$i AS MATERIALIZED (
-         |  SELECT l, r, pc FROM p$i WHERE pc >= 2
-         |  ORDER BY pc DESC, l ASC, r ASC LIMIT 1),
-         |s$i AS MATERIALIZED (
-         |  SELECT cnt, CASE WHEN (SELECT count(*) FROM m$i) = 0 THEN state
-         |    ELSE replace(state,
-         |      ' ' || (SELECT l FROM m$i) || ' ' || (SELECT r FROM m$i) || ' ',
-         |      ' ' || (SELECT l FROM m$i) || (SELECT r FROM m$i) || ' ') END AS state
-         |  FROM s${i - 1})""".stripMargin
-    }
-    s"WITH $base,\n${iters.mkString(",\n")}"
-  }
-
-  private def duckBpeSql(numMerges: Int): String = {
-    val out = (1 to numMerges).map { i =>
-      s"""SELECT $i::BIGINT AS step, l AS "left", r AS "right",
-         |       l || r AS merged, pc AS pair_cnt FROM m$i""".stripMargin
-    }.mkString("\nUNION ALL ")
-    s"${duckBpeChain(numMerges)}\n$out"
-  }
-
-  /** q123's oracle: the [[duckBpeChain]] final state s_N *is* the
-    * encoded training corpus (see the chain's scaladoc for why), so
-    * corpus token counts under the learned tokenizer are one unnest +
-    * hash aggregate over it.
-    */
-  private def duckBpeEncodeSql(numMerges: Int): String =
-    s"""${duckBpeChain(numMerges)}
-       |SELECT piece, sum(cnt)::BIGINT AS cnt
-       |FROM (SELECT cnt, unnest(string_split(trim(state), ' ')) AS piece
-       |      FROM s$numMerges)
-       |GROUP BY 1""".stripMargin
-
-  /** Shared Naive Bayes model CTEs (the q85/q117 composed-oracle
-    * discipline), parameterized by the label expression and split
-    * salt: train slice `tr` (label aliased `nb_label`) →
-    * class-conditional counts `c` → label totals `lt`, vocabulary `v`,
-    * smoothed model `m` (UNROUNDED logp — q125 rounds at its edge,
-    * q126/q131 consume full precision like the Spark scorer).
-    */
-  private def duckNbModelSql(labelExpr: String = "lang",
-                             salt: String = "nb"): String =
-    s"""tr AS (SELECT $labelExpr AS nb_label, doc_id, text FROM documents
-      |       WHERE ('0x'||substr(md5('$salt:'||doc_id::VARCHAR),1,15))::BIGINT % 10000 < 8000),
-      |nw AS (SELECT nb_label AS label, unnest(string_split(text, ' ')) AS term FROM tr),
-      |c AS (SELECT label, term, count(*)::BIGINT AS cnt FROM nw
-      |      WHERE length(term) > 0 GROUP BY 1, 2),
-      |lt AS (SELECT label, sum(cnt)::BIGINT AS tot FROM c GROUP BY 1),
-      |v AS (SELECT count(DISTINCT term)::BIGINT AS v FROM c),
-      |m AS (SELECT label, term, cnt,
-      |             ln((cnt + 1)::DOUBLE / (lt.tot + v.v)::DOUBLE) AS logp
-      |      FROM c JOIN lt USING (label) CROSS JOIN v)""".stripMargin
-
-  /** The q66 quality-score body parameterized by the corpus relation:
-    * (doc_id, source, quality) for every document. Factored out of
-    * [[duckDomainGateSql]] so the frozen gate (q118) scores arrivals
-    * with the SAME SQL the cut-point computation uses — zero drift.
-    */
-  private def duckQualitySql(rel: String): String =
-    s"""WITH c AS (
-       |  SELECT doc_id, source,
-       |    len(string_split(text, ' '))::BIGINT AS n_words,
-       |    len(list_distinct(string_split(text, ' ')))::BIGINT AS n_distinct_words,
-       |    len(list_filter(string_split(text, ' '),
-       |        w -> list_contains(['the','a','of','and','in','to','is','on','for','with'], w)))::BIGINT AS stopword_cnt
-       |  FROM $rel)
-       |SELECT doc_id, source,
-       |  round(0.4 * least(n_words::DOUBLE / 100.0, 1.0)
-       |      + 0.4 * (n_distinct_words::DOUBLE / n_words::DOUBLE)
-       |      + 0.2 * least(5.0 * stopword_cnt::DOUBLE / n_words::DOUBLE, 1.0), 6) AS quality
-       |FROM c""".stripMargin
-
-  /** q107's DuckDB SQL parameterized by the corpus relation (the
-    * [[duckQualitySql]] body + ntile(4) per source, keep the top
-    * quartile): `documents` at the q107 entry, the sem-dedup survivors
-    * CTE inside q117 — one body, zero drift between the stage and the
-    * chain.
-    */
-  private def duckDomainGateSql(rel: String): String =
-    s"""WITH q AS (SELECT * FROM (${duckQualitySql(rel)})),
-       |n AS (
-       |  SELECT doc_id, source, quality,
-       |         ntile(4) OVER (PARTITION BY source
-       |                        ORDER BY quality ASC, doc_id ASC)::BIGINT AS bucket
-       |  FROM q)
-       |SELECT doc_id, source, quality FROM n WHERE bucket = 4""".stripMargin
-
-  /** q103's DuckDB SQL parameterized by the corpus relation (add-one
-    * smoothed target-vs-corpus unigram LLR — q80's fold shape — then
-    * the q66 hash-threshold keep on exp(llr/T)): `documents` at the
-    * q103 entry, the quality-gate survivors inside q117 (DSIR's LM is
-    * trained on the stage's own input corpus in both).
-    */
-  private def duckDsirSql(rel: String): String =
-    s"""WITH w AS (
-       |  SELECT doc_id, source = 'src0' AS is_target,
-       |         unnest(string_split(text, ' ')) AS term
-       |  FROM $rel),
-       |tf AS (SELECT doc_id, is_target, term, count(*) AS tf FROM w GROUP BY 1, 2, 3),
-       |wc AS (SELECT term, sum(tf) AS cnt_c FROM tf GROUP BY 1),
-       |wt AS (SELECT term, sum(tf) AS cnt_t FROM tf WHERE is_target GROUP BY 1),
-       |tot AS (SELECT (SELECT sum(cnt_c) FROM wc) AS total_c,
-       |               (SELECT count(*) FROM wc) AS vocab,
-       |               (SELECT sum(cnt_t) FROM wt) AS total_t),
-       |v AS (
-       |  SELECT tf.doc_id, tf.term, tf.tf,
-       |         tf.tf * ln(((coalesce(wt.cnt_t, 0) + 1)::DOUBLE * (tot.total_c + tot.vocab)::DOUBLE)
-       |                  / ((wc.cnt_c + 1)::DOUBLE * (tot.total_t + tot.vocab)::DOUBLE)) AS v
-       |  FROM tf JOIN wc USING (term) LEFT JOIN wt USING (term) CROSS JOIN tot),
-       |s AS (
-       |  SELECT doc_id, sum(tf)::BIGINT AS n_words,
-       |         round(list_sum(list(v ORDER BY term)) / sum(tf), 6)
-       |           + 0.0::DOUBLE AS llr
-       |  FROM v GROUP BY 1)
-       |SELECT doc_id, n_words, llr FROM s
-       |WHERE ('0x'||substr(md5('dsir' || doc_id::VARCHAR),1,15))::BIGINT % 10000 <
-       |      floor(least(greatest(round(exp(llr / 0.01), 6), 0.0), 1.0) * 10000)""".stripMargin
-
-  /** q104's DuckDB SQL parameterized by the corpus relation (integer
-    * floor-div epoch allocation at weights 4:2:1, budget 1M; the
-    * remainder keep is the cross-multiplied hash compare in HUGEINT):
-    * `documents` at the q104 entry, the DSIR survivors inside q117.
-    */
-  private def duckEpochAllocSql(rel: String): String =
-    s"""WITH t AS (
-       |  SELECT doc_id, source, len(string_split(text, ' '))::BIGINT AS tok
-       |  FROM $rel),
-       |a AS (
-       |  SELECT source,
-       |         (CASE WHEN source = 'src0' THEN 4
-       |               WHEN source = 'src1' THEN 2 ELSE 1 END)::BIGINT AS wt,
-       |         sum(tok)::BIGINT AS avail_tokens
-       |  FROM t GROUP BY 1),
-       |sw AS (SELECT sum(wt)::BIGINT AS sum_w FROM a WHERE avail_tokens > 0 AND wt > 0),
-       |al AS (
-       |  SELECT source, wt, avail_tokens,
-       |         (1000000 * wt) // sum_w AS target_tokens
-       |  FROM a CROSS JOIN sw WHERE avail_tokens > 0 AND wt > 0),
-       |a2 AS (
-       |  SELECT *, target_tokens // avail_tokens AS epochs,
-       |         target_tokens % avail_tokens AS rem_tokens
-       |  FROM al),
-       |k AS (
-       |  SELECT t.source, t.tok, a2.wt, a2.avail_tokens, a2.target_tokens,
-       |         a2.epochs, a2.rem_tokens,
-       |         ((('0x'||substr(md5('epoch:' || t.doc_id::VARCHAR),1,15))::BIGINT)::HUGEINT
-       |            * a2.avail_tokens)
-       |           < (a2.rem_tokens::HUGEINT * 1152921504606846976::HUGEINT) AS keep
-       |  FROM t JOIN a2 USING (source))
-       |SELECT source, wt, avail_tokens, target_tokens, epochs, rem_tokens,
-       |       sum(CASE WHEN keep THEN 1 ELSE 0 END)::BIGINT AS rem_docs,
-       |       sum(CASE WHEN keep THEN tok ELSE 0 END)::BIGINT AS rem_kept_tokens
-       |FROM k GROUP BY 1, 2, 3, 4, 5, 6""".stripMargin
-
-  /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omit for non-SQL-expressible ops.
-    */
-  /** Shared DuckDB positional-oracle builder — q209/q249/q254 (phrase)
-    * and q238/q250 (proximity) all replay the same positional
-    * machinery: bigram pick over the FULL corpus, positional side
-    * optionally restricted (`posWhere` — the tombstone entry deletes
-    * docs from the INDEX, never from the term derivation), match
-    * expression per query kind.
-    */
-  private def posOracle(posWhere: String, matchExpr: String): String =
-    s"""WITH w AS (
-       |  SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
-       |pr AS (
-       |  SELECT g.w1 AS w1, g.w2 AS w2 FROM (
-       |    SELECT unnest(list_transform(generate_series(1, len(ws) - 1),
-       |             i -> {'w1': ws[i], 'w2': ws[i + 1]})) AS g
-       |    FROM w WHERE len(ws) >= 2)),
-       |bg AS (
-       |  SELECT w1, w2 FROM (
-       |    SELECT w1, w2, count(*) AS c FROM pr GROUP BY 1, 2)
-       |  ORDER BY c DESC, w1 ASC, w2 ASC LIMIT 1),
-       |pos AS (
-       |  SELECT doc_id, g.t AS token, g.p AS p FROM (
-       |    SELECT doc_id,
-       |           unnest(list_transform(generate_series(1, len(ws)),
-       |             i -> {'t': ws[i], 'p': i})) AS g
-       |    FROM w$posWhere)),
-       |a AS (
-       |  SELECT doc_id, list_sort(list(p)) AS pa
-       |  FROM pos, bg WHERE token = w1 GROUP BY doc_id),
-       |b AS (
-       |  SELECT doc_id, list_sort(list(p)) AS pb
-       |  FROM pos, bg WHERE token = w2 GROUP BY doc_id),
-       |m AS (
-       |  SELECT a.doc_id, $matchExpr AS n_matches
-       |  FROM a JOIN b USING (doc_id))
-       |SELECT doc_id, n_matches, rk FROM (
-       |  SELECT doc_id, n_matches,
-       |         row_number() OVER (ORDER BY n_matches DESC, doc_id ASC) AS rk
-       |  FROM m WHERE n_matches > 0)
-       |WHERE rk <= 20""".stripMargin
-
-  // phrase adjacency replayed on 1-based positions (shift-invariant
-  // vs Spark's 0-based posexplode); proximity = the slop-3 pair count
-  private val phraseMatchExpr =
-    "len(list_intersect(list_transform(pa, p -> p + 1), pb))::BIGINT"
-  private val proximityMatchExpr =
-    "CAST(list_sum(list_transform(pa,\n" +
-    "           p -> len(list_filter(pb, q -> q > p AND q <= p + 3))))\n" +
-    "           AS BIGINT)"
-  private val q209PhraseSql: String = posOracle("", phraseMatchExpr)
-  private val q238ProximitySql: String = posOracle("", proximityMatchExpr)
-
-  /** Shared DuckDB PageRank oracle builder — q208 (store-served),
-    * q251 (slice-merge lifecycle) and q255 (retraction: the walk over
-    * the log minus the retracted users' events, via `evAnd`) replay
-    * the same unrolled 3-iteration integer walk.
-    */
-  private def pageRankOracle(evAnd: String): String =
-    s"""WITH ev AS (
-        |  SELECT user_id, ts, event_id,
-        |         json_extract_string(props, '$$.k')::BIGINT AS item
-        |  FROM events
-        |  WHERE json_extract_string(props, '$$.k') IS NOT NULL$evAnd),
-        |nx AS (
-        |  SELECT item AS src,
-        |         lead(item) OVER (PARTITION BY user_id
-        |                          ORDER BY ts, event_id) AS dst
-        |  FROM ev),
-        |e AS (
-        |  SELECT src, dst, count(*)::BIGINT AS w FROM nx
-        |  WHERE dst IS NOT NULL AND dst <> src GROUP BY 1, 2),
-        |ow AS (SELECT src, sum(w)::BIGINT AS w_out FROM e GROUP BY 1),
-        |nodes AS (SELECT src AS node FROM e UNION SELECT dst FROM e),
-        |r0 AS (SELECT node, 1000000::BIGINT AS r FROM nodes),
-        |i1 AS (
-        |  SELECT e.dst AS node, sum((r.r * e.w) // ow.w_out)::BIGINT AS s
-        |  FROM e JOIN ow USING (src) JOIN r0 r ON r.node = e.src
-        |  GROUP BY 1),
-        |r1 AS (
-        |  SELECT n.node,
-        |         (150000 + (850000 * coalesce(i.s, 0)) // 1000000)::BIGINT AS r
-        |  FROM nodes n LEFT JOIN i1 i USING (node)),
-        |i2 AS (
-        |  SELECT e.dst AS node, sum((r.r * e.w) // ow.w_out)::BIGINT AS s
-        |  FROM e JOIN ow USING (src) JOIN r1 r ON r.node = e.src
-        |  GROUP BY 1),
-        |r2 AS (
-        |  SELECT n.node,
-        |         (150000 + (850000 * coalesce(i.s, 0)) // 1000000)::BIGINT AS r
-        |  FROM nodes n LEFT JOIN i2 i USING (node)),
-        |i3 AS (
-        |  SELECT e.dst AS node, sum((r.r * e.w) // ow.w_out)::BIGINT AS s
-        |  FROM e JOIN ow USING (src) JOIN r2 r ON r.node = e.src
-        |  GROUP BY 1),
-        |r3 AS (
-        |  SELECT n.node,
-        |         (150000 + (850000 * coalesce(i.s, 0)) // 1000000)::BIGINT AS r
-        |  FROM nodes n LEFT JOIN i3 i USING (node))
-        |SELECT node, r AS rank_micro FROM r3""".stripMargin
-
-  private val q208PageRankSql: String = pageRankOracle("")
-
-  /** Shared DuckDB next-item oracle — q246 (store-served read) and
-    * q256 (edge-store compaction) must both land on the full-log
-    * serving table.
-    */
-  private val q246NextItemSql: String =
-    """WITH ev AS (
-        |  SELECT user_id, ts, event_id,
-        |         json_extract_string(props, '$.k')::BIGINT AS item
-        |  FROM events
-        |  WHERE json_extract_string(props, '$.k') IS NOT NULL),
-        |nx AS (
-        |  SELECT item AS from_item,
-        |         lead(item) OVER (PARTITION BY user_id
-        |                          ORDER BY ts, event_id) AS to_item
-        |  FROM ev),
-        |tr AS (
-        |  SELECT from_item, to_item, count(*)::BIGINT AS cnt
-        |  FROM nx WHERE to_item IS NOT NULL AND to_item <> from_item
-        |  GROUP BY 1, 2),
-        |tot AS (
-        |  SELECT from_item, CAST(sum(cnt) AS BIGINT) AS row_total
-        |  FROM tr GROUP BY 1)
-        |SELECT tr.from_item,
-        |       CAST(row_number() OVER (PARTITION BY tr.from_item
-        |              ORDER BY tr.cnt DESC, tr.to_item ASC) AS BIGINT)
-        |         AS rk,
-        |       tr.to_item, tr.cnt,
-        |       CAST(tr.cnt * 1000000 // tot.row_total AS BIGINT) AS p_ppm
-        |FROM tr JOIN tot USING (from_item)
-        |QUALIFY rk <= 3""".stripMargin
-
-  /** Estimate queries with NO direct oracle (a DuckDB rebuild cannot
-    * reproduce a sketch's internal state) mapped to the ORACLED
-    * error-band twin that verifies them: the twin recomputes the same
-    * estimate AND the exact answer, and both engines check the
-    * estimate lands inside the sketch's published error band — the
-    * correct relational treatment of an approximation. A `no_oracle`
-    * row whose name appears here is covered, not unverified; the
-    * Verify main dumps this map as `covered_by.json` next to
-    * `oracle_sql.json` so a correctness report is self-explaining.
-    */
-  def coveredBy: Map[String, String] = Map(
-    "q03_uv_approx_hourly" -> "q110_hll_band",
-    "q32_uv_bloom_hourly" -> "q111_bloom_band",
-    "q53_price_percentiles_approx" -> "q112_pctl_band",
-    "q99_heavy_hitters" -> "q113_mg_band",
-    "q100_uv_sketch_daily" -> "q114_sketch_rollup_band",
-    "q115_grouped_heavy_hitters" -> "q116_grouped_mg_band",
-    "q171_hll_corrected" -> "q172_hll_corrected_band",
-    "q252_profile_approx" -> "q253_profile_approx_band")
-
-  def oracleSql: Map[String, String] = Map(
-    "q16_cep_login_fail" ->
-      """WITH o AS (
-        |  SELECT user_id, ts, event_id, event_type,
-        |         lag(event_type) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev_type,
-        |         lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev_ts
-        |  FROM events)
-        |SELECT user_id, event_id AS warn_id,
-        |       CAST(floor(epoch(prev_ts)) AS BIGINT) AS first_fail,
-        |       CAST(floor(epoch(ts)) AS BIGINT) AS last_fail
-        |FROM o
-        |WHERE event_type = 'error' AND prev_type = 'error'
-        |  AND ts <= prev_ts + INTERVAL 2 HOUR""".stripMargin,
-
-    "q17_cep_order_timeout" ->
-      """SELECT s.event_id AS order_id, s.user_id,
-        |       CAST(floor(epoch(s.ts)) AS BIGINT) AS create_ts,
-        |       CASE WHEN count(p.user_id) > 0 THEN 'payed successfully'
-        |            ELSE 'timeout' END AS status
-        |FROM (SELECT * FROM events WHERE event_type = 'signup') s
-        |LEFT JOIN (SELECT * FROM events WHERE event_type = 'purchase') p
-        |  ON p.user_id = s.user_id AND p.ts > s.ts
-        | AND p.ts <= s.ts + INTERVAL 24 HOUR
-        |GROUP BY 1, 2, 3""".stripMargin,
-
-    "q18_sessionization" ->
-      """WITH o AS (
-        |  SELECT user_id, ts, event_id,
-        |         CASE WHEN lag(ts) OVER w IS NULL
-        |                OR ts >= lag(ts) OVER w + INTERVAL 30 MINUTE
-        |              THEN 1 ELSE 0 END AS new_s
-        |  FROM events
-        |  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
-        |s AS (
-        |  SELECT user_id, ts,
-        |         sum(new_s) OVER (PARTITION BY user_id ORDER BY ts, event_id
-        |                          ROWS UNBOUNDED PRECEDING) AS sid
-        |  FROM o)
-        |SELECT CAST(floor(epoch(min(ts))) AS BIGINT) AS session_start,
-        |       user_id, count(*) AS cnt
-        |FROM s GROUP BY user_id, sid""".stripMargin,
-
-    "q19_running_total" ->
-      """SELECT user_id, event_id,
-        |       round(sum(CAST(value AS DECIMAL(18,2)))
-        |               OVER (PARTITION BY user_id ORDER BY ts, event_id
-        |                     ROWS UNBOUNDED PRECEDING), 2)::DOUBLE AS running_total
-        |FROM events""".stripMargin,
-
-    "q31_rollup_pricing" ->
-      """SELECT l_returnflag, l_linestatus,
-        |       round(sum(CAST(l_quantity AS DECIMAL(28,10))), 2)::DOUBLE AS sum_qty,
-        |       count(*) AS cnt
-        |FROM lineitem GROUP BY ROLLUP (l_returnflag, l_linestatus)""".stripMargin,
-
-    "q20_dedup_fingerprint" ->
-      """SELECT md5(array_to_string(list_sort(list_distinct(string_split(text, ' '))), ' ')) AS fingerprint,
-        |       min(doc_id) AS keep_id, count(*) AS dup_cnt
-        |FROM documents GROUP BY 1 HAVING count(*) >= 2""".stripMargin,
-
-    "q21_minhash_bands" ->
-      s"""$duckBandsCte
-         |SELECT doc_id, band_id, band_hash FROM b""".stripMargin,
-
-    "q22_lsh_candidates" ->
-      s"""$duckBandsCte
-         |SELECT a.doc_id AS doc_a, b2.doc_id AS doc_b, count(*) AS n_bands
-         |FROM b a JOIN b b2
-         |  ON a.band_id = b2.band_id AND a.band_hash = b2.band_hash
-         | AND a.doc_id < b2.doc_id
-         |GROUP BY 1, 2""".stripMargin,
-
-    "q65_dup_components" ->
-      s"""$duckBandsCte,
-         |$duckEdgesBody,
-         |walk AS (
-         |  WITH RECURSIVE w(v, l) AS (
-         |    SELECT s, s FROM edges
-         |    UNION
-         |    SELECT e.s, w.l FROM edges e JOIN w ON e.t = w.v)
-         |  SELECT * FROM w)
-         |SELECT v AS id, min(l) AS component FROM walk GROUP BY v""".stripMargin,
-
-    // q65's edge derivation + three unrolled synchronous LPA rounds:
-    // per round, vote counts per (node, neighbor label), argmax by
-    // (count desc, label asc), left-join fallback keeps own label
-    "q132_label_propagation" -> {
-      val rounds = (1 to 3).map { i =>
-        s"""v$i AS (SELECT e.s AS id, l.lbl, count(*)::BIGINT AS c
-           |        FROM edges e JOIN l${i - 1} l ON l.id = e.t GROUP BY 1, 2),
-           |a$i AS (SELECT id, lbl FROM (
-           |          SELECT id, lbl,
-           |                 row_number() OVER (PARTITION BY id
-           |                                    ORDER BY c DESC, lbl ASC) AS rn
-           |          FROM v$i) WHERE rn = 1),
-           |l$i AS (SELECT l.id, coalesce(a.lbl, l.lbl) AS lbl
-           |        FROM l${i - 1} l LEFT JOIN a$i a USING (id))""".stripMargin
-      }.mkString(",\n")
-      s"""$duckBandsCte,
-         |$duckEdgesBody,
-         |l0 AS (SELECT DISTINCT s AS id, s AS lbl FROM edges),
-         |$rounds
-         |SELECT id, lbl AS community FROM l3""".stripMargin
-    },
-
-    // q65's edge derivation + three unrolled INTEGER PageRank rounds
-    // (Graph.pageRank): contributions r//d summed per destination,
-    // damped as 150000000 + (85·m)//100 — rank units of 1e-9, every
-    // intermediate a positive BIGINT (// is floor division; Spark's
-    // div truncates — identical on these all-positive values)
-    "q133_pagerank" -> {
-      val rounds = (1 to 3).map { i =>
-        s"""c$i AS (SELECT e.t AS id, sum(r.r // d.d)::BIGINT AS m
-           |        FROM edges e JOIN deg d ON d.s = e.s
-           |        JOIN r${i - 1} r ON r.id = e.s GROUP BY 1),
-           |r$i AS (SELECT n.id,
-           |               (150000000 + (85 * coalesce(c.m, 0)) // 100)::BIGINT AS r
-           |        FROM n0 n LEFT JOIN c$i c USING (id))""".stripMargin
-      }.mkString(",\n")
-      s"""$duckBandsCte,
-         |$duckEdgesBody,
-         |deg AS (SELECT s, count(*)::BIGINT AS d FROM edges GROUP BY 1),
-         |n0 AS (SELECT DISTINCT s AS id FROM edges),
-         |r0 AS (SELECT id, 1000000000::BIGINT AS r FROM n0),
-         |$rounds
-         |SELECT id, r AS rank_units FROM r3""".stripMargin
-    },
-
-    // cross-document exact-substring spans: 8-token shingle occurrences
-    // (positions 0-based), shared-and-not-hot hashes (2 <= cnt <= 64),
-    // the pair join on hash, then the Window-free island merge — starts
-    // (no hit at pos−1 on the diagonal), ends (none at pos+1), each
-    // start paired with its nearest end. occ/m are MATERIALIZED: plain
-    // CTEs inline transitively and m is read four times (the q121
-    // lesson)
-    "q134_substring_spans" ->
-      """WITH w AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
-        |u AS (
-        |  SELECT doc_id AS doc,
-        |         unnest(list_transform(generate_series(1, greatest(len(ws) - 7, 0)),
-        |           i -> {'pos': (i - 1)::BIGINT,
-        |                 'h': ('0x'||substr(md5(array_to_string(ws[i:i+7], ' ')),1,15))::BIGINT})) AS g
-        |  FROM w),
-        |occ AS MATERIALIZED (SELECT doc, g.pos AS pos, g.h AS h FROM u),
-        |shared AS (SELECT h FROM occ GROUP BY h HAVING count(*) BETWEEN 2 AND 64),
-        |o AS (SELECT occ.* FROM occ JOIN shared USING (h)),
-        |m AS MATERIALIZED (
-        |  SELECT a.doc AS doc_a, b.doc AS doc_b, a.pos AS pos_a,
-        |         a.pos - b.pos AS diag
-        |  FROM o a JOIN o b ON a.h = b.h AND a.doc < b.doc),
-        |s AS (SELECT m.* FROM m
-        |      LEFT JOIN m p ON p.doc_a = m.doc_a AND p.doc_b = m.doc_b
-        |        AND p.diag = m.diag AND p.pos_a = m.pos_a - 1
-        |      WHERE p.pos_a IS NULL),
-        |e AS (SELECT m.* FROM m
-        |      LEFT JOIN m nx ON nx.doc_a = m.doc_a AND nx.doc_b = m.doc_b
-        |        AND nx.diag = m.diag AND nx.pos_a = m.pos_a + 1
-        |      WHERE nx.pos_a IS NULL)
-        |SELECT s.doc_a, s.doc_b, s.pos_a AS a_start,
-        |       s.pos_a - s.diag AS b_start,
-        |       min(e.pos_a) - s.pos_a + 8 AS span_tokens
-        |FROM s JOIN e ON e.doc_a = s.doc_a AND e.doc_b = s.doc_b
-        |  AND e.diag = s.diag AND e.pos_a >= s.pos_a
-        |GROUP BY 1, 2, s.diag, s.pos_a""".stripMargin,
-
-    // temperature mixture: replays Sampling.temperatureMixture's exact
-    // integers — corrected-floor isqrt weights, binding stratum by
-    // cross-multiplied argmin (HUGEINT — no double ordering), integer
-    // keep thresholds against the 'tmix:'-salted hash bucket
-    "q135_temperature_mixture" ->
-      """WITH c AS (SELECT source, count(*)::BIGINT AS n FROM documents GROUP BY 1),
-        |p AS (SELECT source, n,
-        |             w0 - CASE WHEN w0*w0 > n THEN 1 ELSE 0 END
-        |                + CASE WHEN (w0+1)*(w0+1) <= n THEN 1 ELSE 0 END AS w
-        |      FROM (SELECT source, n, CAST(floor(sqrt(n)) AS BIGINT) AS w0 FROM c)),
-        |bind AS (SELECT a.n AS nb, a.w AS wb FROM p a
-        |         WHERE NOT EXISTS (
-        |           SELECT 1 FROM p b
-        |           WHERE b.n::HUGEINT * a.w < a.n::HUGEINT * b.w
-        |              OR (b.n::HUGEINT * a.w = a.n::HUGEINT * b.w
-        |                  AND b.source < a.source))),
-        |f AS (SELECT p.source,
-        |             least(10000, (p.w * (SELECT nb FROM bind) * 10000)
-        |                          // ((SELECT wb FROM bind) * p.n)) AS thr
-        |      FROM p)
-        |SELECT d.doc_id, d.source
-        |FROM documents d JOIN f ON d.source = f.source
-        |WHERE ('0x'||substr(md5('tmix:' || d.doc_id::VARCHAR),1,15))::BIGINT % 10000
-        |      < f.thr""".stripMargin,
-
-    // q133's integer rounds with the teleport restricted to the seed
-    // predicate (id % 10 = 0): r0 and the base term are CASE on the
-    // same rule the Spark side declares
-    "q137_personalized_pagerank" -> {
-      val rounds = (1 to 3).map { i =>
-        s"""c$i AS (SELECT e.t AS id, sum(r.r // d.d)::BIGINT AS m
-           |        FROM edges e JOIN deg d ON d.s = e.s
-           |        JOIN r${i - 1} r ON r.id = e.s GROUP BY 1),
-           |r$i AS (SELECT n.id,
-           |               (CASE WHEN n.id % 10 = 0 THEN 150000000 ELSE 0 END
-           |                + (85 * coalesce(c.m, 0)) // 100)::BIGINT AS r
-           |        FROM n0 n LEFT JOIN c$i c USING (id))""".stripMargin
-      }.mkString(",\n")
-      s"""$duckBandsCte,
-         |$duckEdgesBody,
-         |deg AS (SELECT s, count(*)::BIGINT AS d FROM edges GROUP BY 1),
-         |n0 AS (SELECT DISTINCT s AS id FROM edges),
-         |r0 AS (SELECT id,
-         |              (CASE WHEN id % 10 = 0 THEN 1000000000 ELSE 0 END)::BIGINT AS r
-         |       FROM n0),
-         |$rounds
-         |SELECT id, r AS rank_units FROM r3""".stripMargin
-    },
-
-    // per-source fertility over the q90 recursive-CTE subword counts:
-    // exact BIGINT sums, the ratio rounded at 6 digits
-    "q138_tokenizer_fertility" ->
-      s"""WITH RECURSIVE $duckSubwordBody
-         |SELECT d.source, count(*)::BIGINT AS docs,
-         |       sum(len(string_split(d.text, ' ')))::BIGINT AS words,
-         |       sum(sc.subword_cnt)::BIGINT AS pieces,
-         |       round(sum(sc.subword_cnt)::DOUBLE /
-         |             sum(len(string_split(d.text, ' '))), 6) AS fertility
-         |FROM documents d JOIN sc USING (doc_id)
-         |GROUP BY 1""".stripMargin,
-
-    // q106's span derivation + the keep-first winner (row_number over
-    // (doc_id, pos) per span — the oracle's Window replays the Spark
-    // side's min-struct aggregate)
-    "q139_span_keep_first" ->
-      """WITH d AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
-        |sp AS (
-        |  SELECT doc_id, (i - 1) // 3 AS pos,
-        |         array_to_string(ws[i : least(i + 2, len(ws))], ' ') AS span
-        |  FROM (SELECT doc_id, ws, unnest(generate_series(1, len(ws), 3)) AS i FROM d)),
-        |w AS (SELECT span, doc_id AS wdoc, pos AS wpos FROM (
-        |        SELECT span, doc_id, pos,
-        |               row_number() OVER (PARTITION BY span
-        |                                  ORDER BY doc_id, pos) AS rn
-        |        FROM sp) WHERE rn = 1)
-        |SELECT sp.doc_id, count(*)::BIGINT AS n_spans,
-        |       sum(CASE WHEN w.wdoc IS NULL THEN 1 ELSE 0 END)::BIGINT AS n_dropped,
-        |       coalesce(string_agg(sp.span, ' ' ORDER BY sp.pos)
-        |                FILTER (w.wdoc IS NOT NULL), '') AS clean_text
-        |FROM sp LEFT JOIN w ON sp.span = w.span AND sp.doc_id = w.wdoc
-        |  AND sp.pos = w.wpos
-        |GROUP BY 1""".stripMargin,
-
-    // the q20 fingerprint over both slices, full-outer join, status by
-    // null/equality — only differing rows emitted
-    "q140_snapshot_diff" ->
-      """WITH a AS (
-        |  SELECT doc_id AS id,
-        |         md5(array_to_string(list_sort(list_distinct(string_split(text, ' '))), ' ')) AS fp_a
-        |  FROM documents WHERE doc_id % 7 <> 0),
-        |b AS (
-        |  SELECT id,
-        |         md5(array_to_string(list_sort(list_distinct(string_split(text, ' '))), ' ')) AS fp_b
-        |  FROM (SELECT doc_id AS id,
-        |               CASE WHEN doc_id % 3 = 0 THEN text || ' zzedit'
-        |                    ELSE text END AS text
-        |        FROM documents WHERE doc_id % 5 <> 0))
-        |SELECT id, status, fp_a, fp_b FROM (
-        |  SELECT id,
-        |         CASE WHEN fp_a IS NULL THEN 'added'
-        |              WHEN fp_b IS NULL THEN 'removed'
-        |              WHEN fp_a <> fp_b THEN 'changed'
-        |              ELSE 'unchanged' END AS status,
-        |         fp_a, fp_b
-        |  FROM a FULL JOIN b USING (id))
-        |WHERE status <> 'unchanged'""".stripMargin,
-
-    // reference deciles via standard ntile (the exactNtileGlobal
-    // contract IS SQL ntile), cuts as one sorted list, both slices
-    // bucketed by count-of-cuts-below, empty buckets kept via the
-    // generate_series dimension
-    "q141_drift_histogram" ->
-      """WITH a AS (SELECT doc_id, n_chars AS m FROM documents WHERE doc_id % 2 = 0),
-        |b AS (SELECT doc_id, n_chars AS m FROM documents WHERE doc_id % 2 = 1),
-        |nt AS (SELECT m, ntile(10) OVER (ORDER BY m, doc_id) AS bucket FROM a),
-        |cuts AS (SELECT list_sort(list(cut)) AS cuts FROM (
-        |           SELECT bucket, max(m) AS cut FROM nt GROUP BY 1
-        |           HAVING bucket < 10)),
-        |ba AS (SELECT (1 + len(list_filter(cuts.cuts, c -> a.m > c)))::BIGINT AS bucket,
-        |              count(*)::BIGINT AS cnt_ref
-        |       FROM a CROSS JOIN cuts GROUP BY 1),
-        |bb AS (SELECT (1 + len(list_filter(cuts.cuts, c -> b.m > c)))::BIGINT AS bucket,
-        |              count(*)::BIGINT AS cnt_cmp
-        |       FROM b CROSS JOIN cuts GROUP BY 1),
-        |dim AS (SELECT unnest(generate_series(1, 10))::BIGINT AS bucket),
-        |j AS (SELECT dim.bucket, coalesce(ba.cnt_ref, 0)::BIGINT AS cnt_ref,
-        |             coalesce(bb.cnt_cmp, 0)::BIGINT AS cnt_cmp
-        |      FROM dim LEFT JOIN ba USING (bucket) LEFT JOIN bb USING (bucket)),
-        |t AS (SELECT sum(cnt_ref)::BIGINT AS tr, sum(cnt_cmp)::BIGINT AS tc FROM j)
-        |SELECT bucket, cnt_ref, cnt_cmp,
-        |       round(cnt_ref::DOUBLE / tr, 6) AS p_ref,
-        |       round(cnt_cmp::DOUBLE / tc, 6) AS p_cmp
-        |FROM j CROSS JOIN t""".stripMargin,
-
-    // sign-packed signatures + popcount(xor) ranks — all integers,
-    // q25's query/self-exclusion/tie-break conventions
-    "q142_hamming_topk" -> q142HammingSql(),
-
-    // block-packed signatures carry the SAME bits, so the total
-    // popcount — and every rank — equals the single-BIGINT form: the
-    // oracle is literally q142's SQL (the strongest statement of
-    // block-layout equivalence)
-    "q157_hamming_blocks" -> q142HammingSql(),
-
-    // the q128 rerank tail over the 20-wide Hamming shortlist — the
-    // SAME q142 SQL nested at k=20 (composed-oracle discipline)
-    "q143_hamming_rerank" -> q143HammingRerankSql,
-
-    // the q129 audit shape over the binary pipeline
-    "q144_hamming_recall" ->
-      s"""WITH rr AS (SELECT query_id, neighbor_id FROM ($q143HammingRerankSql) t),
-         |bf AS ($q25KnnSql),
-         |hits AS (
-         |  SELECT query_id, count(*) AS h
-         |  FROM rr JOIN bf USING (query_id, neighbor_id) GROUP BY 1),
-         |kk AS (SELECT query_id, count(*) AS k FROM bf GROUP BY 1)
-         |SELECT kk.query_id,
-         |       round(coalesce(h, 0)::DOUBLE / k::DOUBLE, 6) AS recall_at_5
-         |FROM kk LEFT JOIN hits USING (query_id)""".stripMargin,
-
-    // bands over ALL documents (the shared CTE), split by parity in
-    // place: an arrival band hits iff the same bucket EXISTS among the
-    // store-side bands
-    "q145_near_dup_gate" ->
-      s"""$duckBandsCte,
-         |hit AS (
-         |  SELECT a0.doc_id, count(*)::BIGINT AS hit_bands
-         |  FROM b a0
-         |  WHERE a0.doc_id % 2 = 1
-         |    AND EXISTS (SELECT 1 FROM b s WHERE s.doc_id % 2 = 0
-         |                AND s.band_id = a0.band_id
-         |                AND s.band_hash = a0.band_hash)
-         |  GROUP BY 1)
-         |SELECT d.doc_id, coalesce(h.hit_bands, 0)::BIGINT AS hit_bands,
-         |       coalesce(h.hit_bands, 0) > 0 AS flagged
-         |FROM documents d LEFT JOIN hit h USING (doc_id)
-         |WHERE d.doc_id % 2 = 1""".stripMargin,
-
-    // the q26 plane matrix shared between bucket and margins: probe
-    // planes = the 2 smallest round(|dot|,6) (plane-index tie-break),
-    // probe buckets via xor, then the q64 scoring tail
-    "q146_ann_bitprobe" ->
-      """WITH pp AS (SELECT unnest(generate_series(0, 7)) AS p),
-        |dt AS (
-        |  SELECT e.vec_id, pp.p,
-        |         list_sum(list_transform(generate_series(1, 64), d ->
-        |           e.embedding[d]::DOUBLE *
-        |           ((('0x'||substr(md5(pp.p::VARCHAR || '_' || d::VARCHAR),1,15))::BIGINT % 2001 - 1000)::DOUBLE / 1000.0))) AS dot
-        |  FROM embeddings e CROSS JOIN pp),
-        |fb AS (SELECT vec_id,
-        |              sum(CASE WHEN dot >= 0 THEN (1::BIGINT << p)
-        |                       ELSE 0::BIGINT END)::BIGINT AS bucket
-        |       FROM dt GROUP BY 1),
-        |fl AS (SELECT vec_id, p FROM (
-        |         SELECT vec_id, p,
-        |                row_number() OVER (PARTITION BY vec_id
-        |                                   ORDER BY round(abs(dot), 6), p) AS rn
-        |         FROM dt) WHERE rn <= 2),
-        |pb AS (SELECT f.vec_id, xor(fb.bucket, 1::BIGINT << f.p) AS probe_bucket
-        |       FROM fl f JOIN fb USING (vec_id)
-        |       UNION SELECT vec_id, bucket FROM fb),
-        |cand AS (SELECT DISTINCT a.vec_id AS query_id, b.vec_id AS neighbor_id
-        |         FROM pb a JOIN fb b ON a.probe_bucket = b.bucket
-        |                            AND a.vec_id <> b.vec_id),
-        |e2 AS (
-        |  SELECT * FROM (
-        |    SELECT vec_id, embedding,
-        |           list_sum(list_transform(embedding, x -> x::DOUBLE * x::DOUBLE)) AS norm2
-        |    FROM embeddings)
-        |  WHERE norm2 > 0),
-        |sc AS (
-        |  SELECT c.query_id, c.neighbor_id,
-        |         round(list_sum(list_transform(generate_series(1, 64),
-        |             i -> q.embedding[i]::DOUBLE * n.embedding[i]::DOUBLE))
-        |           / sqrt(q.norm2 * n.norm2), 6) AS score
-        |  FROM cand c
-        |  JOIN e2 q ON c.query_id = q.vec_id
-        |  JOIN e2 n ON c.neighbor_id = n.vec_id),
-        |r AS (
-        |  SELECT query_id, neighbor_id, score,
-        |         row_number() OVER (PARTITION BY query_id
-        |                            ORDER BY score DESC, neighbor_id ASC) AS rn
-        |  FROM sc)
-        |SELECT query_id, neighbor_id, score FROM r WHERE rn = 1""".stripMargin,
-
-    // q133's rounds with band-count edge weights: contribution
-    // (r·w) // Σw_src; the cand GROUP BY's count(*) IS q22's n_bands
-    "q149_pagerank_weighted" -> {
-      val rounds = (1 to 3).map { i =>
-        s"""c$i AS (SELECT e.t AS id, sum((r.r * e.w) // d.sw)::BIGINT AS m
-           |        FROM edges e JOIN deg d ON d.s = e.s
-           |        JOIN r${i - 1} r ON r.id = e.s GROUP BY 1),
-           |r$i AS (SELECT n.id,
-           |               (150000000 + (85 * coalesce(c.m, 0)) // 100)::BIGINT AS r
-           |        FROM n0 n LEFT JOIN c$i c USING (id))""".stripMargin
-      }.mkString(",\n")
-      s"""$duckBandsCte,
-         |cand AS (
-         |  SELECT a.doc_id AS doc_a, b2.doc_id AS doc_b, count(*)::BIGINT AS w
-         |  FROM b a JOIN b b2
-         |    ON a.band_id = b2.band_id AND a.band_hash = b2.band_hash
-         |   AND a.doc_id < b2.doc_id
-         |  GROUP BY 1, 2),
-         |edges AS (
-         |  SELECT doc_a AS s, doc_b AS t, w FROM cand
-         |  UNION ALL SELECT doc_b, doc_a, w FROM cand),
-         |deg AS (SELECT s, sum(w)::BIGINT AS sw FROM edges GROUP BY 1),
-         |n0 AS (SELECT DISTINCT s AS id FROM edges),
-         |r0 AS (SELECT id, 1000000000::BIGINT AS r FROM n0),
-         |$rounds
-         |SELECT id, r AS rank_units FROM r3""".stripMargin
-    },
-
-    // the same integer half-life thresholds: age in whole half-lives
-    // (floor // vs Spark's truncating div agree — negatives clamp to 0
-    // AFTER division on both sides), threshold = 10000 >> k
-    "q147_decayed_sample" ->
-      """SELECT event_id, user_id, event_type
-        |FROM events
-        |WHERE ('0x'||substr(md5('decay:' || event_id::VARCHAR),1,15))::BIGINT % 10000
-        |      < (10000 >> least(greatest(
-        |          (1706745600 - epoch_us(ts)//1000000) // 259200, 0), 14))""".stripMargin,
-
-    // gap flag via lag + running-sum session ids over the same (ts,
-    // event_id) total order; gaps compare FLOORED epoch seconds on
-    // both sides, so the boundary is engine-exact
-    "q148_session_sequences" ->
-      """WITH e AS (
-        |  SELECT user_id, ts, event_id,
-        |         json_extract_string(props, '$.k')::BIGINT AS item
-        |  FROM events WHERE json_extract_string(props, '$.k') IS NOT NULL),
-        |f AS (
-        |  SELECT *, CASE WHEN lag(ts) OVER w IS NULL
-        |                   OR epoch_us(ts)//1000000
-        |                      - epoch_us(lag(ts) OVER w)//1000000 > 1800
-        |                 THEN 1 ELSE 0 END AS new_s
-        |  FROM e WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
-        |s AS (
-        |  SELECT *, sum(new_s) OVER (PARTITION BY user_id
-        |                             ORDER BY ts, event_id
-        |                             ROWS UNBOUNDED PRECEDING) AS s_id
-        |  FROM f)
-        |SELECT user_id, s_id::BIGINT AS s_id,
-        |       min(epoch_us(ts)//1000000)::BIGINT AS session_start_s,
-        |       count(*)::BIGINT AS n_items,
-        |       string_agg(item::VARCHAR, ' ' ORDER BY ts, event_id) AS item_seq
-        |FROM s GROUP BY 1, 2""".stripMargin,
-
-    // session_window semantics replayed lag-relationally: new session
-    // when the full-precision microsecond gap strictly exceeds 1800s
-    // (an event exactly on the close MERGES — measured, spec-pinned);
-    // window start = min ts, end = max ts + gap, floored to seconds
-    // only at output
-    "q151_session_window_seq" ->
-      """WITH e AS (
-        |  SELECT user_id, ts, event_id,
-        |         json_extract_string(props, '$.k')::BIGINT AS item
-        |  FROM events WHERE json_extract_string(props, '$.k') IS NOT NULL),
-        |f AS (
-        |  SELECT *, CASE WHEN lag(ts) OVER w IS NULL
-        |                   OR epoch_us(ts) - epoch_us(lag(ts) OVER w) > 1800000000
-        |                 THEN 1 ELSE 0 END AS new_s
-        |  FROM e WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
-        |s AS (
-        |  SELECT *, sum(new_s) OVER (PARTITION BY user_id
-        |                             ORDER BY ts, event_id
-        |                             ROWS UNBOUNDED PRECEDING) AS s_id
-        |  FROM f)
-        |SELECT user_id,
-        |       (epoch_us(min(ts))//1000000)::BIGINT AS session_start_s,
-        |       (epoch_us(max(ts))//1000000 + 1800)::BIGINT AS session_end_s,
-        |       count(*)::BIGINT AS n_items,
-        |       string_agg(item::VARCHAR, ' ' ORDER BY ts, event_id) AS item_seq
-        |FROM s GROUP BY user_id, s_id""".stripMargin,
-
-    // replays Multimodal.pixelValue/synthDims relationally: width
-    // 2+id%6, height 3+id%4, pixel (x,y) channel sums over one flat
-    // p-loop (x = p % w, y = p // w) — PNG is lossless, so the
-    // engine's encode→decode round-trip must return exactly these
-    // integers; rot payloads (id % 10 = 0) take the tagged zero row
-    "q150_image_decode" ->
-      """WITH dims AS (
-        |  SELECT doc_id, 2 + doc_id % 6 AS w, 3 + doc_id % 4 AS h
-        |  FROM documents WHERE doc_id % 10 <> 0)
-        |SELECT doc_id, true AS decoded, w::BIGINT AS width, h::BIGINT AS height,
-        |       3::BIGINT AS channels,
-        |       list_sum(list_transform(generate_series(0, w*h - 1), p ->
-        |         (doc_id + 3*(p % w) + 5*(p // w)) % 256 +
-        |         (2*doc_id + 7*(p % w) + 11*(p // w)) % 256 +
-        |         (5*doc_id + 13*(p % w) + 17*(p // w)) % 256))::BIGINT AS pixel_sum
-        |FROM dims
-        |UNION ALL
-        |SELECT doc_id, false AS decoded, 0::BIGINT AS width, 0::BIGINT AS height,
-        |       0::BIGINT AS channels, 0::BIGINT AS pixel_sum
-        |FROM documents WHERE doc_id % 10 = 0""".stripMargin,
-
-    // nearest-neighbor replay: output pixel (X, Y) = generative pixel
-    // (X·w div 4, Y·h div 4); one flat p-loop, X = p % 4, Y = p // 4
-    "q159_image_resize" ->
-      """WITH dims AS (
-        |  SELECT doc_id, 2 + doc_id % 6 AS w, 3 + doc_id % 4 AS h
-        |  FROM documents)
-        |SELECT doc_id, true AS decoded, 4::BIGINT AS width,
-        |       4::BIGINT AS height, 3::BIGINT AS channels,
-        |       list_sum(list_transform(generate_series(0, 15), p ->
-        |         (doc_id + 3*(((p % 4) * w) // 4) + 5*(((p // 4) * h) // 4)) % 256 +
-        |         (2*doc_id + 7*(((p % 4) * w) // 4) + 11*(((p // 4) * h) // 4)) % 256 +
-        |         (5*doc_id + 13*(((p % 4) * w) // 4) + 17*(((p // 4) * h) // 4)) % 256))::BIGINT AS pixel_sum
-        |FROM dims""".stripMargin,
-
-    // luma list per image from the generative pixels; bit p set iff
-    // luma[p]·w·h > Σluma (strict, cross-multiplied — pure integers).
-    // phash bits stay ≤ 42 (max 7×6 image), far from the << overflow
-    "q155_image_phash" ->
-      """WITH dims AS (
-        |  SELECT doc_id, 2 + doc_id % 6 AS w, 3 + doc_id % 4 AS h
-        |  FROM documents),
-        |lum AS (
-        |  SELECT doc_id, w, h,
-        |         list_transform(generate_series(0, w*h - 1), p ->
-        |           (doc_id + 3*(p % w) + 5*(p // w)) % 256 +
-        |           (2*doc_id + 7*(p % w) + 11*(p // w)) % 256 +
-        |           (5*doc_id + 13*(p % w) + 17*(p // w)) % 256) AS ls
-        |  FROM dims),
-        |tot AS (SELECT doc_id, w, h, ls, list_sum(ls) AS t FROM lum)
-        |SELECT doc_id, w::BIGINT AS width, h::BIGINT AS height,
-        |       coalesce(list_sum(list_transform(generate_series(1, w*h), p ->
-        |         CASE WHEN ls[p] * w * h > t THEN (1::BIGINT << (p - 1))
-        |              ELSE 0::BIGINT END)), 0)::BIGINT AS phash
-        |FROM tot""".stripMargin,
-
-    // q155's hash CTE + the q142 rank replay, joined within dim classes
-    "q156_image_neardup" ->
-      """WITH dims AS (
-        |  SELECT doc_id, 2 + doc_id % 6 AS w, 3 + doc_id % 4 AS h
-        |  FROM documents),
-        |lum AS (
-        |  SELECT doc_id, w, h,
-        |         list_transform(generate_series(0, w*h - 1), p ->
-        |           (doc_id + 3*(p % w) + 5*(p // w)) % 256 +
-        |           (2*doc_id + 7*(p % w) + 11*(p // w)) % 256 +
-        |           (5*doc_id + 13*(p % w) + 17*(p // w)) % 256) AS ls
-        |  FROM dims),
-        |tot AS (SELECT doc_id, w, h, ls, list_sum(ls) AS t FROM lum),
-        |ph AS (
-        |  SELECT doc_id, w, h,
-        |         coalesce(list_sum(list_transform(generate_series(1, w*h), p ->
-        |           CASE WHEN ls[p] * w * h > t THEN (1::BIGINT << (p - 1))
-        |                ELSE 0::BIGINT END)), 0)::BIGINT AS phash
-        |  FROM tot),
-        |sc AS (
-        |  SELECT q.doc_id AS query_id, c.doc_id AS neighbor_id,
-        |         bit_count(xor(q.phash, c.phash))::BIGINT AS hamming
-        |  FROM ph q JOIN ph c ON q.w = c.w AND q.h = c.h
-        |                     AND c.doc_id <> q.doc_id
-        |  WHERE q.doc_id < 10),
-        |r AS (SELECT query_id, neighbor_id, hamming,
-        |             row_number() OVER (PARTITION BY query_id
-        |                                ORDER BY hamming, neighbor_id) AS rank
-        |      FROM sc)
-        |SELECT query_id, neighbor_id, hamming, rank FROM r WHERE rank <= 3""".stripMargin,
-
-    // the 3-way round-robin interleave of zValueN: bit b of column i
-    // lands at position 3b+i (l_quantity is an integral double in this
-    // corpus, so both engines' long casts agree)
-    "q154_zorder3_key" ->
-      """SELECT l_orderkey, l_linenumber::BIGINT AS l_linenumber,
-        |       list_sum(list_transform(generate_series(0, 15), b ->
-        |         (((l_partkey >> b) & 1) << (3*b)) +
-        |         (((l_suppkey >> b) & 1) << (3*b + 1)) +
-        |         (((l_quantity::BIGINT >> b) & 1) << (3*b + 2))))::BIGINT AS zval3
-        |FROM lineitem""".stripMargin,
-
-    // the same 16-bit Morton interleave as Bucketing.zValue — pure
-    // integer bit arithmetic, so the layout key is engine-reproducible
-    "q136_zorder_key" ->
-      """SELECT l_orderkey, l_linenumber::BIGINT AS l_linenumber,
-        |       list_sum(list_transform(generate_series(0, 15), b ->
-        |         (((l_partkey >> b) & 1) << (2*b)) +
-        |         (((l_suppkey >> b) & 1) << (2*b + 1))))::BIGINT AS zval
-        |FROM lineitem""".stripMargin,
-
-    "q23_simhash" ->
-      """WITH h AS (
-        |  SELECT doc_id,
-        |         list_transform(string_split(text, ' '),
-        |                        w -> ('0x'||substr(md5(w),1,15))::BIGINT) AS hs
-        |  FROM documents)
-        |SELECT doc_id,
-        |       list_sum(list_transform(generate_series(0, 15), b ->
-        |         CASE WHEN list_sum(list_transform(hs, x -> ((x >> b) & 1) * 2 - 1)) >= 0
-        |              THEN (1::BIGINT << b) ELSE 0::BIGINT END))::BIGINT AS simhash
-        |FROM h""".stripMargin,
-
-    "q24_ngram_jaccard" ->
-      """WITH w AS (
-        |  SELECT doc_id, source, list_distinct(string_split(text, ' ')) AS ws
-        |  FROM documents)
-        |SELECT doc_a, doc_b, jaccard FROM (
-        |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-        |         round(len(list_intersect(a.ws, b.ws))::DOUBLE /
-        |               (len(a.ws) + len(b.ws) - len(list_intersect(a.ws, b.ws)))::DOUBLE,
-        |               6) AS jaccard
-        |  FROM w a JOIN w b ON a.source = b.source AND a.doc_id < b.doc_id)
-        |WHERE jaccard >= 0.5""".stripMargin,
-
-    // LSH candidates from the shared bands CTE; per-doc bottom-16 KMV
-    // word-hash sketches ranked relationally; per pair the q130
-    // estimator arithmetic verbatim (combined bottom-k, K∩ via
-    // membership in both sketches, union exact-below-capacity) with
-    // the SAME left-assoc float chains as the engine
-    "q163_sketch_verify" ->
-      s"""$duckBandsCte,
-        |cand AS (
-        |  SELECT a.doc_id AS doc_a, b2.doc_id AS doc_b
-        |  FROM b a JOIN b b2
-        |    ON a.band_id = b2.band_id AND a.band_hash = b2.band_hash
-        |   AND a.doc_id < b2.doc_id
-        |  GROUP BY 1, 2),
-        |w AS (SELECT doc_id, unnest(list_distinct(string_split(text, ' '))) AS w
-        |      FROM documents),
-        |hh AS (SELECT DISTINCT doc_id,
-        |         ('0x'||substr(md5('kmv:'||w),1,15))::BIGINT AS hv
-        |       FROM w),
-        |bk AS (SELECT doc_id, hv FROM (
-        |         SELECT doc_id, hv,
-        |                row_number() OVER (PARTITION BY doc_id ORDER BY hv) AS rn
-        |         FROM hh)
-        |       WHERE rn <= 16),
-        |nw AS (SELECT doc_id, count(*)::BIGINT AS n FROM w GROUP BY 1),
-        |u AS (SELECT DISTINCT c.doc_a, c.doc_b, bk.hv
-        |      FROM cand c JOIN bk ON bk.doc_id IN (c.doc_a, c.doc_b)),
-        |ck AS (SELECT doc_a, doc_b, hv FROM (
-        |         SELECT doc_a, doc_b, hv,
-        |                row_number() OVER (PARTITION BY doc_a, doc_b
-        |                                   ORDER BY hv) AS rn
-        |         FROM u)
-        |       WHERE rn <= 16),
-        |st AS (
-        |  SELECT ck.doc_a, ck.doc_b, count(*)::BIGINT AS kk,
-        |         sum(CASE WHEN EXISTS (SELECT 1 FROM bk x
-        |                               WHERE x.doc_id = ck.doc_a AND x.hv = ck.hv)
-        |                   AND EXISTS (SELECT 1 FROM bk y
-        |                               WHERE y.doc_id = ck.doc_b AND y.hv = ck.hv)
-        |                  THEN 1 ELSE 0 END)::BIGINT AS k_int,
-        |         max(ck.hv) AS mx
-        |  FROM ck GROUP BY 1, 2),
-        |est AS (
-        |  SELECT doc_a, doc_b, kk, k_int,
-        |         CASE WHEN kk < 16 THEN kk::DOUBLE
-        |              ELSE 15.0 * 1152921504606846976 / mx END AS union_est
-        |  FROM st)
-        |SELECT e.doc_a, e.doc_b,
-        |       round(k_int::DOUBLE / kk, 6) AS jaccard_est,
-        |       round(k_int::DOUBLE / kk * union_est / a_n.n::DOUBLE, 6) AS cont_a_est,
-        |       round(k_int::DOUBLE / kk * union_est / b_n.n::DOUBLE, 6) AS cont_b_est
-        |FROM est e
-        |JOIN nw a_n ON a_n.doc_id = e.doc_a
-        |JOIN nw b_n ON b_n.doc_id = e.doc_b""".stripMargin,
-
-    // the q21 shingle convention (3-word windows, whole-text fallback)
-    // + one doc-frequency CTE; df = 1 marks the shingle as novel
-    "q164_ngram_novelty" ->
-      """WITH s0 AS (
-        |  SELECT doc_id,
-        |    CASE WHEN len(string_split(text, ' ')) >= 3
-        |      THEN list_distinct(list_transform(
-        |             generate_series(1, len(string_split(text, ' ')) - 2),
-        |             i -> array_to_string((string_split(text, ' '))[i:i+2], ' ')))
-        |      ELSE [text] END AS shs
-        |  FROM documents),
-        |sh AS (SELECT doc_id, unnest(shs) AS sh FROM s0),
-        |dfc AS (SELECT sh, count(*)::BIGINT AS df FROM sh GROUP BY 1)
-        |SELECT s.doc_id, count(*)::BIGINT AS n_shingles,
-        |       sum(CASE WHEN dfc.df = 1 THEN 1 ELSE 0 END)::BIGINT AS novel_shingles,
-        |       round(sum(CASE WHEN dfc.df = 1 THEN 1 ELSE 0 END)::DOUBLE
-        |             / count(*), 6) AS novelty
-        |FROM sh s JOIN dfc ON s.sh = dfc.sh
-        |GROUP BY 1""".stripMargin,
-
-    // the exact Window form the engine's PrefixSum core must equal
-    "q162_epoch_shuffle" ->
-      """SELECT 1::BIGINT AS epoch, doc_id,
-        |       row_number() OVER (ORDER BY
-        |         ('0x'||substr(md5('ord:1:'||doc_id::VARCHAR),1,15))::BIGINT,
-        |         doc_id)::BIGINT AS shuffle_rank
-        |FROM documents
-        |UNION ALL
-        |SELECT 2::BIGINT, doc_id,
-        |       row_number() OVER (ORDER BY
-        |         ('0x'||substr(md5('ord:2:'||doc_id::VARCHAR),1,15))::BIGINT,
-        |         doc_id)::BIGINT
-        |FROM documents""".stripMargin,
-
-    // the PSM split replayed with substr arithmetic: two salted md5-60
-    // cuts in [0, n], c1 = least, c2 = greatest; char-based substr ==
-    // the engine's (ASCII corpus, the q48 equivalence)
-    "q161_fim_transform" ->
-      """WITH t AS (
-        |  SELECT doc_id, text,
-        |         ('0x'||substr(md5('fim:r:'||doc_id::VARCHAR),1,15))::BIGINT % 100 < 50 AS fimmed,
-        |         ('0x'||substr(md5('fim:1:'||doc_id::VARCHAR),1,15))::BIGINT % (length(text) + 1) AS h1,
-        |         ('0x'||substr(md5('fim:2:'||doc_id::VARCHAR),1,15))::BIGINT % (length(text) + 1) AS h2
-        |  FROM documents),
-        |c AS (SELECT doc_id, text, fimmed,
-        |        least(h1, h2)::INT AS c1, greatest(h1, h2)::INT AS c2 FROM t)
-        |SELECT doc_id, fimmed,
-        |       CASE WHEN fimmed THEN substr(text, 1, c1) ELSE '' END AS prefix,
-        |       CASE WHEN fimmed THEN substr(text, c1 + 1, c2 - c1) ELSE '' END AS middle,
-        |       CASE WHEN fimmed THEN substr(text, c2 + 1, length(text)) ELSE '' END AS suffix,
-        |       CASE WHEN fimmed
-        |            THEN '<PRE>' || substr(text, 1, c1) ||
-        |                 '<SUF>' || substr(text, c2 + 1, length(text)) ||
-        |                 '<MID>' || substr(text, c1 + 1, c2 - c1)
-        |            ELSE text END AS fim_text
-        |FROM c""".stripMargin,
-
-    // replays Multimodal.sampleValue/audioParams relationally:
-    // channels 1+id%2, rate 8000·(1+id%3), frames 40+id%25; sample p
-    // of the interleaved stream is frame p//ch, channel p%ch — WAV PCM
-    // is lossless, so the engine's encode→decode round-trip must
-    // return exactly these integers; rot payloads (id % 10 = 0) take
-    // the tagged zero row
-    "q165_audio_decode" ->
-      """WITH par AS (
-        |  SELECT doc_id, 1 + doc_id % 2 AS ch, 8000 * (1 + doc_id % 3) AS sr,
-        |         40 + doc_id % 25 AS n
-        |  FROM documents WHERE doc_id % 10 <> 0)
-        |SELECT doc_id, true AS decoded, sr::BIGINT AS sample_rate,
-        |       ch::BIGINT AS channels, n::BIGINT AS n_frames,
-        |       list_sum(list_transform(generate_series(0, n*ch - 1), p ->
-        |         (1237*doc_id + 40503*(p // ch) + 69427*(p % ch)) % 65536 - 32768))::BIGINT AS amp_sum,
-        |       list_sum(list_transform(generate_series(0, n*ch - 1), p ->
-        |         abs((1237*doc_id + 40503*(p // ch) + 69427*(p % ch)) % 65536 - 32768)))::BIGINT AS abs_sum
-        |FROM par
-        |UNION ALL
-        |SELECT doc_id, false AS decoded, 0::BIGINT AS sample_rate,
-        |       0::BIGINT AS channels, 0::BIGINT AS n_frames,
-        |       0::BIGINT AS amp_sum, 0::BIGINT AS abs_sum
-        |FROM documents WHERE doc_id % 10 = 0""".stripMargin,
-
-    // window k of doc = PCM frames [5k, min(5k+5, n)), every 2nd
-    // window; the md5 is over the window's interleaved samples
-    // rendered as comma-joined decimal — the same canonical string
-    // both engines produce, so the checksum replays too
-    "q166_audio_frames" ->
-      """WITH par AS (
-        |  SELECT doc_id, 1 + doc_id % 2 AS ch, 40 + doc_id % 25 AS n
-        |  FROM documents),
-        |wins AS (
-        |  SELECT doc_id, ch, n,
-        |         unnest(list_filter(generate_series(0, (n + 4) // 5 - 1),
-        |                            k -> k % 2 = 0)) AS k
-        |  FROM par),
-        |w2 AS (
-        |  SELECT doc_id, ch, k, k*5*ch AS plo, least((k+1)*5, n)*ch AS phi
-        |  FROM wins)
-        |SELECT doc_id, k::BIGINT AS frame_idx,
-        |       (phi - plo)::BIGINT AS n_samples,
-        |       list_sum(list_transform(generate_series(plo, phi - 1), p ->
-        |         (1237*doc_id + 40503*(p // ch) + 69427*(p % ch)) % 65536 - 32768))::BIGINT AS amp_sum,
-        |       md5(array_to_string(list_transform(generate_series(plo, phi - 1), p ->
-        |         ((1237*doc_id + 40503*(p // ch) + 69427*(p % ch)) % 65536 - 32768)::VARCHAR), ',')) AS frame_md5
-        |FROM w2""".stripMargin,
-
-    // full-corpus single-pass assignment (q33's argmin at the 8 seed
-    // centroids, q25's zero-norm guard) — the identity the two-phase
-    // build+ingest must reproduce; `ingested` replays the slice split
-    "q167_ivf_ingest" ->
-      """WITH e AS (SELECT vec_id, embedding FROM embeddings),
-        |c AS (SELECT vec_id AS centroid_id, embedding AS c_vec FROM e WHERE vec_id < 8),
-        |sc AS (
-        |  SELECT e.vec_id, c.centroid_id,
-        |         round(sqrt(list_sum(list_transform(generate_series(1, len(e.embedding)),
-        |           i -> (e.embedding[i]::DOUBLE - c.c_vec[i]::DOUBLE)
-        |              * (e.embedding[i]::DOUBLE - c.c_vec[i]::DOUBLE)))), 6) AS dist
-        |  FROM e CROSS JOIN c),
-        |a AS (
-        |  SELECT vec_id, centroid_id FROM (
-        |    SELECT vec_id, centroid_id,
-        |           row_number() OVER (PARTITION BY vec_id
-        |                              ORDER BY dist ASC, centroid_id ASC) AS rn
-        |    FROM sc) WHERE rn = 1),
-        |n AS (
-        |  SELECT vec_id,
-        |         round(list_sum(list_transform(embedding, x -> x::DOUBLE * x::DOUBLE)), 6) AS norm2
-        |  FROM e
-        |  WHERE list_sum(list_transform(embedding, x -> x::DOUBLE * x::DOUBLE)) > 0)
-        |SELECT a.vec_id, a.centroid_id, n.norm2,
-        |       a.vec_id % 5 = 0 AS ingested
-        |FROM a JOIN n ON a.vec_id = n.vec_id""".stripMargin,
-
-    // merged histogram ≡ full-corpus histogram (counters are sums), so
-    // the oracle bins the raw lengths once: 1-based state position =
-    // len//16 + 2 for middle bins (position 1 underflow, 42 overflow),
-    // bound = (pos − 2)·16, rank = ceil(p·n) — identical literal
-    // float multiply on both engines; exact side = min len with
-    // cumulative count ≥ rank
-    "q168_hist_warehouse" ->
-      """WITH d AS (SELECT source, doc_id, length(text) AS len FROM documents),
-        |t AS (SELECT source, count(*) AS n_docs,
-        |             count(DISTINCT doc_id % 3) AS n_slices FROM d GROUP BY 1),
-        |b AS (SELECT source,
-        |             CASE WHEN len < 0 THEN 1
-        |                  WHEN len // 16 >= 40 THEN 42
-        |                  ELSE (len // 16) + 2 END AS bin
-        |      FROM d),
-        |h AS (SELECT source, bin, count(*) AS c FROM b GROUP BY 1, 2),
-        |cm AS (SELECT source, bin,
-        |              sum(c) OVER (PARTITION BY source ORDER BY bin) AS cum
-        |       FROM h),
-        |pr AS (SELECT source, n_docs, unnest([0.5, 0.9, 0.99]) AS pp FROM t),
-        |rk AS (SELECT source, pp, ceil(pp * n_docs) AS rnk FROM pr),
-        |sel AS (SELECT rk.source, rk.pp, min(cm.bin) AS bin
-        |        FROM rk JOIN cm ON cm.source = rk.source AND cm.cum >= rk.rnk
-        |        GROUP BY 1, 2),
-        |bd AS (SELECT source, pp,
-        |              CASE WHEN bin = 1 THEN -16
-        |                   WHEN bin = 42 THEN 640
-        |                   ELSE (bin - 2) * 16 END AS bound
-        |       FROM sel),
-        |lc AS (SELECT source, len, count(*) AS c FROM d GROUP BY 1, 2),
-        |lcm AS (SELECT source, len,
-        |               sum(c) OVER (PARTITION BY source ORDER BY len) AS cum
-        |        FROM lc),
-        |ex AS (SELECT rk.source, rk.pp, min(lcm.len) AS v
-        |       FROM rk JOIN lcm ON lcm.source = rk.source AND lcm.cum >= rk.rnk
-        |       GROUP BY 1, 2),
-        |f AS (SELECT source,
-        |             max(CASE WHEN pp = 0.5 THEN bound END) AS p50_bound,
-        |             max(CASE WHEN pp = 0.9 THEN bound END) AS p90_bound,
-        |             max(CASE WHEN pp = 0.99 THEN bound END) AS p99_bound
-        |      FROM bd GROUP BY 1),
-        |g AS (SELECT source,
-        |             max(CASE WHEN pp = 0.5 THEN v END) AS p50_exact,
-        |             max(CASE WHEN pp = 0.9 THEN v END) AS p90_exact,
-        |             max(CASE WHEN pp = 0.99 THEN v END) AS p99_exact
-        |      FROM ex GROUP BY 1)
-        |SELECT t.source, t.n_slices::BIGINT AS n_slices,
-        |       t.n_docs::BIGINT AS n_docs,
-        |       f.p50_bound::BIGINT AS p50_bound,
-        |       f.p90_bound::BIGINT AS p90_bound,
-        |       f.p99_bound::BIGINT AS p99_bound,
-        |       g.p50_exact::BIGINT AS p50_exact,
-        |       g.p90_exact::BIGINT AS p90_exact,
-        |       g.p99_exact::BIGINT AS p99_exact,
-        |       g.p50_exact >= f.p50_bound AND g.p50_exact < f.p50_bound + 16 AS p50_in_bin,
-        |       g.p90_exact >= f.p90_bound AND g.p90_exact < f.p90_bound + 16 AS p90_in_bin,
-        |       g.p99_exact >= f.p99_bound AND g.p99_exact < f.p99_bound + 16 AS p99_in_bin
-        |FROM t JOIN f ON t.source = f.source
-        |       JOIN g ON t.source = g.source""".stripMargin,
-
-    // q164's shingle CTE split at the even/odd boundary: store = the
-    // kept corpus's distinct shingles, novel = arrival shingle with no
-    // store match (left join null probe)
-    "q169_novelty_gate" ->
-      """WITH s0 AS (
-        |  SELECT doc_id,
-        |    CASE WHEN len(string_split(text, ' ')) >= 3
-        |      THEN list_distinct(list_transform(
-        |             generate_series(1, len(string_split(text, ' ')) - 2),
-        |             i -> array_to_string((string_split(text, ' '))[i:i+2], ' ')))
-        |      ELSE [text] END AS shs
-        |  FROM documents),
-        |sh AS (SELECT doc_id, unnest(shs) AS sh FROM s0),
-        |st AS (SELECT DISTINCT sh FROM sh WHERE doc_id % 2 = 0),
-        |arr AS (SELECT doc_id, sh FROM sh WHERE doc_id % 2 = 1)
-        |SELECT arr.doc_id, count(*)::BIGINT AS n_shingles,
-        |       sum(CASE WHEN st.sh IS NULL THEN 1 ELSE 0 END)::BIGINT AS novel_shingles,
-        |       round(sum(CASE WHEN st.sh IS NULL THEN 1 ELSE 0 END)::DOUBLE
-        |             / count(*), 6) AS novelty
-        |FROM arr LEFT JOIN st ON arr.sh = st.sh
-        |GROUP BY 1""".stripMargin,
-
-    // q90's subword CTE (sc) → q162's salted row_number (epoch 1,
-    // doc_id tie-break, zero-count docs excluded FIRST) → q91's
-    // running-interval math ordered by the rank → round-robin shard
-    "q170_training_export" ->
-      s"""WITH RECURSIVE $duckSubwordBody,
-         |o AS (
-         |  SELECT doc_id, subword_cnt,
-         |         row_number() OVER (ORDER BY
-         |           ('0x'||substr(md5('ord:1:'||doc_id::VARCHAR),1,15))::BIGINT,
-         |           doc_id) AS shuffle_rank
-         |  FROM sc WHERE subword_cnt > 0),
-         |c AS (
-         |  SELECT doc_id, shuffle_rank, subword_cnt,
-         |         (sum(subword_cnt) OVER (ORDER BY shuffle_rank
-         |            ROWS UNBOUNDED PRECEDING) - subword_cnt)::BIGINT AS start
-         |  FROM o)
-         |SELECT doc_id, 1::BIGINT AS epoch,
-         |       shuffle_rank::BIGINT AS shuffle_rank,
-         |       subword_cnt::BIGINT AS token_cnt, start,
-         |       (start // 512)::BIGINT AS sequence,
-         |       ((start + subword_cnt - 1) // 512)::BIGINT AS last_sequence,
-         |       (start % 512)::BIGINT AS offset_in_first,
-         |       ((start // 512) % 16)::BIGINT AS shard,
-         |       ((start // 512) // 16)::BIGINT AS batch
-         |FROM c""".stripMargin,
-
-    // q158's register replay over the mod-37 universe; corrected =
-    // linear counting when raw <= 160 and zero registers exist (the
-    // branch inputs are integer-exact; DuckDB's own ln() evaluates the
-    // band boolean, edge at 20%)
-    "q172_hll_corrected_band" ->
-      """WITH e AS (SELECT DISTINCT event_type, user_id % 37 AS u FROM events),
-        |h AS (SELECT event_type,
-        |        ('0x'||substr(md5('hll:'||u::VARCHAR),1,15))::BIGINT AS hv
-        |      FROM e),
-        |bw AS (SELECT event_type, hv % 64 AS j, hv // 64 AS w FROM h),
-        |rk AS (SELECT event_type, j,
-        |         CASE WHEN w = 0 THEN 55
-        |              ELSE 55 - list_max(list_transform(generate_series(0, 53),
-        |                     i -> CASE WHEN (w >> i) & 1 = 1 THEN i + 1 ELSE 0 END))
-        |         END AS rank
-        |       FROM bw),
-        |reg AS (SELECT event_type, j, max(rank) AS r FROM rk GROUP BY 1, 2),
-        |s AS (SELECT event_type,
-        |        (sum(1::BIGINT << (55 - r)::INT)
-        |         + (64 - count(*)) * 36028797018963968)::BIGINT AS sint,
-        |        (64 - count(*))::BIGINT AS v_zero
-        |      FROM reg GROUP BY 1),
-        |x AS (SELECT event_type, count(DISTINCT u)::BIGINT AS uv FROM e GROUP BY 1)
-        |SELECT x.event_type, x.uv, s.v_zero,
-        |       abs(CASE WHEN (0.709::DOUBLE * 4096::DOUBLE * 36028797018963968::DOUBLE
-        |                      / sint::DOUBLE) <= 160.0 AND v_zero > 0
-        |                THEN 64.0 * ln(64.0 / v_zero::DOUBLE)
-        |                ELSE 0.709::DOUBLE * 4096::DOUBLE * 36028797018963968::DOUBLE
-        |                     / sint::DOUBLE END
-        |           - uv::DOUBLE) <= 0.2 * uv::DOUBLE AS within_band
-        |FROM x JOIN s USING (event_type)""".stripMargin,
-
-    // mono-mix per frame from the generative samples (channel sum);
-    // bit i−1 set iff mix[i+1] > mix[i] strictly, ≤ 63 bits — the
-    // round-trip must reproduce every sample for the print to match
-    "q173_audio_fp" ->
-      """WITH par AS (
-        |  SELECT doc_id, 1 + doc_id % 2 AS ch, 40 + doc_id % 25 AS n
-        |  FROM documents WHERE doc_id % 10 <> 0),
-        |m AS (
-        |  SELECT doc_id, ch, n,
-        |    list_transform(generate_series(0, n - 1), i ->
-        |      (1237*doc_id + 40503*i) % 65536 - 32768
-        |      + CASE WHEN ch = 2
-        |             THEN (1237*doc_id + 40503*i + 69427) % 65536 - 32768
-        |             ELSE 0 END) AS mix
-        |  FROM par)
-        |SELECT doc_id, true AS decoded, ch::BIGINT AS channels,
-        |       n::BIGINT AS n_frames, least(n - 1, 63)::BIGINT AS n_bits,
-        |       coalesce(list_sum(list_transform(generate_series(1, least(n - 1, 63)), i ->
-        |         CASE WHEN mix[i + 1] > mix[i] THEN (1::BIGINT << (i - 1))
-        |              ELSE 0::BIGINT END)), 0)::BIGINT AS fp
-        |FROM m
-        |UNION ALL
-        |SELECT doc_id, false AS decoded, 0::BIGINT AS channels,
-        |       0::BIGINT AS n_frames, 0::BIGINT AS n_bits, 0::BIGINT AS fp
-        |FROM documents WHERE doc_id % 10 = 0""".stripMargin,
-
-    // q173's print CTE + the q156 rank replay, joined within
-    // (channels, frames) format classes
-    "q174_audio_neardup" ->
-      """WITH par AS (
-        |  SELECT doc_id, 1 + doc_id % 2 AS ch, 40 + doc_id % 25 AS n
-        |  FROM documents WHERE doc_id % 10 <> 0),
-        |m AS (
-        |  SELECT doc_id, ch, n,
-        |    list_transform(generate_series(0, n - 1), i ->
-        |      (1237*doc_id + 40503*i) % 65536 - 32768
-        |      + CASE WHEN ch = 2
-        |             THEN (1237*doc_id + 40503*i + 69427) % 65536 - 32768
-        |             ELSE 0 END) AS mix
-        |  FROM par),
-        |f AS (
-        |  SELECT doc_id, ch, n,
-        |         coalesce(list_sum(list_transform(generate_series(1, least(n - 1, 63)), i ->
-        |           CASE WHEN mix[i + 1] > mix[i] THEN (1::BIGINT << (i - 1))
-        |                ELSE 0::BIGINT END)), 0)::BIGINT AS fp
-        |  FROM m),
-        |pr AS (SELECT doc_id AS query_id, ch, n, fp AS q_fp FROM f
-        |       WHERE doc_id < 10),
-        |sc AS (SELECT pr.query_id, ff.doc_id AS neighbor_id,
-        |              bit_count(xor(pr.q_fp, ff.fp))::BIGINT AS hamming
-        |       FROM f ff JOIN pr ON ff.ch = pr.ch AND ff.n = pr.n
-        |                         AND ff.doc_id <> pr.query_id),
-        |r AS (SELECT query_id, neighbor_id, hamming,
-        |             row_number() OVER (PARTITION BY query_id
-        |                                ORDER BY hamming ASC, neighbor_id ASC) AS rn
-        |      FROM sc)
-        |SELECT query_id, neighbor_id, hamming, rn::BIGINT AS rank
-        |FROM r WHERE rn <= 3""".stripMargin,
-
-    // nearest-neighbor rate replay: out frame j copies source frame
-    // j·sr div 16000; out count = n·16000 div sr — duration preserved
-    // to one frame, every sample a generative replay
-    "q175_audio_resample" ->
-      """WITH par AS (
-        |  SELECT doc_id, 1 + doc_id % 2 AS ch, 8000 * (1 + doc_id % 3) AS sr,
-        |         40 + doc_id % 25 AS n
-        |  FROM documents),
-        |p2 AS (SELECT doc_id, ch, sr, (n * 16000) // sr AS outn FROM par)
-        |SELECT doc_id, true AS decoded, 16000::BIGINT AS sample_rate,
-        |       ch::BIGINT AS channels, outn::BIGINT AS n_frames,
-        |       list_sum(list_transform(generate_series(0, outn*ch - 1), p ->
-        |         (1237*doc_id + 40503*(((p // ch) * sr) // 16000) + 69427*(p % ch)) % 65536 - 32768))::BIGINT AS amp_sum,
-        |       list_sum(list_transform(generate_series(0, outn*ch - 1), p ->
-        |         abs((1237*doc_id + 40503*(((p // ch) * sr) // 16000) + 69427*(p % ch)) % 65536 - 32768)))::BIGINT AS abs_sum
-        |FROM p2""".stripMargin,
-
-    // the q150 + q165 oracle bodies as CTEs, joined per document with
-    // trivial text stats — rot (doc_id % 10 = 0) is incomplete in both
-    // modalities, so complete replays as the mod test
-    "q176_multimodal_assembly" ->
-      """WITH dims AS (
-        |  SELECT doc_id, 2 + doc_id % 6 AS w, 3 + doc_id % 4 AS h
-        |  FROM documents WHERE doc_id % 10 <> 0),
-        |img AS (
-        |  SELECT doc_id, true AS img_ok,
-        |         list_sum(list_transform(generate_series(0, w*h - 1), p ->
-        |           (doc_id + 3*(p % w) + 5*(p // w)) % 256 +
-        |           (2*doc_id + 7*(p % w) + 11*(p // w)) % 256 +
-        |           (5*doc_id + 13*(p % w) + 17*(p // w)) % 256))::BIGINT AS pixel_sum
-        |  FROM dims
-        |  UNION ALL
-        |  SELECT doc_id, false AS img_ok, 0::BIGINT AS pixel_sum
-        |  FROM documents WHERE doc_id % 10 = 0),
-        |apar AS (
-        |  SELECT doc_id, 1 + doc_id % 2 AS ch, 40 + doc_id % 25 AS n
-        |  FROM documents WHERE doc_id % 10 <> 0),
-        |aud AS (
-        |  SELECT doc_id, true AS aud_ok,
-        |         list_sum(list_transform(generate_series(0, n*ch - 1), p ->
-        |           (1237*doc_id + 40503*(p // ch) + 69427*(p % ch)) % 65536 - 32768))::BIGINT AS amp_sum
-        |  FROM apar
-        |  UNION ALL
-        |  SELECT doc_id, false AS aud_ok, 0::BIGINT AS amp_sum
-        |  FROM documents WHERE doc_id % 10 = 0),
-        |txt AS (
-        |  SELECT doc_id, length(text)::BIGINT AS n_chars,
-        |         len(string_split(text, ' '))::BIGINT AS n_words
-        |  FROM documents)
-        |SELECT t.doc_id, t.n_chars, t.n_words, i.img_ok, i.pixel_sum,
-        |       a.aud_ok, a.amp_sum,
-        |       i.img_ok AND a.aud_ok AS complete,
-        |       i.img_ok AND a.aud_ok AND t.n_words >= 5 AS keep
-        |FROM txt t
-        |JOIN img i ON t.doc_id = i.doc_id
-        |JOIN aud a ON t.doc_id = a.doc_id""".stripMargin,
-
-    // generative container structure: ftyp(12, Σ"isom"=440), moov(12,
-    // Σ big-endian n = n), then mdat j of size 8+len with
-    // len = 16+(id+7j)%32 and payload byte t = (id+3j+5t)%256
-    "q177_video_demux" ->
-      """WITH par AS (
-        |  SELECT doc_id, 3 + doc_id % 4 AS n
-        |  FROM documents WHERE doc_id % 10 <> 0),
-        |meta AS (
-        |  SELECT doc_id, true AS parsed, true AS walk_complete,
-        |         0::BIGINT AS box_idx,
-        |         'ftyp' AS box_type, 12::BIGINT AS box_size,
-        |         440::BIGINT AS byte_sum
-        |  FROM par
-        |  UNION ALL
-        |  SELECT doc_id, true AS parsed, true AS walk_complete,
-        |         1::BIGINT AS box_idx,
-        |         'moov' AS box_type, 12::BIGINT AS box_size,
-        |         n::BIGINT AS byte_sum
-        |  FROM par),
-        |md AS (
-        |  SELECT doc_id, unnest(generate_series(0, n - 1)) AS j FROM par),
-        |md2 AS (
-        |  SELECT doc_id, j, 16 + (doc_id + 7*j) % 32 AS len FROM md),
-        |mrows AS (
-        |  SELECT doc_id, true AS parsed, true AS walk_complete,
-        |         (2 + j)::BIGINT AS box_idx,
-        |         'mdat' AS box_type, (8 + len)::BIGINT AS box_size,
-        |         list_sum(list_transform(generate_series(0, len - 1), t ->
-        |           (doc_id + 3*j + 5*t) % 256))::BIGINT AS byte_sum
-        |  FROM md2)
-        |SELECT * FROM meta
-        |UNION ALL SELECT * FROM mrows
-        |UNION ALL
-        |SELECT doc_id, false AS parsed, false AS walk_complete,
-        |       0::BIGINT AS box_idx,
-        |       '' AS box_type, 0::BIGINT AS box_size, 0::BIGINT AS byte_sum
-        |FROM documents WHERE doc_id % 10 = 0""".stripMargin,
-
-    // every 2nd mdat: frame_idx = j, len and payload sum replayed;
-    // same rot exclusion as q177
-    "q178_video_frames" ->
-      """WITH par AS (SELECT doc_id, 3 + doc_id % 4 AS n FROM documents
-        |             WHERE doc_id % 10 <> 0),
-        |md AS (SELECT doc_id, unnest(generate_series(0, n - 1)) AS j FROM par),
-        |md2 AS (SELECT doc_id, j, 16 + (doc_id + 7*j) % 32 AS len
-        |        FROM md WHERE j % 2 = 0)
-        |SELECT doc_id, j::BIGINT AS frame_idx, len::BIGINT AS frame_len,
-        |       list_sum(list_transform(generate_series(0, len - 1), t ->
-        |         (doc_id + 3*j + 5*t) % 256))::BIGINT AS byte_sum
-        |FROM md2""".stripMargin,
-
-    // q25's exact-knn body widened to the top-50 candidates, then the
-    // [0.05, 0.5) band and the per-anchor re-rank — both comparisons
-    // read the same 6-digit-rounded scores on both engines
-    "q179_hard_negatives" ->
-      """WITH e AS (
-        |  SELECT * FROM (
-        |    SELECT vec_id, embedding,
-        |           list_sum(list_transform(embedding, x -> x::DOUBLE * x::DOUBLE)) AS norm2
-        |    FROM embeddings)
-        |  WHERE norm2 > 0),
-        |q AS (
-        |  SELECT vec_id AS query_id, embedding AS q_emb, norm2 AS q_norm2
-        |  FROM e WHERE vec_id < 10),
-        |sc AS (
-        |  SELECT q.query_id, e.vec_id AS neighbor_id,
-        |         round(list_sum(list_transform(generate_series(1, len(e.embedding)),
-        |                 i -> q.q_emb[i]::DOUBLE * e.embedding[i]::DOUBLE))
-        |               / sqrt(q.q_norm2 * e.norm2), 6) AS score
-        |  FROM e CROSS JOIN q WHERE e.vec_id <> q.query_id),
-        |r AS (
-        |  SELECT query_id, neighbor_id, score,
-        |         row_number() OVER (PARTITION BY query_id
-        |                            ORDER BY score DESC, neighbor_id) AS rank
-        |  FROM sc),
-        |band AS (
-        |  SELECT query_id AS anchor_id, neighbor_id AS negative_id, score
-        |  FROM r WHERE rank <= 50 AND score >= 0.05 AND score < 0.5),
-        |rr AS (
-        |  SELECT anchor_id, negative_id, score,
-        |         row_number() OVER (PARTITION BY anchor_id
-        |                            ORDER BY score DESC, negative_id) AS neg_rank
-        |  FROM band)
-        |SELECT anchor_id, negative_id, score, neg_rank::BIGINT AS neg_rank
-        |FROM rr WHERE neg_rank <= 5""".stripMargin,
-
-    // q84's split formula + the q145 band-collision EXISTS against the
-    // val/test band set; the kept/contaminated booleans replay from
-    // the same rows
-    "q180_decontaminated_split" ->
-      s"""$duckBandsCte,
-         |sp AS (
-         |  SELECT doc_id,
-         |    CASE WHEN ('0x'||substr(md5(doc_id::VARCHAR),1,15))::BIGINT % 10000 < 9000 THEN 'train'
-         |         WHEN ('0x'||substr(md5(doc_id::VARCHAR),1,15))::BIGINT % 10000 < 9500 THEN 'val'
-         |         ELSE 'test' END AS split
-         |  FROM documents),
-         |hit AS (
-         |  SELECT a0.doc_id, count(*)::BIGINT AS hit_bands
-         |  FROM b a0 JOIN sp s0 ON a0.doc_id = s0.doc_id
-         |  WHERE s0.split = 'train'
-         |    AND EXISTS (SELECT 1 FROM b bb JOIN sp se ON bb.doc_id = se.doc_id
-         |                WHERE se.split <> 'train'
-         |                  AND bb.band_id = a0.band_id
-         |                  AND bb.band_hash = a0.band_hash)
-         |  GROUP BY 1)
-         |SELECT sp.doc_id, sp.split,
-         |       coalesce(h.hit_bands, 0)::BIGINT AS hit_bands,
-         |       sp.split = 'train' AND coalesce(h.hit_bands, 0) > 0 AS contaminated,
-         |       sp.split <> 'train' OR coalesce(h.hit_bands, 0) = 0 AS kept
-         |FROM sp LEFT JOIN hit h ON sp.doc_id = h.doc_id""".stripMargin,
-
-    // q65's recursive component walk + singleton fallback; keeper =
-    // row_number over (n_chars desc, doc_id asc) per component
-    "q181_cluster_keep_best" ->
-      s"""$duckBandsCte,
-         |$duckEdgesBody,
-         |walk AS (
-         |  WITH RECURSIVE w(v, l) AS (
-         |    SELECT s, s FROM edges
-         |    UNION
-         |    SELECT e.s, w.l FROM edges e JOIN w ON e.t = w.v)
-         |  SELECT * FROM w),
-         |comp AS (SELECT v AS doc_id, min(l) AS component FROM walk GROUP BY v),
-         |mem AS (
-         |  SELECT d.doc_id, coalesce(c.component, d.doc_id) AS component,
-         |         length(d.text)::BIGINT AS metric
-         |  FROM documents d LEFT JOIN comp c ON d.doc_id = c.doc_id),
-         |best AS (
-         |  SELECT component, doc_id AS keep_id FROM (
-         |    SELECT component, doc_id,
-         |           row_number() OVER (PARTITION BY component
-         |                              ORDER BY metric DESC, doc_id ASC) AS rn
-         |    FROM mem) WHERE rn = 1)
-         |SELECT m.doc_id, m.component, m.metric, m.doc_id = b.keep_id AS kept
-         |FROM mem m JOIN best b ON m.component = b.component""".stripMargin,
-
-    // distinct (user, item) with the 1000-item bot cap, self-join
-    // pairs, integer lift with one rounded division
-    "q182_item_lift" ->
-      """WITH ui0 AS (
-        |  SELECT DISTINCT user_id AS u,
-        |         json_extract_string(props, '$.k')::BIGINT AS item
-        |  FROM events
-        |  WHERE json_extract_string(props, '$.k') IS NOT NULL),
-        |uc AS (SELECT u, count(*) AS c FROM ui0 GROUP BY 1),
-        |ui AS (SELECT ui0.u, ui0.item FROM ui0 JOIN uc ON ui0.u = uc.u
-        |       WHERE uc.c <= 1000),
-        |t AS (SELECT item, count(*)::BIGINT AS n FROM ui GROUP BY 1),
-        |nu AS (SELECT count(DISTINCT u)::BIGINT AS n_users FROM ui),
-        |p AS (SELECT a.item AS item_a, b.item AS item_b,
-        |             count(*)::BIGINT AS n_both
-        |      FROM ui a JOIN ui b ON a.u = b.u AND a.item < b.item
-        |      GROUP BY 1, 2 HAVING count(*) >= 2)
-        |SELECT p.item_a, p.item_b, p.n_both, ta.n AS n_a, tb.n AS n_b,
-        |       round(p.n_both::DOUBLE * nu.n_users::DOUBLE
-        |             / (ta.n::DOUBLE * tb.n::DOUBLE), 6) AS lift
-        |FROM p
-        |JOIN t ta ON p.item_a = ta.item
-        |JOIN t tb ON p.item_b = tb.item
-        |CROSS JOIN nu""".stripMargin,
-
-    // both CMS matrices rebuilt relationally (the q153 bucket salts),
-    // inner product per depth row over shared buckets, min across
-    // rows; exact side = Σ cntA·cntB over shared terms
-    "q183_cms_join_size" ->
-      """WITH w AS (SELECT source, unnest(string_split(text, ' ')) AS term
-        |           FROM documents WHERE source IN ('src1', 'src2')),
-        |w2 AS (SELECT source, term FROM w WHERE length(term) > 0),
-        |c AS (SELECT source, term, count(*)::BIGINT AS cnt
-        |      FROM w2 GROUP BY 1, 2),
-        |h AS (SELECT source, cnt,
-        |        ('0x'||substr(md5('cms0:'||term),1,15))::BIGINT % 2048 AS b0,
-        |        ('0x'||substr(md5('cms1:'||term),1,15))::BIGINT % 2048 AS b1,
-        |        ('0x'||substr(md5('cms2:'||term),1,15))::BIGINT % 2048 AS b2
-        |      FROM c),
-        |m AS (
-        |  SELECT source, 0 AS d, b0 AS wb, sum(cnt)::BIGINT AS cc
-        |  FROM h GROUP BY 1, 3
-        |  UNION ALL
-        |  SELECT source, 1 AS d, b1 AS wb, sum(cnt)::BIGINT AS cc
-        |  FROM h GROUP BY 1, 3
-        |  UNION ALL
-        |  SELECT source, 2 AS d, b2 AS wb, sum(cnt)::BIGINT AS cc
-        |  FROM h GROUP BY 1, 3),
-        |ip AS (
-        |  SELECT a.d, sum(a.cc * b.cc)::BIGINT AS prod
-        |  FROM m a JOIN m b ON a.d = b.d AND a.wb = b.wb
-        |  WHERE a.source = 'src1' AND b.source = 'src2'
-        |  GROUP BY 1),
-        |ds AS (SELECT unnest(generate_series(0, 2)) AS d),
-        |ip2 AS (SELECT ds.d, coalesce(ip.prod, 0) AS prod
-        |        FROM ds LEFT JOIN ip ON ds.d = ip.d),
-        |est AS (SELECT min(prod)::BIGINT AS est_join FROM ip2),
-        |ex AS (
-        |  SELECT coalesce(sum(ca.cnt * cb.cnt), 0)::BIGINT AS exact_join
-        |  FROM c ca JOIN c cb ON ca.term = cb.term
-        |  WHERE ca.source = 'src1' AND cb.source = 'src2')
-        |SELECT ex.exact_join, est.est_join,
-        |       round(est.est_join::DOUBLE / ex.exact_join::DOUBLE, 6) AS ratio,
-        |       est.est_join >= ex.exact_join AS never_under
-        |FROM ex CROSS JOIN est""".stripMargin,
-
-    "q184_item_lift_capped" ->
-      """WITH ui AS (
-        |  SELECT DISTINCT user_id,
-        |         json_extract_string(props, '$.k')::BIGINT AS item
-        |  FROM events
-        |  WHERE json_extract_string(props, '$.k') IS NOT NULL)
-        |SELECT user_id, count(*)::BIGINT AS n_items
-        |FROM ui GROUP BY 1 HAVING count(*) > 50""".stripMargin,
-
-    // integer aggregates with one rounded division; dominant language
-    // = (count desc, lang desc) — the struct-max order
-    "q185_dataset_card" ->
-      """WITH d AS (SELECT source, lang, length(text) AS n_chars,
-        |                  len(string_split(text, ' ')) AS n_words
-        |           FROM documents),
-        |b AS (SELECT source, count(*)::BIGINT AS n_docs,
-        |             sum(n_words)::BIGINT AS total_words,
-        |             round(sum(n_chars)::DOUBLE / count(*), 2) AS avg_chars,
-        |             count(DISTINCT lang)::BIGINT AS n_langs
-        |      FROM d GROUP BY 1),
-        |lc AS (SELECT source, lang, count(*)::BIGINT AS c
-        |       FROM d GROUP BY 1, 2),
-        |tl AS (SELECT source, lang AS top_lang, c AS top_lang_docs FROM (
-        |         SELECT source, lang, c,
-        |                row_number() OVER (PARTITION BY source
-        |                                   ORDER BY c DESC, lang DESC) AS rn
-        |         FROM lc) WHERE rn = 1)
-        |SELECT b.source, b.n_docs, b.total_words, b.avg_chars, b.n_langs,
-        |       tl.top_lang, tl.top_lang_docs
-        |FROM b JOIN tl ON b.source = tl.source""".stripMargin,
-
-    // q177's generative frame byte sums gathered per clip in mdat
-    // order, then the q173 delta-sign aggregation over the sum sequence
-    "q186_video_fp" ->
-      """WITH par AS (SELECT doc_id, 3 + doc_id % 4 AS n FROM documents
-        |             WHERE doc_id % 10 <> 0),
-        |md AS (SELECT doc_id, unnest(generate_series(0, n - 1)) AS j FROM par),
-        |md2 AS (SELECT doc_id, j, 16 + (doc_id + 7*j) % 32 AS len FROM md),
-        |fs AS (SELECT doc_id, j,
-        |         list_sum(list_transform(generate_series(0, len - 1), t ->
-        |           (doc_id + 3*j + 5*t) % 256)) AS s
-        |       FROM md2),
-        |agg AS (SELECT doc_id, list(s ORDER BY j) AS sums,
-        |               count(*)::BIGINT AS n
-        |        FROM fs GROUP BY doc_id)
-        |SELECT doc_id, true AS parsed, true AS walk_complete,
-        |       n AS n_frames, least(n - 1, 63)::BIGINT AS n_bits,
-        |       coalesce(list_sum(list_transform(
-        |         generate_series(1, least(n - 1, 63)::INT), i ->
-        |           CASE WHEN sums[i + 1] > sums[i] THEN (1::BIGINT << (i - 1))
-        |                ELSE 0::BIGINT END)), 0)::BIGINT AS fp
-        |FROM agg
-        |UNION ALL
-        |SELECT doc_id, false AS parsed, false AS walk_complete,
-        |       0::BIGINT AS n_frames, 0::BIGINT AS n_bits, 0::BIGINT AS fp
-        |FROM documents WHERE doc_id % 10 = 0""".stripMargin,
-
-    // q186's print CTE + the q174 rank replay, joined within n_frames
-    // format classes
-    "q187_video_neardup" ->
-      """WITH par AS (SELECT doc_id, 3 + doc_id % 4 AS n FROM documents
-        |             WHERE doc_id % 10 <> 0),
-        |md AS (SELECT doc_id, unnest(generate_series(0, n - 1)) AS j FROM par),
-        |md2 AS (SELECT doc_id, j, 16 + (doc_id + 7*j) % 32 AS len FROM md),
-        |fs AS (SELECT doc_id, j,
-        |         list_sum(list_transform(generate_series(0, len - 1), t ->
-        |           (doc_id + 3*j + 5*t) % 256)) AS s
-        |       FROM md2),
-        |agg AS (SELECT doc_id, list(s ORDER BY j) AS sums,
-        |               count(*)::BIGINT AS n
-        |        FROM fs GROUP BY doc_id),
-        |f AS (SELECT doc_id, n,
-        |             coalesce(list_sum(list_transform(
-        |               generate_series(1, least(n - 1, 63)::INT), i ->
-        |                 CASE WHEN sums[i + 1] > sums[i]
-        |                      THEN (1::BIGINT << (i - 1)) ELSE 0::BIGINT END)),
-        |               0)::BIGINT AS fp
-        |      FROM agg),
-        |pr AS (SELECT doc_id AS query_id, n, fp AS q_fp FROM f
-        |       WHERE doc_id < 10),
-        |sc AS (SELECT pr.query_id, ff.doc_id AS neighbor_id,
-        |              bit_count(xor(pr.q_fp, ff.fp))::BIGINT AS hamming
-        |       FROM f ff JOIN pr ON ff.n = pr.n AND ff.doc_id <> pr.query_id),
-        |r AS (SELECT query_id, neighbor_id, hamming,
-        |             row_number() OVER (PARTITION BY query_id
-        |                                ORDER BY hamming ASC, neighbor_id ASC) AS rn
-        |      FROM sc)
-        |SELECT query_id, neighbor_id, hamming, rn::BIGINT AS rank
-        |FROM r WHERE rn <= 3""".stripMargin,
-
-    // the Bloom state replayed relationally: each member's 3 md5-60
-    // positions OR into per-word bitmaps (bit 63 needs the explicit
-    // Long.MinValue form — DuckDB checks 1<<63 as overflow); the grid
-    // left join materializes zero words so the full 1024-word vector
-    // is the result
-    "q188_bloom_warehouse" ->
-      """WITH e AS (SELECT DISTINCT event_type, user_id FROM events),
-        |p AS (SELECT event_type,
-        |        ('0x'||substr(md5('bloom'||i::VARCHAR||':'||user_id::VARCHAR),1,15))::BIGINT
-        |          % 65536 AS pos
-        |      FROM e, unnest([0, 1, 2]) AS t(i)),
-        |w AS (SELECT event_type, pos // 64 AS wi,
-        |        bit_or(CASE WHEN pos % 64 = 63 THEN (-9223372036854775807 - 1)
-        |                    ELSE 1::BIGINT << (pos % 64)::INT END) AS word
-        |      FROM p GROUP BY 1, 2),
-        |grid AS (SELECT event_type, unnest(generate_series(0, 1023)) AS wi
-        |         FROM (SELECT DISTINCT event_type FROM events)),
-        |d AS (SELECT event_type,
-        |        count(DISTINCT date_trunc('day', ts))::BIGINT AS n_slices
-        |      FROM events GROUP BY 1)
-        |SELECT g.event_type, d.n_slices, g.wi::BIGINT AS word_idx,
-        |       coalesce(w.word, 0)::BIGINT AS word
-        |FROM grid g JOIN d USING (event_type)
-        |LEFT JOIN w ON w.event_type = g.event_type AND w.wi = g.wi""".stripMargin,
-
-    // membership replayed as position semi-joins: a probe hits iff
-    // every one of its 3 positions appears among the member-set
-    // positions (exactly the bits the q188 vector has set)
-    "q191_bloom_membership" ->
-      """WITH e AS (SELECT DISTINCT event_type, user_id::VARCHAR AS u
-        |           FROM events),
-        |setbits AS (SELECT DISTINCT event_type,
-        |              ('0x'||substr(md5('bloom'||i::VARCHAR||':'||u),1,15))::BIGINT
-        |                % 65536 AS pos
-        |            FROM e, unnest([0, 1, 2]) AS t(i)),
-        |mp AS (SELECT event_type, u,
-        |         ('0x'||substr(md5('bloom'||i::VARCHAR||':'||u),1,15))::BIGINT
-        |           % 65536 AS pos
-        |       FROM e, unnest([0, 1, 2]) AS t(i)),
-        |mhit AS (SELECT mp.event_type, mp.u,
-        |                bool_and(sb.pos IS NOT NULL) AS hit
-        |         FROM mp LEFT JOIN setbits sb
-        |           ON sb.event_type = mp.event_type AND sb.pos = mp.pos
-        |         GROUP BY 1, 2),
-        |mem AS (SELECT event_type, count(*)::BIGINT AS n_members,
-        |               count(*) = sum(CASE WHEN hit THEN 1 ELSE 0 END)
-        |                 AS fn_free
-        |        FROM mhit GROUP BY 1),
-        |pr AS (SELECT event_type, 'probe_'||i::VARCHAR AS u
-        |       FROM (SELECT DISTINCT event_type FROM events),
-        |            unnest(generate_series(0, 499)) AS t(i)),
-        |pp AS (SELECT event_type, u,
-        |         ('0x'||substr(md5('bloom'||i::VARCHAR||':'||u),1,15))::BIGINT
-        |           % 65536 AS pos
-        |       FROM pr, unnest([0, 1, 2]) AS t(i)),
-        |phit AS (SELECT pp.event_type, pp.u,
-        |                bool_and(sb.pos IS NOT NULL) AS hit
-        |         FROM pp LEFT JOIN setbits sb
-        |           ON sb.event_type = pp.event_type AND sb.pos = pp.pos
-        |         GROUP BY 1, 2),
-        |fp AS (SELECT event_type,
-        |              sum(CASE WHEN hit THEN 1 ELSE 0 END)::BIGINT AS fp_count
-        |       FROM phit GROUP BY 1)
-        |SELECT mem.event_type, mem.n_members, mem.fn_free, fp.fp_count,
-        |       round(fp.fp_count::DOUBLE / 500.0, 6) AS fpr,
-        |       fp.fp_count <= 25 AS fpr_ok
-        |FROM mem JOIN fp USING (event_type)""".stripMargin,
-
-    // every modality's rot convention is doc_id % 10 = 0 (image and
-    // audio decode failures, video walk failures all coincide by
-    // construction), so each real decode-flag rate replays as the mod
-    // test — the q176 oracle rule lifted to the per-source rollup
-    "q189_card_completeness" ->
-      """SELECT source, count(*)::BIGINT AS n_docs,
-        |  round(sum(CASE WHEN doc_id % 10 <> 0 THEN 1 ELSE 0 END)::DOUBLE
-        |        / count(*), 6) AS img_ok_rate,
-        |  round(sum(CASE WHEN doc_id % 10 <> 0 THEN 1 ELSE 0 END)::DOUBLE
-        |        / count(*), 6) AS aud_ok_rate,
-        |  round(sum(CASE WHEN doc_id % 10 <> 0 THEN 1 ELSE 0 END)::DOUBLE
-        |        / count(*), 6) AS video_demux_rate,
-        |  round(sum(CASE WHEN doc_id % 10 <> 0 THEN 1 ELSE 0 END)::DOUBLE
-        |        / count(*), 6) AS complete_rate
-        |FROM documents GROUP BY 1""".stripMargin,
-
-    // last/first touch replayed with two deterministic row_numbers
-    // (ts then id — the argmax structs' exact tie-break); the left
-    // joins re-admit zero-touch conversions as "(none)"
-    "q190_attribution" ->
-      """WITH c AS (SELECT user_id, event_id AS conv_id, ts AS conv_ts
-        |           FROM events WHERE event_type = 'purchase'),
-        |t AS (SELECT user_id, event_id AS touch_id, ts AS touch_ts,
-        |        'ch'||(json_extract_string(props, '$.k')::BIGINT % 4)::VARCHAR
-        |          AS channel
-        |      FROM events WHERE event_type IN ('click', 'view')),
-        |j AS (SELECT c.conv_id, t.touch_id, t.touch_ts, t.channel
-        |      FROM c JOIN t ON c.user_id = t.user_id
-        |       AND t.touch_ts <= c.conv_ts
-        |       AND t.touch_ts >= c.conv_ts - INTERVAL 604800 SECOND),
-        |r AS (SELECT conv_id, touch_id, channel,
-        |        row_number() OVER (PARTITION BY conv_id
-        |                           ORDER BY touch_ts DESC, touch_id DESC) AS rl,
-        |        row_number() OVER (PARTITION BY conv_id
-        |                           ORDER BY touch_ts ASC, touch_id ASC) AS rf,
-        |        count(*) OVER (PARTITION BY conv_id) AS nt
-        |      FROM j),
-        |lt AS (SELECT conv_id, channel AS last_channel,
-        |              touch_id AS last_touch_id, nt FROM r WHERE rl = 1),
-        |ft AS (SELECT conv_id, channel AS first_channel,
-        |              touch_id AS first_touch_id FROM r WHERE rf = 1)
-        |SELECT c.user_id, c.conv_id,
-        |       CAST(floor(epoch(c.conv_ts)) AS BIGINT) AS conv_ts,
-        |       coalesce(lt.nt, 0)::BIGINT AS n_touches,
-        |       coalesce(lt.last_channel, '(none)') AS last_channel,
-        |       coalesce(lt.last_touch_id, -1)::BIGINT AS last_touch_id,
-        |       coalesce(ft.first_channel, '(none)') AS first_channel,
-        |       coalesce(ft.first_touch_id, -1)::BIGINT AS first_touch_id
-        |FROM c LEFT JOIN lt USING (conv_id) LEFT JOIN ft USING (conv_id)""".stripMargin,
-
-    // the q177 generative structure after the stride-2 drop: ftyp
-    // verbatim, moov byte sum = KEPT count (the rewritten 4-byte
-    // payload), every even-j mdat with its original len/sum at the
-    // renumbered box index 2 + j/2; rot rows tagged as in q177
-    "q192_video_subsample" ->
-      """WITH par AS (SELECT doc_id, 3 + doc_id % 4 AS n FROM documents
-        |             WHERE doc_id % 10 <> 0),
-        |k AS (SELECT doc_id, n, (n + 1) // 2 AS kept FROM par),
-        |meta AS (
-        |  SELECT doc_id, true AS parsed, true AS walk_complete,
-        |         0::BIGINT AS box_idx, 'ftyp' AS box_type,
-        |         12::BIGINT AS box_size, 440::BIGINT AS byte_sum
-        |  FROM k
-        |  UNION ALL
-        |  SELECT doc_id, true AS parsed, true AS walk_complete,
-        |         1::BIGINT AS box_idx, 'moov' AS box_type,
-        |         12::BIGINT AS box_size, kept::BIGINT AS byte_sum
-        |  FROM k),
-        |md AS (SELECT doc_id, unnest(generate_series(0, n - 1)) AS j FROM par),
-        |md2 AS (SELECT doc_id, j, 16 + (doc_id + 7*j) % 32 AS len
-        |        FROM md WHERE j % 2 = 0),
-        |mrows AS (
-        |  SELECT doc_id, true AS parsed, true AS walk_complete,
-        |         (2 + j // 2)::BIGINT AS box_idx, 'mdat' AS box_type,
-        |         (8 + len)::BIGINT AS box_size,
-        |         list_sum(list_transform(generate_series(0, len - 1), t ->
-        |           (doc_id + 3*j + 5*t) % 256))::BIGINT AS byte_sum
-        |  FROM md2)
-        |SELECT * FROM meta
-        |UNION ALL SELECT * FROM mrows
-        |UNION ALL
-        |SELECT doc_id, false AS parsed, false AS walk_complete,
-        |       0::BIGINT AS box_idx, '' AS box_type,
-        |       0::BIGINT AS box_size, 0::BIGINT AS byte_sum
-        |FROM documents WHERE doc_id % 10 = 0""".stripMargin,
-
-    // q190's window join + integer micro-credit rollup: 10^6 // n per
-    // touch (both engines floor), channel sums are integer — replay
-    // is exact by construction
-    "q193_linear_attribution" ->
-      """WITH c AS (SELECT user_id, event_id AS conv_id, ts AS conv_ts
-        |           FROM events WHERE event_type = 'purchase'),
-        |t AS (SELECT user_id, event_id AS touch_id, ts AS touch_ts,
-        |        'ch'||(json_extract_string(props, '$.k')::BIGINT % 4)::VARCHAR
-        |          AS channel
-        |      FROM events WHERE event_type IN ('click', 'view')),
-        |j AS (SELECT c.conv_id, t.touch_id, t.channel
-        |      FROM c JOIN t ON c.user_id = t.user_id
-        |       AND t.touch_ts <= c.conv_ts
-        |       AND t.touch_ts >= c.conv_ts - INTERVAL 604800 SECOND),
-        |n AS (SELECT conv_id, count(*)::BIGINT AS nt FROM j GROUP BY 1),
-        |cr AS (SELECT j.channel, j.conv_id, 1000000 // n.nt AS micro
-        |       FROM j JOIN n USING (conv_id))
-        |SELECT channel, count(DISTINCT conv_id)::BIGINT AS n_convs,
-        |       count(*)::BIGINT AS n_touches,
-        |       sum(micro)::BIGINT AS credit_micro
-        |FROM cr GROUP BY 1""".stripMargin,
-
-    // the histogram read replayed as an order statistic: each latency
-    // maps to its BIN LOWER BOUND (overflow → lo + 30·86400), and the
-    // p-th bound is the rank-⌈p·n⌉ smallest — exactly
-    // histPercentileBound's integer rank arithmetic
-    "q194_funnel_latency_hist" ->
-      """WITH su AS (SELECT user_id, min(ts) AS signup_ts FROM events
-        |            WHERE event_type = 'signup' GROUP BY 1),
-        |fp AS (SELECT su.user_id, su.signup_ts, min(e.ts) AS first_purchase_ts
-        |       FROM su JOIN events e ON e.user_id = su.user_id
-        |        AND e.event_type = 'purchase' AND e.ts >= su.signup_ts
-        |       GROUP BY 1, 2),
-        |lat AS (SELECT user_id, date_trunc('day', signup_ts) AS day,
-        |          CAST(floor(epoch(first_purchase_ts)) AS BIGINT)
-        |            - CAST(floor(epoch(signup_ts)) AS BIGINT) AS l
-        |        FROM fp),
-        |b AS (SELECT CASE WHEN l // 86400 >= 30 THEN 2592000::BIGINT
-        |                  ELSE (l // 86400) * 86400 END AS bound
-        |      FROM lat),
-        |r AS (SELECT bound, row_number() OVER (ORDER BY bound) AS rn,
-        |             count(*) OVER () AS n
-        |      FROM b)
-        |SELECT (SELECT count(DISTINCT day) FROM lat)::BIGINT AS n_slices,
-        |       (SELECT count(*) FROM lat)::BIGINT AS n_users,
-        |       max(CASE WHEN rn = ceil(0.5 * n) THEN bound END)::BIGINT
-        |         AS p50_bound,
-        |       max(CASE WHEN rn = ceil(0.9 * n) THEN bound END)::BIGINT
-        |         AS p90_bound,
-        |       max(CASE WHEN rn = ceil(0.99 * n) THEN bound END)::BIGINT
-        |         AS p99_bound
-        |FROM r""".stripMargin,
-
-    // the q120 fingerprint CTEs + the q191 position semi-join replay:
-    // bloom_hit iff every probe position is among the store's set
-    // bits; fn_free = exact_dup ⇒ bloom_hit
-    "q195_bloom_prefilter" ->
-      """WITH slice AS (
-        |  SELECT doc_id,
-        |         md5(array_to_string(list_sort(list_distinct(string_split(text, ' '))), ' ')) AS fp
-        |  FROM documents WHERE source = 'src2'),
-        |store AS (
-        |  SELECT DISTINCT md5(array_to_string(list_sort(list_distinct(string_split(text, ' '))), ' ')) AS fp
-        |  FROM documents WHERE source <> 'src2'),
-        |setbits AS (SELECT DISTINCT
-        |              ('0x'||substr(md5('bloom'||i::VARCHAR||':'||fp),1,15))::BIGINT
-        |                % 65536 AS pos
-        |            FROM store, unnest([0, 1, 2]) AS t(i)),
-        |sp AS (SELECT doc_id, fp,
-        |         ('0x'||substr(md5('bloom'||i::VARCHAR||':'||fp),1,15))::BIGINT
-        |           % 65536 AS pos
-        |       FROM slice, unnest([0, 1, 2]) AS t(i)),
-        |hit AS (SELECT sp.doc_id, sp.fp,
-        |               bool_and(sb.pos IS NOT NULL) AS bloom_hit
-        |        FROM sp LEFT JOIN setbits sb ON sb.pos = sp.pos
-        |        GROUP BY 1, 2),
-        |ed AS (SELECT fp, true AS e FROM store)
-        |SELECT h.doc_id, h.bloom_hit,
-        |       coalesce(ed.e, false) AS exact_dup,
-        |       (NOT coalesce(ed.e, false) OR h.bloom_hit) AS fn_free
-        |FROM hit h LEFT JOIN ed ON ed.fp = h.fp""".stripMargin,
-
-    // q193's join + the U-shaped credit: 40/20/40 via integer
-    // micro-shares, first/last by the q190 row_number tie-break
-    "q196_position_attribution" ->
-      """WITH c AS (SELECT user_id, event_id AS conv_id, ts AS conv_ts
-        |           FROM events WHERE event_type = 'purchase'),
-        |t AS (SELECT user_id, event_id AS touch_id, ts AS touch_ts,
-        |        'ch'||(json_extract_string(props, '$.k')::BIGINT % 4)::VARCHAR
-        |          AS channel
-        |      FROM events WHERE event_type IN ('click', 'view')),
-        |j AS (SELECT c.conv_id, t.touch_id, t.touch_ts, t.channel
-        |      FROM c JOIN t ON c.user_id = t.user_id
-        |       AND t.touch_ts <= c.conv_ts
-        |       AND t.touch_ts >= c.conv_ts - INTERVAL 604800 SECOND),
-        |n AS (SELECT conv_id, count(*)::BIGINT AS nt FROM j GROUP BY 1),
-        |r AS (SELECT conv_id, touch_id, channel,
-        |        row_number() OVER (PARTITION BY conv_id
-        |                           ORDER BY touch_ts ASC, touch_id ASC) AS rf,
-        |        row_number() OVER (PARTITION BY conv_id
-        |                           ORDER BY touch_ts DESC, touch_id DESC) AS rl
-        |      FROM j),
-        |cr AS (SELECT r.channel, r.conv_id,
-        |         CASE WHEN n.nt = 1 THEN 1000000
-        |              WHEN n.nt = 2 THEN 500000
-        |              WHEN r.rf = 1 OR r.rl = 1 THEN 400000
-        |              ELSE 200000 // (n.nt - 2) END AS micro
-        |       FROM r JOIN n USING (conv_id))
-        |SELECT channel, count(DISTINCT conv_id)::BIGINT AS n_convs,
-        |       count(*)::BIGINT AS n_touches,
-        |       sum(micro)::BIGINT AS credit_micro
-        |FROM cr GROUP BY 1""".stripMargin,
-
-    // integer halving per full day of age: 10^6 >> ((conv_ts −
-    // touch_ts) // 86400); absolute weight sums, no normalization
-    "q197_decay_attribution" ->
-      """WITH c AS (SELECT user_id, event_id AS conv_id, ts AS conv_ts
-        |           FROM events WHERE event_type = 'purchase'),
-        |t AS (SELECT user_id, event_id AS touch_id, ts AS touch_ts,
-        |        'ch'||(json_extract_string(props, '$.k')::BIGINT % 4)::VARCHAR
-        |          AS channel
-        |      FROM events WHERE event_type IN ('click', 'view')),
-        |j AS (SELECT c.conv_id, t.channel,
-        |        (1000000::BIGINT >> ((CAST(floor(epoch(c.conv_ts)) AS BIGINT)
-        |          - CAST(floor(epoch(t.touch_ts)) AS BIGINT)) // 86400)::INT)
-        |          AS w
-        |      FROM c JOIN t ON c.user_id = t.user_id
-        |       AND t.touch_ts <= c.conv_ts
-        |       AND t.touch_ts >= c.conv_ts - INTERVAL 604800 SECOND)
-        |SELECT channel, count(DISTINCT conv_id)::BIGINT AS n_convs,
-        |       count(*)::BIGINT AS n_touches, sum(w)::BIGINT AS weight_micro
-        |FROM j GROUP BY 1""".stripMargin,
-
-    // the q152 bottom-k CTE per source, paired: union bottom-64 from
-    // the concatenated lists, ρ = members present in both, estimates
-    // from the same one-division arithmetic as kmvEstimate
-    "q199_kmv_set_stats" ->
-      """WITH w AS (SELECT DISTINCT source, term FROM (
-        |             SELECT source, unnest(string_split(text, ' ')) AS term
-        |             FROM documents)
-        |           WHERE length(term) > 0),
-        |h AS (SELECT source,
-        |        ('0x'||substr(md5('kmv:'||term),1,15))::BIGINT AS hv
-        |      FROM w),
-        |hd AS (SELECT DISTINCT source, hv FROM h),
-        |r AS (SELECT source, hv,
-        |        row_number() OVER (PARTITION BY source ORDER BY hv) AS rn
-        |      FROM hd),
-        |sk AS (SELECT source, list(hv ORDER BY hv) AS hs
-        |       FROM r WHERE rn <= 64 GROUP BY source),
-        |p AS (SELECT a.source AS src_a, b.source AS src_b,
-        |             a.hs AS ha, b.hs AS hb
-        |      FROM sk a JOIN sk b ON a.source < b.source),
-        |u AS (SELECT src_a, src_b, ha, hb,
-        |        list_slice(list_sort(list_distinct(list_concat(ha, hb))),
-        |                   1, 64) AS uk
-        |      FROM p),
-        |st AS (SELECT src_a, src_b,
-        |         len(list_filter(uk, x -> list_contains(ha, x)
-        |                                  AND list_contains(hb, x)))::BIGINT
-        |           AS n_common,
-        |         len(uk) AS denom,
-        |         CASE WHEN len(uk) < 64 THEN len(uk)::DOUBLE
-        |              ELSE 63.0 * 1152921504606846976 / uk[64] END AS est_u
-        |       FROM u),
-        |ex AS (SELECT a.source AS src_a, b.source AS src_b,
-        |              count(*)::BIGINT AS exact_intersection
-        |       FROM w a JOIN w b ON a.term = b.term AND a.source < b.source
-        |       GROUP BY 1, 2)
-        |SELECT st.src_a, st.src_b, st.n_common,
-        |       round(est_u, 4) AS est_union,
-        |       round(n_common::DOUBLE / denom, 6) AS est_jaccard,
-        |       round(n_common::DOUBLE / denom * est_u, 4) AS est_intersection,
-        |       coalesce(ex.exact_intersection, 0)::BIGINT AS exact_intersection
-        |FROM st LEFT JOIN ex USING (src_a, src_b)""".stripMargin,
-
-    // the greedy loop unrolled (the duckBpeSql precedent): the q25
-    // candidate body widened to top-20, pairwise candidate sims, then
-    // three pick rounds — each an anti-join + max-sim + argmax with
-    // the same raw-double ORDER BY the Spark struct argmin reads
-    "q198_mmr_topk" ->
-      """WITH e AS (
-        |  SELECT * FROM (
-        |    SELECT vec_id, embedding,
-        |           list_sum(list_transform(embedding, x -> x::DOUBLE * x::DOUBLE)) AS norm2
-        |    FROM embeddings)
-        |  WHERE norm2 > 0),
-        |q AS (SELECT vec_id AS query_id, embedding AS q_emb, norm2 AS q_norm2
-        |      FROM e WHERE vec_id < 10),
-        |sc AS (SELECT q.query_id, e.vec_id AS neighbor_id,
-        |         round(list_sum(list_transform(generate_series(1, len(e.embedding)),
-        |                 i -> q.q_emb[i]::DOUBLE * e.embedding[i]::DOUBLE))
-        |               / sqrt(q.q_norm2 * e.norm2), 6) AS score
-        |       FROM e CROSS JOIN q WHERE e.vec_id <> q.query_id),
-        |cand AS (SELECT query_id, neighbor_id, score FROM (
-        |           SELECT *, row_number() OVER (PARTITION BY query_id
-        |                       ORDER BY score DESC, neighbor_id) AS rk
-        |           FROM sc)
-        |         WHERE rk <= 20),
-        |cv AS (SELECT c.query_id, c.neighbor_id, e.embedding AS vec,
-        |              e.norm2 AS n2
-        |       FROM cand c JOIN e ON e.vec_id = c.neighbor_id),
-        |ps AS (SELECT a.query_id, a.neighbor_id AS a_id, b.neighbor_id AS b_id,
-        |         round(list_sum(list_transform(generate_series(1, len(a.vec)),
-        |                 i -> a.vec[i]::DOUBLE * b.vec[i]::DOUBLE))
-        |               / sqrt(a.n2 * b.n2), 6) AS sim
-        |       FROM cv a JOIN cv b ON a.query_id = b.query_id
-        |                          AND a.neighbor_id <> b.neighbor_id),
-        |p1 AS (SELECT query_id, 1::BIGINT AS pick_rank, neighbor_id,
-        |              score AS rel_score, 0.0 AS max_sim,
-        |              round(0.7 * score - 0.3 * 0.0, 7) AS mmr_score
-        |       FROM (SELECT *, row_number() OVER (PARTITION BY query_id
-        |                         ORDER BY 0.7 * score DESC, neighbor_id) AS rk
-        |             FROM cand)
-        |       WHERE rk = 1),
-        |r2 AS (SELECT c.query_id, c.neighbor_id, c.score,
-        |              coalesce(max(s.sim), 0.0) AS max_sim
-        |       FROM cand c
-        |       LEFT JOIN (SELECT ps.query_id, ps.a_id, ps.sim FROM ps
-        |                  JOIN p1 ON ps.query_id = p1.query_id
-        |                         AND ps.b_id = p1.neighbor_id) s
-        |         ON s.query_id = c.query_id AND s.a_id = c.neighbor_id
-        |       WHERE NOT EXISTS (SELECT 1 FROM p1
-        |                         WHERE p1.query_id = c.query_id
-        |                           AND p1.neighbor_id = c.neighbor_id)
-        |       GROUP BY 1, 2, 3),
-        |p2 AS (SELECT query_id, 2::BIGINT AS pick_rank, neighbor_id,
-        |              score AS rel_score, max_sim,
-        |              round(0.7 * score - 0.3 * max_sim, 7) AS mmr_score
-        |       FROM (SELECT *, row_number() OVER (PARTITION BY query_id
-        |                         ORDER BY 0.7 * score - 0.3 * max_sim DESC,
-        |                                  neighbor_id) AS rk
-        |             FROM r2)
-        |       WHERE rk = 1),
-        |pp AS (SELECT query_id, neighbor_id FROM p1
-        |       UNION ALL SELECT query_id, neighbor_id FROM p2),
-        |r3 AS (SELECT c.query_id, c.neighbor_id, c.score,
-        |              coalesce(max(s.sim), 0.0) AS max_sim
-        |       FROM cand c
-        |       LEFT JOIN (SELECT ps.query_id, ps.a_id, ps.sim FROM ps
-        |                  JOIN pp ON ps.query_id = pp.query_id
-        |                         AND ps.b_id = pp.neighbor_id) s
-        |         ON s.query_id = c.query_id AND s.a_id = c.neighbor_id
-        |       WHERE NOT EXISTS (SELECT 1 FROM pp
-        |                         WHERE pp.query_id = c.query_id
-        |                           AND pp.neighbor_id = c.neighbor_id)
-        |       GROUP BY 1, 2, 3),
-        |p3 AS (SELECT query_id, 3::BIGINT AS pick_rank, neighbor_id,
-        |              score AS rel_score, max_sim,
-        |              round(0.7 * score - 0.3 * max_sim, 7) AS mmr_score
-        |       FROM (SELECT *, row_number() OVER (PARTITION BY query_id
-        |                         ORDER BY 0.7 * score - 0.3 * max_sim DESC,
-        |                                  neighbor_id) AS rk
-        |             FROM r3)
-        |       WHERE rk = 1)
-        |SELECT * FROM p1 UNION ALL SELECT * FROM p2
-        |UNION ALL SELECT * FROM p3""".stripMargin,
-
-    // SQL-standard ntile ≡ exactNtile (the q40 identity); spend sums
-    // as DECIMAL so the fold is order-independent (the q14 rule)
-    "q200_rfm_segments" ->
-      """WITH per AS (
-        |  SELECT o_custkey AS cust, max(o_orderdate) AS last_ts,
-        |         count(*) AS freq,
-        |         sum(CAST(o_totalprice AS DECIMAL(28,10))) AS money
-        |  FROM orders GROUP BY 1),
-        |scored AS (
-        |  SELECT cust, money,
-        |         ntile(5) OVER (ORDER BY last_ts ASC, cust ASC)::BIGINT AS r_score,
-        |         ntile(5) OVER (ORDER BY freq ASC, cust ASC)::BIGINT AS f_score,
-        |         ntile(5) OVER (ORDER BY money ASC, cust ASC)::BIGINT AS m_score
-        |  FROM per)
-        |SELECT r_score, f_score, m_score,
-        |       CASE WHEN r_score >= 4 AND f_score >= 4 THEN 'champions'
-        |            WHEN r_score >= 4 THEN 'recent'
-        |            WHEN f_score >= 4 THEN 'at_risk'
-        |            ELSE 'hibernating' END AS segment,
-        |       count(*) AS n_customers,
-        |       round(sum(money), 2)::DOUBLE AS revenue
-        |FROM scored GROUP BY 1, 2, 3, 4""".stripMargin,
-
-    // the z expression tree mirrors the Spark side token-for-token
-    // (left-assoc products, same literal operands) — with only
-    // correctly-rounded IEEE ops the doubles match bit-for-bit; the
-    // significance flag reads FULL-precision z on both engines
-    "q201_ab_test" ->
-      """WITH u AS (
-        |  SELECT user_id,
-        |         CASE WHEN sum(CASE WHEN lower(event_type) = 'purchase'
-        |                            THEN 1 ELSE 0 END) * 5 > count(*)
-        |              THEN 1 ELSE 0 END AS conv
-        |  FROM events GROUP BY 1),
-        |v AS (
-        |  SELECT ('0x'||substr(md5('ab:'||user_id::VARCHAR),1,15))::BIGINT % 2
-        |           AS variant, conv
-        |  FROM u),
-        |arms AS (
-        |  SELECT variant, count(*) AS n, sum(conv)::BIGINT AS x
-        |  FROM v GROUP BY 1),
-        |p AS (
-        |  SELECT a0.n AS n_control, a0.x AS conv_control,
-        |         a1.n AS n_treat, a1.x AS conv_treat
-        |  FROM (SELECT n, x FROM arms WHERE variant = 0) a0,
-        |       (SELECT n, x FROM arms WHERE variant = 1) a1),
-        |z AS (
-        |  SELECT *,
-        |         CASE WHEN conv_control + conv_treat = 0
-        |                OR conv_control + conv_treat = n_control + n_treat
-        |              THEN 0.0
-        |              ELSE (conv_treat::DOUBLE / n_treat::DOUBLE
-        |                      - conv_control::DOUBLE / n_control::DOUBLE)
-        |                   / sqrt(((conv_control + conv_treat)::DOUBLE
-        |                             / (n_control + n_treat)::DOUBLE)
-        |                          * (1.0 - (conv_control + conv_treat)::DOUBLE
-        |                                   / (n_control + n_treat)::DOUBLE)
-        |                          * (1.0 / n_control::DOUBLE
-        |                             + 1.0 / n_treat::DOUBLE)) END AS zf
-        |  FROM p)
-        |SELECT n_control, conv_control, n_treat, conv_treat,
-        |       round(conv_control::DOUBLE / n_control::DOUBLE, 6) AS rate_control,
-        |       round(conv_treat::DOUBLE / n_treat::DOUBLE, 6) AS rate_treat,
-        |       round(zf, 6) AS z_score,
-        |       abs(zf) > 1.96 AS significant
-        |FROM z""".stripMargin,
-
-    "q202_inverted_index" ->
-      """WITH post AS (
-        |  SELECT token, doc_id, count(*) AS tf FROM (
-        |    SELECT doc_id, unnest(string_split(text, ' ')) AS token
-        |    FROM documents)
-        |  GROUP BY 1, 2),
-        |stats AS (
-        |  SELECT token, count(*) AS df, sum(tf)::BIGINT AS cf
-        |  FROM post GROUP BY 1),
-        |ranked AS (
-        |  SELECT token, doc_id, tf,
-        |         row_number() OVER (PARTITION BY token
-        |                            ORDER BY tf DESC, doc_id ASC) AS rk
-        |  FROM post)
-        |SELECT r.token, r.doc_id, r.tf, r.rk, s.df, s.cf
-        |FROM ranked r JOIN stats s USING (token)
-        |WHERE r.rk <= 5""".stripMargin,
-
-    // the merge ≡ rescan identity: the store round-trip (split-text
-    // slices → tf-sum merge → shared capped read) must land on
-    // EXACTLY the full-corpus index — so the oracle IS q202's query
-    "q204_index_store" ->
-      """WITH post AS (
-        |  SELECT token, doc_id, count(*) AS tf FROM (
-        |    SELECT doc_id, unnest(string_split(text, ' ')) AS token
-        |    FROM documents)
-        |  GROUP BY 1, 2),
-        |stats AS (
-        |  SELECT token, count(*) AS df, sum(tf)::BIGINT AS cf
-        |  FROM post GROUP BY 1),
-        |ranked AS (
-        |  SELECT token, doc_id, tf,
-        |         row_number() OVER (PARTITION BY token
-        |                            ORDER BY tf DESC, doc_id ASC) AS rk
-        |  FROM post)
-        |SELECT r.token, r.doc_id, r.tf, r.rk, s.df, s.cf
-        |FROM ranked r JOIN stats s USING (token)
-        |WHERE r.rk <= 5""".stripMargin,
-
-    // compaction commutes with reads: the oracle IS q202's query again
-    "q205_index_compaction" ->
-      """WITH post AS (
-        |  SELECT token, doc_id, count(*) AS tf FROM (
-        |    SELECT doc_id, unnest(string_split(text, ' ')) AS token
-        |    FROM documents)
-        |  GROUP BY 1, 2),
-        |stats AS (
-        |  SELECT token, count(*) AS df, sum(tf)::BIGINT AS cf
-        |  FROM post GROUP BY 1),
-        |ranked AS (
-        |  SELECT token, doc_id, tf,
-        |         row_number() OVER (PARTITION BY token
-        |                            ORDER BY tf DESC, doc_id ASC) AS rk
-        |  FROM post)
-        |SELECT r.token, r.doc_id, r.tf, r.rk, s.df, s.cf
-        |FROM ranked r JOIN stats s USING (token)
-        |WHERE r.rk <= 5""".stripMargin,
-
-    // the BM25 read replayed: same capped postings, same top-2-df term
-    // pick, the same integer-ratio arithmetic and ONE double division
-    "q206_bm25" ->
-      """WITH post AS (
-        |  SELECT token, doc_id, count(*) AS tf FROM (
-        |    SELECT doc_id, unnest(string_split(text, ' ')) AS token
-        |    FROM documents)
-        |  GROUP BY 1, 2),
-        |idx AS (
-        |  SELECT token, doc_id, tf FROM (
-        |    SELECT token, doc_id, tf,
-        |           row_number() OVER (PARTITION BY token
-        |                              ORDER BY tf DESC, doc_id ASC) AS prk
-        |    FROM post)
-        |  WHERE prk <= 1000),
-        |vocab AS (
-        |  SELECT token, count(*) AS df FROM post GROUP BY 1),
-        |nd AS (SELECT count(DISTINCT doc_id) AS n_docs FROM documents),
-        |ab AS (
-        |  SELECT min(token) AS ta, max(token) AS tb FROM (
-        |    SELECT token FROM vocab
-        |    ORDER BY df DESC, token ASC LIMIT 2)),
-        |a AS (
-        |  SELECT i.doc_id, i.tf AS tf_a,
-        |         11 * i.tf * (2 * n_docs - 2 * v.df + 1) AS num_a,
-        |         (5 * i.tf + 6) * (2 * v.df + 1) AS den_a
-        |  FROM idx i JOIN vocab v USING (token), ab, nd
-        |  WHERE i.token = ta),
-        |b AS (
-        |  SELECT i.doc_id, i.tf AS tf_b,
-        |         11 * i.tf * (2 * n_docs - 2 * v.df + 1) AS num_b,
-        |         (5 * i.tf + 6) * (2 * v.df + 1) AS den_b
-        |  FROM idx i JOIN vocab v USING (token), ab, nd
-        |  WHERE i.token = tb),
-        |j AS (
-        |  SELECT coalesce(a.doc_id, b.doc_id) AS doc_id,
-        |         coalesce(tf_a, 0) AS tf_a, coalesce(tf_b, 0) AS tf_b,
-        |         (coalesce(num_a, 0) * coalesce(den_b, 1)
-        |          + coalesce(num_b, 0) * coalesce(den_a, 1))::DOUBLE
-        |         / (coalesce(den_a, 1) * coalesce(den_b, 1))::DOUBLE AS s
-        |  FROM a FULL JOIN b ON a.doc_id = b.doc_id)
-        |SELECT doc_id, tf_a, tf_b, round(s, 6) AS score, rk FROM (
-        |  SELECT doc_id, tf_a, tf_b, s,
-        |         row_number() OVER (ORDER BY s DESC, doc_id ASC) AS rk
-        |  FROM j)
-        |WHERE rk <= 20""".stripMargin,
-
-    // exhaustive scoring — the q206 oracle verbatim: the pruned
-    // TA read must reproduce it exactly (the certificate guarantees it)
-    "q223_ta_topk" ->
-      """WITH post AS (
-        |  SELECT token, doc_id, count(*) AS tf FROM (
-        |    SELECT doc_id, unnest(string_split(text, ' ')) AS token
-        |    FROM documents)
-        |  GROUP BY 1, 2),
-        |idx AS (
-        |  SELECT token, doc_id, tf FROM (
-        |    SELECT token, doc_id, tf,
-        |           row_number() OVER (PARTITION BY token
-        |                              ORDER BY tf DESC, doc_id ASC) AS prk
-        |    FROM post)
-        |  WHERE prk <= 1000),
-        |vocab AS (
-        |  SELECT token, count(*) AS df FROM post GROUP BY 1),
-        |nd AS (SELECT count(DISTINCT doc_id) AS n_docs FROM documents),
-        |ab AS (
-        |  SELECT min(token) AS ta, max(token) AS tb FROM (
-        |    SELECT token FROM vocab
-        |    ORDER BY df DESC, token ASC LIMIT 2)),
-        |a AS (
-        |  SELECT i.doc_id, i.tf AS tf_a,
-        |         11 * i.tf * (2 * n_docs - 2 * v.df + 1) AS num_a,
-        |         (5 * i.tf + 6) * (2 * v.df + 1) AS den_a
-        |  FROM idx i JOIN vocab v USING (token), ab, nd
-        |  WHERE i.token = ta),
-        |b AS (
-        |  SELECT i.doc_id, i.tf AS tf_b,
-        |         11 * i.tf * (2 * n_docs - 2 * v.df + 1) AS num_b,
-        |         (5 * i.tf + 6) * (2 * v.df + 1) AS den_b
-        |  FROM idx i JOIN vocab v USING (token), ab, nd
-        |  WHERE i.token = tb),
-        |j AS (
-        |  SELECT coalesce(a.doc_id, b.doc_id) AS doc_id,
-        |         coalesce(tf_a, 0) AS tf_a, coalesce(tf_b, 0) AS tf_b,
-        |         (coalesce(num_a, 0) * coalesce(den_b, 1)
-        |          + coalesce(num_b, 0) * coalesce(den_a, 1))::DOUBLE
-        |         / (coalesce(den_a, 1) * coalesce(den_b, 1))::DOUBLE AS s
-        |  FROM a FULL JOIN b ON a.doc_id = b.doc_id)
-        |SELECT doc_id, tf_a, tf_b, round(s, 6) AS score, rk FROM (
-        |  SELECT doc_id, tf_a, tf_b, s,
-        |         row_number() OVER (ORDER BY s DESC, doc_id ASC) AS rk
-        |  FROM j)
-        |WHERE rk <= 20""".stripMargin,
-
-    // full BM25 replayed: same integer numerator/denominator per
-    // term, one division + one fixed-order addition of doubles
-    "q207_bm25_full" ->
-      """WITH post AS (
-        |  SELECT token, doc_id, count(*) AS tf FROM (
-        |    SELECT doc_id, unnest(string_split(text, ' ')) AS token
-        |    FROM documents)
-        |  GROUP BY 1, 2),
-        |idx AS (
-        |  SELECT token, doc_id, tf FROM (
-        |    SELECT token, doc_id, tf,
-        |           row_number() OVER (PARTITION BY token
-        |                              ORDER BY tf DESC, doc_id ASC) AS prk
-        |    FROM post)
-        |  WHERE prk <= 1000),
-        |vocab AS (
-        |  SELECT token, count(*) AS df FROM post GROUP BY 1),
-        |norms AS (
-        |  SELECT doc_id, len(string_split(text, ' '))::BIGINT AS dl
-        |  FROM documents),
-        |nc AS (
-        |  SELECT count(*)::BIGINT AS n_docs, sum(dl)::BIGINT AS c_tokens
-        |  FROM norms),
-        |ab AS (
-        |  SELECT min(token) AS ta, max(token) AS tb FROM (
-        |    SELECT token FROM vocab
-        |    ORDER BY df DESC, token ASC LIMIT 2)),
-        |a AS (
-        |  SELECT i.doc_id, i.tf AS tf_a,
-        |         (44 * i.tf * c_tokens
-        |          * (2 * n_docs - 2 * v.df + 1))::DOUBLE
-        |         / ((20 * i.tf * c_tokens + 6 * c_tokens
-        |             + 18 * n.dl * n_docs) * (2 * v.df + 1))::DOUBLE AS s_a
-        |  FROM idx i JOIN vocab v USING (token)
-        |       JOIN norms n USING (doc_id), ab, nc
-        |  WHERE i.token = ta),
-        |b AS (
-        |  SELECT i.doc_id, i.tf AS tf_b,
-        |         (44 * i.tf * c_tokens
-        |          * (2 * n_docs - 2 * v.df + 1))::DOUBLE
-        |         / ((20 * i.tf * c_tokens + 6 * c_tokens
-        |             + 18 * n.dl * n_docs) * (2 * v.df + 1))::DOUBLE AS s_b
-        |  FROM idx i JOIN vocab v USING (token)
-        |       JOIN norms n USING (doc_id), ab, nc
-        |  WHERE i.token = tb),
-        |j AS (
-        |  SELECT coalesce(a.doc_id, b.doc_id) AS doc_id,
-        |         coalesce(tf_a, 0) AS tf_a, coalesce(tf_b, 0) AS tf_b,
-        |         coalesce(s_a, 0.0) + coalesce(s_b, 0.0) AS s
-        |  FROM a FULL JOIN b ON a.doc_id = b.doc_id)
-        |SELECT doc_id, tf_a, tf_b, round(s, 6) AS score, rk FROM (
-        |  SELECT doc_id, tf_a, tf_b, s,
-        |         row_number() OVER (ORDER BY s DESC, doc_id ASC) AS rk
-        |  FROM j)
-        |WHERE rk <= 20""".stripMargin,
-
-    // the 3 power iterations unrolled as CTEs (the MMR unrolled-oracle
-    // precedent); `//` floors like Spark's div on the all-positive ranks
-    "q208_pagerank" -> q208PageRankSql,
-    "q251_edge_slices" -> q208PageRankSql,
-    // retraction: the walk over the log minus the retracted users
-    "q255_edge_retraction" -> pageRankOracle(" AND user_id % 7 <> 0"),
-
-    // phrase adjacency replayed on 1-based positions (adjacency is
-    // shift-invariant vs Spark's 0-based posexplode). The SAME oracle
-    // proves the store lifecycle entry: q249's Spark side merges
-    // offset-carrying split slices, so green = merge ≡ rescan
-    "q209_phrase_query" -> q209PhraseSql,
-    "q249_pidx_store" -> q209PhraseSql,
-    // tombstones delete docs from the INDEX only: the positional side
-    // filters, the term pick stays corpus-wide
-    "q254_pidx_tombstones" ->
-      posOracle(" WHERE doc_id % 10 <> 0", phraseMatchExpr),
-
-    // per-slice posting aggregates replayed: slice = doc_id % 3 for
-    // ingest, 9 for the negated tombstone slice of doc_id % 10 = 0
-    "q258_store_datasheet" ->
-      """WITH tok AS (
-        |  SELECT doc_id % 3 AS slice, doc_id, t AS token,
-        |         count(*)::BIGINT AS tf
-        |  FROM (SELECT doc_id, unnest(string_split(text, ' ')) AS t
-        |        FROM documents)
-        |  GROUP BY 1, 2, 3),
-        |tmb AS (
-        |  SELECT 9 AS slice, doc_id, t AS token,
-        |         -(count(*)::BIGINT) AS tf
-        |  FROM (SELECT doc_id, unnest(string_split(text, ' ')) AS t
-        |        FROM documents WHERE doc_id % 10 = 0)
-        |  GROUP BY 1, 2, 3),
-        |s AS (SELECT * FROM tok UNION ALL SELECT * FROM tmb)
-        |SELECT slice::BIGINT AS slice, count(*)::BIGINT AS n_rows,
-        |       count(DISTINCT (token, doc_id))::BIGINT AS n_keys,
-        |       sum(tf)::BIGINT AS w_sum,
-        |       count(CASE WHEN tf < 0 THEN 1 END)::BIGINT
-        |         AS n_tombstone_rows
-        |FROM s GROUP BY 1""".stripMargin,
-
-    // the written stores' generation sizes recomputed from the raw
-    // corpus (slice = id % 4, the store builders' tagging), then the
-    // planner's START-OFFSET binning replayed: bin = (running rows of
-    // earlier generations) div target
-    "q261_store_maintenance" ->
-      """WITH tok AS (
-        |  SELECT doc_id % 4 AS slice, doc_id, t AS token,
-        |         count(*)::BIGINT AS tf
-        |  FROM (SELECT doc_id, unnest(string_split(text, ' ')) AS t
-        |        FROM documents)
-        |  GROUP BY 1, 2, 3),
-        |idx AS (
-        |  SELECT 'idx' AS store, slice::BIGINT AS slice,
-        |         count(*)::BIGINT AS n_rows
-        |  FROM tok GROUP BY 2),
-        |pidx AS (
-        |  SELECT 'pidx' AS store, slice, n_rows FROM idx),
-        |ev AS (
-        |  SELECT user_id, ts, event_id,
-        |         json_extract_string(props, '$.k')::BIGINT AS item
-        |  FROM events
-        |  WHERE json_extract_string(props, '$.k') IS NOT NULL),
-        |nx AS (
-        |  SELECT user_id, item AS src,
-        |         lead(item) OVER (PARTITION BY user_id
-        |                          ORDER BY ts, event_id) AS dst
-        |  FROM ev),
-        |tr AS (
-        |  SELECT user_id % 4 AS slice, src, dst
-        |  FROM nx WHERE dst IS NOT NULL AND dst <> src),
-        |eg AS (
-        |  SELECT 'edges' AS store, slice::BIGINT AS slice,
-        |         count(*)::BIGINT AS n_rows
-        |  FROM (SELECT slice, src, dst FROM tr GROUP BY 1, 2, 3)
-        |  GROUP BY 2),
-        |sheets AS (
-        |  SELECT * FROM idx UNION ALL SELECT * FROM pidx
-        |  UNION ALL SELECT * FROM eg),
-        |binned AS (
-        |  SELECT store, slice, n_rows,
-        |         COALESCE(SUM(n_rows) OVER (
-        |           PARTITION BY store ORDER BY slice
-        |           ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING),
-        |           0) // 5000 AS bin
-        |  FROM sheets)
-        |SELECT store, bin::BIGINT AS bin, count(*)::BIGINT AS n_gens,
-        |       sum(n_rows)::BIGINT AS n_rows,
-        |       min(slice)::BIGINT AS gen_lo, max(slice)::BIGINT AS gen_hi
-        |FROM binned GROUP BY 1, 2""".stripMargin,
-
-    // the literal query's three tokens replayed through the q260
-    // capped-index BM25 body — terms are literals, not a derivation
-    "q262_search_literal" ->
-      """WITH post AS (
-        |  SELECT token, doc_id, count(*) AS tf FROM (
-        |    SELECT doc_id, unnest(string_split(text, ' ')) AS token
-        |    FROM documents)
-        |  GROUP BY 1, 2),
-        |idx AS (
-        |  SELECT token, doc_id, tf FROM (
-        |    SELECT token, doc_id, tf,
-        |           row_number() OVER (PARTITION BY token
-        |                              ORDER BY tf DESC, doc_id ASC) AS prk
-        |    FROM post)
-        |  WHERE prk <= 1000),
-        |vocab AS (
-        |  SELECT token, count(*) AS df FROM post GROUP BY 1),
-        |nd AS (SELECT count(DISTINCT doc_id) AS n_docs FROM documents),
-        |g AS (
-        |  SELECT 'hash' AS token, 0 AS ord
-        |  UNION ALL SELECT 'join', 1
-        |  UNION ALL SELECT 'window', 2),
-        |sc AS (
-        |  SELECT i.doc_id AS doc_id, g.ord AS ord,
-        |         (11 * i.tf * (2 * n_docs - 2 * v.df + 1))::DOUBLE
-        |         / ((5 * i.tf + 6) * (2 * v.df + 1))::DOUBLE AS s
-        |  FROM idx i JOIN g USING (token) JOIN vocab v USING (token), nd),
-        |p AS (
-        |  SELECT doc_id, count(*)::BIGINT AS n_terms_hit,
-        |         max(CASE WHEN ord = 0 THEN s END) AS s0,
-        |         max(CASE WHEN ord = 1 THEN s END) AS s1,
-        |         max(CASE WHEN ord = 2 THEN s END) AS s2
-        |  FROM sc GROUP BY doc_id)
-        |SELECT doc_id, n_terms_hit, round(sk, 6) AS score, rk FROM (
-        |  SELECT doc_id, n_terms_hit,
-        |         coalesce(s0, 0.0) + coalesce(s1, 0.0) + coalesce(s2, 0.0)
-        |           AS sk,
-        |         row_number() OVER (
-        |           ORDER BY coalesce(s0, 0.0) + coalesce(s1, 0.0)
-        |             + coalesce(s2, 0.0) DESC, doc_id ASC) AS rk
-        |  FROM p)
-        |WHERE rk <= 20""".stripMargin,
-
-    // the q209 phrase ranking (top 10) joined back to the corpus for
-    // the first-anchor scan and the clamped ±2-token window — 1-based
-    // list positions throughout, anchor emitted 0-based like Spark's
-    "q263_phrase_snippets" ->
-      """WITH w AS (
-        |  SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
-        |pr AS (
-        |  SELECT g.w1 AS w1, g.w2 AS w2 FROM (
-        |    SELECT unnest(list_transform(generate_series(1, len(ws) - 1),
-        |             i -> {'w1': ws[i], 'w2': ws[i + 1]})) AS g
-        |    FROM w WHERE len(ws) >= 2)),
-        |bg AS (
-        |  SELECT w1, w2 FROM (
-        |    SELECT w1, w2, count(*) AS c FROM pr GROUP BY 1, 2)
-        |  ORDER BY c DESC, w1 ASC, w2 ASC LIMIT 1),
-        |pos AS (
-        |  SELECT doc_id, g.t AS token, g.p AS p FROM (
-        |    SELECT doc_id,
-        |           unnest(list_transform(generate_series(1, len(ws)),
-        |             i -> {'t': ws[i], 'p': i})) AS g
-        |    FROM w)),
-        |a AS (
-        |  SELECT doc_id, list_sort(list(p)) AS pa
-        |  FROM pos, bg WHERE token = w1 GROUP BY doc_id),
-        |b AS (
-        |  SELECT doc_id, list_sort(list(p)) AS pb
-        |  FROM pos, bg WHERE token = w2 GROUP BY doc_id),
-        |m AS (
-        |  SELECT a.doc_id,
-        |         len(list_intersect(list_transform(pa, p -> p + 1),
-        |           pb))::BIGINT AS n_matches
-        |  FROM a JOIN b USING (doc_id)),
-        |top AS (
-        |  SELECT doc_id, n_matches, rk FROM (
-        |    SELECT doc_id, n_matches,
-        |           row_number() OVER (
-        |             ORDER BY n_matches DESC, doc_id ASC) AS rk
-        |    FROM m WHERE n_matches > 0)
-        |  WHERE rk <= 10),
-        |anch AS (
-        |  SELECT t.doc_id AS doc_id, t.rk AS rk,
-        |         t.n_matches AS n_matches, w.ws AS ws,
-        |         list_filter(generate_series(1, len(w.ws) - 1),
-        |           i -> w.ws[i] = bg.w1 AND w.ws[i + 1] = bg.w2)[1] AS a
-        |  FROM top t JOIN w USING (doc_id), bg)
-        |SELECT doc_id, rk, n_matches, (a - 1)::BIGINT AS first_pos,
-        |       array_to_string(
-        |         ws[greatest(1, a - 2):least(len(ws), a + 3)], ' ')
-        |         AS snippet
-        |FROM anch""".stripMargin,
-
-    // AND-k over the capped index replayed: same capped postings as
-    // q203, membership = distinct matched tokens == the trigram's
-    // distinct-token count
-    "q259_and_trigram" ->
-      """WITH post AS (
-        |  SELECT token, doc_id, count(*) AS tf FROM (
-        |    SELECT doc_id, unnest(string_split(text, ' ')) AS token
-        |    FROM documents)
-        |  GROUP BY 1, 2),
-        |idx AS (
-        |  SELECT token, doc_id, tf FROM (
-        |    SELECT token, doc_id, tf,
-        |           row_number() OVER (PARTITION BY token
-        |                              ORDER BY tf DESC, doc_id ASC) AS prk
-        |    FROM post)
-        |  WHERE prk <= 1000),
-        |w AS (
-        |  SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
-        |tr AS (
-        |  SELECT g.t1 AS t1, g.t2 AS t2, g.t3 AS t3 FROM (
-        |    SELECT unnest(list_transform(generate_series(1, len(ws) - 2),
-        |             i -> {'t1': ws[i], 't2': ws[i + 1], 't3': ws[i + 2]})) AS g
-        |    FROM w WHERE len(ws) >= 3)),
-        |tg AS (
-        |  SELECT t1, t2, t3 FROM (
-        |    SELECT t1, t2, t3, count(*) AS c FROM tr GROUP BY 1, 2, 3)
-        |  ORDER BY c DESC, t1 ASC, t2 ASC, t3 ASC LIMIT 1),
-        |g AS (
-        |  SELECT DISTINCT token FROM (
-        |    SELECT t1 AS token FROM tg
-        |    UNION ALL SELECT t2 FROM tg
-        |    UNION ALL SELECT t3 FROM tg)),
-        |m AS (
-        |  SELECT doc_id, sum(tf)::BIGINT AS score
-        |  FROM idx JOIN g USING (token)
-        |  GROUP BY doc_id
-        |  HAVING count(DISTINCT token) = (SELECT count(*) FROM g))
-        |SELECT doc_id, score, rk FROM (
-        |  SELECT doc_id, score,
-        |         row_number() OVER (ORDER BY score DESC, doc_id ASC) AS rk
-        |  FROM m)
-        |WHERE rk <= 20""".stripMargin,
-
-    // k-term BM25: per-(doc, ord) rational scores, pivoted and summed
-    // left in fixed ord order — the identical float expression tree
-    "q260_bm25_trigram" ->
-      """WITH post AS (
-        |  SELECT token, doc_id, count(*) AS tf FROM (
-        |    SELECT doc_id, unnest(string_split(text, ' ')) AS token
-        |    FROM documents)
-        |  GROUP BY 1, 2),
-        |idx AS (
-        |  SELECT token, doc_id, tf FROM (
-        |    SELECT token, doc_id, tf,
-        |           row_number() OVER (PARTITION BY token
-        |                              ORDER BY tf DESC, doc_id ASC) AS prk
-        |    FROM post)
-        |  WHERE prk <= 1000),
-        |vocab AS (
-        |  SELECT token, count(*) AS df FROM post GROUP BY 1),
-        |nd AS (SELECT count(DISTINCT doc_id) AS n_docs FROM documents),
-        |w AS (
-        |  SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
-        |tr AS (
-        |  SELECT g.t1 AS t1, g.t2 AS t2, g.t3 AS t3 FROM (
-        |    SELECT unnest(list_transform(generate_series(1, len(ws) - 2),
-        |             i -> {'t1': ws[i], 't2': ws[i + 1], 't3': ws[i + 2]})) AS g
-        |    FROM w WHERE len(ws) >= 3)),
-        |tg AS (
-        |  SELECT t1, t2, t3 FROM (
-        |    SELECT t1, t2, t3, count(*) AS c FROM tr GROUP BY 1, 2, 3)
-        |  ORDER BY c DESC, t1 ASC, t2 ASC, t3 ASC LIMIT 1),
-        |g AS (
-        |  SELECT t1 AS token, 0 AS ord FROM tg
-        |  UNION ALL SELECT t2, 1 FROM tg
-        |  UNION ALL SELECT t3, 2 FROM tg),
-        |sc AS (
-        |  SELECT i.doc_id AS doc_id, g.ord AS ord,
-        |         (11 * i.tf * (2 * n_docs - 2 * v.df + 1))::DOUBLE
-        |         / ((5 * i.tf + 6) * (2 * v.df + 1))::DOUBLE AS s
-        |  FROM idx i JOIN g USING (token) JOIN vocab v USING (token), nd),
-        |p AS (
-        |  SELECT doc_id, count(*)::BIGINT AS n_terms_hit,
-        |         max(CASE WHEN ord = 0 THEN s END) AS s0,
-        |         max(CASE WHEN ord = 1 THEN s END) AS s1,
-        |         max(CASE WHEN ord = 2 THEN s END) AS s2
-        |  FROM sc GROUP BY doc_id)
-        |SELECT doc_id, n_terms_hit, round(sk, 6) AS score, rk FROM (
-        |  SELECT doc_id, n_terms_hit,
-        |         coalesce(s0, 0.0) + coalesce(s1, 0.0) + coalesce(s2, 0.0)
-        |           AS sk,
-        |         row_number() OVER (
-        |           ORDER BY coalesce(s0, 0.0) + coalesce(s1, 0.0)
-        |             + coalesce(s2, 0.0) DESC, doc_id ASC) AS rk
-        |  FROM p)
-        |WHERE rk <= 20""".stripMargin,
-
-    // three-term phrase: anchors (p − ord) grouped per doc, an anchor
-    // holding all 3 distinct ords is an occurrence — 1-based positions
-    // are shift-invariant vs Spark's 0-based anchors
-    "q257_phrase_trigram" ->
-      """WITH w AS (
-        |  SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
-        |tr AS (
-        |  SELECT g.t1 AS t1, g.t2 AS t2, g.t3 AS t3 FROM (
-        |    SELECT unnest(list_transform(generate_series(1, len(ws) - 2),
-        |             i -> {'t1': ws[i], 't2': ws[i + 1], 't3': ws[i + 2]})) AS g
-        |    FROM w WHERE len(ws) >= 3)),
-        |tg AS (
-        |  SELECT t1, t2, t3 FROM (
-        |    SELECT t1, t2, t3, count(*) AS c FROM tr GROUP BY 1, 2, 3)
-        |  ORDER BY c DESC, t1 ASC, t2 ASC, t3 ASC LIMIT 1),
-        |g AS (
-        |  SELECT t1 AS token, 0 AS ord FROM tg
-        |  UNION ALL SELECT t2, 1 FROM tg
-        |  UNION ALL SELECT t3, 2 FROM tg),
-        |pos AS (
-        |  SELECT doc_id, g2.t AS token, g2.p AS p FROM (
-        |    SELECT doc_id,
-        |           unnest(list_transform(generate_series(1, len(ws)),
-        |             i -> {'t': ws[i], 'p': i})) AS g2
-        |    FROM w)),
-        |an AS (
-        |  SELECT pos.doc_id AS doc_id, pos.p - g.ord AS anchor, g.ord AS ord
-        |  FROM pos JOIN g USING (token)),
-        |m AS (
-        |  SELECT doc_id, count(*)::BIGINT AS n_matches FROM (
-        |    SELECT doc_id, anchor FROM an
-        |    GROUP BY doc_id, anchor HAVING count(DISTINCT ord) = 3)
-        |  GROUP BY doc_id)
-        |SELECT doc_id, n_matches, rk FROM (
-        |  SELECT doc_id, n_matches,
-        |         row_number() OVER (ORDER BY n_matches DESC, doc_id ASC) AS rk
-        |  FROM m)
-        |WHERE rk <= 20""".stripMargin,
-
-    // q209's positional machinery with the slop-3 pair count in place
-    // of the adjacency intersect; q250's Spark side re-merges a
-    // compacted generation, so the shared oracle proves compaction
-    // commutes with reads
-    "q238_proximity_query" -> q238ProximitySql,
-    "q250_pidx_compaction" -> q238ProximitySql,
-
-
-
-    // ONE oracle proves both halves of the vector-store delete story:
-    // q213 (tombstone read) and q215 (compaction rewrite) must both
-    // serve the IVF search over the corpus minus deleted vectors —
-    // q69's SQL with the assignment side excluding them (queries stay
-    // unrestricted: deleted ids may still ask)
-    "q213_ann_tombstones" -> q213TombstoneIvfSql,
-    "q215_ann_compaction" -> q213TombstoneIvfSql,
-
-    // decimal-exact numerator, one final division; lead durations and
-    // the right-open last-observation drop replayed verbatim
-    "q214_twap" ->
-      """WITH d AS (
-        |  SELECT event_type AS series, value,
-        |         CAST(floor(epoch(lead(ts) OVER (PARTITION BY event_type
-        |                                         ORDER BY ts, event_id)))
-        |              AS BIGINT)
-        |         - CAST(floor(epoch(ts)) AS BIGINT) AS dur
-        |  FROM events),
-        |a AS (
-        |  SELECT series, count(*)::BIGINT AS n_obs,
-        |         sum(dur)::BIGINT AS total_sec,
-        |         sum(value::DECIMAL(18,6) * dur) AS sw
-        |  FROM d WHERE dur IS NOT NULL GROUP BY 1)
-        |SELECT series, n_obs, total_sec,
-        |       round(sw::DOUBLE / total_sec::DOUBLE, 6) AS twap
-        |FROM a""".stripMargin,
-
-    // same-hour-of-day trailing partition; otherwise q210 verbatim
-    "q216_seasonal_spikes" ->
-      """WITH c AS (
-        |  SELECT event_type AS series, date_trunc('hour', ts) AS bucket,
-        |         count(*)::BIGINT AS cnt
-        |  FROM events GROUP BY 1, 2)
-        |SELECT series, hour(bucket)::BIGINT AS hod, bucket, cnt,
-        |       count(cnt) OVER w AS trailing_n,
-        |       coalesce(sum(cnt) OVER w, 0)::BIGINT AS trailing_sum,
-        |       count(cnt) OVER w > 0
-        |         AND cnt * (count(cnt) OVER w)
-        |             > 2 * coalesce(sum(cnt) OVER w, 0) AS is_spike
-        |FROM c
-        |WINDOW w AS (PARTITION BY series, hour(bucket) ORDER BY bucket
-        |             ROWS BETWEEN 7 PRECEDING AND 1 PRECEDING)""".stripMargin,
-
-    "q217_top_movers" ->
-      """WITH e AS (
-        |  SELECT json_extract_string(props, '$.k')::BIGINT AS item,
-        |         CAST(floor(epoch(ts)) AS BIGINT) AS s
-        |  FROM events
-        |  WHERE json_extract_string(props, '$.k') IS NOT NULL),
-        |a AS (
-        |  -- anchor over the ITEM frame, the same frame the Spark op
-        |  -- receives — an all-events anchor would shift both windows
-        |  -- whenever the globally-latest event carries no item
-        |  SELECT max(s) AS anchor FROM e),
-        |cur AS (
-        |  SELECT item, count(*)::BIGINT AS cur_cnt FROM e, a
-        |  WHERE s > anchor - 604800 AND s <= anchor GROUP BY 1),
-        |curt AS (
-        |  SELECT * FROM (
-        |    SELECT item, cur_cnt,
-        |           row_number() OVER (ORDER BY cur_cnt DESC, item ASC)
-        |             AS cur_rank
-        |    FROM cur) WHERE cur_rank <= 20),
-        |prev AS (
-        |  SELECT item, count(*)::BIGINT AS prev_cnt FROM e, a
-        |  WHERE s > anchor - 1209600 AND s <= anchor - 604800 GROUP BY 1),
-        |prevt AS (
-        |  SELECT * FROM (
-        |    SELECT item, prev_cnt,
-        |           row_number() OVER (ORDER BY prev_cnt DESC, item ASC)
-        |             AS prev_rank
-        |    FROM prev) WHERE prev_rank <= 20),
-        |j AS (
-        |  SELECT coalesce(curt.item, prevt.item) AS item,
-        |         coalesce(cur_rank, 0) AS cur_rank,
-        |         coalesce(cur_cnt, 0) AS cur_cnt,
-        |         coalesce(prev_rank, 0) AS prev_rank,
-        |         coalesce(prev_cnt, 0) AS prev_cnt
-        |  FROM curt FULL JOIN prevt ON curt.item = prevt.item)
-        |SELECT item, cur_rank, cur_cnt, prev_rank, prev_cnt,
-        |       CASE WHEN prev_rank = 0 THEN 'entered'
-        |            WHEN cur_rank = 0 THEN 'left'
-        |            WHEN cur_rank < prev_rank THEN 'up'
-        |            WHEN cur_rank > prev_rank THEN 'down'
-        |            ELSE 'flat' END AS status
-        |FROM j""".stripMargin,
-
-    // one row per profiled column; numeric and string bounds ride
-    // separate typed columns (double→string casts differ by engine)
-    // q252 is approximate (rows-only); q253 is its hash-exact band
-    // audit — the exact distincts replayed per column, within_band
-    // asserted TRUE (the q110 pattern)
-    "q253_profile_approx_band" ->
-      """SELECT 'event_id' AS "column",
-        |       count(DISTINCT event_id)::BIGINT AS n_distinct,
-        |       TRUE AS within_band FROM events
-        |UNION ALL
-        |SELECT 'user_id', count(DISTINCT user_id)::BIGINT, TRUE FROM events
-        |UNION ALL
-        |SELECT 'value', count(DISTINCT value)::BIGINT, TRUE FROM events
-        |UNION ALL
-        |SELECT 'event_type', count(DISTINCT event_type)::BIGINT, TRUE
-        |FROM events
-        |UNION ALL
-        |SELECT 'props', count(DISTINCT props)::BIGINT, TRUE FROM events
-        |UNION ALL
-        |SELECT 'ts', count(DISTINCT CAST(floor(epoch(ts)) AS BIGINT))::BIGINT,
-        |       TRUE FROM events""".stripMargin,
-
-    "q218_profile" ->
-      """WITH n AS (SELECT count(*)::BIGINT AS n_rows FROM events)
-        |SELECT 'event_id' AS "column", n_rows,
-        |       n_rows - count(event_id) AS n_null,
-        |       count(DISTINCT event_id)::BIGINT AS n_distinct,
-        |       round(min(event_id)::DOUBLE, 6) AS min_num,
-        |       round(max(event_id)::DOUBLE, 6) AS max_num,
-        |       NULL::VARCHAR AS min_str, NULL::VARCHAR AS max_str
-        |FROM events, n GROUP BY n_rows
-        |UNION ALL
-        |SELECT 'user_id', n_rows, n_rows - count(user_id),
-        |       count(DISTINCT user_id)::BIGINT,
-        |       round(min(user_id)::DOUBLE, 6),
-        |       round(max(user_id)::DOUBLE, 6), NULL, NULL
-        |FROM events, n GROUP BY n_rows
-        |UNION ALL
-        |SELECT 'value', n_rows, n_rows - count(value),
-        |       count(DISTINCT value)::BIGINT,
-        |       round(min(value)::DOUBLE, 6),
-        |       round(max(value)::DOUBLE, 6), NULL, NULL
-        |FROM events, n GROUP BY n_rows
-        |UNION ALL
-        |SELECT 'event_type', n_rows, n_rows - count(event_type),
-        |       count(DISTINCT event_type)::BIGINT, NULL, NULL,
-        |       min(event_type), max(event_type)
-        |FROM events, n GROUP BY n_rows
-        |UNION ALL
-        |SELECT 'props', n_rows, n_rows - count(props),
-        |       count(DISTINCT props)::BIGINT, NULL, NULL,
-        |       min(props), max(props)
-        |FROM events, n GROUP BY n_rows
-        |UNION ALL
-        |SELECT 'ts', n_rows, n_rows - count(ts),
-        |       -- distinct on EPOCH SECONDS: the Spark side profiles the
-        |       -- projected unix_timestamp, so sub-second ts ties merge
-        |       count(DISTINCT CAST(floor(epoch(ts)) AS BIGINT))::BIGINT,
-        |       round(CAST(floor(epoch(min(ts))) AS BIGINT)::DOUBLE, 6),
-        |       round(CAST(floor(epoch(max(ts))) AS BIGINT)::DOUBLE, 6),
-        |       NULL, NULL
-        |FROM events, n GROUP BY n_rows""".stripMargin,
-
-    "q219_scd2" ->
-      """WITH ch AS (
-        |  SELECT user_id, event_type AS state, ts, event_id,
-        |         lag(event_type) OVER (PARTITION BY user_id
-        |                               ORDER BY ts, event_id) AS prev
-        |  FROM events WHERE event_type IN ('signup', 'error')),
-        |v AS (
-        |  SELECT user_id, state, ts AS valid_from, event_id
-        |  FROM ch WHERE prev IS NULL OR prev <> state),
-        |v2 AS (
-        |  SELECT user_id, state, valid_from,
-        |         lead(valid_from) OVER (PARTITION BY user_id
-        |                                ORDER BY valid_from, event_id)
-        |           AS valid_to,
-        |         row_number() OVER (PARTITION BY user_id
-        |                            ORDER BY valid_from, event_id)
-        |           AS version
-        |  FROM v)
-        |SELECT user_id, state,
-        |       CAST(floor(epoch(valid_from)) AS BIGINT) AS valid_from_s,
-        |       CAST(floor(epoch(valid_to)) AS BIGINT) AS valid_to_s,
-        |       valid_to IS NULL AS is_current,
-        |       version::BIGINT AS version
-        |FROM v2""".stripMargin,
-
-    "q220_pit_join" ->
-      """WITH ch AS (
-        |  SELECT user_id, event_type AS state, ts, event_id,
-        |         lag(event_type) OVER (PARTITION BY user_id
-        |                               ORDER BY ts, event_id) AS prev
-        |  FROM events WHERE event_type IN ('signup', 'error')),
-        |v AS (
-        |  SELECT user_id, state, ts AS valid_from, event_id
-        |  FROM ch WHERE prev IS NULL OR prev <> state),
-        |v2 AS (
-        |  SELECT user_id, state, valid_from,
-        |         lead(valid_from) OVER (PARTITION BY user_id
-        |                                ORDER BY valid_from, event_id)
-        |           AS valid_to
-        |  FROM v),
-        |f AS (
-        |  SELECT event_id, user_id, ts FROM events
-        |  WHERE event_type = 'purchase')
-        |SELECT f.event_id, f.user_id,
-        |       coalesce(v2.state, '(none)') AS state,
-        |       coalesce(CAST(floor(epoch(v2.valid_from)) AS BIGINT), -1)
-        |         AS valid_from_s
-        |FROM f LEFT JOIN v2 ON f.user_id = v2.user_id
-        |  AND v2.valid_from <= f.ts
-        |  AND (v2.valid_to IS NULL OR f.ts < v2.valid_to)""".stripMargin,
-
-    // one-shot last-writer-wins over the FULL log — the incremental
-    // split lives only on the Spark side, so the green row proves the
-    // cdcApply merge identity
-    "q221_cdc_state" ->
-      """WITH l AS (
-        |  SELECT user_id, ts, event_id, event_type AS state,
-        |         CASE WHEN event_type = 'error' THEN 'delete'
-        |              ELSE 'upsert' END AS op
-        |  FROM events),
-        |r AS (
-        |  SELECT *, row_number() OVER (PARTITION BY user_id
-        |                               ORDER BY ts DESC, event_id DESC)
-        |            AS rn
-        |  FROM l)
-        |SELECT user_id, state,
-        |       CAST(floor(epoch(ts)) AS BIGINT) AS ts_s, event_id
-        |FROM r WHERE rn = 1 AND op <> 'delete'""".stripMargin,
-
-    // the q219 one-shot rebuild — incremental scd2Apply ≡ rebuild
-    "q222_scd2_apply" ->
-      """WITH ch AS (
-        |  SELECT user_id, event_type AS state, ts, event_id,
-        |         lag(event_type) OVER (PARTITION BY user_id
-        |                               ORDER BY ts, event_id) AS prev
-        |  FROM events WHERE event_type IN ('signup', 'error')),
-        |v AS (
-        |  SELECT user_id, state, ts AS valid_from, event_id
-        |  FROM ch WHERE prev IS NULL OR prev <> state),
-        |v2 AS (
-        |  SELECT user_id, state, valid_from,
-        |         lead(valid_from) OVER (PARTITION BY user_id
-        |                                ORDER BY valid_from, event_id)
-        |           AS valid_to,
-        |         row_number() OVER (PARTITION BY user_id
-        |                            ORDER BY valid_from, event_id)
-        |           AS version
-        |  FROM v)
-        |SELECT user_id, state,
-        |       CAST(floor(epoch(valid_from)) AS BIGINT) AS valid_from_s,
-        |       CAST(floor(epoch(valid_to)) AS BIGINT) AS valid_to_s,
-        |       valid_to IS NULL AS is_current,
-        |       version::BIGINT AS version
-        |FROM v2""".stripMargin,
-
-    // LOCF over the dense hourly grid (LIST-form generate_series —
-    // the lateral gotcha); first bucket per series always observed
-    "q224_gap_fill" ->
-      """WITH c AS (
-        |  SELECT event_type AS series, date_trunc('hour', ts) AS bucket,
-        |         count(*)::BIGINT AS cnt
-        |  FROM events GROUP BY 1, 2),
-        |b AS (SELECT series, min(bucket) AS mn, max(bucket) AS mx
-        |      FROM c GROUP BY 1),
-        |g AS (SELECT series,
-        |             unnest(generate_series(mn, mx, INTERVAL 1 HOUR))
-        |               AS bucket
-        |      FROM b),
-        |f AS (SELECT g.series, g.bucket, c.cnt
-        |      FROM g LEFT JOIN c
-        |        ON g.series = c.series AND g.bucket = c.bucket)
-        |SELECT series, CAST(floor(epoch(bucket)) AS BIGINT) AS bucket_s,
-        |       last_value(cnt IGNORE NULLS) OVER (
-        |         PARTITION BY series ORDER BY bucket
-        |         ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-        |         AS cnt,
-        |       cnt IS NOT NULL AS observed
-        |FROM f""".stripMargin,
-
-    // degree-oriented wedge closing replayed relationally: orient by
-    // (degree, id) tuple order, wedge self-join, close, fan to corners
-    "q225_triangles" ->
-      """WITH ev AS (
-        |  SELECT user_id, ts, event_id,
-        |         json_extract_string(props, '$.k')::BIGINT AS item
-        |  FROM events
-        |  WHERE json_extract_string(props, '$.k') IS NOT NULL),
-        |nx AS (
-        |  SELECT item AS src,
-        |         lead(item) OVER (PARTITION BY user_id
-        |                          ORDER BY ts, event_id) AS dst
-        |  FROM ev),
-        |und AS (
-        |  SELECT DISTINCT least(src, dst) AS u, greatest(src, dst) AS v
-        |  FROM nx WHERE dst IS NOT NULL AND dst <> src),
-        |deg AS (
-        |  SELECT id, count(*)::BIGINT AS deg FROM (
-        |    SELECT u AS id FROM und UNION ALL SELECT v FROM und)
-        |  GROUP BY 1),
-        |ori AS (
-        |  SELECT CASE WHEN (du.deg, und.u) < (dv.deg, und.v)
-        |              THEN und.u ELSE und.v END AS s,
-        |         CASE WHEN (du.deg, und.u) < (dv.deg, und.v)
-        |              THEN und.v ELSE und.u END AS t,
-        |         CASE WHEN (du.deg, und.u) < (dv.deg, und.v)
-        |              THEN dv.deg ELSE du.deg END AS td
-        |  FROM und JOIN deg du ON du.id = und.u
-        |           JOIN deg dv ON dv.id = und.v),
-        |tri AS (
-        |  SELECT e1.s AS a, e1.t AS b, e2.t AS c
-        |  FROM ori e1 JOIN ori e2
-        |    ON e1.s = e2.s AND (e1.td, e1.t) < (e2.td, e2.t)
-        |  JOIN ori e3 ON e3.s = e1.t AND e3.t = e2.t)
-        |SELECT node, count(*)::BIGINT AS triangles FROM (
-        |  SELECT a AS node FROM tri
-        |  UNION ALL SELECT b FROM tri
-        |  UNION ALL SELECT c FROM tri)
-        |GROUP BY 1""".stripMargin,
-
-    // triangles normalized by wedge capacity; deg >= 2 nodes emit
-    "q226_clustering_coeff" ->
-      """WITH ev AS (
-        |  SELECT user_id, ts, event_id,
-        |         json_extract_string(props, '$.k')::BIGINT AS item
-        |  FROM events
-        |  WHERE json_extract_string(props, '$.k') IS NOT NULL),
-        |nx AS (
-        |  SELECT item AS src,
-        |         lead(item) OVER (PARTITION BY user_id
-        |                          ORDER BY ts, event_id) AS dst
-        |  FROM ev),
-        |und AS (
-        |  SELECT DISTINCT least(src, dst) AS u, greatest(src, dst) AS v
-        |  FROM nx WHERE dst IS NOT NULL AND dst <> src),
-        |deg AS (
-        |  SELECT id, count(*)::BIGINT AS deg FROM (
-        |    SELECT u AS id FROM und UNION ALL SELECT v FROM und)
-        |  GROUP BY 1),
-        |ori AS (
-        |  SELECT CASE WHEN (du.deg, und.u) < (dv.deg, und.v)
-        |              THEN und.u ELSE und.v END AS s,
-        |         CASE WHEN (du.deg, und.u) < (dv.deg, und.v)
-        |              THEN und.v ELSE und.u END AS t,
-        |         CASE WHEN (du.deg, und.u) < (dv.deg, und.v)
-        |              THEN dv.deg ELSE du.deg END AS td
-        |  FROM und JOIN deg du ON du.id = und.u
-        |           JOIN deg dv ON dv.id = und.v),
-        |tri AS (
-        |  SELECT e1.s AS a, e1.t AS b, e2.t AS c
-        |  FROM ori e1 JOIN ori e2
-        |    ON e1.s = e2.s AND (e1.td, e1.t) < (e2.td, e2.t)
-        |  JOIN ori e3 ON e3.s = e1.t AND e3.t = e2.t),
-        |tc AS (
-        |  SELECT node, count(*)::BIGINT AS triangles FROM (
-        |    SELECT a AS node FROM tri
-        |    UNION ALL SELECT b FROM tri
-        |    UNION ALL SELECT c FROM tri)
-        |  GROUP BY 1)
-        |SELECT d.id AS node, d.deg,
-        |       coalesce(tc.triangles, 0)::BIGINT AS triangles,
-        |       round((2 * coalesce(tc.triangles, 0))::DOUBLE
-        |             / (d.deg * (d.deg - 1))::DOUBLE, 6) AS coefficient
-        |FROM deg d LEFT JOIN tc ON tc.node = d.id
-        |WHERE d.deg >= 2""".stripMargin,
-
-    // the same three peel rounds unrolled; converged = round 3's
-    // start graph had nobody below k
-    "q227_kcore" ->
-      """WITH ev AS (
-        |  SELECT user_id, ts, event_id,
-        |         json_extract_string(props, '$.k')::BIGINT AS item
-        |  FROM events
-        |  WHERE json_extract_string(props, '$.k') IS NOT NULL),
-        |nx AS (
-        |  SELECT item AS src,
-        |         lead(item) OVER (PARTITION BY user_id
-        |                          ORDER BY ts, event_id) AS dst
-        |  FROM ev),
-        |e0 AS (
-        |  SELECT DISTINCT least(src, dst) AS u, greatest(src, dst) AS v
-        |  FROM nx WHERE dst IS NOT NULL AND dst <> src),
-        |d0 AS (SELECT id, count(*) AS deg FROM (
-        |         SELECT u AS id FROM e0 UNION ALL SELECT v FROM e0)
-        |       GROUP BY 1),
-        |s0 AS (SELECT id FROM d0 WHERE deg >= 10),
-        |e1 AS (SELECT u, v FROM e0 WHERE u IN (SELECT id FROM s0)
-        |                             AND v IN (SELECT id FROM s0)),
-        |d1 AS (SELECT id, count(*) AS deg FROM (
-        |         SELECT u AS id FROM e1 UNION ALL SELECT v FROM e1)
-        |       GROUP BY 1),
-        |s1 AS (SELECT id FROM d1 WHERE deg >= 10),
-        |e2 AS (SELECT u, v FROM e1 WHERE u IN (SELECT id FROM s1)
-        |                             AND v IN (SELECT id FROM s1)),
-        |d2 AS (SELECT id, count(*) AS deg FROM (
-        |         SELECT u AS id FROM e2 UNION ALL SELECT v FROM e2)
-        |       GROUP BY 1),
-        |s2 AS (SELECT id FROM d2 WHERE deg >= 10),
-        |e3 AS (SELECT u, v FROM e2 WHERE u IN (SELECT id FROM s2)
-        |                             AND v IN (SELECT id FROM s2)),
-        |d3 AS (SELECT id, count(*) AS deg FROM (
-        |         SELECT u AS id FROM e3 UNION ALL SELECT v FROM e3)
-        |       GROUP BY 1)
-        |SELECT d3.id AS node, d3.deg,
-        |       (SELECT count(*) FROM d2 WHERE deg < 10) = 0 AS converged
-        |FROM d3""".stripMargin,
-
-    // EXHAUSTIVE banded edit-distance join — completeness proof for
-    // the Spark side's prefix filter
-    "q228_fuzzy_join" ->
-      """WITH d AS (
-        |  SELECT doc_id, substr(text, 1, 40) AS t
-        |  FROM documents WHERE doc_id % 10 < 3)
-        |SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-        |       levenshtein(a.t, b.t)::BIGINT AS dist
-        |FROM d a JOIN d b ON a.doc_id < b.doc_id
-        |  AND abs(length(a.t) - length(b.t)) <= 2
-        |WHERE levenshtein(a.t, b.t) <= 2""".stripMargin,
-
-    // GROUP BY ROLLUP with the standard grouping bitmask
-    "q229_rollup_sheet" ->
-      """SELECT coalesce(source, '(all)') AS source,
-        |       coalesce(lang, '(all)') AS lang,
-        |       GROUPING(source, lang)::BIGINT AS gid,
-        |       count(*)::BIGINT AS n_rows,
-        |       sum(n_chars)::BIGINT AS w_sum
-        |FROM documents GROUP BY ROLLUP (source, lang)""".stripMargin,
-
-    // the q224 oracle replayed — the store path must serve the same
-    // grid the one-shot pass computes
-    "q230_gap_fill_store" ->
-      """WITH c AS (
-        |  SELECT event_type AS series, date_trunc('hour', ts) AS bucket,
-        |         count(*)::BIGINT AS cnt
-        |  FROM events GROUP BY 1, 2),
-        |b AS (SELECT series, min(bucket) AS mn, max(bucket) AS mx
-        |      FROM c GROUP BY 1),
-        |g AS (SELECT series,
-        |             unnest(generate_series(mn, mx, INTERVAL 1 HOUR))
-        |               AS bucket
-        |      FROM b),
-        |f AS (SELECT g.series, g.bucket, c.cnt
-        |      FROM g LEFT JOIN c
-        |        ON g.series = c.series AND g.bucket = c.bucket)
-        |SELECT series, CAST(floor(epoch(bucket)) AS BIGINT) AS bucket_s,
-        |       last_value(cnt IGNORE NULLS) OVER (
-        |         PARTITION BY series ORDER BY bucket
-        |         ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-        |         AS cnt,
-        |       cnt IS NOT NULL AS observed
-        |FROM f""".stripMargin,
-
-    // native ASOF JOIN on tie-deduped quotes
-    "q231_asof_join" ->
-      """WITH q0 AS (
-        |  SELECT user_id, ts, arg_max(coalesce(value, -1), event_id) AS v
-        |  FROM events WHERE event_type <> 'purchase' GROUP BY 1, 2),
-        |f AS (
-        |  SELECT event_id, user_id, ts FROM events
-        |  WHERE event_type = 'purchase')
-        |SELECT f.event_id, f.user_id,
-        |       CAST(floor(epoch(f.ts)) AS BIGINT) AS ts_s,
-        |       CAST(floor(epoch(q.ts)) AS BIGINT) AS q_ts_s,
-        |       q.v AS q_value
-        |FROM f ASOF LEFT JOIN q0 q
-        |  ON f.user_id = q.user_id AND q.ts <= f.ts""".stripMargin,
-
-    // rows-based trailing window — identical bucket-gap semantics
-    "q210_traffic_spikes" ->
-      """WITH c AS (
-        |  SELECT event_type AS series, date_trunc('hour', ts) AS bucket,
-        |         count(*)::BIGINT AS cnt
-        |  FROM events GROUP BY 1, 2)
-        |SELECT series, bucket, cnt,
-        |       count(cnt) OVER w AS trailing_n,
-        |       coalesce(sum(cnt) OVER w, 0)::BIGINT AS trailing_sum,
-        |       count(cnt) OVER w > 0
-        |         AND cnt * (count(cnt) OVER w)
-        |             > 2 * coalesce(sum(cnt) OVER w, 0) AS is_spike
-        |FROM c
-        |WINDOW w AS (PARTITION BY series ORDER BY bucket
-        |             ROWS BETWEEN 24 PRECEDING AND 1 PRECEDING)""".stripMargin,
-
-    "q211_journey_paths" ->
-      """WITH ev AS (
-        |  SELECT user_id, ts, event_id,
-        |         json_extract_string(props, '$.k')::BIGINT AS item
-        |  FROM events
-        |  WHERE json_extract_string(props, '$.k') IS NOT NULL),
-        |tri AS (
-        |  SELECT item AS step1,
-        |         lead(item, 1) OVER w AS step2,
-        |         lead(item, 2) OVER w AS step3
-        |  FROM ev
-        |  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
-        |cnt AS (
-        |  SELECT step1, step2, step3, count(*)::BIGINT AS n_paths
-        |  FROM tri WHERE step2 IS NOT NULL AND step3 IS NOT NULL
-        |  GROUP BY 1, 2, 3)
-        |SELECT step1, step2, step3, n_paths, rk FROM (
-        |  SELECT step1, step2, step3, n_paths,
-        |         row_number() OVER (ORDER BY n_paths DESC, step1 ASC,
-        |                            step2 ASC, step3 ASC) AS rk
-        |  FROM cnt)
-        |WHERE rk <= 20""".stripMargin,
-
-    // deletes cancel exactly: the oracle is the q202 index over the
-    // corpus MINUS the tombstoned docs
-    "q212_index_tombstones" ->
-      """WITH post AS (
-        |  SELECT token, doc_id, count(*) AS tf FROM (
-        |    SELECT doc_id, unnest(string_split(text, ' ')) AS token
-        |    FROM documents WHERE doc_id % 10 <> 0)
-        |  GROUP BY 1, 2),
-        |stats AS (
-        |  SELECT token, count(*) AS df, sum(tf)::BIGINT AS cf
-        |  FROM post GROUP BY 1),
-        |ranked AS (
-        |  SELECT token, doc_id, tf,
-        |         row_number() OVER (PARTITION BY token
-        |                            ORDER BY tf DESC, doc_id ASC) AS rk
-        |  FROM post)
-        |SELECT r.token, r.doc_id, r.tf, r.rk, s.df, s.cf
-        |FROM ranked r JOIN stats s USING (token)
-        |WHERE r.rk <= 5""".stripMargin,
-
-    // the capped-index read replayed end-to-end: same cap (1000),
-    // same top-2-df term pick, same combined-tf ranking
-    "q203_and_query" ->
-      """WITH post AS (
-        |  SELECT token, doc_id, count(*) AS tf FROM (
-        |    SELECT doc_id, unnest(string_split(text, ' ')) AS token
-        |    FROM documents)
-        |  GROUP BY 1, 2),
-        |idx AS (
-        |  SELECT token, doc_id, tf FROM (
-        |    SELECT token, doc_id, tf,
-        |           row_number() OVER (PARTITION BY token
-        |                              ORDER BY tf DESC, doc_id ASC) AS prk
-        |    FROM post)
-        |  WHERE prk <= 1000),
-        |vocab AS (
-        |  -- df is the UNCAPPED document frequency (what the index's
-        |  -- stats column carries), not the capped posting length
-        |  SELECT token, count(*) AS df FROM post GROUP BY 1),
-        |ab AS (
-        |  SELECT min(token) AS ta, max(token) AS tb FROM (
-        |    SELECT token FROM vocab
-        |    ORDER BY df DESC, token ASC LIMIT 2)),
-        |a AS (SELECT doc_id, tf AS tf_a FROM idx, ab WHERE token = ta),
-        |b AS (SELECT doc_id, tf AS tf_b FROM idx, ab WHERE token = tb)
-        |SELECT doc_id, tf_a, tf_b, tf_a + tf_b AS score, rk FROM (
-        |  SELECT a.doc_id, tf_a, tf_b,
-        |         row_number() OVER (ORDER BY tf_a + tf_b DESC,
-        |                            a.doc_id ASC) AS rk
-        |  FROM a JOIN b ON a.doc_id = b.doc_id)
-        |WHERE rk <= 20""".stripMargin,
-
-    // both directions from one |A∩B|; the filter reads the ROUNDED
-    // values on both engines (the subquery aliases)
-    "q160_containment" ->
-      """WITH w AS (
-        |  SELECT doc_id, source, list_distinct(string_split(text, ' ')) AS ws
-        |  FROM documents)
-        |SELECT doc_a, doc_b, cont_a, cont_b FROM (
-        |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-        |         round(len(list_intersect(a.ws, b.ws))::DOUBLE
-        |               / len(a.ws)::DOUBLE, 6) AS cont_a,
-        |         round(len(list_intersect(a.ws, b.ws))::DOUBLE
-        |               / len(b.ws)::DOUBLE, 6) AS cont_b
-        |  FROM w a JOIN w b ON a.source = b.source AND a.doc_id < b.doc_id)
-        |WHERE greatest(cont_a, cont_b) >= 0.8""".stripMargin,
-
-    "q25_knn_bruteforce" -> q25KnnSql,
-
-    "q26_ann_lsh_buckets" ->
-      """SELECT vec_id,
-        |  list_sum(list_transform(generate_series(0, 7), p ->
-        |    CASE WHEN list_sum(list_transform(generate_series(1, 64), d ->
-        |           embedding[d]::DOUBLE *
-        |           ((('0x'||substr(md5(p::VARCHAR || '_' || d::VARCHAR),1,15))::BIGINT % 2001 - 1000)::DOUBLE / 1000.0)
-        |         )) >= 0 THEN (1::BIGINT << p) ELSE 0::BIGINT END))::BIGINT AS bucket
-        |FROM embeddings""".stripMargin,
-
-    "q27_text_stats" ->
-      """SELECT doc_id,
-        |  length(text)::BIGINT AS n_chars,
-        |  len(string_split(text, ' '))::BIGINT AS n_words,
-        |  len(list_distinct(string_split(text, ' ')))::BIGINT AS n_distinct_words,
-        |  length(replace(text, ' ', ''))::BIGINT AS n_chars_nospace,
-        |  len(regexp_extract_all(text, '[a-z]+|[0-9]+|[^a-z0-9 ]'))::BIGINT AS token_cnt,
-        |  len(list_filter(string_split(text, ' '),
-        |      w -> list_contains(['the','a','of','and','in','to','is','on','for','with'], w)))::BIGINT AS stopword_cnt,
-        |  round(length(replace(text, ' ', ''))::DOUBLE / len(string_split(text, ' '))::DOUBLE, 6) AS avg_word_len,
-        |  round(len(list_filter(string_split(text, ' '),
-        |        w -> list_contains(['the','a','of','and','in','to','is','on','for','with'], w)))::DOUBLE
-        |        / len(string_split(text, ' '))::DOUBLE, 6) AS stopword_ratio
-        |FROM documents""".stripMargin,
-
-    "q28_lang_id" ->
-      """WITH c AS (
-        |  SELECT doc_id,
-        |    len(list_filter(string_split(text, ' '), w -> list_contains(['the','and','of','to','in','is'], w)))::BIGINT AS en_hits,
-        |    len(list_filter(string_split(text, ' '), w -> list_contains(['der','die','und','das','ist','nicht'], w)))::BIGINT AS de_hits,
-        |    len(list_filter(string_split(text, ' '), w -> list_contains(['le','la','et','les','des','est'], w)))::BIGINT AS fr_hits,
-        |    len(list_filter(string_split(text, ' '), w -> list_contains(['el','los','de','que','y','una'], w)))::BIGINT AS es_hits
-        |  FROM documents)
-        |SELECT doc_id, en_hits, de_hits, fr_hits, es_hits,
-        |  CASE WHEN en_hits >= de_hits AND en_hits >= fr_hits AND en_hits >= es_hits THEN 'en'
-        |       WHEN de_hits >= fr_hits AND de_hits >= es_hits THEN 'de'
-        |       WHEN fr_hits >= es_hits THEN 'fr'
-        |       ELSE 'es' END AS predicted_lang
-        |FROM c""".stripMargin,
-
-    "q29_fingerprints" ->
-      """SELECT doc_id, md5(text) AS fp_full,
-        |       md5(array_to_string(list_sort(list_distinct(string_split(text, ' '))), ' ')) AS fp_sorted
-        |FROM documents""".stripMargin,
-
-    "q68_winnow_fingerprints" ->
-      """-- per-character unicode() == the engine's UTF-8 bytes on this
-        |-- ASCII corpus (same byte/char equivalence as the q48 oracle).
-        |-- Empty text is guarded: list_reduce errors on an empty list,
-        |-- while the engine hashes the empty gram to 0 (WinnowFpsSpec)
-        |WITH hs AS (
-        |  SELECT doc_id,
-        |    CASE WHEN length(text) = 0 THEN [0]::BIGINT[]
-        |         ELSE list_transform(generate_series(1, greatest(length(text) - 7, 1)),
-        |      i -> list_reduce(list_transform(generate_series(i, least(i + 7, length(text))),
-        |             j -> unicode(text[j])::BIGINT),
-        |           (a, c) -> (a * 257 + c) % 1000000007)) END AS hs
-        |  FROM documents),
-        |fps AS (
-        |  SELECT doc_id,
-        |         list_distinct(list_transform(generate_series(1, greatest(len(hs) - 15, 1)),
-        |                       i -> list_min(hs[i:i+15]))) AS fps
-        |  FROM hs)
-        |SELECT doc_id, unnest(fps) AS fp FROM fps""".stripMargin,
-
-    "q30_multimodal_features" ->
-      """SELECT doc_id, strlen(text)::BIGINT AS byte_len, md5(text) AS checksum
-        |FROM documents""".stripMargin,
-
-    "q48_frame_sample" ->
-      """-- char-based oracle for the byte-based operator: equal on this
-        |-- ASCII corpus (DuckDB cannot slice/md5 BLOBs)
-        |SELECT doc_id, i AS frame_idx,
-        |       strlen(substr(text, i*16 + 1, 16))::BIGINT AS frame_len,
-        |       md5(substr(text, i*16 + 1, 16)) AS frame_checksum
-        |FROM (SELECT doc_id, text,
-        |             unnest(generate_series(0, (strlen(text) - 1) // 16)) AS i
-        |      FROM documents WHERE strlen(text) > 0)
-        |WHERE i % 2 = 0""".stripMargin,
-
-    "q39_returned_items" ->
-      """SELECT c_custkey, c_name, c_mktsegment,
-        |       round(sum(CAST(l_extendedprice * (1.0 - l_discount) AS DECIMAL(28,10))), 2)::DOUBLE AS revenue
-        |FROM lineitem
-        |JOIN orders ON l_orderkey = o_orderkey
-        |JOIN customer ON o_custkey = c_custkey
-        |WHERE l_returnflag = 'R'
-        |GROUP BY 1, 2, 3
-        |ORDER BY revenue DESC, c_custkey ASC LIMIT 20""".stripMargin,
-
-    "q40_order_deciles" ->
-      """SELECT o_orderpriority, decile, count(*) AS cnt FROM (
-        |  SELECT o_orderpriority,
-        |         ntile(10) OVER (PARTITION BY o_orderpriority
-        |                         ORDER BY o_totalprice ASC, o_orderkey ASC)::BIGINT AS decile
-        |  FROM orders)
-        |GROUP BY 1, 2""".stripMargin,
-
-    "q37_semi_anti" ->
-      """SELECT c_custkey, 'has_open' AS tag FROM customer
-        |WHERE EXISTS (SELECT 1 FROM orders
-        |              WHERE o_custkey = c_custkey AND o_orderstatus = 'O')
-        |UNION ALL
-        |SELECT c_custkey, 'no_open' AS tag FROM customer
-        |WHERE NOT EXISTS (SELECT 1 FROM orders
-        |                  WHERE o_custkey = c_custkey AND o_orderstatus = 'O')""".stripMargin,
-
-    "q38_cube_pricing" ->
-      """SELECT l_returnflag, l_linestatus, count(*) AS cnt
-        |FROM lineitem GROUP BY CUBE (l_returnflag, l_linestatus)""".stripMargin,
-
-    "q41_asof_join" ->
-      """WITH p AS (
-        |  SELECT event_id AS pay_id, user_id, ts
-        |  FROM events WHERE event_type = 'purchase'),
-        |c AS (
-        |  SELECT user_id, ts, max(event_id) AS click_id
-        |  FROM events WHERE event_type = 'click' GROUP BY 1, 2)
-        |SELECT p.pay_id, p.user_id,
-        |       CAST(floor(epoch(p.ts)) AS BIGINT) AS pay_ts,
-        |       c.click_id,
-        |       CAST(floor(epoch(c.ts)) AS BIGINT) AS click_ts
-        |FROM p ASOF LEFT JOIN c
-        |  ON p.user_id = c.user_id AND c.ts <= p.ts""".stripMargin,
-
-    "q46_asof_join_native" ->
-      """WITH p AS (
-        |  SELECT event_id AS pay_id, user_id, ts
-        |  FROM events WHERE event_type = 'purchase'),
-        |c AS (
-        |  SELECT user_id, ts, max(event_id) AS click_id
-        |  FROM events WHERE event_type = 'click' GROUP BY 1, 2)
-        |SELECT p.pay_id, p.user_id,
-        |       CAST(floor(epoch(p.ts)) AS BIGINT) AS pay_ts,
-        |       c.click_id,
-        |       CAST(floor(epoch(c.ts)) AS BIGINT) AS click_ts
-        |FROM p ASOF LEFT JOIN c
-        |  ON p.user_id = c.user_id AND c.ts <= p.ts""".stripMargin,
-
-    "q42_ann_bucket_nearest" ->
-      """WITH e AS (
-        |  SELECT * FROM (
-        |  SELECT vec_id, embedding,
-        |    list_sum(list_transform(embedding, x -> x::DOUBLE * x::DOUBLE)) AS norm2,
-        |    list_sum(list_transform(generate_series(0, 7), p ->
-        |      CASE WHEN list_sum(list_transform(generate_series(1, 64), d ->
-        |             embedding[d]::DOUBLE *
-        |             ((('0x'||substr(md5(p::VARCHAR || '_' || d::VARCHAR),1,15))::BIGINT % 2001 - 1000)::DOUBLE / 1000.0)
-        |           )) >= 0 THEN (1::BIGINT << p) ELSE 0::BIGINT END))::BIGINT AS bucket
-        |  FROM embeddings)
-        |  WHERE norm2 > 0),
-        |sc AS (
-        |  SELECT a.vec_id AS query_id, b.vec_id AS neighbor_id,
-        |         round(list_sum(list_transform(generate_series(1, len(a.embedding)),
-        |                 i -> a.embedding[i]::DOUBLE * b.embedding[i]::DOUBLE))
-        |               / sqrt(a.norm2 * b.norm2), 6) AS score
-        |  FROM e a JOIN e b ON a.bucket = b.bucket AND a.vec_id <> b.vec_id),
-        |r AS (
-        |  SELECT query_id, neighbor_id, score,
-        |         row_number() OVER (PARTITION BY query_id
-        |                            ORDER BY score DESC, neighbor_id) AS rn
-        |  FROM sc)
-        |SELECT query_id, neighbor_id, score FROM r WHERE rn = 1""".stripMargin,
-
-    "q43_quality_score" ->
-      """WITH c AS (
-        |  SELECT doc_id,
-        |    len(string_split(text, ' '))::BIGINT AS n_words,
-        |    len(list_distinct(string_split(text, ' ')))::BIGINT AS n_distinct_words,
-        |    len(list_filter(string_split(text, ' '),
-        |        w -> list_contains(['the','a','of','and','in','to','is','on','for','with'], w)))::BIGINT AS stopword_cnt
-        |  FROM documents),
-        |q AS (
-        |  SELECT doc_id, n_words, n_distinct_words, stopword_cnt,
-        |    round(0.4 * least(n_words::DOUBLE / 100.0, 1.0)
-        |        + 0.4 * (n_distinct_words::DOUBLE / n_words::DOUBLE)
-        |        + 0.2 * least(5.0 * stopword_cnt::DOUBLE / n_words::DOUBLE, 1.0), 6) AS quality
-        |  FROM c)
-        |SELECT doc_id, n_words, n_distinct_words, stopword_cnt, quality,
-        |  CASE WHEN quality >= 0.6 THEN 'high'
-        |       WHEN quality >= 0.4 THEN 'medium'
-        |       ELSE 'low' END AS quality_label
-        |FROM q""".stripMargin,
-
-    "q66_quality_weighted_sample" ->
-      """WITH c AS (
-        |  SELECT doc_id,
-        |    len(string_split(text, ' '))::BIGINT AS n_words,
-        |    len(list_distinct(string_split(text, ' ')))::BIGINT AS n_distinct_words,
-        |    len(list_filter(string_split(text, ' '),
-        |        w -> list_contains(['the','a','of','and','in','to','is','on','for','with'], w)))::BIGINT AS stopword_cnt
-        |  FROM documents),
-        |q AS (
-        |  SELECT doc_id,
-        |    round(0.4 * least(n_words::DOUBLE / 100.0, 1.0)
-        |        + 0.4 * (n_distinct_words::DOUBLE / n_words::DOUBLE)
-        |        + 0.2 * least(5.0 * stopword_cnt::DOUBLE / n_words::DOUBLE, 1.0), 6) AS quality
-        |  FROM c)
-        |SELECT doc_id, quality FROM q
-        |WHERE ('0x'||substr(md5('wq' || doc_id::VARCHAR),1,15))::BIGINT % 10000 <
-        |      floor(least(greatest(quality, 0.0), 1.0) * 10000)""".stripMargin,
-
-    "q67_tfidf" ->
-      """WITH w AS (
-        |  SELECT doc_id, unnest(string_split(text, ' ')) AS term FROM documents),
-        |tf AS (
-        |  SELECT doc_id, term, count(*) AS tf_cnt FROM w GROUP BY 1, 2),
-        |dfq AS (
-        |  SELECT term, count(*) AS df_cnt FROM tf GROUP BY 1),
-        |n AS (SELECT count(*) AS n_docs FROM documents)
-        |SELECT tf.doc_id, tf.term, tf.tf_cnt, dfq.df_cnt,
-        |       round(tf.tf_cnt * ln((n.n_docs + 1)::DOUBLE / (dfq.df_cnt + 1)), 6) AS score
-        |FROM tf JOIN dfq USING (term) CROSS JOIN n""".stripMargin,
-
-    "q44_late_shipment_priority" ->
-      """SELECT o_orderpriority, count(*) AS order_count
-        |FROM orders o
-        |WHERE EXISTS (SELECT 1 FROM lineitem l
-        |              WHERE l.l_orderkey = o.o_orderkey
-        |                AND l.l_shipdate > o.o_orderdate + INTERVAL 30 DAY)
-        |GROUP BY 1""".stripMargin,
-
-    "q49_nation_trade_pairs" ->
-      """SELECT cn.n_name AS cust_nation, sn.n_name AS supp_nation,
-        |       round(sum(CAST(l_extendedprice * (1.0 - l_discount) AS DECIMAL(28,10))), 2)::DOUBLE AS revenue,
-        |       count(*) AS cnt
-        |FROM lineitem
-        |JOIN orders ON l_orderkey = o_orderkey
-        |JOIN customer ON o_custkey = c_custkey
-        |JOIN supplier ON l_suppkey = s_suppkey
-        |JOIN nation cn ON c_nationkey = cn.n_nationkey
-        |JOIN nation sn ON s_nationkey = sn.n_nationkey
-        |WHERE cn.n_name <> sn.n_name
-        |GROUP BY 1, 2""".stripMargin,
-
-    "q50_large_orders" ->
-      """SELECT o_orderkey, c_custkey,
-        |       CAST(floor(epoch(o_orderdate)) AS BIGINT) AS o_orderdate,
-        |       round(sum(CAST(l_quantity AS DECIMAL(28,10))), 2)::DOUBLE AS total_qty
-        |FROM lineitem
-        |JOIN orders ON l_orderkey = o_orderkey
-        |JOIN customer ON o_custkey = c_custkey
-        |GROUP BY 1, 2, 3
-        |HAVING sum(CAST(l_quantity AS DECIMAL(28,10))) > 300
-        |ORDER BY total_qty DESC, o_orderkey ASC LIMIT 100""".stripMargin,
-
-    "q51_price_percentiles" ->
-      """SELECT o_orderpriority,
-        |       round(quantile_cont(o_totalprice, 0.25), 2) AS p25,
-        |       round(quantile_cont(o_totalprice, 0.5), 2) AS p50,
-        |       round(quantile_cont(o_totalprice, 0.75), 2) AS p75,
-        |       count(*) AS cnt
-        |FROM orders GROUP BY 1""".stripMargin,
-
-    "q52_grouping_sets" ->
-      """SELECT l_returnflag, l_linestatus, count(*) AS cnt
-        |FROM lineitem
-        |GROUP BY GROUPING SETS ((l_returnflag), (l_linestatus))""".stripMargin,
-
-    "q54_set_ops" ->
-      """SELECT o_custkey, 'open_and_finished' AS tag FROM (
-        |  SELECT DISTINCT o_custkey FROM orders WHERE o_orderstatus = 'O'
-        |  INTERSECT
-        |  SELECT DISTINCT o_custkey FROM orders WHERE o_orderstatus = 'F')
-        |UNION ALL
-        |SELECT o_custkey, 'open_only' AS tag FROM (
-        |  SELECT DISTINCT o_custkey FROM orders WHERE o_orderstatus = 'O'
-        |  EXCEPT
-        |  SELECT DISTINCT o_custkey FROM orders WHERE o_orderstatus = 'F')""".stripMargin,
-
-    "q55_pivot_status" ->
-      """SELECT o_orderpriority,
-        |       sum(CASE WHEN o_orderstatus = 'O' THEN 1 ELSE 0 END)::BIGINT AS open_cnt,
-        |       sum(CASE WHEN o_orderstatus = 'F' THEN 1 ELSE 0 END)::BIGINT AS finished_cnt,
-        |       sum(CASE WHEN o_orderstatus = 'P' THEN 1 ELSE 0 END)::BIGINT AS partial_cnt
-        |FROM orders GROUP BY 1""".stripMargin,
-
-    "q56_promo_revenue" ->
-      """WITH m AS (
-        |  SELECT CAST(floor(epoch(date_trunc('month', l_shipdate))) AS BIGINT) AS ship_month,
-        |         round(sum(CASE WHEN p_type = 'PROMO'
-        |                        THEN CAST(l_extendedprice * (1.0 - l_discount) AS DECIMAL(28,10))
-        |                        ELSE CAST(0 AS DECIMAL(28,10)) END), 2)::DOUBLE AS promo_rev,
-        |         round(sum(CAST(l_extendedprice * (1.0 - l_discount) AS DECIMAL(28,10))), 2)::DOUBLE AS total_rev
-        |  FROM lineitem JOIN part ON l_partkey = p_partkey
-        |  GROUP BY 1)
-        |SELECT ship_month, promo_rev, total_rev,
-        |       round(promo_rev / total_rev, 6) AS promo_share
-        |FROM m""".stripMargin,
-
-    "q45_ship_month_priority_mix" ->
-      """SELECT CAST(floor(epoch(date_trunc('month', l_shipdate))) AS BIGINT) AS ship_month,
-        |       sum(CASE WHEN o_orderpriority IN ('1-URGENT', '2-HIGH')
-        |                THEN 1 ELSE 0 END)::BIGINT AS high_line_cnt,
-        |       sum(CASE WHEN o_orderpriority IN ('1-URGENT', '2-HIGH')
-        |                THEN 0 ELSE 1 END)::BIGINT AS low_line_cnt
-        |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        |GROUP BY 1""".stripMargin,
-
-    "q35_shipping_priority" ->
-      """SELECT l_orderkey,
-        |       CAST(floor(epoch(o_orderdate)) AS BIGINT) AS o_orderdate,
-        |       o_orderpriority,
-        |       round(sum(CAST(l_extendedprice * (1.0 - l_discount) AS DECIMAL(28,10))), 2)::DOUBLE AS revenue
-        |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        |WHERE o_orderstatus = 'O'
-        |GROUP BY 1, 2, 3
-        |ORDER BY revenue DESC, l_orderkey ASC LIMIT 10""".stripMargin,
-
-    "q36_region_volume" ->
-      """SELECT r_name,
-        |       round(sum(CAST(l_extendedprice * (1.0 - l_discount) AS DECIMAL(28,10))), 2)::DOUBLE AS revenue,
-        |       count(*) AS cnt
-        |FROM lineitem
-        |JOIN orders ON l_orderkey = o_orderkey
-        |JOIN customer ON o_custkey = c_custkey
-        |JOIN nation ON c_nationkey = n_nationkey
-        |JOIN region ON n_regionkey = r_regionkey
-        |GROUP BY 1""".stripMargin,
-
-    "q33_ivf_assign" ->
-      """WITH e AS (SELECT vec_id, embedding FROM embeddings),
-        |c AS (SELECT vec_id AS centroid_id, embedding AS c_vec FROM e WHERE vec_id < 8),
-        |sc AS (
-        |  SELECT e.vec_id, c.centroid_id,
-        |         round(sqrt(list_sum(list_transform(generate_series(1, len(e.embedding)),
-        |           i -> (e.embedding[i]::DOUBLE - c.c_vec[i]::DOUBLE)
-        |              * (e.embedding[i]::DOUBLE - c.c_vec[i]::DOUBLE)))), 6) AS dist
-        |  FROM e CROSS JOIN c),
-        |r AS (
-        |  SELECT vec_id, centroid_id, dist,
-        |         row_number() OVER (PARTITION BY vec_id
-        |                            ORDER BY dist ASC, centroid_id ASC) AS rn
-        |  FROM sc)
-        |SELECT vec_id, centroid_id, dist FROM r WHERE rn = 1""".stripMargin,
-
-    "q69_ivf_search" ->
-      """WITH e AS (SELECT vec_id, embedding FROM embeddings),
-        |c AS (SELECT vec_id AS centroid_id, embedding AS c_vec FROM e WHERE vec_id < 8),
-        |cd AS (
-        |  SELECT e.vec_id, c.centroid_id,
-        |         round(sqrt(list_sum(list_transform(generate_series(1, len(e.embedding)),
-        |           i -> (e.embedding[i]::DOUBLE - c.c_vec[i]::DOUBLE)
-        |              * (e.embedding[i]::DOUBLE - c.c_vec[i]::DOUBLE)))), 6) AS dist
-        |  FROM e CROSS JOIN c),
-        |assign AS (
-        |  SELECT vec_id AS neighbor_id, centroid_id FROM (
-        |    SELECT vec_id, centroid_id,
-        |           row_number() OVER (PARTITION BY vec_id ORDER BY dist, centroid_id) AS rn
-        |    FROM cd) WHERE rn = 1),
-        |probes AS (
-        |  SELECT vec_id AS query_id, centroid_id FROM (
-        |    SELECT vec_id, centroid_id,
-        |           row_number() OVER (PARTITION BY vec_id ORDER BY dist, centroid_id) AS rn
-        |    FROM cd WHERE vec_id < 10) WHERE rn <= 2),
-        |n AS (
-        |  SELECT * FROM (
-        |    SELECT vec_id, embedding,
-        |           list_sum(list_transform(embedding, x -> x::DOUBLE * x::DOUBLE)) AS norm2
-        |    FROM embeddings)
-        |  WHERE norm2 > 0),
-        |cand AS (
-        |  SELECT p.query_id, a.neighbor_id
-        |  FROM probes p JOIN assign a USING (centroid_id)
-        |  WHERE p.query_id <> a.neighbor_id),
-        |sc AS (
-        |  SELECT cand.query_id, cand.neighbor_id,
-        |         round(list_sum(list_transform(generate_series(1, len(nb.embedding)),
-        |                 i -> q.embedding[i]::DOUBLE * nb.embedding[i]::DOUBLE))
-        |               / sqrt(q.norm2 * nb.norm2), 6) AS score
-        |  FROM cand
-        |  JOIN n q ON q.vec_id = cand.query_id
-        |  JOIN n nb ON nb.vec_id = cand.neighbor_id),
-        |r AS (
-        |  SELECT query_id, neighbor_id, score,
-        |         row_number() OVER (PARTITION BY query_id ORDER BY score DESC, neighbor_id) AS rank
-        |  FROM sc)
-        |SELECT query_id, neighbor_id, score, rank FROM r WHERE rank <= 5""".stripMargin,
-
-    "q70_kmeans_assign" ->
-      """WITH e AS (SELECT vec_id, embedding FROM embeddings),
-        |c0 AS (SELECT vec_id AS centroid_id,
-        |              list_transform(embedding, x -> round(x::DOUBLE, 6)) AS c_vec
-        |       FROM e WHERE vec_id < 8),
-        |d1 AS (SELECT e.vec_id, c.centroid_id,
-        |              round(sqrt(list_sum(list_transform(generate_series(1, 64),
-        |                i -> (e.embedding[i]::DOUBLE - c.c_vec[i]) * (e.embedding[i]::DOUBLE - c.c_vec[i])))), 6) AS dist
-        |       FROM e CROSS JOIN c0 c),
-        |a1 AS (SELECT vec_id, centroid_id FROM (
-        |         SELECT vec_id, centroid_id,
-        |                row_number() OVER (PARTITION BY vec_id ORDER BY dist, centroid_id) AS rn
-        |         FROM d1) WHERE rn = 1),
-        |m1 AS (SELECT a.centroid_id, t.d,
-        |              round(list_sum(list(e.embedding[t.d]::DOUBLE ORDER BY e.vec_id)) / count(*), 6) AS m
-        |       FROM a1 a JOIN e USING (vec_id) CROSS JOIN generate_series(1, 64) t(d)
-        |       GROUP BY a.centroid_id, t.d),
-        |c1 AS (SELECT c0.centroid_id, coalesce(u.c_vec, c0.c_vec) AS c_vec
-        |       FROM c0 LEFT JOIN (
-        |         SELECT centroid_id, list(m ORDER BY d) AS c_vec FROM m1 GROUP BY centroid_id) u
-        |       USING (centroid_id)),
-        |d2 AS (SELECT e.vec_id, c.centroid_id,
-        |              round(sqrt(list_sum(list_transform(generate_series(1, 64),
-        |                i -> (e.embedding[i]::DOUBLE - c.c_vec[i]) * (e.embedding[i]::DOUBLE - c.c_vec[i])))), 6) AS dist
-        |       FROM e CROSS JOIN c1 c),
-        |a2 AS (SELECT vec_id, centroid_id FROM (
-        |         SELECT vec_id, centroid_id,
-        |                row_number() OVER (PARTITION BY vec_id ORDER BY dist, centroid_id) AS rn
-        |         FROM d2) WHERE rn = 1),
-        |m2 AS (SELECT a.centroid_id, t.d,
-        |              round(list_sum(list(e.embedding[t.d]::DOUBLE ORDER BY e.vec_id)) / count(*), 6) AS m
-        |       FROM a2 a JOIN e USING (vec_id) CROSS JOIN generate_series(1, 64) t(d)
-        |       GROUP BY a.centroid_id, t.d),
-        |c2 AS (SELECT c1.centroid_id, coalesce(u.c_vec, c1.c_vec) AS c_vec
-        |       FROM c1 LEFT JOIN (
-        |         SELECT centroid_id, list(m ORDER BY d) AS c_vec FROM m2 GROUP BY centroid_id) u
-        |       USING (centroid_id)),
-        |d3 AS (SELECT e.vec_id, c.centroid_id,
-        |              round(sqrt(list_sum(list_transform(generate_series(1, 64),
-        |                i -> (e.embedding[i]::DOUBLE - c.c_vec[i]) * (e.embedding[i]::DOUBLE - c.c_vec[i])))), 6) AS dist
-        |       FROM e CROSS JOIN c2 c)
-        |SELECT vec_id, centroid_id, dist FROM (
-        |  SELECT vec_id, centroid_id, dist,
-        |         row_number() OVER (PARTITION BY vec_id ORDER BY dist, centroid_id) AS rn
-        |  FROM d3) WHERE rn = 1""".stripMargin,
-
-    // q70's two Lloyd rounds (c0 -> c2) feeding q69's probe/score shape
-    "q78_ivf_learned" -> q78IvfSql,
-
-    // identical PII preamble injected on both engines; RE2-compatible
-    // patterns (no lookarounds) so the chain compiles identically
-    "q79_pii_redact" ->
-      """WITH d AS (
-        |  SELECT doc_id,
-        |         'contact u' || doc_id || '@mail.example.com or +1-555-123-4567 from 10.20.30.40 ssn 123-45-6789 body: ' || text AS text
-        |  FROM documents)
-        |SELECT doc_id,
-        |  regexp_replace(regexp_replace(regexp_replace(regexp_replace(text,
-        |      '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}', '<EMAIL>', 'g'),
-        |      '\b(?:\d{1,3}\.){3}\d{1,3}\b', '<IP>', 'g'),
-        |      '(?:\+\d{1,3}[-. ]?)?\(?\b\d{2,4}\)?[-. ]\d{3,4}[-. ]\d{3,4}\b', '<PHONE>', 'g'),
-        |      '\b\d{3}-\d{2}-\d{4}\b', '<SSN>', 'g') AS text_redacted,
-        |  (len(regexp_extract_all(text, '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}'))
-        |   + len(regexp_extract_all(text, '\b(?:\d{1,3}\.){3}\d{1,3}\b'))
-        |   + len(regexp_extract_all(text, '(?:\+\d{1,3}[-. ]?)?\(?\b\d{2,4}\)?[-. ]\d{3,4}[-. ]\d{3,4}\b'))
-        |   + len(regexp_extract_all(text, '\b\d{3}-\d{2}-\d{4}\b')))::BIGINT AS n_redactions
-        |FROM d""".stripMargin,
-
-    // step = 32 - 8 = 24; slice clamps at the end on both engines.
-    // starts stop at len - overlap - 1: a start inside the overlap
-    // region would yield a chunk fully contained in its predecessor
-    "q83_chunk_words" ->
-      """WITH w AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
-        |s AS (SELECT doc_id, ws,
-        |             unnest(generate_series(0, greatest(len(ws) - 1 - 8, 0), 24)) AS start_word
-        |      FROM w)
-        |SELECT doc_id, (start_word // 24)::BIGINT AS chunk_id,
-        |       start_word::BIGINT AS start_word,
-        |       len(ws[start_word + 1 : start_word + 32])::BIGINT AS n_words,
-        |       array_to_string(ws[start_word + 1 : start_word + 32], ' ') AS chunk
-        |FROM s""".stripMargin,
-
-    // bands: train < 9000, val < 9500, test otherwise (1/10000 units)
-    "q84_dataset_split" ->
-      """SELECT doc_id, source,
-        |  CASE WHEN ('0x'||substr(md5(doc_id::VARCHAR),1,15))::BIGINT % 10000 < 9000 THEN 'train'
-        |       WHEN ('0x'||substr(md5(doc_id::VARCHAR),1,15))::BIGINT % 10000 < 9500 THEN 'val'
-        |       ELSE 'test' END AS split
-        |FROM documents""".stripMargin,
-
-    "q82_quality_deciles" ->
-      """WITH c AS (
-        |  SELECT doc_id,
-        |    len(string_split(text, ' '))::BIGINT AS n_words,
-        |    len(list_distinct(string_split(text, ' ')))::BIGINT AS n_distinct_words,
-        |    len(list_filter(string_split(text, ' '),
-        |        w -> list_contains(['the','a','of','and','in','to','is','on','for','with'], w)))::BIGINT AS stopword_cnt
-        |  FROM documents),
-        |q AS (
-        |  SELECT doc_id,
-        |    round(0.4 * least(n_words::DOUBLE / 100.0, 1.0)
-        |        + 0.4 * (n_distinct_words::DOUBLE / n_words::DOUBLE)
-        |        + 0.2 * least(5.0 * stopword_cnt::DOUBLE / n_words::DOUBLE, 1.0), 6) AS quality
-        |  FROM c)
-        |SELECT doc_id, quality,
-        |       ntile(10) OVER (ORDER BY quality, doc_id) AS bucket
-        |FROM q""".stripMargin,
-
-    "q80_unigram_logprob" ->
-      """WITH w AS (SELECT doc_id, unnest(string_split(text, ' ')) AS term FROM documents),
-        |tf AS (SELECT doc_id, term, count(*)::BIGINT AS tf FROM w GROUP BY 1, 2),
-        |wc AS (SELECT term, count(*)::BIGINT AS cnt FROM w GROUP BY 1),
-        |tot AS (SELECT count(*)::BIGINT AS total FROM w)
-        |SELECT doc_id, sum(tf)::BIGINT AS n_words,
-        |       round(list_sum(list(tf * ln(cnt::DOUBLE / total) ORDER BY term)) / sum(tf), 6) AS avg_logprob
-        |FROM tf JOIN wc USING (term) CROSS JOIN tot
-        |GROUP BY doc_id""".stripMargin,
-
-    // the q68 winnowing chain on both slices, then the q72 overlap shape
-    "q81_winnow_contamination" ->
-      """WITH ch AS (
-        |  SELECT doc_id, source,
-        |    CASE WHEN length(text) = 0 THEN [0]::BIGINT[]
-        |         ELSE list_transform(generate_series(1, greatest(length(text) - 7, 1)),
-        |      i -> list_reduce(list_transform(generate_series(i, least(i + 7, length(text))),
-        |             j -> unicode(text[j])::BIGINT),
-        |           (a, c) -> (a * 257 + c) % 1000000007)) END AS hs
-        |  FROM documents WHERE source IN ('src0', 'src1')),
-        |f AS (
-        |  SELECT doc_id, source,
-        |         list_distinct(list_transform(generate_series(1, greatest(len(hs) - 15, 1)),
-        |                       i -> list_min(hs[i:i+15]))) AS fps
-        |  FROM ch),
-        |cf AS (SELECT doc_id, unnest(fps) AS fp FROM f WHERE source = 'src0'),
-        |bf AS (SELECT doc_id AS bench_id, unnest(fps) AS fp FROM f WHERE source = 'src1'),
-        |keep AS (SELECT fp FROM (SELECT fp, count(*) AS df_cnt FROM bf GROUP BY fp)
-        |         WHERE df_cnt <= 1000)
-        |SELECT cf.doc_id, bf.bench_id, count(*)::BIGINT AS shared_fps
-        |FROM cf JOIN keep USING (fp) JOIN bf USING (fp)
-        |GROUP BY 1, 2""".stripMargin,
-
-    "q71_repetition" ->
-      """WITH w AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
-        |g AS (
-        |  SELECT doc_id, ws[i] || ' ' || ws[i+1] AS gram
-        |  FROM (SELECT doc_id, ws, unnest(generate_series(1, len(ws) - 1)) AS i FROM w)),
-        |c AS (SELECT doc_id, gram, count(*) AS cnt FROM g GROUP BY doc_id, gram)
-        |SELECT doc_id, sum(cnt)::BIGINT AS n_grams,
-        |       round(sum(CASE WHEN cnt >= 2 THEN cnt ELSE 0 END)::DOUBLE / sum(cnt)::DOUBLE, 6) AS dup_gram_frac,
-        |       round(max(cnt)::DOUBLE / sum(cnt)::DOUBLE, 6) AS top_gram_frac
-        |FROM c GROUP BY doc_id""".stripMargin,
-
-    "q72_contamination" ->
-      """WITH d AS (SELECT doc_id, source, string_split(text, ' ') AS ws FROM documents),
-        |cg AS (SELECT DISTINCT doc_id, array_to_string(ws[i:i+2], ' ') AS gram
-        |       FROM (SELECT doc_id, ws, unnest(generate_series(1, len(ws) - 2)) AS i
-        |             FROM d WHERE source = 'src0')),
-        |bg AS (SELECT DISTINCT doc_id AS bench_id, array_to_string(ws[i:i+2], ' ') AS gram
-        |       FROM (SELECT doc_id, ws, unnest(generate_series(1, len(ws) - 2)) AS i
-        |             FROM d WHERE source = 'src1')),
-        |keep AS (SELECT gram FROM (SELECT gram, count(*) AS df_cnt FROM bg GROUP BY gram)
-        |         WHERE df_cnt <= 1000)
-        |SELECT cg.doc_id, bg.bench_id, count(*)::BIGINT AS shared_ngrams
-        |FROM cg JOIN keep USING (gram) JOIN bg USING (gram)
-        |GROUP BY cg.doc_id, bg.bench_id""".stripMargin,
-
-    "q73_window_funnel" ->
-      """WITH e AS (SELECT user_id, event_type, ts FROM events),
-        |t1 AS (SELECT user_id, min(ts) AS t1 FROM e WHERE event_type = 'view' GROUP BY 1),
-        |t2 AS (SELECT t1.user_id, t1.t1, min(e.ts) AS t2 FROM t1 JOIN e USING (user_id)
-        |       WHERE e.event_type = 'click' AND e.ts > t1.t1
-        |         AND e.ts <= t1.t1 + INTERVAL 2 DAY
-        |       GROUP BY 1, 2),
-        |t3 AS (SELECT t2.user_id, t2.t1, t2.t2, min(e.ts) AS t3 FROM t2 JOIN e USING (user_id)
-        |       WHERE e.event_type = 'purchase' AND e.ts > t2.t2
-        |         AND e.ts <= t2.t1 + INTERVAL 2 DAY
-        |       GROUP BY 1, 2, 3)
-        |SELECT t1.user_id,
-        |       (1 + CASE WHEN t2.t2 IS NULL THEN 0 ELSE 1 END
-        |          + CASE WHEN t3.t3 IS NULL THEN 0 ELSE 1 END)::INT AS depth,
-        |       epoch_us(t1.t1) AS t1_us, epoch_us(t2.t2) AS t2_us, epoch_us(t3.t3) AS t3_us
-        |FROM t1 LEFT JOIN t2 ON t1.user_id = t2.user_id
-        |        LEFT JOIN t3 ON t1.user_id = t3.user_id""".stripMargin,
-
-    "q74_quantize_int8" ->
-      """WITH e AS (
-        |  SELECT vec_id, embedding,
-        |         list_max(list_transform(embedding, x -> abs(x::DOUBLE))) AS maxabs
-        |  FROM embeddings),
-        |f AS (SELECT vec_id, embedding, maxabs, round(maxabs / 127.0, 6) AS scale
-        |      FROM e WHERE maxabs > 0)
-        |SELECT vec_id, (i - 1)::INT AS pos,
-        |       round(embedding[i]::DOUBLE / maxabs * 127.0)::INT AS q,
-        |       scale
-        |FROM (SELECT vec_id, embedding, maxabs, scale,
-        |             unnest(generate_series(1, len(embedding))) AS i
-        |      FROM f)""".stripMargin,
-
-    "q75_cohort_retention" ->
-      """WITH a AS (SELECT user_id, date_trunc('week', min(ts)) AS cohort_week
-        |           FROM events WHERE event_type = 'signup' GROUP BY 1),
-        |s AS (SELECT cohort_week, count(DISTINCT user_id) AS cohort_size FROM a GROUP BY 1),
-        |act AS (SELECT cohort_week, week_n, count(DISTINCT user_id) AS active_users FROM (
-        |          SELECT a.cohort_week, e.user_id,
-        |                 ((epoch_us(e.ts)//1000000) - (epoch_us(a.cohort_week)//1000000)) // 604800 AS week_n
-        |          FROM events e JOIN a USING (user_id)) t
-        |        WHERE week_n >= 0 GROUP BY 1, 2)
-        |SELECT epoch_us(act.cohort_week)//1000000 AS cohort_week_s, week_n::BIGINT AS week_n,
-        |       active_users::BIGINT AS active_users, s.cohort_size::BIGINT AS cohort_size,
-        |       round(active_users::DOUBLE / s.cohort_size, 6) AS retention_rate
-        |FROM act JOIN s USING (cohort_week)""".stripMargin,
-
-    "q76_transitions" ->
-      """SELECT from_type, to_type, count(*)::BIGINT AS cnt FROM (
-        |  SELECT event_type AS from_type,
-        |         lead(event_type) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS to_type
-        |  FROM events) t
-        |WHERE to_type IS NOT NULL GROUP BY 1, 2""".stripMargin,
-
-    "q77_pack_sequences" ->
-      """WITH t AS (
-        |  SELECT doc_id,
-        |         len(regexp_extract_all(text, '[a-z]+|[0-9]+|[^a-z0-9 ]'))::BIGINT AS token_cnt
-        |  FROM documents),
-        |c AS (
-        |  SELECT doc_id, token_cnt,
-        |         (sum(token_cnt) OVER (ORDER BY doc_id ROWS UNBOUNDED PRECEDING)
-        |          - token_cnt)::BIGINT AS start
-        |  FROM t WHERE token_cnt > 0)
-        |SELECT doc_id, token_cnt, start,
-        |       start // 512 AS first_bin,
-        |       (start + token_cnt - 1) // 512 AS last_bin,
-        |       start % 512 AS offset_in_first
-        |FROM c""".stripMargin,
-
-    "q34_top_terms" ->
-      """SELECT term, count(*) AS doc_freq FROM (
-        |  SELECT DISTINCT doc_id, unnest(string_split(text, ' ')) AS term
-        |  FROM documents)
-        |GROUP BY term ORDER BY doc_freq DESC, term ASC LIMIT 20""".stripMargin,
-
-    "q47_stratified_sample" ->
-      """SELECT doc_id, source FROM documents
-        |WHERE ('0x'||substr(md5(doc_id::VARCHAR),1,15))::BIGINT % 10000 <
-        |      floor(CASE WHEN source = 'src0' THEN 0.5
-        |                 WHEN source = 'src1' THEN 0.25
-        |                 ELSE 0.1 END * 10000)""".stripMargin,
-    "q01_pv_hourly" ->
-      """SELECT CAST(floor(epoch(ts)/3600) AS BIGINT)*3600 AS window_start,
-        |       CAST(floor(epoch(ts)/3600) AS BIGINT)*3600 + 3600 AS window_end,
-        |       count(*) AS cnt
-        |FROM events WHERE event_type = 'view' GROUP BY 1, 2""".stripMargin,
-
-    "q02_uv_hourly" ->
-      """SELECT CAST(floor(epoch(ts)/3600) AS BIGINT)*3600 AS window_start,
-        |       CAST(floor(epoch(ts)/3600) AS BIGINT)*3600 + 3600 AS window_end,
-        |       count(DISTINCT user_id) AS uv
-        |FROM events WHERE event_type = 'view' GROUP BY 1, 2""".stripMargin,
-
-    "q04_hot_items_top5" ->
-      """WITH v AS (
-        |  SELECT json_extract_string(props, '$.k')::BIGINT AS item_id,
-        |         CAST(floor(epoch(ts)/300) AS BIGINT)*300 AS slot
-        |  FROM events WHERE event_type = 'view'),
-        |c AS (
-        |  SELECT slot - 300*g AS window_start, item_id, count(*) AS cnt
-        |  FROM v CROSS JOIN generate_series(0, 11) t(g)
-        |  GROUP BY 1, 2),
-        |r AS (
-        |  SELECT window_start, window_start + 3600 AS window_end, item_id, cnt,
-        |         row_number() OVER (PARTITION BY window_start
-        |                            ORDER BY cnt DESC, item_id ASC) AS rank
-        |  FROM c)
-        |SELECT window_start, window_end, item_id, cnt, rank
-        |FROM r WHERE rank <= 5""".stripMargin,
-
-    "q05_marketing_total" ->
-      """WITH e AS (
-        |  SELECT CAST(floor(epoch(ts)/600) AS BIGINT)*600 - 600*g AS window_start
-        |  FROM events CROSS JOIN generate_series(0, 5) t(g)
-        |  WHERE event_type <> 'error')
-        |SELECT window_start, window_start + 3600 AS window_end, count(*) AS cnt
-        |FROM e GROUP BY 1, 2""".stripMargin,
-
-    "q06_marketing_by_channel" ->
-      """WITH e AS (
-        |  SELECT event_type,
-        |         CAST(floor(epoch(ts)/600) AS BIGINT)*600 - 600*g AS window_start
-        |  FROM events CROSS JOIN generate_series(0, 5) t(g)
-        |  WHERE event_type <> 'error')
-        |SELECT window_start, window_start + 3600 AS window_end, event_type,
-        |       count(*) AS cnt
-        |FROM e GROUP BY 1, 2, 3""".stripMargin,
-
-    "q07_ad_count_by_geo" ->
-      """WITH e AS (
-        |  SELECT json_extract_string(props, '$.k')::BIGINT % 10 AS province_id,
-        |         CAST(floor(epoch(ts)/600) AS BIGINT)*600 - 600*g AS window_start
-        |  FROM events CROSS JOIN generate_series(0, 5) t(g)
-        |  WHERE event_type = 'click')
-        |SELECT window_start, window_start + 3600 AS window_end, province_id,
-        |       count(*) AS cnt
-        |FROM e GROUP BY 1, 2, 3""".stripMargin,
-
-    "q08_click_blacklist" ->
-      """SELECT user_id, json_extract_string(props, '$.k')::BIGINT AS ad_id,
-        |       CAST(floor(epoch(ts)/86400) AS BIGINT)*86400 AS day_start,
-        |       count(*) AS cnt
-        |FROM events WHERE event_type = 'click'
-        |GROUP BY 1, 2, 3 HAVING count(*) >= 2""".stripMargin,
-
-    "q09_login_fail" ->
-      """WITH o AS (
-        |  SELECT user_id, ts, event_id, event_type,
-        |         lag(event_type) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev_type,
-        |         lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev_ts
-        |  FROM events)
-        |SELECT user_id, event_id AS warn_id,
-        |       CAST(floor(epoch(prev_ts)) AS BIGINT) AS first_fail,
-        |       CAST(floor(epoch(ts)) AS BIGINT) AS last_fail
-        |FROM o
-        |WHERE event_type = 'error' AND prev_type = 'error'
-        |  AND ts <= prev_ts + INTERVAL 2 HOUR""".stripMargin,
-
-    "q10_order_timeout" ->
-      """SELECT s.event_id AS order_id, s.user_id,
-        |       CAST(floor(epoch(s.ts)) AS BIGINT) AS create_ts,
-        |       CASE WHEN count(p.user_id) > 0 THEN 'payed successfully'
-        |            ELSE 'timeout' END AS status
-        |FROM (SELECT * FROM events WHERE event_type = 'signup') s
-        |LEFT JOIN (SELECT * FROM events WHERE event_type = 'purchase') p
-        |  ON p.user_id = s.user_id AND p.ts > s.ts
-        | AND p.ts <= s.ts + INTERVAL 24 HOUR
-        |GROUP BY 1, 2, 3""".stripMargin,
-
-    "q11_tx_match" ->
-      """WITH p AS (
-        |  SELECT user_id, CAST(floor(epoch(ts)/86400) AS BIGINT)*86400 AS bucket_start,
-        |         count(*) AS pay_cnt
-        |  FROM events WHERE event_type = 'purchase' GROUP BY 1, 2),
-        |r AS (
-        |  SELECT user_id, CAST(floor(epoch(ts)/86400) AS BIGINT)*86400 AS bucket_start,
-        |         count(*) AS receipt_cnt
-        |  FROM events WHERE event_type = 'click' GROUP BY 1, 2)
-        |SELECT COALESCE(p.user_id, r.user_id) AS user_id,
-        |       COALESCE(p.bucket_start, r.bucket_start) AS bucket_start,
-        |       COALESCE(p.pay_cnt, 0) AS pay_cnt,
-        |       COALESCE(r.receipt_cnt, 0) AS receipt_cnt,
-        |       CASE WHEN p.user_id IS NOT NULL AND r.user_id IS NOT NULL THEN 'matched'
-        |            WHEN p.user_id IS NOT NULL THEN 'unmatched_left'
-        |            ELSE 'unmatched_right' END AS tag
-        |FROM p FULL OUTER JOIN r
-        |  ON p.user_id = r.user_id AND p.bucket_start = r.bucket_start""".stripMargin,
-
-    "q12_interval_join" ->
-      """SELECT p.event_id AS pay_id, c.event_id AS click_id, p.user_id
-        |FROM (SELECT * FROM events WHERE event_type = 'purchase') p
-        |JOIN (SELECT * FROM events WHERE event_type = 'click') c
-        |  ON c.user_id = p.user_id
-        | AND c.ts >= p.ts - INTERVAL 6 HOUR AND c.ts <= p.ts""".stripMargin,
-
-    "q13_pricing_summary" ->
-      """SELECT l_returnflag, l_linestatus,
-        |       round(sum(CAST(l_quantity AS DECIMAL(28,10))), 2)::DOUBLE AS sum_qty,
-        |       round(sum(CAST(l_extendedprice AS DECIMAL(28,10))), 2)::DOUBLE AS sum_base_price,
-        |       round(sum(CAST(l_extendedprice * (1.0 - l_discount) AS DECIMAL(28,10))), 2)::DOUBLE AS sum_disc_price,
-        |       count(*) AS cnt
-        |FROM lineitem GROUP BY 1, 2""".stripMargin,
-
-    "q14_revenue_by_nation" ->
-      """SELECT n_name,
-        |       round(sum(CAST(l_extendedprice * (1.0 - l_discount) AS DECIMAL(28,10))), 2)::DOUBLE AS revenue,
-        |       count(*) AS cnt
-        |FROM lineitem
-        |JOIN orders ON l_orderkey = o_orderkey
-        |JOIN customer ON o_custkey = c_custkey
-        |JOIN nation ON c_nationkey = n_nationkey
-        |GROUP BY 1""".stripMargin,
-
-    "q15_top_customers" ->
-      """SELECT o_custkey,
-        |       round(sum(CAST(l_extendedprice * (1.0 - l_discount) AS DECIMAL(28,10))), 2)::DOUBLE AS revenue
-        |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        |GROUP BY 1 ORDER BY revenue DESC, o_custkey ASC LIMIT 10""".stripMargin,
-
-    "q57_disjunctive_band_revenue" ->
-      """SELECT p_brand,
-        |       round(sum(CAST(l_extendedprice * (1.0 - l_discount) AS DECIMAL(28,10))), 2)::DOUBLE AS revenue,
-        |       count(*) AS cnt
-        |FROM lineitem JOIN part ON l_partkey = p_partkey AND (
-        |  (p_brand = 'Brand#1' AND p_size BETWEEN 1 AND 15 AND l_quantity BETWEEN 1 AND 20)
-        |  OR (p_brand = 'Brand#13' AND p_type IN ('PROMO', 'ECONOMY') AND l_quantity BETWEEN 10 AND 30)
-        |  OR (p_type = 'LARGE' AND p_size BETWEEN 20 AND 40 AND l_quantity BETWEEN 20 AND 50))
-        |GROUP BY 1""".stripMargin,
-
-    "q58_market_share" ->
-      """WITH y AS (
-        |  SELECT year(o_orderdate)::BIGINT AS o_year,
-        |         round(sum(CASE WHEN n2.n_name = 'NATION_2'
-        |                        THEN CAST(l_extendedprice * (1.0 - l_discount) AS DECIMAL(28,10))
-        |                        ELSE CAST(0 AS DECIMAL(28,10)) END), 2)::DOUBLE AS nation_rev,
-        |         round(sum(CAST(l_extendedprice * (1.0 - l_discount) AS DECIMAL(28,10))), 2)::DOUBLE AS total_rev
-        |  FROM lineitem
-        |  JOIN part ON l_partkey = p_partkey AND p_type = 'STANDARD'
-        |  JOIN orders ON l_orderkey = o_orderkey
-        |  JOIN customer ON o_custkey = c_custkey
-        |  JOIN nation n1 ON c_nationkey = n1.n_nationkey
-        |  JOIN region ON n1.n_regionkey = r_regionkey AND r_name = 'ASIA'
-        |  JOIN supplier ON l_suppkey = s_suppkey
-        |  JOIN nation n2 ON s_nationkey = n2.n_nationkey
-        |  GROUP BY 1)
-        |SELECT o_year, nation_rev, total_rev,
-        |       round(nation_rev / total_rev, 6) AS mkt_share
-        |FROM y""".stripMargin,
-
-    "q59_embedding_near_dup" ->
-      """WITH b AS (
-        |  SELECT vec_id, embedding,
-        |    list_sum(list_transform(generate_series(0, 7), p ->
-        |      CASE WHEN list_sum(list_transform(generate_series(1, 64), d ->
-        |             embedding[d]::DOUBLE *
-        |             ((('0x'||substr(md5(p::VARCHAR || '_' || d::VARCHAR),1,15))::BIGINT % 2001 - 1000)::DOUBLE / 1000.0)
-        |           )) >= 0 THEN (1::BIGINT << p) ELSE 0::BIGINT END))::BIGINT AS bucket
-        |  FROM embeddings),
-        |e AS (
-        |  SELECT * FROM (
-        |    SELECT vec_id, embedding, bucket,
-        |           list_sum(list_transform(embedding, x -> x::DOUBLE * x::DOUBLE)) AS norm2
-        |    FROM b)
-        |  WHERE norm2 > 0),
-        |pairs AS (
-        |  SELECT a.vec_id AS vec_a, c.vec_id AS vec_b,
-        |         round(list_sum(list_transform(generate_series(1, 64),
-        |             i -> a.embedding[i]::DOUBLE * c.embedding[i]::DOUBLE))
-        |           / sqrt(a.norm2 * c.norm2), 6) AS cosine
-        |  FROM e a JOIN e c ON a.bucket = c.bucket AND a.vec_id < c.vec_id)
-        |SELECT vec_a, vec_b, cosine FROM pairs WHERE cosine >= 0.3""".stripMargin,
-
-    "q60_small_quantity_revenue" ->
-      """WITH aq AS (
-        |  SELECT l_partkey AS ap_key, sum(l_quantity) AS sum_qty,
-        |         count(*) AS qty_cnt
-        |  FROM lineitem GROUP BY 1)
-        |SELECT p_brand,
-        |       round(round(sum(CAST(l_extendedprice AS DECIMAL(28,10))), 2)::DOUBLE / 7.0, 2) AS avg_yearly,
-        |       count(*) AS cnt
-        |FROM lineitem
-        |JOIN aq ON l_partkey = ap_key
-        |JOIN part ON l_partkey = p_partkey
-        |WHERE l_quantity * 5 * qty_cnt < sum_qty
-        |GROUP BY 1""".stripMargin,
-
-    "q61_rich_inactive_customers" ->
-      """WITH t AS (
-        |  SELECT sum(CAST(c_acctbal AS DECIMAL(18,2)))::DOUBLE AS sum_pos,
-        |         count(*) AS cnt_pos
-        |  FROM customer WHERE c_acctbal > 0)
-        |SELECT c_mktsegment, count(*) AS num_cust,
-        |       round(sum(CAST(c_acctbal AS DECIMAL(18,2))), 2)::DOUBLE AS total_bal
-        |FROM customer, t
-        |WHERE c_acctbal * cnt_pos > sum_pos
-        |  AND NOT EXISTS (SELECT 1 FROM orders
-        |                  WHERE o_custkey = c_custkey
-        |                    AND o_orderdate >= DATE '2000-01-01')
-        |GROUP BY 1""".stripMargin,
-
-    "q62_top_supplier" ->
-      """WITH sr AS (
-        |  SELECT l_suppkey,
-        |         round(sum(CAST(l_extendedprice * (1.0 - l_discount) AS DECIMAL(28,10))), 2)::DOUBLE AS total_rev
-        |  FROM lineitem
-        |  WHERE l_shipdate >= DATE '2000-01-01' AND l_shipdate < DATE '2000-07-01'
-        |  GROUP BY 1)
-        |SELECT s_suppkey, s_name, total_rev
-        |FROM sr JOIN supplier ON l_suppkey = s_suppkey
-        |WHERE total_rev = (SELECT max(total_rev) FROM sr)""".stripMargin,
-
-    "q63_forecast_revenue" ->
-      """SELECT round(sum(CAST(l_extendedprice * l_discount AS DECIMAL(28,10))), 2)::DOUBLE AS revenue,
-        |       count(*) AS cnt
-        |FROM lineitem
-        |WHERE l_shipdate >= DATE '2000-01-01' AND l_shipdate < DATE '2001-01-01'
-        |  AND l_discount BETWEEN 0.05 AND 0.07 AND l_quantity < 24""".stripMargin,
-
-    "q64_ann_multiprobe" ->
-      """WITH fam AS (SELECT unnest(generate_series(0, 1)) AS family),
-        |fb AS (
-        |  SELECT e.vec_id, fam.family,
-        |    list_sum(list_transform(generate_series(0, 7), p ->
-        |      CASE WHEN list_sum(list_transform(generate_series(1, 64), d ->
-        |             e.embedding[d]::DOUBLE *
-        |             ((('0x'||substr(md5('f' || fam.family::VARCHAR || '_' || p::VARCHAR || '_' || d::VARCHAR),1,15))::BIGINT % 2001 - 1000)::DOUBLE / 1000.0)
-        |           )) >= 0 THEN (1::BIGINT << p) ELSE 0::BIGINT END))::BIGINT AS bucket
-        |  FROM embeddings e CROSS JOIN fam),
-        |cand AS (
-        |  SELECT DISTINCT a.vec_id AS query_id, b.vec_id AS neighbor_id
-        |  FROM fb a JOIN fb b ON a.family = b.family AND a.bucket = b.bucket
-        |                     AND a.vec_id <> b.vec_id),
-        |e2 AS (
-        |  SELECT * FROM (
-        |    SELECT vec_id, embedding,
-        |           list_sum(list_transform(embedding, x -> x::DOUBLE * x::DOUBLE)) AS norm2
-        |    FROM embeddings)
-        |  WHERE norm2 > 0),
-        |sc AS (
-        |  SELECT c.query_id, c.neighbor_id,
-        |         round(list_sum(list_transform(generate_series(1, 64),
-        |             i -> q.embedding[i]::DOUBLE * n.embedding[i]::DOUBLE))
-        |           / sqrt(q.norm2 * n.norm2), 6) AS score
-        |  FROM cand c
-        |  JOIN e2 q ON c.query_id = q.vec_id
-        |  JOIN e2 n ON c.neighbor_id = n.vec_id),
-        |r AS (
-        |  SELECT query_id, neighbor_id, score,
-        |         row_number() OVER (PARTITION BY query_id
-        |                            ORDER BY score DESC, neighbor_id ASC) AS rn
-        |  FROM sc)
-        |SELECT query_id, neighbor_id, score FROM r WHERE rn = 1""".stripMargin,
-
-    // replays the WHOLE CorpusPipeline: sample(0.8, salt '') →
-    // exact-dedup (keep min doc_id per md5(text)) → LSH near-dedup
-    // (drop doc_b of every colliding band pair; no oversized buckets
-    // at this cap) → quality >= 0.4 → repetition dup_gram_frac <= 0.2
-    // (violators-only anti-join: gram-less docs pass). Stage counts and
-    // the final kept set in one frame
-    "q85_corpus_pipeline" ->
-      s"""WITH $duckCorpusPrefix,
-         |${duckCorpusTail("nd")}
-         |SELECT 'kept' AS kind, doc_id, source FROM rk
-         |UNION ALL SELECT 'stage:input', (SELECT count(*) FROM documents), NULL
-         |UNION ALL SELECT 'stage:sampled', (SELECT count(*) FROM sampled), NULL
-         |UNION ALL SELECT 'stage:exact_dedup', (SELECT count(*) FROM ex), NULL
-         |UNION ALL SELECT 'stage:near_dedup', (SELECT count(*) FROM nd), NULL
-         |UNION ALL SELECT 'stage:quality', (SELECT count(*) FROM qk), NULL
-         |UNION ALL SELECT 'stage:repetition', (SELECT count(*) FROM rk), NULL
-         |UNION ALL SELECT 'stage:mixed', (SELECT count(*) FROM rk), NULL""".stripMargin,
-
-    // q85 WITH the optional embedding near-dup stage: SRP-bucket
-    // blocking + exact in-bucket cosine over the near-dedup survivors'
-    // vectors (the q59 machinery), losers dropped before the quality
-    // gate — the full CorpusPipeline composition including its
-    // vector-space member
-    "q93_corpus_pipeline_emb" ->
-      s"""WITH $duckCorpusPrefix,
-         |eb AS (
-         |  SELECT e2.vec_id, e2.embedding,
-         |    list_sum(list_transform(generate_series(0, 7), p ->
-         |      CASE WHEN list_sum(list_transform(generate_series(1, 64), d ->
-         |             e2.embedding[d]::DOUBLE *
-         |             ((('0x'||substr(md5(p::VARCHAR || '_' || d::VARCHAR),1,15))::BIGINT % 2001 - 1000)::DOUBLE / 1000.0)
-         |           )) >= 0 THEN (1::BIGINT << p) ELSE 0::BIGINT END))::BIGINT AS bucket
-         |  FROM embeddings e2 JOIN nd ON e2.vec_id = nd.doc_id),
-         |en AS (
-         |  SELECT * FROM (
-         |    SELECT vec_id, embedding, bucket,
-         |           list_sum(list_transform(embedding, x -> x::DOUBLE * x::DOUBLE)) AS norm2
-         |    FROM eb)
-         |  WHERE norm2 > 0),
-         |el AS (
-         |  SELECT DISTINCT c.vec_id AS loser FROM en a JOIN en c
-         |    ON a.bucket = c.bucket AND a.vec_id < c.vec_id
-         |  WHERE round(list_sum(list_transform(generate_series(1, 64),
-         |            i -> a.embedding[i]::DOUBLE * c.embedding[i]::DOUBLE))
-         |          / sqrt(a.norm2 * c.norm2), 6) >= 0.3),
-         |ek AS (SELECT * FROM nd WHERE doc_id NOT IN (SELECT loser FROM el)),
-         |${duckCorpusTail("ek")}
-         |SELECT 'kept' AS kind, doc_id, source FROM rk
-         |UNION ALL SELECT 'stage:input', (SELECT count(*) FROM documents), NULL
-         |UNION ALL SELECT 'stage:sampled', (SELECT count(*) FROM sampled), NULL
-         |UNION ALL SELECT 'stage:exact_dedup', (SELECT count(*) FROM ex), NULL
-         |UNION ALL SELECT 'stage:near_dedup', (SELECT count(*) FROM nd), NULL
-         |UNION ALL SELECT 'stage:embedding_dedup', (SELECT count(*) FROM ek), NULL
-         |UNION ALL SELECT 'stage:quality', (SELECT count(*) FROM qk), NULL
-         |UNION ALL SELECT 'stage:repetition', (SELECT count(*) FROM rk), NULL
-         |UNION ALL SELECT 'stage:mixed', (SELECT count(*) FROM rk), NULL""".stripMargin,
-
-    // replays Sampling.mixture exactly: per-stratum counts, the binding
-    // stratum (min count/share), the keep fractions (binding pinned to
-    // 1.0), then the salted hash-threshold filter. Shares are powers of
-    // two (weights 4:2:1:1 / 8) so every double step is bit-exact
-    "q86_mixture" ->
-      """WITH c AS (SELECT source, count(*) AS n FROM documents GROUP BY 1),
-        |w AS (SELECT * FROM (VALUES ('src0', 0.5), ('src1', 0.25),
-        |                            ('src2', 0.125), ('src3', 0.125)) AS t(source, share)),
-        |p AS (SELECT c.source, c.n, w.share FROM c JOIN w USING (source) WHERE c.n > 0),
-        |bind AS (SELECT source, n / share AS scale FROM p
-        |         ORDER BY n / share LIMIT 1),
-        |f AS (SELECT p.source,
-        |             CASE WHEN p.source = (SELECT source FROM bind) THEN 1.0
-        |                  ELSE least(1.0, p.share * (SELECT scale FROM bind) / p.n)
-        |             END AS frac
-        |      FROM p)
-        |SELECT d.doc_id, d.source
-        |FROM documents d JOIN f ON d.source = f.source
-        |WHERE ('0x'||substr(md5('mixture:' || d.doc_id::VARCHAR),1,15))::BIGINT % 10000
-        |      < floor(f.frac * 10000)""".stripMargin,
-
-    // recall@5 of learned-IVF (q78) vs brute-force (q25), per query —
-    // both sides' SQL is the shared val, wrapped as nested CTEs
-    "q87_ivf_recall" ->
-      s"""WITH ivf AS ($q78IvfSql),
-         |bf AS ($q25KnnSql),
-         |hits AS (
-         |  SELECT query_id, count(*) AS h
-         |  FROM ivf JOIN bf USING (query_id, neighbor_id) GROUP BY 1),
-         |kk AS (SELECT query_id, count(*) AS k FROM bf GROUP BY 1)
-         |SELECT kk.query_id,
-         |       round(coalesce(h, 0)::DOUBLE / k::DOUBLE, 6) AS recall_at_5
-         |FROM kk LEFT JOIN hits USING (query_id)""".stripMargin,
-
-    "q88_pq_encode" ->
-      s"""WITH $duckPqBody
-         |SELECT vec_id, sub, code FROM codes""".stripMargin,
-
-    // ADC: per-query (sub, code) partial squared distances as
-    // DECIMAL(28,10) — exact, order-independent sums on both engines
-    "q89_pq_adc" ->
-      s"""WITH $duckPqBody,
-         |lut AS (SELECT s.vec_id AS query_id, s.sub, c.code,
-         |               round(list_sum(list_transform(generate_series(1, 8),
-         |                 i -> (s.v[i] - c.c_vec[i]) * (s.v[i] - c.c_vec[i]))), 6)::DECIMAL(28,10) AS pd
-         |        FROM sv s JOIN cb c ON s.sub = c.sub WHERE s.vec_id < 10),
-         |sc AS (SELECT l.query_id, cd.vec_id AS neighbor_id, sum(l.pd)::DOUBLE AS approx_dist
-         |       FROM codes cd JOIN lut l ON cd.sub = l.sub AND cd.code = l.code
-         |       WHERE cd.vec_id <> l.query_id
-         |       GROUP BY 1, 2),
-         |r AS (SELECT query_id, neighbor_id, approx_dist,
-         |             row_number() OVER (PARTITION BY query_id
-         |                                ORDER BY approx_dist, neighbor_id) AS rank
-         |      FROM sc)
-         |SELECT query_id, neighbor_id, approx_dist, rank FROM r WHERE rank <= 5""".stripMargin,
-
-    // post-retrain ADC ≡ a one-shot rebuild at model B: the SAME
-    // train+encode+ADC chain as q89, re-parameterized to the retrain
-    // state — corpus minus the erased ids {11, 13} (they shape
-    // neither the new codebooks nor the code table), seeds 4–7
-    "q298_vector_retrain" -> q298RetrainSql,
-
-    // recall@5 of the retrained store's serving ADC against exact
-    // cosine kNN over the SURVIVING corpus — the q108-shape audit
-    // pointed at the LIVE warehouse (the number an operator trends
-    // next to q299's reconstruction error)
-    "q300_retrain_recall" ->
-      s"""WITH adc AS ($q298RetrainSql),
-         |bf AS (${q25KnnSqlFor("vec_id NOT IN (11, 13)")}),
-         |hits AS (
-         |  SELECT query_id, count(*) AS h
-         |  FROM adc JOIN bf USING (query_id, neighbor_id) GROUP BY 1),
-         |kk AS (SELECT query_id, count(*) AS k FROM bf GROUP BY 1)
-         |SELECT kk.query_id,
-         |       round(coalesce(h, 0)::DOUBLE / k::DOUBLE, 6) AS recall_at_5
-         |FROM kk LEFT JOIN hits USING (query_id)""".stripMargin,
-
-    // the drift monitor replayed from scratch: encode the surviving
-    // corpus at the retrained model and fold the reconstruction
-    // errors with exact DECIMAL sums — one double division at the end
-    "q299_model_audit" ->
-      s"""WITH ${duckPqBodyFor("vec_id NOT IN (11, 13)",
-                               "vec_id >= 4 AND vec_id < 8")},
-         |qe AS (SELECT cd.vec_id,
-         |              sum(round(list_sum(list_transform(generate_series(1, 8),
-         |                i -> (s.v[i] - c.c_vec[i]) * (s.v[i] - c.c_vec[i]))), 6)::DECIMAL(28,10)) AS sq
-         |       FROM codes cd
-         |       JOIN sv s ON cd.vec_id = s.vec_id AND cd.sub = s.sub
-         |       JOIN cb c ON cd.sub = c.sub AND cd.code = c.code
-         |       GROUP BY 1),
-         |cents AS (SELECT vec_id AS centroid_id, embedding AS c_vec
-         |          FROM e WHERE vec_id IN (0, 1)),
-         |cd2 AS (SELECT e.vec_id,
-         |               round(sqrt(list_sum(list_transform(generate_series(1, 64),
-         |                 i -> (e.embedding[i]::DOUBLE - c.c_vec[i]::DOUBLE)
-         |                    * (e.embedding[i]::DOUBLE - c.c_vec[i]::DOUBLE)))), 6) AS dist
-         |        FROM e CROSS JOIN cents c),
-         |amin AS (SELECT vec_id, min(dist) AS dist FROM cd2 GROUP BY 1),
-         |j AS (SELECT qe.vec_id, qe.sq, amin.dist FROM qe JOIN amin USING (vec_id))
-         |SELECT count(*)::BIGINT AS n_probe,
-         |       round(sum(sq)::DOUBLE / count(*), 6) AS mse_quant,
-         |       round(sum(round(dist * dist, 6)::DECIMAL(28,10))::DOUBLE / count(*), 6) AS mse_coarse
-         |FROM j""".stripMargin,
-
-    "q90_subword_count" ->
-      s"""WITH RECURSIVE $duckSubwordBody
-         |SELECT doc_id, subword_cnt FROM sc""".stripMargin,
-
-    "q96_salted_join" ->
-      """SELECT l_orderkey, l_linenumber, l_suppkey AS suppkey, s_name
-        |FROM lineitem JOIN supplier ON l_suppkey = s_suppkey""".stripMargin,
-
-    "q101_fixed_size_sample" ->
-      """SELECT doc_id, source FROM (
-        |  SELECT doc_id, source,
-        |         row_number() OVER (PARTITION BY source
-        |           ORDER BY ('0x'||substr(md5('eval:' || doc_id::VARCHAR),1,15))::BIGINT,
-        |                    doc_id) AS rn
-        |  FROM documents)
-        |WHERE rn <= 5""".stripMargin,
-
-    // P(w|v) = c(v w)/Σ_w' c(v w'); in-order fold over bg for
-    // engine-stable double sums (the q80 convention)
-    "q97_bigram_logprob" ->
-      """WITH g AS (
-        |  SELECT doc_id, ws[i] || ' ' || ws[i+1] AS bg
-        |  FROM (SELECT doc_id, string_split(text, ' ') AS ws,
-        |               unnest(generate_series(1, len(string_split(text, ' ')) - 1)) AS i
-        |        FROM documents)),
-        |tf AS (SELECT doc_id, bg, count(*)::BIGINT AS tf FROM g GROUP BY 1, 2),
-        |bc AS (SELECT bg, sum(tf)::BIGINT AS cnt FROM tf GROUP BY 1),
-        |cc AS (SELECT string_split(bg, ' ')[1] AS ctx, sum(cnt)::BIGINT AS ctx_cnt
-        |       FROM bc GROUP BY 1)
-        |SELECT tf.doc_id, sum(tf.tf)::BIGINT AS n_bigrams,
-        |       round(list_sum(list(tf.tf * ln(bc.cnt::DOUBLE / cc.ctx_cnt::DOUBLE)
-        |                           ORDER BY tf.bg)) / sum(tf.tf), 6) AS avg_logprob
-        |FROM tf
-        |JOIN bc USING (bg)
-        |JOIN cc ON string_split(tf.bg, ' ')[1] = cc.ctx
-        |GROUP BY tf.doc_id""".stripMargin,
-
-    // residual IVF-PQ: residuals against the assigned coarse centroid,
-    // codebooks = initIds' residual subvectors (rounded), list-local
-    // query LUTs; DECIMAL sums as in q89 (shared val — q109's recall
-    // audit nests the same SQL)
-    "q98_ivfpq_residual" -> q98ResidualSql,
-
-    "q94_keep_first" ->
-      """SELECT user_id, event_id AS first_event,
-        |       CAST(floor(epoch(ts)) AS BIGINT) AS first_ts
-        |FROM (SELECT user_id, event_id, ts,
-        |             row_number() OVER (PARTITION BY user_id
-        |                                ORDER BY ts, event_id) AS rn
-        |      FROM events)
-        |WHERE rn = 1""".stripMargin,
-
-    // over-cap buckets (size > 2): every member except the min id,
-    // distinct across buckets
-    "q95_lsh_oversized" ->
-      s"""$duckBandsCte,
-         |ov AS (
-         |  SELECT band_id, band_hash, min(doc_id) AS keep, count(*) AS sz
-         |  FROM b GROUP BY 1, 2 HAVING count(*) > 2)
-         |SELECT DISTINCT b.doc_id AS loser_id
-         |FROM b JOIN ov USING (band_id, band_hash)
-         |WHERE b.doc_id <> ov.keep""".stripMargin,
-
-    // coarse candidates exactly as in q69, ADC scoring exactly as in
-    // q89 — composed
-    "q92_ivfpq" -> q92IvfPqSql(),
-
-    // recall@5 of the compressed-domain IVF-PQ search (q92) against
-    // exact brute force (q25) — the q87 audit shape over ADC scores
-    "q108_ivfpq_recall" ->
-      s"""WITH adc AS (${q92IvfPqSql()}),
-         |bf AS ($q25KnnSql),
-         |hits AS (
-         |  SELECT query_id, count(*) AS h
-         |  FROM adc JOIN bf USING (query_id, neighbor_id) GROUP BY 1),
-         |kk AS (SELECT query_id, count(*) AS k FROM bf GROUP BY 1)
-         |SELECT kk.query_id,
-         |       round(coalesce(h, 0)::DOUBLE / k::DOUBLE, 6) AS recall_at_5
-         |FROM kk LEFT JOIN hits USING (query_id)""".stripMargin,
-
-    // q77's packing shape over the subword currency
-    "q91_pack_subword" ->
-      s"""WITH RECURSIVE $duckSubwordBody,
-         |c AS (
-         |  SELECT doc_id, subword_cnt,
-         |         (sum(subword_cnt) OVER (ORDER BY doc_id ROWS UNBOUNDED PRECEDING)
-         |          - subword_cnt)::BIGINT AS start
-         |  FROM sc WHERE subword_cnt > 0)
-         |SELECT doc_id, subword_cnt, start,
-         |       start // 512 AS first_bin,
-         |       (start + subword_cnt - 1) // 512 AS last_bin,
-         |       start % 512 AS offset_in_first
-         |FROM c""".stripMargin,
-
-    // q33's assignment head, q59's pairwise-cosine body scoped to the
-    // cluster, min-id keeper per loser (shared val — q117's chain
-    // nests the same body)
-    "q102_semantic_dedup" -> q102SemDedupSql,
-
-    // add-one smoothed target-vs-corpus unigram LLR (q80's fold shape),
-    // then the q66 hash-threshold keep on exp(llr/T) (parameterized
-    // body shared with q117's chain)
-    "q103_importance_resample" -> duckDsirSql("documents"),
-
-    // integer floor-div allocation; the remainder keep is the
-    // cross-multiplied hash compare in HUGEINT — exact on both engines
-    // (parameterized body shared with q117's chain)
-    "q104_epoch_allocation" -> duckEpochAllocSql("documents"),
-
-    // q33's assignment head, q101's per-stratum rank over the cluster
-    "q105_cluster_balanced_sample" ->
-      """WITH e0 AS (SELECT vec_id, embedding FROM embeddings),
-        |c AS (SELECT vec_id AS centroid_id, embedding AS c_vec FROM e0 WHERE vec_id < 8),
-        |sc AS (
-        |  SELECT e0.vec_id, c.centroid_id,
-        |         round(sqrt(list_sum(list_transform(generate_series(1, len(e0.embedding)),
-        |           i -> (e0.embedding[i]::DOUBLE - c.c_vec[i]::DOUBLE)
-        |              * (e0.embedding[i]::DOUBLE - c.c_vec[i]::DOUBLE)))), 6) AS dist
-        |  FROM e0 CROSS JOIN c),
-        |assign AS (
-        |  SELECT vec_id, centroid_id FROM (
-        |    SELECT vec_id, centroid_id,
-        |           row_number() OVER (PARTITION BY vec_id ORDER BY dist, centroid_id) AS rn
-        |    FROM sc) WHERE rn = 1)
-        |SELECT vec_id, centroid_id FROM (
-        |  SELECT vec_id, centroid_id,
-        |         row_number() OVER (PARTITION BY centroid_id
-        |           ORDER BY ('0x'||substr(md5('div:' || vec_id::VARCHAR),1,15))::BIGINT,
-        |                    vec_id) AS rn
-        |  FROM assign)
-        |WHERE rn <= 10""".stripMargin,
-
-    // non-overlapping 3-word spans; >2-count spans dropped everywhere;
-    // in-order reassembly (string_agg ORDER BY is the ordered-fold twin)
-    "q106_drop_repeated_spans" ->
-      """WITH d AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
-        |sp AS (
-        |  SELECT doc_id, (i - 1) // 3 AS pos,
-        |         array_to_string(ws[i : least(i + 2, len(ws))], ' ') AS span
-        |  FROM (SELECT doc_id, ws, unnest(generate_series(1, len(ws), 3)) AS i FROM d)),
-        |c AS (SELECT span, count(*) AS cnt FROM sp GROUP BY 1)
-        |SELECT doc_id, count(*)::BIGINT AS n_spans,
-        |       sum(CASE WHEN cnt > 2 THEN 1 ELSE 0 END)::BIGINT AS n_dropped,
-        |       coalesce(string_agg(span, ' ' ORDER BY pos) FILTER (cnt <= 2), '') AS clean_text
-        |FROM sp JOIN c USING (span)
-        |GROUP BY 1""".stripMargin,
-
-    // q66's quality body + ntile(4) per source; keep the top quartile
-    // (parameterized body shared with q117's chain)
-    "q107_domain_quality_gate" -> duckDomainGateSql("documents"),
-
-    // recall@5 of the RESIDUAL IVF-PQ path (q98) vs brute force — the
-    // q87/q108 audit shape over the shared q98 SQL
-    "q109_ivfpq_residual_recall" ->
-      s"""WITH adc AS ($q98ResidualSql),
-         |bf AS ($q25KnnSql),
-         |hits AS (
-         |  SELECT query_id, count(*) AS h
-         |  FROM adc JOIN bf USING (query_id, neighbor_id) GROUP BY 1),
-         |kk AS (SELECT query_id, count(*) AS k FROM bf GROUP BY 1)
-         |SELECT kk.query_id,
-         |       round(coalesce(h, 0)::DOUBLE / k::DOUBLE, 6) AS recall_at_5
-         |FROM kk LEFT JOIN hits USING (query_id)""".stripMargin,
-
-    // band audits (q110/q111/q114): the oracle computes the EXACT side
-    // and asserts the sketch's guarantee held — the estimate is
-    // deterministic (register maxima / bitmap OR), so the Spark-side
-    // boolean is reproducible and true by the sketch's error bound
-    "q110_hll_band" ->
-      """SELECT CAST(floor(epoch(ts)/3600) AS BIGINT)*3600 AS window_start,
-        |       CAST(floor(epoch(ts)/3600) AS BIGINT)*3600 + 3600 AS window_end,
-        |       count(DISTINCT user_id) AS uv, true AS within_band
-        |FROM events WHERE event_type = 'view' GROUP BY 1, 2""".stripMargin,
-
-    "q111_bloom_band" ->
-      """SELECT CAST(floor(epoch(ts)/3600) AS BIGINT)*3600 AS window_start,
-        |       CAST(floor(epoch(ts)/3600) AS BIGINT)*3600 + 3600 AS window_end,
-        |       count(DISTINCT user_id) AS uv, true AS within_band
-        |FROM events WHERE event_type = 'view' GROUP BY 1, 2""".stripMargin,
-
-    // the sketch value's rank is within the QuantileSummaries bound for
-    // every (priority, percentile) — true whatever the merge order
-    "q112_pctl_band" ->
-      """WITH g AS (SELECT o_orderpriority, count(*)::BIGINT AS n
-        |           FROM orders GROUP BY 1)
-        |SELECT o_orderpriority, p.pct, n, true AS within_band
-        |FROM g CROSS JOIN (VALUES ('p25'), ('p50'), ('p75')) p(pct)""".stripMargin,
-
-    // top-30 exact terms (deterministic key set); the MG guarantee
-    // (no overcount, undercount ≤ n/(k+1), presence above threshold)
-    // holds under any merge order ⇒ within_band is always true
-    "q113_mg_band" ->
-      """WITH w AS (
-        |  SELECT term FROM (
-        |    SELECT unnest(string_split(text, ' ')) AS term FROM documents)
-        |  WHERE len(term) > 0),
-        |f AS (SELECT term, count(*)::BIGINT AS cnt FROM w GROUP BY 1)
-        |SELECT term, cnt, true AS within_band FROM f
-        |ORDER BY cnt DESC, term ASC LIMIT 30""".stripMargin,
-
-    "q114_sketch_rollup_band" ->
-      """SELECT CAST(floor(epoch(ts)/86400) AS BIGINT)*86400 AS window_start,
-        |       CAST(floor(epoch(ts)/86400) AS BIGINT)*86400 + 86400 AS window_end,
-        |       count(DISTINCT user_id) AS uv, true AS within_band
-        |FROM events WHERE event_type = 'view' GROUP BY 1, 2""".stripMargin,
-
-    // q113's construction per source: top-10 exact terms per group, the
-    // per-group MG guarantee always true under any merge order
-    "q116_grouped_mg_band" ->
-      """WITH w AS (
-        |  SELECT source, term FROM (
-        |    SELECT source, unnest(string_split(text, ' ')) AS term FROM documents)
-        |  WHERE len(term) > 0),
-        |f AS (SELECT source, term, count(*)::BIGINT AS cnt FROM w GROUP BY 1, 2)
-        |SELECT source, term, cnt, true AS within_band FROM (
-        |  SELECT source, term, cnt,
-        |         row_number() OVER (PARTITION BY source
-        |                            ORDER BY cnt DESC, term ASC) AS rn
-        |  FROM f) WHERE rn <= 10""".stripMargin,
-
-    // the q85 "whole pipeline" claim for the SELECTION layer: replay
-    // sem-dedup → per-domain quality gate → DSIR → epoch allocation as
-    // one CTE chain. Each stage nests the SAME parameterized SQL body
-    // its individual oracle uses (q102/q107/q103/q104) — composition,
-    // zero drift; the stage CTEs (sd/qk/dk) are what the survivor
-    // counts and the next stage both read
-    "q117_selection_pipeline" ->
-      s"""WITH losers AS ($q102SemDedupSql),
-         |sd AS (SELECT * FROM documents
-         |       WHERE doc_id NOT IN (SELECT vec_id FROM losers)),
-         |gsel AS (${duckDomainGateSql("sd")}),
-         |qk AS (SELECT * FROM sd WHERE doc_id IN (SELECT doc_id FROM gsel)),
-         |dsel AS (${duckDsirSql("qk")}),
-         |dk AS (SELECT * FROM qk WHERE doc_id IN (SELECT doc_id FROM dsel)),
-         |alloc AS (${duckEpochAllocSql("dk")})
-         |SELECT 'kept' AS kind, doc_id, source FROM dk
-         |UNION ALL SELECT 'stage:input', (SELECT count(*) FROM documents), NULL
-         |UNION ALL SELECT 'stage:sem_dedup', (SELECT count(*) FROM sd), NULL
-         |UNION ALL SELECT 'stage:quality_gate', (SELECT count(*) FROM qk), NULL
-         |UNION ALL SELECT 'stage:dsir', (SELECT count(*) FROM dk), NULL
-         |UNION ALL SELECT 'alloc:wt', wt, source FROM alloc
-         |UNION ALL SELECT 'alloc:avail_tokens', avail_tokens, source FROM alloc
-         |UNION ALL SELECT 'alloc:target_tokens', target_tokens, source FROM alloc
-         |UNION ALL SELECT 'alloc:epochs', epochs, source FROM alloc
-         |UNION ALL SELECT 'alloc:rem_tokens', rem_tokens, source FROM alloc
-         |UNION ALL SELECT 'alloc:rem_docs', rem_docs, source FROM alloc
-         |UNION ALL SELECT 'alloc:rem_kept_tokens', rem_kept_tokens, source FROM alloc""".stripMargin,
-
-    // frozen gate: cuts = min quality of each source's q107 top
-    // quartile (the nested duckDomainGateSql body), then a VALUE
-    // threshold — both sides nest the same quality body (duckQualitySql)
-    "q118_frozen_gate" ->
-      s"""WITH topq AS (SELECT * FROM (${duckDomainGateSql("documents")})),
-         |cuts AS (SELECT source, min(quality) AS q_cut FROM topq GROUP BY source),
-         |scored AS (SELECT * FROM (${duckQualitySql("documents")}))
-         |SELECT s.doc_id, s.source AS domain, s.quality
-         |FROM scored s JOIN cuts c ON s.source = c.source
-         |WHERE s.quality >= c.q_cut""".stripMargin,
-
-    // BPE: the Spark loop unrolled — iteration i counts pairs over
-    // state s(i-1), argmaxes (count desc, left, right; only pairs that
-    // repeat), rewrites via the same left-to-right replace. After an
-    // early stop the state CTEs pass through unchanged and later
-    // argmaxes stay empty, matching the Spark break
-    "q122_bpe_merges" -> duckBpeSql(4),
-    "q123_bpe_token_counts" -> duckBpeEncodeSql(4),
-
-    // CMS replayed relationally: bucket = md5-60(row-prefixed term)
-    // mod width; a row's counter = the bucket's term-count sum;
-    // estimate = least over the 3 rows. Exact by construction —
-    // counters are merge-order-independent sums
-    "q124_cms_counts" ->
-      """WITH w AS (SELECT unnest(string_split(text, ' ')) AS term FROM documents),
-        |c AS (SELECT term, count(*)::BIGINT AS cnt FROM w
-        |      WHERE length(term) > 0 GROUP BY 1),
-        |h AS (SELECT term, cnt,
-        |        ('0x'||substr(md5('cms0:'||term),1,15))::BIGINT % 2048 AS b0,
-        |        ('0x'||substr(md5('cms1:'||term),1,15))::BIGINT % 2048 AS b1,
-        |        ('0x'||substr(md5('cms2:'||term),1,15))::BIGINT % 2048 AS b2
-        |      FROM c),
-        |r0 AS (SELECT b0 AS b, sum(cnt)::BIGINT AS s FROM h GROUP BY 1),
-        |r1 AS (SELECT b1 AS b, sum(cnt)::BIGINT AS s FROM h GROUP BY 1),
-        |r2 AS (SELECT b2 AS b, sum(cnt)::BIGINT AS s FROM h GROUP BY 1),
-        |top AS (SELECT term, cnt, b0, b1, b2 FROM h
-        |        ORDER BY cnt DESC, term ASC LIMIT 30)
-        |SELECT top.term, top.cnt, least(r0.s, r1.s, r2.s) AS est_cnt
-        |FROM top JOIN r0 ON top.b0 = r0.b JOIN r1 ON top.b1 = r1.b
-        |         JOIN r2 ON top.b2 = r2.b""".stripMargin,
-
-    // NB model: add-one-smoothed class-conditional log-probs over the
-    // hash-split train slice (the q84 split convention, "nb:" salt)
-    "q125_nb_train" ->
-      s"""WITH ${duckNbModelSql()}
-        |SELECT label, term, cnt, round(logp, 6) AS logp FROM m""".stripMargin,
-
-    // NB classify: same model CTEs + per-class priors and smoothing
-    // floors; per-doc ordered fold, argmax via QUALIFY with the
-    // score-then-label tie-break the Spark max-of-struct uses
-    "q126_nb_classify" ->
-      s"""WITH ${duckNbModelSql()},
-        |pri AS (SELECT nb_label AS label, count(*)::BIGINT AS nd FROM tr GROUP BY 1),
-        |ptot AS (SELECT sum(nd)::BIGINT AS n FROM pri),
-        |lab AS (SELECT pri.label, ln(nd::DOUBLE / n) AS prior_logp,
-        |               ln(1.0 / (lt.tot + v.v)::DOUBLE) AS dflt
-        |        FROM pri CROSS JOIN ptot JOIN lt ON lt.label = pri.label
-        |        CROSS JOIN v),
-        |te AS (SELECT doc_id, unnest(string_split(text, ' ')) AS term
-        |       FROM documents
-        |       WHERE ('0x'||substr(md5('nb:'||doc_id::VARCHAR),1,15))::BIGINT % 10000 >= 8000),
-        |tf AS (SELECT doc_id, term, count(*)::BIGINT AS tf FROM te
-        |       WHERE length(term) > 0 GROUP BY 1, 2),
-        |sc0 AS (SELECT tf.doc_id, lab.label,
-        |          list_sum(list(tf.tf * coalesce(m.logp, lab.dflt)
-        |                        ORDER BY tf.term)) AS like
-        |        FROM tf CROSS JOIN lab
-        |        LEFT JOIN m ON m.label = lab.label AND m.term = tf.term
-        |        GROUP BY 1, 2),
-        |td AS (SELECT DISTINCT doc_id FROM documents
-        |       WHERE ('0x'||substr(md5('nb:'||doc_id::VARCHAR),1,15))::BIGINT % 10000 >= 8000),
-        |sc AS (SELECT td.doc_id, lab.label,
-        |         lab.prior_logp + coalesce(sc0.like, 0) AS score
-        |       FROM td CROSS JOIN lab
-        |       LEFT JOIN sc0 ON sc0.doc_id = td.doc_id AND sc0.label = lab.label)
-        |SELECT doc_id, label AS pred_label, round(score, 6) AS score
-        |FROM sc
-        |QUALIFY row_number() OVER (PARTITION BY doc_id
-        |                           ORDER BY score DESC, label DESC) = 1""".stripMargin,
-
-    // KMV replayed relationally: rank the distinct md5-60 hashes per
-    // group, read the 64th smallest, apply (k-1)*2^60/h_k (count
-    // exactly when under capacity). Merge-order-independent ⇒ exact
-    "q127_kmv_distinct" ->
-      """WITH e AS (SELECT DISTINCT event_type, user_id FROM events),
-        |h AS (SELECT DISTINCT event_type,
-        |        ('0x'||substr(md5('kmv:'||user_id::VARCHAR),1,15))::BIGINT AS hv
-        |      FROM e),
-        |r AS (SELECT event_type, hv,
-        |        row_number() OVER (PARTITION BY event_type ORDER BY hv) AS rn,
-        |        count(*) OVER (PARTITION BY event_type) AS nd
-        |      FROM h),
-        |x AS (SELECT event_type, count(*)::BIGINT AS n_exact FROM e GROUP BY 1),
-        |est AS (SELECT event_type,
-        |          CASE WHEN max(nd) < 64 THEN max(nd)::DOUBLE
-        |               ELSE 63.0 * 1152921504606846976
-        |                    / max(CASE WHEN rn = 64 THEN hv END) END AS est
-        |        FROM r GROUP BY 1)
-        |SELECT x.event_type, n_exact, round(est, 4) AS est_distinct
-        |FROM x JOIN est USING (event_type)""".stripMargin,
-
-    // warehouse-merged KMV ≡ global KMV (bottom-k of a union of
-    // bottom-k's): the q127 estimate replay + per-type slice counts
-    // (distinct days) pinning the store shape
-    "q152_kmv_warehouse" ->
-      """WITH e AS (SELECT DISTINCT event_type, user_id FROM events),
-        |h AS (SELECT DISTINCT event_type,
-        |        ('0x'||substr(md5('kmv:'||user_id::VARCHAR),1,15))::BIGINT AS hv
-        |      FROM e),
-        |r AS (SELECT event_type, hv,
-        |        row_number() OVER (PARTITION BY event_type ORDER BY hv) AS rn,
-        |        count(*) OVER (PARTITION BY event_type) AS nd
-        |      FROM h),
-        |d AS (SELECT event_type,
-        |        count(DISTINCT date_trunc('day', ts))::BIGINT AS n_slices
-        |      FROM events GROUP BY 1),
-        |est AS (SELECT event_type,
-        |          CASE WHEN max(nd) < 64 THEN max(nd)::DOUBLE
-        |               ELSE 63.0 * 1152921504606846976
-        |                    / max(CASE WHEN rn = 64 THEN hv END) END AS est
-        |        FROM r GROUP BY 1)
-        |SELECT d.event_type, n_slices, round(est, 4) AS est_distinct
-        |FROM d JOIN est USING (event_type)""".stripMargin,
-
-    // HLL registers replayed relationally: bucket = md5-60 hash mod
-    // 64, rank = 55 − bit-length of the remaining 54 bits (0 → 55),
-    // register = max rank per bucket; empty buckets contribute 2^55 to
-    // the exact-integer harmonic sum; estimate = α₆₄·m²·2^55 / S with
-    // every float operand identical cross-engine
-    "q158_hll_warehouse" ->
-      """WITH e AS (SELECT DISTINCT event_type, user_id FROM events),
-        |h AS (SELECT event_type,
-        |        ('0x'||substr(md5('hll:'||user_id::VARCHAR),1,15))::BIGINT AS hv
-        |      FROM e),
-        |bw AS (SELECT event_type, hv % 64 AS j, hv // 64 AS w FROM h),
-        |rk AS (SELECT event_type, j,
-        |         CASE WHEN w = 0 THEN 55
-        |              ELSE 55 - list_max(list_transform(generate_series(0, 53),
-        |                     i -> CASE WHEN (w >> i) & 1 = 1 THEN i + 1 ELSE 0 END))
-        |         END AS rank
-        |       FROM bw),
-        |reg AS (SELECT event_type, j, max(rank) AS r FROM rk GROUP BY 1, 2),
-        |s AS (SELECT event_type,
-        |        (sum(1::BIGINT << (55 - r)::INT)
-        |         + (64 - count(*)) * 36028797018963968)::BIGINT AS sint
-        |      FROM reg GROUP BY 1),
-        |d AS (SELECT event_type,
-        |        count(DISTINCT date_trunc('day', ts))::BIGINT AS n_slices
-        |      FROM events GROUP BY 1)
-        |SELECT d.event_type, n_slices,
-        |       round(0.709::DOUBLE * 4096::DOUBLE * 36028797018963968::DOUBLE
-        |             / sint::DOUBLE, 4) AS est_distinct
-        |FROM d JOIN s USING (event_type)""".stripMargin,
-
-    // warehouse-merged CMS ≡ global CMS (counters are sums): the q124
-    // replay + the distinct-source slice count on every row
-    "q153_cms_warehouse" ->
-      """WITH w AS (SELECT source, unnest(string_split(text, ' ')) AS term
-        |           FROM documents),
-        |w2 AS (SELECT source, term FROM w WHERE length(term) > 0),
-        |c AS (SELECT term, count(*)::BIGINT AS cnt FROM w2 GROUP BY 1),
-        |h AS (SELECT term, cnt,
-        |        ('0x'||substr(md5('cms0:'||term),1,15))::BIGINT % 2048 AS b0,
-        |        ('0x'||substr(md5('cms1:'||term),1,15))::BIGINT % 2048 AS b1,
-        |        ('0x'||substr(md5('cms2:'||term),1,15))::BIGINT % 2048 AS b2
-        |      FROM c),
-        |r0 AS (SELECT b0 AS b, sum(cnt)::BIGINT AS s FROM h GROUP BY 1),
-        |r1 AS (SELECT b1 AS b, sum(cnt)::BIGINT AS s FROM h GROUP BY 1),
-        |r2 AS (SELECT b2 AS b, sum(cnt)::BIGINT AS s FROM h GROUP BY 1),
-        |ns AS (SELECT count(DISTINCT source)::BIGINT AS n_slices FROM w2),
-        |top AS (SELECT term, cnt, b0, b1, b2 FROM h
-        |        ORDER BY cnt DESC, term ASC LIMIT 30)
-        |SELECT top.term, top.cnt, ns.n_slices, least(r0.s, r1.s, r2.s) AS est_cnt
-        |FROM top CROSS JOIN ns
-        |JOIN r0 ON top.b0 = r0.b JOIN r1 ON top.b1 = r1.b
-        |JOIN r2 ON top.b2 = r2.b""".stripMargin,
-
-    // the q92 chain widened to a 20-candidate shortlist, then exact
-    // cosine over ONLY those pairs (q25's scoring expression verbatim)
-    "q128_ivfpq_rerank" -> q128RerankSql,
-
-    // KMV set ops replayed relationally: per-type bottom-64 hash
-    // lists, combined bottom-k per pair, K∩ by joining the combined
-    // list back to both sketches, the same union/Jaccard/intersection
-    // arithmetic. Deterministic ⇒ all three estimates hash-exact
-    "q130_kmv_overlap" ->
-      """WITH e AS (SELECT DISTINCT event_type, user_id FROM events),
-        |h AS (SELECT DISTINCT event_type,
-        |        ('0x'||substr(md5('kmv:'||user_id::VARCHAR),1,15))::BIGINT AS hv
-        |      FROM e),
-        |bk AS (SELECT event_type, hv FROM (
-        |         SELECT event_type, hv,
-        |                row_number() OVER (PARTITION BY event_type ORDER BY hv) AS rn
-        |         FROM h)
-        |       WHERE rn <= 64),
-        |t AS (SELECT DISTINCT event_type FROM e),
-        |p AS (SELECT a.event_type AS type_a, b.event_type AS type_b
-        |      FROM t a JOIN t b ON a.event_type < b.event_type),
-        |u AS (SELECT DISTINCT p.type_a, p.type_b, bk.hv
-        |      FROM p JOIN bk ON bk.event_type = p.type_a OR bk.event_type = p.type_b),
-        |comb AS (SELECT type_a, type_b, hv,
-        |                row_number() OVER (PARTITION BY type_a, type_b ORDER BY hv) AS rn
-        |         FROM u),
-        |ck AS (SELECT * FROM comb WHERE rn <= 64),
-        |inter AS (SELECT ck.type_a, ck.type_b, count(*)::BIGINT AS k_int
-        |          FROM ck JOIN bk x ON x.event_type = ck.type_a AND x.hv = ck.hv
-        |                  JOIN bk y ON y.event_type = ck.type_b AND y.hv = ck.hv
-        |          GROUP BY 1, 2),
-        |st AS (SELECT type_a, type_b, count(*)::BIGINT AS kk,
-        |              max(CASE WHEN rn = 64 THEN hv END) AS hk
-        |       FROM ck GROUP BY 1, 2),
-        |est AS (SELECT st.type_a, st.type_b, kk,
-        |               coalesce(k_int, 0) AS k_int,
-        |               CASE WHEN kk < 64 THEN kk::DOUBLE
-        |                    ELSE 63.0 * 1152921504606846976 / hk END AS union_est
-        |        FROM st LEFT JOIN inter USING (type_a, type_b))
-        |SELECT type_a, type_b, round(union_est, 4) AS union_est,
-        |       round(k_int::DOUBLE / kk, 6) AS jaccard_est,
-        |       round(k_int::DOUBLE / kk * union_est, 4) AS inter_est
-        |FROM est""".stripMargin,
-
-    // classifier gate: binary NB model over pos=src0 vs rest ("nbg:"
-    // salt), EVERY document scored, log-odds = pos − neg (two-term
-    // commutative sum), rounded THEN thresholded like the Spark side
-    "q131_classifier_gate" ->
-      s"""WITH ${duckNbModelSql(
-            "CASE WHEN source = 'src0' THEN 'pos' ELSE 'neg' END", "nbg")},
-        |pri AS (SELECT nb_label AS label, count(*)::BIGINT AS nd FROM tr GROUP BY 1),
-        |ptot AS (SELECT sum(nd)::BIGINT AS n FROM pri),
-        |lab AS (SELECT pri.label, ln(nd::DOUBLE / n) AS prior_logp,
-        |               ln(1.0 / (lt.tot + v.v)::DOUBLE) AS dflt
-        |        FROM pri CROSS JOIN ptot JOIN lt ON lt.label = pri.label
-        |        CROSS JOIN v),
-        |te AS (SELECT doc_id, unnest(string_split(text, ' ')) AS term
-        |       FROM documents),
-        |tf AS (SELECT doc_id, term, count(*)::BIGINT AS tf FROM te
-        |       WHERE length(term) > 0 GROUP BY 1, 2),
-        |sc0 AS (SELECT tf.doc_id, lab.label,
-        |          list_sum(list(tf.tf * coalesce(m.logp, lab.dflt)
-        |                        ORDER BY tf.term)) AS like
-        |        FROM tf CROSS JOIN lab
-        |        LEFT JOIN m ON m.label = lab.label AND m.term = tf.term
-        |        GROUP BY 1, 2),
-        |td AS (SELECT DISTINCT doc_id FROM documents),
-        |sc AS (SELECT td.doc_id, lab.label,
-        |         lab.prior_logp + coalesce(sc0.like, 0) AS score
-        |       FROM td CROSS JOIN lab
-        |       LEFT JOIN sc0 ON sc0.doc_id = td.doc_id AND sc0.label = lab.label),
-        |lo AS (SELECT doc_id,
-        |         round(sum(CASE WHEN label = 'pos' THEN score ELSE -score END), 6)
-        |           AS log_odds
-        |       FROM sc GROUP BY 1)
-        |SELECT doc_id, log_odds, log_odds > 0 AS kept FROM lo""".stripMargin,
-
-    // the q108 audit shape over the reranked result — the SAME q128
-    // SQL nested verbatim (composed-oracle discipline, zero drift)
-    "q129_rerank_recall" ->
-      s"""WITH rr AS (SELECT query_id, neighbor_id FROM ($q128RerankSql) t),
-         |bf AS ($q25KnnSql),
-         |hits AS (
-         |  SELECT query_id, count(*) AS h
-         |  FROM rr JOIN bf USING (query_id, neighbor_id) GROUP BY 1),
-         |kk AS (SELECT query_id, count(*) AS k FROM bf GROUP BY 1)
-         |SELECT kk.query_id,
-         |       round(coalesce(h, 0)::DOUBLE / k::DOUBLE, 6) AS recall_at_5
-         |FROM kk LEFT JOIN hits USING (query_id)""".stripMargin,
-
-    // shard manifest: the hash is the q47 convention (top-60-bit md5 of
-    // salt||id); the offsets are the Window formulation the PrefixSum
-    // core replaces
-    "q119_shard_manifest" ->
-      """WITH t AS (
-        |  SELECT doc_id, source,
-        |         len(string_split(text, ' '))::BIGINT AS n_tokens,
-        |         ('0x'||substr(md5('shard:'||doc_id::VARCHAR),1,15))::BIGINT % 16 AS shard
-        |  FROM documents)
-        |SELECT doc_id, source, n_tokens, shard,
-        |       sum(n_tokens) OVER (PARTITION BY shard ORDER BY doc_id
-        |                           ROWS UNBOUNDED PRECEDING)::BIGINT AS token_end,
-        |       sum(n_tokens) OVER (PARTITION BY shard)::BIGINT AS shard_tokens,
-        |       (sum(n_tokens) OVER (PARTITION BY shard ORDER BY doc_id
-        |                            ROWS UNBOUNDED PRECEDING) - n_tokens)::BIGINT AS token_start
-        |FROM t""".stripMargin,
-
-    // incremental dedup: the q20 fingerprint convention on both sides;
-    // NOT EXISTS (not NOT IN) so the shape stays an anti-join
-    "q120_incremental_dedup" ->
-      """WITH slice AS (
-        |  SELECT doc_id, source,
-        |         md5(array_to_string(list_sort(list_distinct(string_split(text, ' '))), ' ')) AS fp
-        |  FROM documents WHERE source = 'src2'),
-        |store AS (
-        |  SELECT DISTINCT md5(array_to_string(list_sort(list_distinct(string_split(text, ' '))), ' ')) AS fp
-        |  FROM documents WHERE source <> 'src2'),
-        |w AS (SELECT fp, min(doc_id) AS keep_id FROM slice GROUP BY fp)
-        |SELECT s.doc_id, s.source FROM slice s
-        |JOIN w ON s.doc_id = w.keep_id
-        |WHERE NOT EXISTS (SELECT 1 FROM store WHERE store.fp = w.fp)""".stripMargin,
-
-    // full stack: the q85 corpus chain (prefix + tail over nd, final
-    // survivors rk) feeding the q117 selection chain — every stage CTE
-    // nests the SAME parameterized body its own oracle uses; selection
-    // CTEs renamed (qsel/dk2) where they would collide with the corpus
-    // tail's q/qk
-    "q121_full_stack" ->
-      s"""WITH $duckCorpusPrefix,
-         |${duckCorpusTail("nd")},
-         |losers AS MATERIALIZED ($q102SemDedupSql),
-         |sd AS MATERIALIZED (SELECT * FROM rk
-         |       WHERE doc_id NOT IN (SELECT vec_id FROM losers)),
-         |gsel AS MATERIALIZED (SELECT * FROM (${duckDomainGateSql("sd")})),
-         |qsel AS MATERIALIZED (SELECT * FROM sd WHERE doc_id IN (SELECT doc_id FROM gsel)),
-         |dsel AS MATERIALIZED (SELECT * FROM (${duckDsirSql("qsel")})),
-         |dk2 AS MATERIALIZED (SELECT * FROM qsel WHERE doc_id IN (SELECT doc_id FROM dsel)),
-         |alloc AS MATERIALIZED (SELECT * FROM (${duckEpochAllocSql("dk2")}))
-         |SELECT 'kept' AS kind, doc_id, source FROM dk2
-         |UNION ALL SELECT 'corpus:input', (SELECT count(*) FROM documents), NULL
-         |UNION ALL SELECT 'corpus:sampled', (SELECT count(*) FROM sampled), NULL
-         |UNION ALL SELECT 'corpus:exact_dedup', (SELECT count(*) FROM ex), NULL
-         |UNION ALL SELECT 'corpus:near_dedup', (SELECT count(*) FROM nd), NULL
-         |UNION ALL SELECT 'corpus:quality', (SELECT count(*) FROM qk), NULL
-         |UNION ALL SELECT 'corpus:repetition', (SELECT count(*) FROM rk), NULL
-         |UNION ALL SELECT 'corpus:mixed', (SELECT count(*) FROM rk), NULL
-         |UNION ALL SELECT 'select:input', (SELECT count(*) FROM rk), NULL
-         |UNION ALL SELECT 'select:sem_dedup', (SELECT count(*) FROM sd), NULL
-         |UNION ALL SELECT 'select:quality_gate', (SELECT count(*) FROM qsel), NULL
-         |UNION ALL SELECT 'select:dsir', (SELECT count(*) FROM dk2), NULL
-         |UNION ALL SELECT 'alloc:wt', wt, source FROM alloc
-         |UNION ALL SELECT 'alloc:avail_tokens', avail_tokens, source FROM alloc
-         |UNION ALL SELECT 'alloc:target_tokens', target_tokens, source FROM alloc
-         |UNION ALL SELECT 'alloc:epochs', epochs, source FROM alloc
-         |UNION ALL SELECT 'alloc:rem_tokens', rem_tokens, source FROM alloc
-         |UNION ALL SELECT 'alloc:rem_docs', rem_docs, source FROM alloc
-         |UNION ALL SELECT 'alloc:rem_kept_tokens', rem_kept_tokens, source FROM alloc""".stripMargin,
-
-    "q232_growth_accounting" ->
-      """WITH ud AS (
-        |  SELECT DISTINCT user_id, CAST(ts AS DATE) AS day
-        |  FROM events WHERE user_id IS NOT NULL AND ts IS NOT NULL),
-        |m AS (
-        |  SELECT user_id, day,
-        |         lag(day)  OVER (PARTITION BY user_id ORDER BY day) AS prev,
-        |         lead(day) OVER (PARTITION BY user_id ORDER BY day) AS next
-        |  FROM ud),
-        |mx AS (SELECT max(day) AS max_day FROM ud),
-        |act AS (
-        |  SELECT day,
-        |         CASE WHEN prev IS NULL THEN 'new'
-        |              WHEN day - prev = 1 THEN 'retained'
-        |              ELSE 'resurrected' END AS status
-        |  FROM m),
-        |ch AS (
-        |  SELECT day + 1 AS day, 'churned' AS status
-        |  FROM m, mx
-        |  WHERE (next IS NULL OR next - day > 1) AND day < max_day)
-        |SELECT CAST(day AS TIMESTAMP) AS day,
-        |       count(*) FILTER (WHERE status = 'new') AS new_users,
-        |       count(*) FILTER (WHERE status = 'retained') AS retained_users,
-        |       count(*) FILTER (WHERE status = 'resurrected') AS resurrected_users,
-        |       count(*) FILTER (WHERE status = 'churned') AS churned_users
-        |FROM (SELECT * FROM act UNION ALL SELECT * FROM ch)
-        |GROUP BY 1""".stripMargin,
-
-    "q233_stickiness" ->
-      """WITH ud AS (
-        |  SELECT DISTINCT user_id, CAST(ts AS DATE) AS day
-        |  FROM events WHERE user_id IS NOT NULL AND ts IS NOT NULL),
-        |mx AS (SELECT max(day) AS max_day FROM ud),
-        |dau AS (SELECT day, count(DISTINCT user_id) AS dau FROM ud GROUP BY day),
-        |wexp AS (
-        |  SELECT user_id, CAST(unnest(generate_series(day, day + 6,
-        |         INTERVAL 1 DAY)) AS DATE) AS day FROM ud),
-        |wau AS (
-        |  SELECT w.day, count(DISTINCT w.user_id) AS wau
-        |  FROM wexp w, mx WHERE w.day <= mx.max_day GROUP BY w.day),
-        |mexp AS (
-        |  SELECT user_id, CAST(unnest(generate_series(day, day + 29,
-        |         INTERVAL 1 DAY)) AS DATE) AS day FROM ud),
-        |mau AS (
-        |  SELECT m.day, count(DISTINCT m.user_id) AS mau
-        |  FROM mexp m, mx WHERE m.day <= mx.max_day GROUP BY m.day)
-        |SELECT CAST(dau.day AS TIMESTAMP) AS day, dau.dau, wau.wau, mau.mau,
-        |       dau.dau * 1000000 // mau.mau AS stickiness_ppm
-        |FROM dau JOIN wau ON dau.day = wau.day
-        |         JOIN mau ON dau.day = mau.day""".stripMargin,
-
-    "q234_skew_audit" ->
-      """WITH c AS (
-        |  SELECT CAST(user_id AS VARCHAR) AS key, count(*)::BIGINT AS cnt
-        |  FROM events GROUP BY 1),
-        |t AS (
-        |  SELECT CAST(sum(cnt) AS BIGINT) AS total_rows,
-        |         count(*)::BIGINT AS n_keys FROM c),
-        |top AS (SELECT key, cnt FROM c ORDER BY cnt DESC, key ASC LIMIT 20)
-        |SELECT CAST(row_number() OVER o AS BIGINT) AS rank, key, cnt,
-        |       t.total_rows, t.n_keys,
-        |       CAST(cnt * 1000000 // t.total_rows AS BIGINT) AS share_ppm,
-        |       CAST(sum(cnt) OVER (o ROWS UNBOUNDED PRECEDING) * 1000000
-        |            // t.total_rows AS BIGINT) AS cum_ppm
-        |FROM top, t
-        |WINDOW o AS (ORDER BY cnt DESC, key ASC)""".stripMargin,
-
-    "q235_compaction_plan" ->
-      """WITH f AS (
-        |  SELECT CAST(source AS VARCHAR) AS grp, doc_id AS id,
-        |         n_chars AS bytes
-        |  FROM documents),
-        |b AS (
-        |  SELECT grp, id, bytes,
-        |         CAST(coalesce(sum(bytes) OVER (PARTITION BY grp ORDER BY id
-        |           ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-        |           AS BIGINT) AS before
-        |  FROM f)
-        |SELECT grp, CAST(before // 8192 AS BIGINT) AS bin,
-        |       count(*)::BIGINT AS n_files,
-        |       CAST(sum(bytes) AS BIGINT) AS bytes,
-        |       min(id) AS id_lo, max(id) AS id_hi
-        |FROM b GROUP BY 1, 2""".stripMargin,
-
-    "q236_khop" ->
-      """WITH ev AS (
-        |  SELECT user_id, ts, event_id,
-        |         json_extract_string(props, '$.k')::BIGINT AS item
-        |  FROM events
-        |  WHERE json_extract_string(props, '$.k') IS NOT NULL),
-        |nx AS (
-        |  SELECT item AS src,
-        |         lead(item) OVER (PARTITION BY user_id
-        |                          ORDER BY ts, event_id) AS dst
-        |  FROM ev),
-        |und AS (
-        |  SELECT DISTINCT least(src, dst) AS u, greatest(src, dst) AS v
-        |  FROM nx WHERE dst IS NOT NULL AND dst <> src),
-        |adj AS (
-        |  SELECT u AS src, v AS dst FROM und
-        |  UNION ALL SELECT v, u FROM und),
-        |d0 AS (
-        |  SELECT DISTINCT item AS node, 0::BIGINT AS dist
-        |  FROM ev WHERE item % 10 = 0),
-        |f1 AS (SELECT a.dst AS node, 1::BIGINT AS dist
-        |       FROM d0 JOIN adj a ON d0.node = a.src WHERE d0.dist = 0),
-        |d1 AS (SELECT node, min(dist) AS dist FROM (
-        |         SELECT * FROM d0 UNION ALL SELECT * FROM f1) GROUP BY 1),
-        |f2 AS (SELECT a.dst AS node, 2::BIGINT AS dist
-        |       FROM d1 JOIN adj a ON d1.node = a.src WHERE d1.dist = 1),
-        |d2 AS (SELECT node, min(dist) AS dist FROM (
-        |         SELECT * FROM d1 UNION ALL SELECT * FROM f2) GROUP BY 1),
-        |f3 AS (SELECT a.dst AS node, 3::BIGINT AS dist
-        |       FROM d2 JOIN adj a ON d2.node = a.src WHERE d2.dist = 2),
-        |d3 AS (SELECT node, min(dist) AS dist FROM (
-        |         SELECT * FROM d2 UNION ALL SELECT * FROM f3) GROUP BY 1)
-        |SELECT node, dist FROM d3""".stripMargin,
-
-    "q237_pmi_collocations" ->
-      """WITH g AS (
-        |  SELECT ws[i] AS w1, ws[i+1] AS w2
-        |  FROM (SELECT string_split(text, ' ') AS ws,
-        |               unnest(generate_series(1, len(string_split(text, ' ')) - 1)) AS i
-        |        FROM documents)),
-        |bg AS (SELECT w1, w2, count(*)::BIGINT AS c_xy FROM g GROUP BY 1, 2),
-        |c1 AS (SELECT w1, CAST(sum(c_xy) AS BIGINT) AS c_x FROM bg GROUP BY 1),
-        |c2 AS (SELECT w2, CAST(sum(c_xy) AS BIGINT) AS c_y FROM bg GROUP BY 1),
-        |n AS (SELECT CAST(sum(c_xy) AS BIGINT) AS n_bi FROM bg)
-        |SELECT bg.w1, bg.w2, bg.c_xy, c1.c_x, c2.c_y,
-        |       round((n.n_bi * bg.c_xy)::DOUBLE
-        |             / (c1.c_x * c2.c_y)::DOUBLE, 6) AS lift
-        |FROM bg JOIN c1 USING (w1) JOIN c2 USING (w2), n
-        |WHERE bg.c_xy >= 5
-        |ORDER BY lift DESC, w1 ASC, w2 ASC
-        |LIMIT 20""".stripMargin,
-
-    "q239_fk_audit" ->
-      """WITH
-        |c1 AS (SELECT l_orderkey AS k FROM lineitem),
-        |p1 AS (SELECT DISTINCT o_orderkey AS k FROM orders
-        |       WHERE o_orderkey IS NOT NULL),
-        |o1 AS (SELECT c1.k FROM c1 LEFT JOIN p1 ON c1.k = p1.k
-        |       WHERE c1.k IS NOT NULL AND p1.k IS NULL),
-        |c2 AS (SELECT o_custkey AS k FROM orders),
-        |p2 AS (SELECT DISTINCT c_custkey AS k FROM customer
-        |       WHERE c_custkey IS NOT NULL),
-        |o2 AS (SELECT c2.k FROM c2 LEFT JOIN p2 ON c2.k = p2.k
-        |       WHERE c2.k IS NOT NULL AND p2.k IS NULL),
-        |c3 AS (SELECT c_nationkey AS k FROM customer),
-        |p3 AS (SELECT DISTINCT n_nationkey AS k FROM nation
-        |       WHERE n_nationkey IS NOT NULL),
-        |o3 AS (SELECT c3.k FROM c3 LEFT JOIN p3 ON c3.k = p3.k
-        |       WHERE c3.k IS NOT NULL AND p3.k IS NULL),
-        |c4 AS (SELECT user_id AS k FROM events),
-        |p4 AS (SELECT DISTINCT c_custkey AS k FROM customer
-        |       WHERE c_custkey IS NOT NULL AND c_custkey <= 100),
-        |o4 AS (SELECT c4.k FROM c4 LEFT JOIN p4 ON c4.k = p4.k
-        |       WHERE c4.k IS NOT NULL AND p4.k IS NULL)
-        |SELECT 'lineitem.l_orderkey->orders' AS fk,
-        |  (SELECT count(*) FROM c1)::BIGINT AS n_rows,
-        |  (SELECT count(*) FROM c1 WHERE k IS NULL)::BIGINT AS n_null_rows,
-        |  (SELECT count(DISTINCT k) FROM c1)::BIGINT AS n_keys,
-        |  (SELECT count(*) FROM o1)::BIGINT AS n_orphan_rows,
-        |  (SELECT count(DISTINCT k) FROM o1)::BIGINT AS n_orphan_keys
-        |UNION ALL SELECT 'orders.o_custkey->customer',
-        |  (SELECT count(*) FROM c2), (SELECT count(*) FROM c2 WHERE k IS NULL),
-        |  (SELECT count(DISTINCT k) FROM c2), (SELECT count(*) FROM o2),
-        |  (SELECT count(DISTINCT k) FROM o2)
-        |UNION ALL SELECT 'customer.c_nationkey->nation',
-        |  (SELECT count(*) FROM c3), (SELECT count(*) FROM c3 WHERE k IS NULL),
-        |  (SELECT count(DISTINCT k) FROM c3), (SELECT count(*) FROM o3),
-        |  (SELECT count(DISTINCT k) FROM o3)
-        |UNION ALL SELECT 'events.user_id->top100_customers',
-        |  (SELECT count(*) FROM c4), (SELECT count(*) FROM c4 WHERE k IS NULL),
-        |  (SELECT count(DISTINCT k) FROM c4), (SELECT count(*) FROM o4),
-        |  (SELECT count(DISTINCT k) FROM o4)""".stripMargin,
-
-    "q240_gap_percentiles" ->
-      """WITH g AS (
-        |  SELECT event_type,
-        |         CAST(floor(epoch(lead(ts) OVER w)) AS BIGINT)
-        |           - CAST(floor(epoch(ts)) AS BIGINT) AS gap_s
-        |  FROM events
-        |  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id))
-        |SELECT event_type,
-        |       round(quantile_cont(gap_s, 0.5), 2) AS p50,
-        |       round(quantile_cont(gap_s, 0.9), 2) AS p90,
-        |       round(quantile_cont(gap_s, 0.99), 2) AS p99,
-        |       count(*) AS cnt
-        |FROM g WHERE gap_s IS NOT NULL
-        |GROUP BY 1""".stripMargin,
-    "q241_bounce_rate" ->
-      """WITH e AS (
-        |  SELECT user_id, ts, event_id,
-        |         CAST(floor(epoch(ts)) AS BIGINT) AS s
-        |  FROM events),
-        |m AS (
-        |  SELECT user_id, ts, event_id,
-        |         CASE WHEN lag(s) OVER w IS NULL
-        |                OR s - lag(s) OVER w > 1800 THEN 1 ELSE 0 END
-        |           AS new_s
-        |  FROM e
-        |  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
-        |s2 AS (
-        |  SELECT user_id, ts,
-        |         sum(new_s) OVER (PARTITION BY user_id
-        |                          ORDER BY ts, event_id
-        |                          ROWS UNBOUNDED PRECEDING) AS s_id
-        |  FROM m),
-        |sess AS (
-        |  SELECT user_id, s_id, CAST(min(ts) AS DATE) AS day,
-        |         count(*)::BIGINT AS n
-        |  FROM s2 GROUP BY 1, 2)
-        |SELECT CAST(day AS TIMESTAMP) AS day,
-        |       count(*)::BIGINT AS n_sessions,
-        |       count(*) FILTER (WHERE n = 1) AS n_bounces,
-        |       CAST(count(*) FILTER (WHERE n = 1) * 1000000
-        |            // count(*) AS BIGINT) AS bounce_ppm
-        |FROM sess GROUP BY 1""".stripMargin,
-
-    "q242_trending_items" ->
-      """WITH e AS (
-        |  SELECT json_extract_string(props, '$.k')::BIGINT AS item,
-        |         CAST(ts AS DATE) AS day
-        |  FROM events
-        |  WHERE json_extract_string(props, '$.k') IS NOT NULL),
-        |mx AS (SELECT max(day) AS max_day FROM e)
-        |SELECT item,
-        |       CAST(sum(1048576 >> least(max_day - day, 63)) AS BIGINT)
-        |         AS weight,
-        |       count(*)::BIGINT AS n_events
-        |FROM e, mx
-        |GROUP BY item
-        |ORDER BY weight DESC, item ASC
-        |LIMIT 20""".stripMargin,
-
-    "q243_orders_per_customer" ->
-      """WITH per AS (
-        |  SELECT c.c_custkey, count(o.o_orderkey)::BIGINT AS n_orders
-        |  FROM customer c LEFT JOIN orders o ON o.o_custkey = c.c_custkey
-        |  GROUP BY 1)
-        |SELECT n_orders, count(*)::BIGINT AS n_customers
-        |FROM per GROUP BY 1""".stripMargin,
-
-    "q244_basket_percentiles" ->
-      """WITH sz AS (
-        |  SELECT l_orderkey, count(*)::BIGINT AS n_lines
-        |  FROM lineitem GROUP BY 1)
-        |SELECT o.o_orderpriority,
-        |       round(quantile_cont(sz.n_lines, 0.5), 2) AS p50,
-        |       round(quantile_cont(sz.n_lines, 0.9), 2) AS p90,
-        |       count(*) AS cnt
-        |FROM orders o JOIN sz ON sz.l_orderkey = o.o_orderkey
-        |GROUP BY 1""".stripMargin,
-
-    // q65's recursive-walk components + the size histogram, singleton
-    // row folded from the corpus total
-    "q248_dup_cluster_sizes" ->
-      s"""$duckBandsCte,
-         |$duckEdgesBody,
-         |walk AS (
-         |  WITH RECURSIVE w(v, l) AS (
-         |    SELECT s, s FROM edges
-         |    UNION
-         |    SELECT e.s, w.l FROM edges e JOIN w ON e.t = w.v)
-         |  SELECT * FROM w),
-         |cc AS (SELECT v AS id, min(l) AS component FROM walk GROUP BY v),
-         |sizes AS (
-         |  SELECT component, count(*)::BIGINT AS cluster_size
-         |  FROM cc GROUP BY 1),
-         |hist AS (
-         |  SELECT cluster_size, count(*)::BIGINT AS n_clusters
-         |  FROM sizes GROUP BY 1),
-         |tot AS (SELECT count(doc_id)::BIGINT AS total FROM documents),
-         |icc AS (SELECT count(*)::BIGINT AS n FROM cc)
-         |SELECT cluster_size, n_clusters FROM hist
-         |UNION ALL
-         |SELECT CAST(1 AS BIGINT) AS cluster_size,
-         |       CAST(tot.total - icc.n AS BIGINT) AS n_clusters
-         |FROM tot, icc WHERE tot.total - icc.n > 0""".stripMargin,
-
-    "q247_robust_anomalies" ->
-      """WITH daily AS (
-        |  SELECT event_type AS series, CAST(ts AS DATE) AS day,
-        |         count(*)::BIGINT AS cnt
-        |  FROM events GROUP BY 1, 2),
-        |med AS (
-        |  SELECT series, CAST(quantile_cont(cnt, 0.5) * 2 AS BIGINT)
-        |           AS med2
-        |  FROM daily GROUP BY 1),
-        |dev AS (
-        |  SELECT d.series, d.day, d.cnt, m.med2,
-        |         abs(2 * d.cnt - m.med2) AS dev2
-        |  FROM daily d JOIN med m USING (series)),
-        |mad AS (
-        |  SELECT series, CAST(quantile_cont(dev2, 0.5) * 2 AS BIGINT)
-        |           AS mad4
-        |  FROM dev GROUP BY 1)
-        |SELECT dev.series, CAST(dev.day AS TIMESTAMP) AS day, dev.cnt,
-        |       dev.med2, dev.dev2, mad.mad4,
-        |       2 * dev.dev2 > 3 * mad.mad4 AS is_anomaly
-        |FROM dev JOIN mad USING (series)""".stripMargin,
-
-    "q246_next_item" -> q246NextItemSql,
-    // the compaction entry re-merges a compacted generation and must
-    // land on the same full-log table
-    "q256_edge_compaction" -> q246NextItemSql,
-
-    // recomputed from the RAW log — green proves the warehouse-served
-    // read equals the one-shot pass
-    "q245_trending_store" ->
-      """WITH e AS (
-        |  SELECT json_extract_string(props, '$.k')::BIGINT AS item,
-        |         CAST(ts AS DATE) AS day
-        |  FROM events
-        |  WHERE json_extract_string(props, '$.k') IS NOT NULL),
-        |mx AS (SELECT max(day) AS max_day FROM e)
-        |SELECT item,
-        |       CAST(sum(1048576 >> least(max_day - day, 63)) AS BIGINT)
-        |         AS weight,
-        |       count(*)::BIGINT AS n_events
-        |FROM e, mx
-        |GROUP BY item
-        |ORDER BY weight DESC, item ASC
-        |LIMIT 20""".stripMargin,
-
-    // the term dictionary recomputed from the corpus (df = distinct
-    // docs per token), prefix-filtered, df-ranked — green proves the
-    // WRITTEN dictionary serves exactly what a corpus scan derives
-    "q264_prefix_search" ->
-      """WITH post AS (
-        |  SELECT token, doc_id FROM (
-        |    SELECT doc_id, unnest(string_split(text, ' ')) AS token
-        |    FROM documents)
-        |  GROUP BY 1, 2),
-        |vocab AS (
-        |  SELECT token, count(*)::BIGINT AS df FROM post GROUP BY 1)
-        |SELECT token, df, rk::BIGINT AS rk FROM (
-        |  SELECT token, df,
-        |         row_number() OVER (ORDER BY df DESC, token ASC) AS rk
-        |  FROM vocab WHERE starts_with(token, 's'))
-        |WHERE rk <= 10""".stripMargin,
-
-    // brute-force levenshtein over the recomputed dictionary — the
-    // oracle pays the O(V) scan the deletion-neighborhood store
-    // exists to avoid; green proves the filter-verify candidate path
-    // returns exactly the distance-<=1 set
-    "q265_fuzzy_term" ->
-      """WITH post AS (
-        |  SELECT token, doc_id FROM (
-        |    SELECT doc_id, unnest(string_split(text, ' ')) AS token
-        |    FROM documents)
-        |  GROUP BY 1, 2),
-        |vocab AS (
-        |  SELECT token, count(*)::BIGINT AS df FROM post GROUP BY 1)
-        |SELECT token, df, lev, rk::BIGINT AS rk FROM (
-        |  SELECT token, df, levenshtein(token, 'sow')::BIGINT AS lev,
-        |         row_number() OVER (
-        |           ORDER BY levenshtein(token, 'sow') ASC, df DESC,
-        |             token ASC) AS rk
-        |  FROM vocab WHERE levenshtein(token, 'sow') <= 1)
-        |WHERE rk <= 10""".stripMargin,
-
-    // brute-force contains over the recomputed dictionary — the O(V)
-    // scan the trigram index exists to avoid; green proves gram-AND +
-    // verify returns exactly the infix-match set per query
-    "q266_infix_search" ->
-      """WITH post AS (
-        |  SELECT token, doc_id FROM (
-        |    SELECT doc_id, unnest(string_split(text, ' ')) AS token
-        |    FROM documents)
-        |  GROUP BY 1, 2),
-        |vocab AS (
-        |  SELECT token, count(*)::BIGINT AS df FROM post GROUP BY 1),
-        |qs AS (
-        |  SELECT unnest(['oin', 'ort', 'rea', 'ble', 'alu', 'uery',
-        |                 'zzz']) AS q)
-        |SELECT q, token, df, rk::BIGINT AS rk FROM (
-        |  SELECT q, token, df,
-        |         row_number() OVER (PARTITION BY q
-        |                            ORDER BY df DESC, token ASC) AS rk
-        |  FROM qs JOIN vocab ON contains(token, q))
-        |WHERE rk <= 5""".stripMargin,
-
-    // the correction replayed brute-force (levenshtein argmin over the
-    // dictionary), then the q262 single-term BM25 body with the
-    // corrected token
-    "q267_corrected_search" ->
-      """WITH post AS (
-        |  SELECT token, doc_id, count(*) AS tf FROM (
-        |    SELECT doc_id, unnest(string_split(text, ' ')) AS token
-        |    FROM documents)
-        |  GROUP BY 1, 2),
-        |idx AS (
-        |  SELECT token, doc_id, tf FROM (
-        |    SELECT token, doc_id, tf,
-        |           row_number() OVER (PARTITION BY token
-        |                              ORDER BY tf DESC, doc_id ASC) AS prk
-        |    FROM post)
-        |  WHERE prk <= 1000),
-        |vocab AS (
-        |  SELECT token, count(*) AS df FROM post GROUP BY 1),
-        |corr AS (
-        |  SELECT token FROM (
-        |    SELECT token,
-        |           row_number() OVER (
-        |             ORDER BY levenshtein(token, 'sow') ASC, df DESC,
-        |               token ASC) AS crk
-        |    FROM vocab WHERE levenshtein(token, 'sow') <= 1)
-        |  WHERE crk = 1),
-        |nd AS (SELECT count(DISTINCT doc_id) AS n_docs FROM documents),
-        |sc AS (
-        |  SELECT i.doc_id AS doc_id,
-        |         (11 * i.tf * (2 * n_docs - 2 * v.df + 1))::DOUBLE
-        |         / ((5 * i.tf + 6) * (2 * v.df + 1))::DOUBLE AS s
-        |  FROM idx i JOIN corr USING (token) JOIN vocab v USING (token),
-        |       nd),
-        |p AS (
-        |  SELECT doc_id, count(*)::BIGINT AS n_terms_hit, max(s) AS s0
-        |  FROM sc GROUP BY doc_id)
-        |SELECT doc_id, n_terms_hit, round(coalesce(s0, 0.0), 6) AS score,
-        |       rk FROM (
-        |  SELECT doc_id, n_terms_hit, s0,
-        |         row_number() OVER (
-        |           ORDER BY coalesce(s0, 0.0) DESC, doc_id ASC) AS rk
-        |  FROM p)
-        |WHERE rk <= 20""".stripMargin,
-
-    // per-term brute-force correction (levenshtein argmin over the
-    // dictionary, exact match winning at lev 0), then the q262 k-term
-    // BM25 body with the corrected tokens
-    "q268_typo_search" ->
-      """WITH post AS (
-        |  SELECT token, doc_id, count(*) AS tf FROM (
-        |    SELECT doc_id, unnest(string_split(text, ' ')) AS token
-        |    FROM documents)
-        |  GROUP BY 1, 2),
-        |idx AS (
-        |  SELECT token, doc_id, tf FROM (
-        |    SELECT token, doc_id, tf,
-        |           row_number() OVER (PARTITION BY token
-        |                              ORDER BY tf DESC, doc_id ASC) AS prk
-        |    FROM post)
-        |  WHERE prk <= 1000),
-        |vocab AS (
-        |  SELECT token, count(*) AS df FROM post GROUP BY 1),
-        |qt AS (
-        |  SELECT * FROM (VALUES ('hash', 0), ('joi', 1), ('windo', 2))
-        |    AS t(q, ord)),
-        |corr AS (
-        |  SELECT ord, token FROM (
-        |    SELECT qt.ord AS ord, v.token AS token,
-        |           row_number() OVER (PARTITION BY qt.ord
-        |             ORDER BY levenshtein(v.token, qt.q) ASC, v.df DESC,
-        |               v.token ASC) AS crk
-        |    FROM qt JOIN vocab v ON levenshtein(v.token, qt.q) <= 1)
-        |  WHERE crk = 1),
-        |nd AS (SELECT count(DISTINCT doc_id) AS n_docs FROM documents),
-        |sc AS (
-        |  SELECT i.doc_id AS doc_id, c.ord AS ord,
-        |         (11 * i.tf * (2 * n_docs - 2 * v.df + 1))::DOUBLE
-        |         / ((5 * i.tf + 6) * (2 * v.df + 1))::DOUBLE AS s
-        |  FROM idx i JOIN corr c USING (token) JOIN vocab v USING (token),
-        |       nd),
-        |p AS (
-        |  SELECT doc_id, count(*)::BIGINT AS n_terms_hit,
-        |         max(CASE WHEN ord = 0 THEN s END) AS s0,
-        |         max(CASE WHEN ord = 1 THEN s END) AS s1,
-        |         max(CASE WHEN ord = 2 THEN s END) AS s2
-        |  FROM sc GROUP BY doc_id)
-        |SELECT doc_id, n_terms_hit, round(sk, 6) AS score, rk FROM (
-        |  SELECT doc_id, n_terms_hit,
-        |         coalesce(s0, 0.0) + coalesce(s1, 0.0) + coalesce(s2, 0.0)
-        |           AS sk,
-        |         row_number() OVER (
-        |           ORDER BY coalesce(s0, 0.0) + coalesce(s1, 0.0)
-        |             + coalesce(s2, 0.0) DESC, doc_id ASC) AS rk
-        |  FROM p)
-        |WHERE rk <= 20""".stripMargin,
-
-    // the capped-index match set recomputed from the corpus, faceted
-    // over the raw documents metadata — green proves the metadata
-    // store serves exactly what a corpus scan derives
-    "q269_faceted_search" ->
-      """WITH post AS (
-        |  SELECT token, doc_id, count(*) AS tf FROM (
-        |    SELECT doc_id, unnest(string_split(text, ' ')) AS token
-        |    FROM documents)
-        |  GROUP BY 1, 2),
-        |idx AS (
-        |  SELECT token, doc_id FROM (
-        |    SELECT token, doc_id,
-        |           row_number() OVER (PARTITION BY token
-        |                              ORDER BY tf DESC, doc_id ASC) AS prk
-        |    FROM post)
-        |  WHERE prk <= 1000),
-        |g AS (
-        |  SELECT 'hash' AS token
-        |  UNION ALL SELECT 'join' UNION ALL SELECT 'window'),
-        |m AS (SELECT DISTINCT doc_id FROM idx JOIN g USING (token))
-        |SELECT facet, value, count(*)::BIGINT AS n_docs FROM (
-        |  SELECT 'lang' AS facet, d.lang AS value
-        |  FROM m JOIN documents d USING (doc_id)
-        |  UNION ALL
-        |  SELECT 'source', d.source
-        |  FROM m JOIN documents d USING (doc_id))
-        |GROUP BY 1, 2""".stripMargin,
-
-    // the q262 scoring body with the candidate set restricted to
-    // lang=en docs (global df/n_docs statistics, rank within the
-    // filtered set)
-    "q270_filtered_search" ->
-      """WITH post AS (
-        |  SELECT token, doc_id, count(*) AS tf FROM (
-        |    SELECT doc_id, unnest(string_split(text, ' ')) AS token
-        |    FROM documents)
-        |  GROUP BY 1, 2),
-        |idx AS (
-        |  SELECT token, doc_id, tf FROM (
-        |    SELECT token, doc_id, tf,
-        |           row_number() OVER (PARTITION BY token
-        |                              ORDER BY tf DESC, doc_id ASC) AS prk
-        |    FROM post)
-        |  WHERE prk <= 1000),
-        |vocab AS (
-        |  SELECT token, count(*) AS df FROM post GROUP BY 1),
-        |nd AS (SELECT count(DISTINCT doc_id) AS n_docs FROM documents),
-        |ok AS (SELECT doc_id FROM documents WHERE lang = 'en'),
-        |g AS (
-        |  SELECT 'hash' AS token, 0 AS ord
-        |  UNION ALL SELECT 'join', 1
-        |  UNION ALL SELECT 'window', 2),
-        |sc AS (
-        |  SELECT i.doc_id AS doc_id, g.ord AS ord,
-        |         (11 * i.tf * (2 * n_docs - 2 * v.df + 1))::DOUBLE
-        |         / ((5 * i.tf + 6) * (2 * v.df + 1))::DOUBLE AS s
-        |  FROM idx i JOIN g USING (token) JOIN vocab v USING (token), nd
-        |  WHERE i.doc_id IN (SELECT doc_id FROM ok)),
-        |p AS (
-        |  SELECT doc_id, count(*)::BIGINT AS n_terms_hit,
-        |         max(CASE WHEN ord = 0 THEN s END) AS s0,
-        |         max(CASE WHEN ord = 1 THEN s END) AS s1,
-        |         max(CASE WHEN ord = 2 THEN s END) AS s2
-        |  FROM sc GROUP BY doc_id)
-        |SELECT doc_id, n_terms_hit, round(sk, 6) AS score, rk FROM (
-        |  SELECT doc_id, n_terms_hit,
-        |         coalesce(s0, 0.0) + coalesce(s1, 0.0) + coalesce(s2, 0.0)
-        |           AS sk,
-        |         row_number() OVER (
-        |           ORDER BY coalesce(s0, 0.0) + coalesce(s1, 0.0)
-        |             + coalesce(s2, 0.0) DESC, doc_id ASC) AS rk
-        |  FROM p)
-        |WHERE rk <= 20""".stripMargin,
-
-    // the q262 lexical top-20 and the q25-shaped cosine top-20 for
-    // query vector 0, RRF-fused: 1/(60+rank) summed where present,
-    // absent ranks emitted as 0
-    "q271_hybrid_rrf" ->
-      """WITH post AS (
-        |  SELECT token, doc_id, count(*) AS tf FROM (
-        |    SELECT doc_id, unnest(string_split(text, ' ')) AS token
-        |    FROM documents)
-        |  GROUP BY 1, 2),
-        |idx AS (
-        |  SELECT token, doc_id, tf FROM (
-        |    SELECT token, doc_id, tf,
-        |           row_number() OVER (PARTITION BY token
-        |                              ORDER BY tf DESC, doc_id ASC) AS prk
-        |    FROM post)
-        |  WHERE prk <= 1000),
-        |vocab AS (
-        |  SELECT token, count(*) AS df FROM post GROUP BY 1),
-        |nd AS (SELECT count(DISTINCT doc_id) AS n_docs FROM documents),
-        |g AS (
-        |  SELECT 'hash' AS token, 0 AS ord
-        |  UNION ALL SELECT 'join', 1
-        |  UNION ALL SELECT 'window', 2),
-        |sc AS (
-        |  SELECT i.doc_id AS doc_id, g.ord AS ord,
-        |         (11 * i.tf * (2 * n_docs - 2 * v.df + 1))::DOUBLE
-        |         / ((5 * i.tf + 6) * (2 * v.df + 1))::DOUBLE AS s
-        |  FROM idx i JOIN g USING (token) JOIN vocab v USING (token), nd),
-        |p AS (
-        |  SELECT doc_id,
-        |         max(CASE WHEN ord = 0 THEN s END) AS s0,
-        |         max(CASE WHEN ord = 1 THEN s END) AS s1,
-        |         max(CASE WHEN ord = 2 THEN s END) AS s2
-        |  FROM sc GROUP BY doc_id),
-        |lex AS (
-        |  SELECT doc_id, rk FROM (
-        |    SELECT doc_id,
-        |           row_number() OVER (
-        |             ORDER BY coalesce(s0, 0.0) + coalesce(s1, 0.0)
-        |               + coalesce(s2, 0.0) DESC, doc_id ASC) AS rk
-        |    FROM p)
-        |  WHERE rk <= 20),
-        |e AS (
-        |  SELECT * FROM (
-        |    SELECT vec_id, embedding,
-        |           list_sum(list_transform(embedding,
-        |             x -> x::DOUBLE * x::DOUBLE)) AS norm2
-        |    FROM embeddings)
-        |  WHERE norm2 > 0),
-        |q AS (
-        |  SELECT vec_id AS query_id, embedding AS q_emb, norm2 AS q_norm2
-        |  FROM e WHERE vec_id = 0),
-        |vsc AS (
-        |  SELECT e.vec_id AS doc_id,
-        |         round(list_sum(list_transform(
-        |                 generate_series(1, len(e.embedding)),
-        |                 i -> q.q_emb[i]::DOUBLE * e.embedding[i]::DOUBLE))
-        |               / sqrt(q.q_norm2 * e.norm2), 6) AS score
-        |  FROM e CROSS JOIN q WHERE e.vec_id <> q.query_id),
-        |vec AS (
-        |  SELECT doc_id, rank FROM (
-        |    SELECT doc_id, score,
-        |           row_number() OVER (
-        |             ORDER BY score DESC, doc_id) AS rank
-        |    FROM vsc)
-        |  WHERE rank <= 20),
-        |f AS (
-        |  -- 1.0 alone parses as DECIMAL in DuckDB; the ::DOUBLE casts
-        |  -- make this the same IEEE division Spark runs
-        |  SELECT doc_id,
-        |         coalesce(1.0::DOUBLE / (60 + l.rk), 0.0::DOUBLE)
-        |           + coalesce(1.0::DOUBLE / (60 + v.rank), 0.0::DOUBLE)
-        |           AS rrf0,
-        |         coalesce(l.rk, 0)::BIGINT AS rank_a,
-        |         coalesce(v.rank, 0)::BIGINT AS rank_b
-        |  FROM lex l FULL JOIN vec v USING (doc_id))
-        |SELECT doc_id, rank_a, rank_b, round(rrf0, 6) AS rrf,
-        |       rk::BIGINT AS rk FROM (
-        |  SELECT *, row_number() OVER (
-        |    ORDER BY rrf0 DESC, doc_id ASC) AS rk
-        |  FROM f)
-        |WHERE rk <= 10""".stripMargin,
-
-    // the planner replay: df per query term off the recomputed
-    // dictionary, AND order by df asc, cumulative expected candidates
-    // Π df / n^(i-1) — cumulative product over exactly-representable
-    // longs, one double division, round 4
-    "q272_query_plan" ->
-      """WITH post AS (
-        |  SELECT token, doc_id FROM (
-        |    SELECT doc_id, unnest(string_split(text, ' ')) AS token
-        |    FROM documents)
-        |  GROUP BY 1, 2),
-        |vocab AS (
-        |  SELECT token, count(*)::BIGINT AS df FROM post GROUP BY 1),
-        |nd AS (SELECT count(DISTINCT doc_id) AS n_docs FROM documents),
-        |t AS (
-        |  SELECT token, df FROM vocab
-        |  WHERE token IN ('hash', 'join', 'window')),
-        |r AS (
-        |  SELECT token, df,
-        |         row_number() OVER (ORDER BY df, token) AS plan_ord,
-        |         product(df::DOUBLE) OVER (
-        |           ORDER BY df, token
-        |           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-        |           AS cum
-        |  FROM t)
-        |SELECT plan_ord::BIGINT AS plan_ord, token, df,
-        |       round(cum / power(n_docs, plan_ord - 1), 4) AS cum_est
-        |FROM r, nd""".stripMargin,
-
-    // seed-doc term derivation (tf desc, df asc, token asc → ord) +
-    // the BM25 pivot over those terms with the seed excluded
-    "q273_more_like_this" ->
-      """WITH post AS (
-        |  SELECT token, doc_id, count(*) AS tf FROM (
-        |    SELECT doc_id, unnest(string_split(text, ' ')) AS token
-        |    FROM documents)
-        |  GROUP BY 1, 2),
-        |idx AS (
-        |  SELECT token, doc_id, tf FROM (
-        |    SELECT token, doc_id, tf,
-        |           row_number() OVER (PARTITION BY token
-        |                              ORDER BY tf DESC, doc_id ASC) AS prk
-        |    FROM post)
-        |  WHERE prk <= 1000),
-        |vocab AS (
-        |  SELECT token, count(*) AS df FROM post GROUP BY 1),
-        |nd AS (SELECT count(DISTINCT doc_id) AS n_docs FROM documents),
-        |seed AS (
-        |  SELECT token, count(*) AS stf FROM (
-        |    SELECT unnest(string_split(text, ' ')) AS token
-        |    FROM documents WHERE doc_id = 0)
-        |  GROUP BY 1),
-        |t AS (
-        |  SELECT token, ord FROM (
-        |    SELECT s.token AS token,
-        |           row_number() OVER (
-        |             ORDER BY s.stf DESC, v.df ASC, s.token ASC) - 1
-        |             AS ord
-        |    FROM seed s JOIN vocab v USING (token))
-        |  WHERE ord <= 2),
-        |sc AS (
-        |  SELECT i.doc_id AS doc_id, t.ord AS ord,
-        |         (11 * i.tf * (2 * n_docs - 2 * v.df + 1))::DOUBLE
-        |         / ((5 * i.tf + 6) * (2 * v.df + 1))::DOUBLE AS s
-        |  FROM idx i JOIN t USING (token) JOIN vocab v USING (token), nd
-        |  WHERE i.doc_id <> 0),
-        |p AS (
-        |  SELECT doc_id, count(*)::BIGINT AS n_terms_hit,
-        |         max(CASE WHEN ord = 0 THEN s END) AS s0,
-        |         max(CASE WHEN ord = 1 THEN s END) AS s1,
-        |         max(CASE WHEN ord = 2 THEN s END) AS s2
-        |  FROM sc GROUP BY doc_id)
-        |SELECT doc_id, n_terms_hit, round(sc0, 6) AS score,
-        |       rk::BIGINT AS rk FROM (
-        |  SELECT doc_id, n_terms_hit,
-        |         coalesce(s0, 0.0) + coalesce(s1, 0.0)
-        |           + coalesce(s2, 0.0) AS sc0,
-        |         row_number() OVER (
-        |           ORDER BY coalesce(s0, 0.0) + coalesce(s1, 0.0)
-        |             + coalesce(s2, 0.0) DESC, doc_id ASC) AS rk
-        |  FROM p)
-        |WHERE rk <= 10""".stripMargin,
-
-    // q271's lexical CTE widened to the top-100 recall stage, then the
-    // exact-cosine rescore over those candidates only (zero-norm
-    // candidates drop, the query doc excludes itself)
-    "q274_rerank_cosine" ->
-      """WITH post AS (
-        |  SELECT token, doc_id, count(*) AS tf FROM (
-        |    SELECT doc_id, unnest(string_split(text, ' ')) AS token
-        |    FROM documents)
-        |  GROUP BY 1, 2),
-        |idx AS (
-        |  SELECT token, doc_id, tf FROM (
-        |    SELECT token, doc_id, tf,
-        |           row_number() OVER (PARTITION BY token
-        |                              ORDER BY tf DESC, doc_id ASC) AS prk
-        |    FROM post)
-        |  WHERE prk <= 1000),
-        |vocab AS (
-        |  SELECT token, count(*) AS df FROM post GROUP BY 1),
-        |nd AS (SELECT count(DISTINCT doc_id) AS n_docs FROM documents),
-        |g AS (
-        |  SELECT 'hash' AS token, 0 AS ord
-        |  UNION ALL SELECT 'join', 1
-        |  UNION ALL SELECT 'window', 2),
-        |sc AS (
-        |  SELECT i.doc_id AS doc_id, g.ord AS ord,
-        |         (11 * i.tf * (2 * n_docs - 2 * v.df + 1))::DOUBLE
-        |         / ((5 * i.tf + 6) * (2 * v.df + 1))::DOUBLE AS s
-        |  FROM idx i JOIN g USING (token) JOIN vocab v USING (token), nd),
-        |p AS (
-        |  SELECT doc_id,
-        |         max(CASE WHEN ord = 0 THEN s END) AS s0,
-        |         max(CASE WHEN ord = 1 THEN s END) AS s1,
-        |         max(CASE WHEN ord = 2 THEN s END) AS s2
-        |  FROM sc GROUP BY doc_id),
-        |lex AS (
-        |  SELECT doc_id, rk AS lex_rk FROM (
-        |    SELECT doc_id,
-        |           row_number() OVER (
-        |             ORDER BY coalesce(s0, 0.0) + coalesce(s1, 0.0)
-        |               + coalesce(s2, 0.0) DESC, doc_id ASC) AS rk
-        |    FROM p)
-        |  WHERE rk <= 100),
-        |e AS (
-        |  SELECT * FROM (
-        |    SELECT vec_id, embedding,
-        |           list_sum(list_transform(embedding,
-        |             x -> x::DOUBLE * x::DOUBLE)) AS norm2
-        |    FROM embeddings)
-        |  WHERE norm2 > 0),
-        |q AS (
-        |  SELECT embedding AS q_emb, norm2 AS q_norm2
-        |  FROM e WHERE vec_id = 0),
-        |vsc AS (
-        |  SELECT l.doc_id AS doc_id, l.lex_rk AS lex_rk,
-        |         round(list_sum(list_transform(
-        |                 generate_series(1, len(e.embedding)),
-        |                 i -> q.q_emb[i]::DOUBLE * e.embedding[i]::DOUBLE))
-        |               / sqrt(q.q_norm2 * e.norm2), 6) AS score
-        |  FROM lex l JOIN e ON e.vec_id = l.doc_id
-        |  CROSS JOIN q WHERE l.doc_id <> 0)
-        |SELECT doc_id, lex_rk::BIGINT AS lex_rk, score, rk::BIGINT AS rk
-        |FROM (
-        |  SELECT *, row_number() OVER (
-        |    ORDER BY score DESC, doc_id ASC) AS rk
-        |  FROM vsc)
-        |WHERE rk <= 10""".stripMargin,
-
-    // q65's component walk (bands → edges → recursive min-label) +
-    // the k-term BM25 pivot, collapsed to the best doc per component
-    // before the final rank
-    "q275_collapse_search" ->
-      s"""$duckBandsCte,
-         |$duckEdgesBody,
-         |walk AS (
-         |  WITH RECURSIVE w(v, l) AS (
-         |    SELECT s, s FROM edges
-         |    UNION
-         |    SELECT e.s, w.l FROM edges e JOIN w ON e.t = w.v)
-         |  SELECT * FROM w),
-         |comp AS (SELECT v AS doc_id, min(l) AS rep FROM walk GROUP BY v),
-         |post AS (
-         |  SELECT token, doc_id, count(*) AS tf FROM (
-         |    SELECT doc_id, unnest(string_split(text, ' ')) AS token
-         |    FROM documents)
-         |  GROUP BY 1, 2),
-         |idx AS (
-         |  SELECT token, doc_id, tf FROM (
-         |    SELECT token, doc_id, tf,
-         |           row_number() OVER (PARTITION BY token
-         |                              ORDER BY tf DESC, doc_id ASC) AS prk
-         |    FROM post)
-         |  WHERE prk <= 1000),
-         |tvocab AS (
-         |  SELECT token, count(*) AS df FROM post GROUP BY 1),
-         |nd AS (SELECT count(DISTINCT doc_id) AS n_docs FROM documents),
-         |g AS (
-         |  SELECT 'hash' AS token, 0 AS ord
-         |  UNION ALL SELECT 'join', 1
-         |  UNION ALL SELECT 'window', 2),
-         |sc AS (
-         |  SELECT i.doc_id AS doc_id, g.ord AS ord,
-         |         (11 * i.tf * (2 * n_docs - 2 * v.df + 1))::DOUBLE
-         |         / ((5 * i.tf + 6) * (2 * v.df + 1))::DOUBLE AS s
-         |  FROM idx i JOIN g USING (token) JOIN tvocab v USING (token), nd),
-         |p AS (
-         |  SELECT doc_id, count(*)::BIGINT AS n_terms_hit,
-         |         max(CASE WHEN ord = 0 THEN s END) AS s0,
-         |         max(CASE WHEN ord = 1 THEN s END) AS s1,
-         |         max(CASE WHEN ord = 2 THEN s END) AS s2
-         |  FROM sc GROUP BY doc_id),
-         |wg AS (
-         |  SELECT p.doc_id AS doc_id, p.n_terms_hit AS n_terms_hit,
-         |         coalesce(p.s0, 0.0) + coalesce(p.s1, 0.0)
-         |           + coalesce(p.s2, 0.0) AS sc0,
-         |         coalesce(c.rep, p.doc_id) AS group_id
-         |  FROM p LEFT JOIN comp c ON c.doc_id = p.doc_id),
-         |best AS (
-         |  SELECT group_id, doc_id, n_terms_hit, sc0 FROM (
-         |    SELECT *, row_number() OVER (
-         |      PARTITION BY group_id
-         |      ORDER BY sc0 DESC, doc_id ASC) AS brn
-         |    FROM wg)
-         |  WHERE brn = 1)
-         |SELECT doc_id, group_id, n_terms_hit, round(sc0, 6) AS score,
-         |       rk::BIGINT AS rk FROM (
-         |  SELECT *, row_number() OVER (
-         |    ORDER BY sc0 DESC, doc_id ASC) AS rk
-         |  FROM best)
-         |WHERE rk <= 10""".stripMargin,
-
-    // per-family recount from the raw corpus: postings/positions from
-    // the unnested text, metadata/facet/code rows arithmetic off the
-    // table counts, dup-map membership via the q65 component walk,
-    // vocabulary extinction as the per-token all-quantifier
-    "q276_forget_audit" ->
-      s"""$duckBandsCte,
-         |$duckEdgesBody,
-         |walk AS (
-         |  WITH RECURSIVE w(v, l) AS (
-         |    SELECT s, s FROM edges
-         |    UNION
-         |    SELECT e.s, w.l FROM edges e JOIN w ON e.t = w.v)
-         |  SELECT * FROM w),
-         |comp AS (SELECT v AS doc_id, min(l) AS rep FROM walk GROUP BY v),
-         |post AS (
-         |  SELECT token, doc_id, count(*) AS tf FROM (
-         |    SELECT doc_id, unnest(string_split(text, ' ')) AS token
-         |    FROM documents)
-         |  GROUP BY 1, 2)
-         |SELECT 'index_postings' AS family, b::BIGINT AS rows_before,
-         |       r::BIGINT AS rows_removed, (b - r)::BIGINT AS rows_after
-         |FROM (SELECT (SELECT count(*) FROM post) AS b,
-         |             (SELECT count(*) FROM post
-         |              WHERE doc_id % 97 = 0) AS r)
-         |UNION ALL
-         |SELECT 'positional_positions', b::BIGINT, r::BIGINT,
-         |       (b - r)::BIGINT
-         |FROM (SELECT (SELECT sum(tf) FROM post) AS b,
-         |             (SELECT coalesce(sum(tf), 0) FROM post
-         |              WHERE doc_id % 97 = 0) AS r)
-         |UNION ALL
-         |SELECT 'norms', b::BIGINT, r::BIGINT, (b - r)::BIGINT
-         |FROM (SELECT (SELECT count(*) FROM documents) AS b,
-         |             (SELECT count(*) FROM documents
-         |              WHERE doc_id % 97 = 0) AS r)
-         |UNION ALL
-         |SELECT 'doc_meta', b::BIGINT, r::BIGINT, (b - r)::BIGINT
-         |FROM (SELECT (SELECT count(*) FROM documents) AS b,
-         |             (SELECT count(*) FROM documents
-         |              WHERE doc_id % 97 = 0) AS r)
-         |UNION ALL
-         |SELECT 'facets', (2 * b)::BIGINT, (2 * r)::BIGINT,
-         |       (2 * (b - r))::BIGINT
-         |FROM (SELECT (SELECT count(*) FROM documents) AS b,
-         |             (SELECT count(*) FROM documents
-         |              WHERE doc_id % 97 = 0) AS r)
-         |UNION ALL
-         |SELECT 'pq_codes', (8 * b)::BIGINT, (8 * r)::BIGINT,
-         |       (8 * (b - r))::BIGINT
-         |FROM (SELECT (SELECT count(*) FROM embeddings) AS b,
-         |             (SELECT count(*) FROM embeddings
-         |              WHERE vec_id % 97 = 0) AS r)
-         |UNION ALL
-         |SELECT 'dup_map', b::BIGINT, r::BIGINT, (b - r)::BIGINT
-         |FROM (SELECT (SELECT count(*) FROM comp) AS b,
-         |             (SELECT count(*) FROM comp
-         |              WHERE doc_id % 97 = 0) AS r)
-         |UNION ALL
-         |SELECT 'dup_map_reps', b::BIGINT, r::BIGINT, (b - r)::BIGINT
-         |FROM (SELECT (SELECT count(*) FROM comp) AS b,
-         |             (SELECT count(*) FROM comp
-         |              WHERE rep % 97 = 0) AS r)
-         |UNION ALL
-         |SELECT 'vocab_terms', b::BIGINT, r::BIGINT, (b - r)::BIGINT
-         |FROM (SELECT (SELECT count(DISTINCT token) FROM post) AS b,
-         |             (SELECT count(*) FROM (
-         |                SELECT token FROM post GROUP BY token
-         |                HAVING count(*) = count(CASE WHEN doc_id % 97 = 0
-         |                                        THEN 1 END))) AS r)""".stripMargin,
-
-    // q237's lift CTEs (uncut) → seed-partner argmax → the 3-term
-    // BM25 pivot with the seed at ord 0 and partners at 1..2
-    "q278_expansion_search" ->
-      """WITH g0 AS (
-        |  SELECT ws[i] AS w1, ws[i+1] AS w2
-        |  FROM (SELECT string_split(text, ' ') AS ws,
-        |               unnest(generate_series(1, len(string_split(text, ' ')) - 1)) AS i
-        |        FROM documents)),
-        |bg AS (SELECT w1, w2, count(*)::BIGINT AS c_xy FROM g0 GROUP BY 1, 2),
-        |c1 AS (SELECT w1, CAST(sum(c_xy) AS BIGINT) AS c_x FROM bg GROUP BY 1),
-        |c2 AS (SELECT w2, CAST(sum(c_xy) AS BIGINT) AS c_y FROM bg GROUP BY 1),
-        |n AS (SELECT CAST(sum(c_xy) AS BIGINT) AS n_bi FROM bg),
-        |lt AS (
-        |  SELECT bg.w1, bg.w2,
-        |         round((n.n_bi * bg.c_xy)::DOUBLE
-        |               / (c1.c_x * c2.c_y)::DOUBLE, 6) AS lift
-        |  FROM bg JOIN c1 USING (w1) JOIN c2 USING (w2), n
-        |  WHERE bg.c_xy >= 5),
-        |prt AS (
-        |  SELECT partner, max(lift) AS ml FROM (
-        |    SELECT CASE WHEN w1 = 'hash' THEN w2 ELSE w1 END AS partner,
-        |           lift
-        |    FROM lt WHERE w1 = 'hash' OR w2 = 'hash')
-        |  WHERE partner <> 'hash' GROUP BY 1),
-        |t AS (
-        |  SELECT 'hash' AS token, 0 AS ord
-        |  UNION ALL
-        |  SELECT partner, rn FROM (
-        |    SELECT partner, row_number() OVER (
-        |      ORDER BY ml DESC, partner ASC) AS rn
-        |    FROM prt)
-        |  WHERE rn <= 2),
-        |post AS (
-        |  SELECT token, doc_id, count(*) AS tf FROM (
-        |    SELECT doc_id, unnest(string_split(text, ' ')) AS token
-        |    FROM documents)
-        |  GROUP BY 1, 2),
-        |idx AS (
-        |  SELECT token, doc_id, tf FROM (
-        |    SELECT token, doc_id, tf,
-        |           row_number() OVER (PARTITION BY token
-        |                              ORDER BY tf DESC, doc_id ASC) AS prk
-        |    FROM post)
-        |  WHERE prk <= 1000),
-        |tvocab AS (
-        |  SELECT token, count(*) AS df FROM post GROUP BY 1),
-        |nd AS (SELECT count(DISTINCT doc_id) AS n_docs FROM documents),
-        |sc AS (
-        |  SELECT i.doc_id AS doc_id, t.ord AS ord,
-        |         (11 * i.tf * (2 * n_docs - 2 * v.df + 1))::DOUBLE
-        |         / ((5 * i.tf + 6) * (2 * v.df + 1))::DOUBLE AS s
-        |  FROM idx i JOIN t USING (token) JOIN tvocab v USING (token), nd),
-        |p AS (
-        |  SELECT doc_id, count(*)::BIGINT AS n_terms_hit,
-        |         max(CASE WHEN ord = 0 THEN s END) AS s0,
-        |         max(CASE WHEN ord = 1 THEN s END) AS s1,
-        |         max(CASE WHEN ord = 2 THEN s END) AS s2
-        |  FROM sc GROUP BY doc_id)
-        |SELECT doc_id, n_terms_hit, round(sc0, 6) AS score,
-        |       rk::BIGINT AS rk FROM (
-        |  SELECT doc_id, n_terms_hit,
-        |         coalesce(s0, 0.0) + coalesce(s1, 0.0)
-        |           + coalesce(s2, 0.0) AS sc0,
-        |         row_number() OVER (
-        |           ORDER BY coalesce(s0, 0.0) + coalesce(s1, 0.0)
-        |             + coalesce(s2, 0.0) DESC, doc_id ASC) AS rk
-        |  FROM p)
-        |WHERE rk <= 10""".stripMargin,
-
-    // q237's replay over the corpus minus the tombstoned docs
-    "q280_colloc_maintenance" ->
-      """WITH g AS (
-        |  SELECT ws[i] AS w1, ws[i+1] AS w2
-        |  FROM (SELECT string_split(text, ' ') AS ws,
-        |               unnest(generate_series(1, len(string_split(text, ' ')) - 1)) AS i
-        |        FROM documents WHERE doc_id % 10 <> 0)),
-        |bg AS (SELECT w1, w2, count(*)::BIGINT AS c_xy FROM g GROUP BY 1, 2),
-        |c1 AS (SELECT w1, CAST(sum(c_xy) AS BIGINT) AS c_x FROM bg GROUP BY 1),
-        |c2 AS (SELECT w2, CAST(sum(c_xy) AS BIGINT) AS c_y FROM bg GROUP BY 1),
-        |n AS (SELECT CAST(sum(c_xy) AS BIGINT) AS n_bi FROM bg)
-        |SELECT bg.w1, bg.w2, bg.c_xy, c1.c_x, c2.c_y,
-        |       round((n.n_bi * bg.c_xy)::DOUBLE
-        |             / (c1.c_x * c2.c_y)::DOUBLE, 6) AS lift
-        |FROM bg JOIN c1 USING (w1) JOIN c2 USING (w2), n
-        |WHERE bg.c_xy >= 5
-        |ORDER BY lift DESC, w1 ASC, w2 ASC
-        |LIMIT 20""".stripMargin,
-
-    // the forget replay: the erasure filter applied at the CORPUS
-    // level, every statistic recomputed over the survivors
-    "q279_forget_search" ->
-      """WITH post AS (
-        |  SELECT token, doc_id, count(*) AS tf FROM (
-        |    SELECT doc_id, unnest(string_split(text, ' ')) AS token
-        |    FROM documents WHERE doc_id % 97 <> 0)
-        |  GROUP BY 1, 2),
-        |idx AS (
-        |  SELECT token, doc_id, tf FROM (
-        |    SELECT token, doc_id, tf,
-        |           row_number() OVER (PARTITION BY token
-        |                              ORDER BY tf DESC, doc_id ASC) AS prk
-        |    FROM post)
-        |  WHERE prk <= 1000),
-        |tvocab AS (
-        |  SELECT token, count(*) AS df FROM post GROUP BY 1),
-        |nd AS (SELECT count(DISTINCT doc_id) AS n_docs FROM post),
-        |g AS (
-        |  SELECT 'hash' AS token, 0 AS ord
-        |  UNION ALL SELECT 'join', 1
-        |  UNION ALL SELECT 'window', 2),
-        |sc AS (
-        |  SELECT i.doc_id AS doc_id, g.ord AS ord,
-        |         (11 * i.tf * (2 * n_docs - 2 * v.df + 1))::DOUBLE
-        |         / ((5 * i.tf + 6) * (2 * v.df + 1))::DOUBLE AS s
-        |  FROM idx i JOIN g USING (token) JOIN tvocab v USING (token), nd),
-        |p AS (
-        |  SELECT doc_id, count(*)::BIGINT AS n_terms_hit,
-        |         max(CASE WHEN ord = 0 THEN s END) AS s0,
-        |         max(CASE WHEN ord = 1 THEN s END) AS s1,
-        |         max(CASE WHEN ord = 2 THEN s END) AS s2
-        |  FROM sc GROUP BY doc_id)
-        |SELECT doc_id, n_terms_hit, round(sc0, 6) AS score,
-        |       rk::BIGINT AS rk FROM (
-        |  SELECT doc_id, n_terms_hit,
-        |         coalesce(s0, 0.0) + coalesce(s1, 0.0)
-        |           + coalesce(s2, 0.0) AS sc0,
-        |         row_number() OVER (
-        |           ORDER BY coalesce(s0, 0.0) + coalesce(s1, 0.0)
-        |             + coalesce(s2, 0.0) DESC, doc_id ASC) AS rk
-        |  FROM p)
-        |WHERE rk <= 10""".stripMargin,
-
-    // the 2-term BM25 pivot minus every doc that contains the
-    // negative term (full posting list, not capped)
-    "q281_negative_search" ->
-      """WITH post AS (
-        |  SELECT token, doc_id, count(*) AS tf FROM (
-        |    SELECT doc_id, unnest(string_split(text, ' ')) AS token
-        |    FROM documents)
-        |  GROUP BY 1, 2),
-        |idx AS (
-        |  SELECT token, doc_id, tf FROM (
-        |    SELECT token, doc_id, tf,
-        |           row_number() OVER (PARTITION BY token
-        |                              ORDER BY tf DESC, doc_id ASC) AS prk
-        |    FROM post)
-        |  WHERE prk <= 1000),
-        |tvocab AS (
-        |  SELECT token, count(*) AS df FROM post GROUP BY 1),
-        |nd AS (SELECT count(DISTINCT doc_id) AS n_docs FROM documents),
-        |neg AS (SELECT doc_id FROM post WHERE token = 'window'),
-        |g AS (
-        |  SELECT 'hash' AS token, 0 AS ord
-        |  UNION ALL SELECT 'join', 1),
-        |sc AS (
-        |  SELECT i.doc_id AS doc_id, g.ord AS ord,
-        |         (11 * i.tf * (2 * n_docs - 2 * v.df + 1))::DOUBLE
-        |         / ((5 * i.tf + 6) * (2 * v.df + 1))::DOUBLE AS s
-        |  FROM idx i JOIN g USING (token) JOIN tvocab v USING (token), nd
-        |  WHERE i.doc_id NOT IN (SELECT doc_id FROM neg)),
-        |p AS (
-        |  SELECT doc_id, count(*)::BIGINT AS n_terms_hit,
-        |         max(CASE WHEN ord = 0 THEN s END) AS s0,
-        |         max(CASE WHEN ord = 1 THEN s END) AS s1
-        |  FROM sc GROUP BY doc_id)
-        |SELECT doc_id, n_terms_hit, round(sc0, 6) AS score,
-        |       rk::BIGINT AS rk FROM (
-        |  SELECT doc_id, n_terms_hit,
-        |         coalesce(s0, 0.0) + coalesce(s1, 0.0) AS sc0,
-        |         row_number() OVER (
-        |           ORDER BY coalesce(s0, 0.0) + coalesce(s1, 0.0)
-        |             DESC, doc_id ASC) AS rk
-        |  FROM p)
-        |WHERE rk <= 10""".stripMargin,
-
-    // the q83 chunk derivation → chunk-domain BM25 (df/N over chunks)
-    // → per-doc best-chunk argmax → doc rank
-    "q282_passage_search" ->
-      """WITH w AS (
-        |  SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
-        |s0 AS (
-        |  SELECT doc_id, ws,
-        |         unnest(generate_series(0, greatest(len(ws) - 1 - 8, 0),
-        |                                24)) AS sw
-        |  FROM w),
-        |ch AS (
-        |  SELECT doc_id * 100000 + (sw // 24) AS cid,
-        |         array_to_string(ws[sw + 1 : sw + 32], ' ') AS chunk
-        |  FROM s0),
-        |post AS (
-        |  SELECT token, cid, count(*) AS tf FROM (
-        |    SELECT cid, unnest(string_split(chunk, ' ')) AS token
-        |    FROM ch)
-        |  GROUP BY 1, 2),
-        |idx AS (
-        |  SELECT token, cid, tf FROM (
-        |    SELECT token, cid, tf,
-        |           row_number() OVER (PARTITION BY token
-        |                              ORDER BY tf DESC, cid ASC) AS prk
-        |    FROM post)
-        |  WHERE prk <= 1000),
-        |tvocab AS (
-        |  SELECT token, count(*) AS df FROM post GROUP BY 1),
-        |nd AS (SELECT count(*) AS n_chunks FROM ch),
-        |g AS (
-        |  SELECT 'hash' AS token, 0 AS ord
-        |  UNION ALL SELECT 'join', 1
-        |  UNION ALL SELECT 'window', 2),
-        |sc AS (
-        |  SELECT i.cid AS cid, g.ord AS ord,
-        |         (11 * i.tf * (2 * n_chunks - 2 * v.df + 1))::DOUBLE
-        |         / ((5 * i.tf + 6) * (2 * v.df + 1))::DOUBLE AS s
-        |  FROM idx i JOIN g USING (token) JOIN tvocab v USING (token), nd),
-        |p AS (
-        |  SELECT cid, count(*)::BIGINT AS n_terms_hit,
-        |         max(CASE WHEN ord = 0 THEN s END) AS s0,
-        |         max(CASE WHEN ord = 1 THEN s END) AS s1,
-        |         max(CASE WHEN ord = 2 THEN s END) AS s2
-        |  FROM sc GROUP BY cid),
-        |dec AS (
-        |  SELECT cid // 100000 AS d, cid % 100000 AS ch_id, n_terms_hit,
-        |         coalesce(s0, 0.0) + coalesce(s1, 0.0)
-        |           + coalesce(s2, 0.0) AS sc0
-        |  FROM p),
-        |best AS (
-        |  SELECT d, ch_id, n_terms_hit, sc0 FROM (
-        |    SELECT *, row_number() OVER (
-        |      PARTITION BY d ORDER BY sc0 DESC, ch_id ASC) AS brn
-        |    FROM dec)
-        |  WHERE brn = 1)
-        |SELECT d AS doc_id, ch_id::BIGINT AS chunk_id, n_terms_hit,
-        |       round(sc0, 6) AS score, rk::BIGINT AS rk FROM (
-        |  SELECT *, row_number() OVER (
-        |    ORDER BY sc0 DESC, d ASC) AS rk
-        |  FROM best)
-        |WHERE rk <= 10""".stripMargin,
-
-    // df over the full corpus vs the gen≤2 subset, delta rank
-    "q285_df_drift" ->
-      """WITH postn AS (
-        |  SELECT token, doc_id FROM (
-        |    SELECT doc_id, unnest(string_split(text, ' ')) AS token
-        |    FROM documents)
-        |  GROUP BY 1, 2),
-        |posto AS (
-        |  SELECT token, doc_id FROM (
-        |    SELECT doc_id, unnest(string_split(text, ' ')) AS token
-        |    FROM documents WHERE doc_id % 4 <= 2)
-        |  GROUP BY 1, 2),
-        |vn AS (SELECT token, count(*)::BIGINT AS df_new
-        |       FROM postn GROUP BY 1),
-        |vo AS (SELECT token, count(*)::BIGINT AS df_old
-        |       FROM posto GROUP BY 1)
-        |SELECT token, df_old, df_new, delta, rk::BIGINT AS rk FROM (
-        |  SELECT vn.token AS token, coalesce(vo.df_old, 0) AS df_old,
-        |         vn.df_new AS df_new,
-        |         vn.df_new - coalesce(vo.df_old, 0) AS delta,
-        |         row_number() OVER (
-        |           ORDER BY vn.df_new - coalesce(vo.df_old, 0) DESC,
-        |             vn.token ASC) AS rk
-        |  FROM vn LEFT JOIN vo ON vo.token = vn.token)
-        |WHERE rk <= 20""".stripMargin,
-
-    // three query pivots over one idx probe, per-qid partitioned rank
-    "q284_search_batch" ->
-      """WITH post AS (
-        |  SELECT token, doc_id, count(*) AS tf FROM (
-        |    SELECT doc_id, unnest(string_split(text, ' ')) AS token
-        |    FROM documents)
-        |  GROUP BY 1, 2),
-        |idx AS (
-        |  SELECT token, doc_id, tf FROM (
-        |    SELECT token, doc_id, tf,
-        |           row_number() OVER (PARTITION BY token
-        |                              ORDER BY tf DESC, doc_id ASC) AS prk
-        |    FROM post)
-        |  WHERE prk <= 1000),
-        |tvocab AS (
-        |  SELECT token, count(*) AS df FROM post GROUP BY 1),
-        |nd AS (SELECT count(DISTINCT doc_id) AS n_docs FROM documents),
-        |g AS (
-        |  SELECT 0 AS qid, 'hash' AS token, 0 AS ord
-        |  UNION ALL SELECT 0, 'join', 1
-        |  UNION ALL SELECT 0, 'window', 2
-        |  UNION ALL SELECT 1, 'sort', 0
-        |  UNION ALL SELECT 1, 'merge', 1
-        |  UNION ALL SELECT 2, 'filter', 0
-        |  UNION ALL SELECT 2, 'scan', 1),
-        |sc AS (
-        |  SELECT g.qid AS qid, i.doc_id AS doc_id, g.ord AS ord,
-        |         (11 * i.tf * (2 * n_docs - 2 * v.df + 1))::DOUBLE
-        |         / ((5 * i.tf + 6) * (2 * v.df + 1))::DOUBLE AS s
-        |  FROM idx i JOIN g USING (token) JOIN tvocab v USING (token), nd),
-        |p AS (
-        |  SELECT qid, doc_id, count(*)::BIGINT AS n_terms_hit,
-        |         max(CASE WHEN ord = 0 THEN s END) AS s0,
-        |         max(CASE WHEN ord = 1 THEN s END) AS s1,
-        |         max(CASE WHEN ord = 2 THEN s END) AS s2
-        |  FROM sc GROUP BY qid, doc_id)
-        |SELECT qid::BIGINT AS qid, doc_id, n_terms_hit,
-        |       round(sc0, 6) AS score, rk::BIGINT AS rk FROM (
-        |  SELECT qid, doc_id, n_terms_hit,
-        |         coalesce(s0, 0.0) + coalesce(s1, 0.0)
-        |           + coalesce(s2, 0.0) AS sc0,
-        |         row_number() OVER (
-        |           PARTITION BY qid
-        |           ORDER BY coalesce(s0, 0.0) + coalesce(s1, 0.0)
-        |             + coalesce(s2, 0.0) DESC, doc_id ASC) AS rk
-        |  FROM p)
-        |WHERE rk <= 10""".stripMargin,
-
-    // q282's replay at k=5 joined back to the chunk text
-    "q283_rag_context" ->
-      """WITH w AS (
-        |  SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
-        |s0 AS (
-        |  SELECT doc_id, ws,
-        |         unnest(generate_series(0, greatest(len(ws) - 1 - 8, 0),
-        |                                24)) AS sw
-        |  FROM w),
-        |ch AS (
-        |  SELECT doc_id * 100000 + (sw // 24) AS cid,
-        |         array_to_string(ws[sw + 1 : sw + 32], ' ') AS chunk
-        |  FROM s0),
-        |post AS (
-        |  SELECT token, cid, count(*) AS tf FROM (
-        |    SELECT cid, unnest(string_split(chunk, ' ')) AS token
-        |    FROM ch)
-        |  GROUP BY 1, 2),
-        |idx AS (
-        |  SELECT token, cid, tf FROM (
-        |    SELECT token, cid, tf,
-        |           row_number() OVER (PARTITION BY token
-        |                              ORDER BY tf DESC, cid ASC) AS prk
-        |    FROM post)
-        |  WHERE prk <= 1000),
-        |tvocab AS (
-        |  SELECT token, count(*) AS df FROM post GROUP BY 1),
-        |nd AS (SELECT count(*) AS n_chunks FROM ch),
-        |g AS (
-        |  SELECT 'hash' AS token, 0 AS ord
-        |  UNION ALL SELECT 'join', 1
-        |  UNION ALL SELECT 'window', 2),
-        |sc AS (
-        |  SELECT i.cid AS cid, g.ord AS ord,
-        |         (11 * i.tf * (2 * n_chunks - 2 * v.df + 1))::DOUBLE
-        |         / ((5 * i.tf + 6) * (2 * v.df + 1))::DOUBLE AS s
-        |  FROM idx i JOIN g USING (token) JOIN tvocab v USING (token), nd),
-        |p AS (
-        |  SELECT cid, count(*)::BIGINT AS n_terms_hit,
-        |         max(CASE WHEN ord = 0 THEN s END) AS s0,
-        |         max(CASE WHEN ord = 1 THEN s END) AS s1,
-        |         max(CASE WHEN ord = 2 THEN s END) AS s2
-        |  FROM sc GROUP BY cid),
-        |dec AS (
-        |  SELECT cid // 100000 AS d, cid % 100000 AS ch_id, n_terms_hit,
-        |         coalesce(s0, 0.0) + coalesce(s1, 0.0)
-        |           + coalesce(s2, 0.0) AS sc0
-        |  FROM p),
-        |best AS (
-        |  SELECT d, ch_id, n_terms_hit, sc0 FROM (
-        |    SELECT *, row_number() OVER (
-        |      PARTITION BY d ORDER BY sc0 DESC, ch_id ASC) AS brn
-        |    FROM dec)
-        |  WHERE brn = 1),
-        |rnk AS (
-        |  SELECT d, ch_id, n_terms_hit, sc0, rk FROM (
-        |    SELECT *, row_number() OVER (
-        |      ORDER BY sc0 DESC, d ASC) AS rk
-        |    FROM best)
-        |  WHERE rk <= 5)
-        |SELECT r.d AS doc_id, r.ch_id::BIGINT AS chunk_id,
-        |       r.n_terms_hit, round(r.sc0, 6) AS score,
-        |       r.rk::BIGINT AS rk, c.chunk AS chunk
-        |FROM rnk r JOIN ch c ON c.cid = r.d * 100000 + r.ch_id""".stripMargin,
-
-    // the as-of replay: generation filter applied at the CORPUS level
-    // (doc_id % 4 ≤ 2 — the slice-tagging rule), every statistic (df,
-    // n_docs) recomputed from the filtered postings
-    "q277_asof_search" ->
-      """WITH post AS (
-        |  SELECT token, doc_id, count(*) AS tf FROM (
-        |    SELECT doc_id, unnest(string_split(text, ' ')) AS token
-        |    FROM documents WHERE doc_id % 4 <= 2)
-        |  GROUP BY 1, 2),
-        |idx AS (
-        |  SELECT token, doc_id, tf FROM (
-        |    SELECT token, doc_id, tf,
-        |           row_number() OVER (PARTITION BY token
-        |                              ORDER BY tf DESC, doc_id ASC) AS prk
-        |    FROM post)
-        |  WHERE prk <= 1000),
-        |vocab AS (
-        |  SELECT token, count(*) AS df FROM post GROUP BY 1),
-        |nd AS (SELECT count(DISTINCT doc_id) AS n_docs FROM post),
-        |g AS (
-        |  SELECT 'hash' AS token, 0 AS ord
-        |  UNION ALL SELECT 'join', 1
-        |  UNION ALL SELECT 'window', 2),
-        |sc AS (
-        |  SELECT i.doc_id AS doc_id, g.ord AS ord,
-        |         (11 * i.tf * (2 * n_docs - 2 * v.df + 1))::DOUBLE
-        |         / ((5 * i.tf + 6) * (2 * v.df + 1))::DOUBLE AS s
-        |  FROM idx i JOIN g USING (token) JOIN vocab v USING (token), nd),
-        |p AS (
-        |  SELECT doc_id, count(*)::BIGINT AS n_terms_hit,
-        |         max(CASE WHEN ord = 0 THEN s END) AS s0,
-        |         max(CASE WHEN ord = 1 THEN s END) AS s1,
-        |         max(CASE WHEN ord = 2 THEN s END) AS s2
-        |  FROM sc GROUP BY doc_id)
-        |SELECT doc_id, n_terms_hit, round(sc0, 6) AS score,
-        |       rk::BIGINT AS rk FROM (
-        |  SELECT doc_id, n_terms_hit,
-        |         coalesce(s0, 0.0) + coalesce(s1, 0.0)
-        |           + coalesce(s2, 0.0) AS sc0,
-        |         row_number() OVER (
-        |           ORDER BY coalesce(s0, 0.0) + coalesce(s1, 0.0)
-        |             + coalesce(s2, 0.0) DESC, doc_id ASC) AS rk
-        |  FROM p)
-        |WHERE rk <= 10""".stripMargin,
-
-    // the q209 phrase replay with the position lists drawn from the
-    // surviving corpus only (the erasure boundary); the bigram term
-    // statistic stays the full-corpus artifact the store persists
-    "q286_forget_phrase" ->
-      posOracle(" WHERE doc_id % 97 <> 0", phraseMatchExpr),
-
-    // the q282 chunk replay over the surviving documents — chunking,
-    // cap, df and the chunk count all recomputed minus the forget set
-    "q287_forget_passage" ->
-      """WITH w AS (
-        |  SELECT doc_id, string_split(text, ' ') AS ws FROM documents
-        |  WHERE doc_id % 97 <> 0),
-        |s0 AS (
-        |  SELECT doc_id, ws,
-        |         unnest(generate_series(0, greatest(len(ws) - 1 - 8, 0),
-        |                                24)) AS sw
-        |  FROM w),
-        |ch AS (
-        |  SELECT doc_id * 100000 + (sw // 24) AS cid,
-        |         array_to_string(ws[sw + 1 : sw + 32], ' ') AS chunk
-        |  FROM s0),
-        |post AS (
-        |  SELECT token, cid, count(*) AS tf FROM (
-        |    SELECT cid, unnest(string_split(chunk, ' ')) AS token
-        |    FROM ch)
-        |  GROUP BY 1, 2),
-        |idx AS (
-        |  SELECT token, cid, tf FROM (
-        |    SELECT token, cid, tf,
-        |           row_number() OVER (PARTITION BY token
-        |                              ORDER BY tf DESC, cid ASC) AS prk
-        |    FROM post)
-        |  WHERE prk <= 1000),
-        |tvocab AS (
-        |  SELECT token, count(*) AS df FROM post GROUP BY 1),
-        |nd AS (SELECT count(*) AS n_chunks FROM ch),
-        |g AS (
-        |  SELECT 'hash' AS token, 0 AS ord
-        |  UNION ALL SELECT 'join', 1
-        |  UNION ALL SELECT 'window', 2),
-        |sc AS (
-        |  SELECT i.cid AS cid, g.ord AS ord,
-        |         (11 * i.tf * (2 * n_chunks - 2 * v.df + 1))::DOUBLE
-        |         / ((5 * i.tf + 6) * (2 * v.df + 1))::DOUBLE AS s
-        |  FROM idx i JOIN g USING (token) JOIN tvocab v USING (token), nd),
-        |p AS (
-        |  SELECT cid, count(*)::BIGINT AS n_terms_hit,
-        |         max(CASE WHEN ord = 0 THEN s END) AS s0,
-        |         max(CASE WHEN ord = 1 THEN s END) AS s1,
-        |         max(CASE WHEN ord = 2 THEN s END) AS s2
-        |  FROM sc GROUP BY cid),
-        |dec AS (
-        |  SELECT cid // 100000 AS d, cid % 100000 AS ch_id, n_terms_hit,
-        |         coalesce(s0, 0.0) + coalesce(s1, 0.0)
-        |           + coalesce(s2, 0.0) AS sc0
-        |  FROM p),
-        |best AS (
-        |  SELECT d, ch_id, n_terms_hit, sc0 FROM (
-        |    SELECT *, row_number() OVER (
-        |      PARTITION BY d ORDER BY sc0 DESC, ch_id ASC) AS brn
-        |    FROM dec)
-        |  WHERE brn = 1)
-        |SELECT d AS doc_id, ch_id::BIGINT AS chunk_id, n_terms_hit,
-        |       round(sc0, 6) AS score, rk::BIGINT AS rk FROM (
-        |  SELECT *, row_number() OVER (
-        |    ORDER BY sc0 DESC, d ASC) AS rk
-        |  FROM best)
-        |WHERE rk <= 10""".stripMargin,
-
-    // the q269 facet replay with both sides erased: the capped hit
-    // derivation re-runs over surviving postings (the cap backfills),
-    // the metadata join over surviving documents
-    "q288_forget_facets" ->
-      """WITH post AS (
-        |  SELECT token, doc_id, count(*) AS tf FROM (
-        |    SELECT doc_id, unnest(string_split(text, ' ')) AS token
-        |    FROM documents WHERE doc_id % 97 <> 0)
-        |  GROUP BY 1, 2),
-        |idx AS (
-        |  SELECT token, doc_id FROM (
-        |    SELECT token, doc_id,
-        |           row_number() OVER (PARTITION BY token
-        |                              ORDER BY tf DESC, doc_id ASC) AS prk
-        |    FROM post)
-        |  WHERE prk <= 1000),
-        |g AS (
-        |  SELECT 'hash' AS token
-        |  UNION ALL SELECT 'join' UNION ALL SELECT 'window'),
-        |m AS (SELECT DISTINCT doc_id FROM idx JOIN g USING (token))
-        |SELECT facet, value, count(*)::BIGINT AS n_docs FROM (
-        |  SELECT 'lang' AS facet, d.lang AS value
-        |  FROM m JOIN documents d USING (doc_id)
-        |  WHERE d.doc_id % 97 <> 0
-        |  UNION ALL
-        |  SELECT 'source', d.source
-        |  FROM m JOIN documents d USING (doc_id)
-        |  WHERE d.doc_id % 97 <> 0)
-        |GROUP BY 1, 2""".stripMargin,
-
-    // the q275 collapse replay post-erasure: scoring statistics from
-    // the surviving corpus, the component walk's survivors relabeled
-    // by their new min member with sub-pair groups dropped — the same
-    // reassignment Forget.dupMapErase executes
-    "q289_forget_collapse" ->
-      s"""$duckBandsCte,
-         |$duckEdgesBody,
-         |walk AS (
-         |  WITH RECURSIVE w(v, l) AS (
-         |    SELECT s, s FROM edges
-         |    UNION
-         |    SELECT e.s, w.l FROM edges e JOIN w ON e.t = w.v)
-         |  SELECT * FROM w),
-         |comp AS (SELECT v AS doc_id, min(l) AS rep FROM walk GROUP BY v),
-         |ncomp AS (
-         |  SELECT doc_id, nrep AS rep FROM (
-         |    SELECT doc_id,
-         |           min(doc_id) OVER (PARTITION BY rep) AS nrep,
-         |           count(*) OVER (PARTITION BY rep) AS n
-         |    FROM comp WHERE doc_id % 97 <> 0)
-         |  WHERE n >= 2),
-         |post AS (
-         |  SELECT token, doc_id, count(*) AS tf FROM (
-         |    SELECT doc_id, unnest(string_split(text, ' ')) AS token
-         |    FROM documents WHERE doc_id % 97 <> 0)
-         |  GROUP BY 1, 2),
-         |idx AS (
-         |  SELECT token, doc_id, tf FROM (
-         |    SELECT token, doc_id, tf,
-         |           row_number() OVER (PARTITION BY token
-         |                              ORDER BY tf DESC, doc_id ASC) AS prk
-         |    FROM post)
-         |  WHERE prk <= 1000),
-         |tvocab AS (
-         |  SELECT token, count(*) AS df FROM post GROUP BY 1),
-         |nd AS (SELECT count(DISTINCT doc_id) AS n_docs FROM post),
-         |g AS (
-         |  SELECT 'hash' AS token, 0 AS ord
-         |  UNION ALL SELECT 'join', 1
-         |  UNION ALL SELECT 'window', 2),
-         |sc AS (
-         |  SELECT i.doc_id AS doc_id, g.ord AS ord,
-         |         (11 * i.tf * (2 * n_docs - 2 * v.df + 1))::DOUBLE
-         |         / ((5 * i.tf + 6) * (2 * v.df + 1))::DOUBLE AS s
-         |  FROM idx i JOIN g USING (token) JOIN tvocab v USING (token), nd),
-         |p AS (
-         |  SELECT doc_id, count(*)::BIGINT AS n_terms_hit,
-         |         max(CASE WHEN ord = 0 THEN s END) AS s0,
-         |         max(CASE WHEN ord = 1 THEN s END) AS s1,
-         |         max(CASE WHEN ord = 2 THEN s END) AS s2
-         |  FROM sc GROUP BY doc_id),
-         |wg AS (
-         |  SELECT p.doc_id AS doc_id, p.n_terms_hit AS n_terms_hit,
-         |         coalesce(p.s0, 0.0) + coalesce(p.s1, 0.0)
-         |           + coalesce(p.s2, 0.0) AS sc0,
-         |         coalesce(c.rep, p.doc_id) AS group_id
-         |  FROM p LEFT JOIN ncomp c ON c.doc_id = p.doc_id),
-         |best AS (
-         |  SELECT group_id, doc_id, n_terms_hit, sc0 FROM (
-         |    SELECT *, row_number() OVER (
-         |      PARTITION BY group_id
-         |      ORDER BY sc0 DESC, doc_id ASC) AS brn
-         |    FROM wg)
-         |  WHERE brn = 1)
-         |SELECT doc_id, group_id, n_terms_hit, round(sc0, 6) AS score,
-         |       rk::BIGINT AS rk FROM (
-         |  SELECT *, row_number() OVER (
-         |    ORDER BY sc0 DESC, doc_id ASC) AS rk
-         |  FROM best)
-         |WHERE rk <= 10""".stripMargin,
-
-    // the q89 ADC replay over the erased code table (codebooks stay —
-    // the model is not per-row data); queries are surviving ids 1–5
-    "q290_forget_ann" ->
-      s"""WITH $duckPqBody,
-         |scodes AS (SELECT * FROM codes WHERE vec_id % 97 <> 0),
-         |lut AS (SELECT s.vec_id AS query_id, s.sub, c.code,
-         |               round(list_sum(list_transform(generate_series(1, 8),
-         |                 i -> (s.v[i] - c.c_vec[i]) * (s.v[i] - c.c_vec[i]))), 6)::DECIMAL(28,10) AS pd
-         |        FROM sv s JOIN cb c ON s.sub = c.sub
-         |        WHERE s.vec_id >= 1 AND s.vec_id <= 5),
-         |sc AS (SELECT l.query_id, cd.vec_id AS neighbor_id, sum(l.pd)::DOUBLE AS approx_dist
-         |       FROM scodes cd JOIN lut l ON cd.sub = l.sub AND cd.code = l.code
-         |       WHERE cd.vec_id <> l.query_id
-         |       GROUP BY 1, 2),
-         |r AS (SELECT query_id, neighbor_id, approx_dist,
-         |             row_number() OVER (PARTITION BY query_id
-         |                                ORDER BY approx_dist, neighbor_id) AS rank
-         |      FROM sc)
-         |SELECT query_id, neighbor_id, approx_dist, rank FROM r WHERE rank <= 5""".stripMargin,
-
-    // every family recounted from the corpus MINUS the forget set —
-    // the erased-store ≡ rebuild identity, all nine families
-    "q291_forget_execute" ->
-      s"""$duckBandsCte,
-         |$duckEdgesBody,
-         |walk AS (
-         |  WITH RECURSIVE w(v, l) AS (
-         |    SELECT s, s FROM edges
-         |    UNION
-         |    SELECT e.s, w.l FROM edges e JOIN w ON e.t = w.v)
-         |  SELECT * FROM w),
-         |comp AS (SELECT v AS doc_id, min(l) AS rep FROM walk GROUP BY v),
-         |sdup AS (SELECT rep, count(*) AS n FROM comp
-         |         WHERE doc_id % 97 <> 0 GROUP BY rep),
-         |spost AS (
-         |  SELECT token, doc_id, count(*) AS tf FROM (
-         |    SELECT doc_id, unnest(string_split(text, ' ')) AS token
-         |    FROM documents WHERE doc_id % 97 <> 0)
-         |  GROUP BY 1, 2),
-         |wrd AS (
-         |  SELECT doc_id, string_split(text, ' ') AS ws FROM documents
-         |  WHERE doc_id % 97 <> 0),
-         |ch0 AS (
-         |  SELECT doc_id, ws,
-         |         unnest(generate_series(0, greatest(len(ws) - 1 - 8, 0),
-         |                                24)) AS sw
-         |  FROM wrd),
-         |chp AS (
-         |  SELECT token, cid FROM (
-         |    SELECT doc_id * 100000 + (sw // 24) AS cid,
-         |           unnest(ws[sw + 1 : sw + 32]) AS token
-         |    FROM ch0)
-         |  GROUP BY 1, 2)
-         |SELECT 'index_postings' AS family,
-         |       (SELECT count(*) FROM spost)::BIGINT AS rows_after
-         |UNION ALL SELECT 'positional_positions',
-         |       (SELECT coalesce(sum(tf), 0) FROM spost)::BIGINT
-         |UNION ALL SELECT 'chunk_postings',
-         |       (SELECT count(*) FROM chp)::BIGINT
-         |UNION ALL SELECT 'norms',
-         |       (SELECT count(*) FROM documents
-         |        WHERE doc_id % 97 <> 0)::BIGINT
-         |UNION ALL SELECT 'doc_meta',
-         |       (SELECT count(*) FROM documents
-         |        WHERE doc_id % 97 <> 0)::BIGINT
-         |UNION ALL SELECT 'facets',
-         |       (SELECT 2 * count(*) FROM documents
-         |        WHERE doc_id % 97 <> 0)::BIGINT
-         |UNION ALL SELECT 'pq_codes',
-         |       (SELECT 8 * count(*) FROM embeddings
-         |        WHERE vec_id % 97 <> 0)::BIGINT
-         |UNION ALL SELECT 'dup_map',
-         |       (SELECT coalesce(sum(n), 0) FROM sdup WHERE n >= 2)::BIGINT
-         |UNION ALL SELECT 'vocab_terms',
-         |       (SELECT count(DISTINCT token) FROM spost)::BIGINT""".stripMargin,
-
-    // df/cf over the corpus minus the tombstoned docs, df-desc top 20
-    "q292_dict_maintenance" ->
-      """WITH post AS (
-        |  SELECT token, doc_id, count(*) AS tf FROM (
-        |    SELECT doc_id, unnest(string_split(text, ' ')) AS token
-        |    FROM documents WHERE doc_id % 10 <> 0)
-        |  GROUP BY 1, 2)
-        |SELECT token, df, cf, rk FROM (
-        |  SELECT token, count(*)::BIGINT AS df,
-        |         CAST(sum(tf) AS BIGINT) AS cf,
-        |         row_number() OVER (
-        |           ORDER BY count(*) DESC, token ASC) AS rk
-        |  FROM post GROUP BY token)
-        |WHERE rk <= 20""".stripMargin,
-
-    // the q265 fuzzy replay over the surviving corpus's vocabulary
-    "q293_fuzzy_maintenance" ->
-      """WITH post AS (
-        |  SELECT token, doc_id FROM (
-        |    SELECT doc_id, unnest(string_split(text, ' ')) AS token
-        |    FROM documents WHERE doc_id % 10 <> 0)
-        |  GROUP BY 1, 2),
-        |vocab AS (
-        |  SELECT token, count(*)::BIGINT AS df FROM post GROUP BY 1)
-        |SELECT token, df, lev, rk::BIGINT AS rk FROM (
-        |  SELECT token, df, levenshtein(token, 'sow')::BIGINT AS lev,
-        |         row_number() OVER (
-        |           ORDER BY levenshtein(token, 'sow') ASC, df DESC,
-        |             token ASC) AS rk
-        |  FROM vocab WHERE levenshtein(token, 'sow') <= 1)
-        |WHERE rk <= 10""".stripMargin,
-
-    // the q262 top-20 joined back to the corpus; per doc every
-    // query-term position is an anchor candidate, scored by distinct
-    // query terms in its ±2 window, best-first with earliest-anchor
-    // ties — replayed row-wise (the in-row fold and the ranked pick
-    // agree because the tie-break is total)
-    "q294_term_snippets" ->
-      """WITH post AS (
-        |  SELECT token, doc_id, count(*) AS tf FROM (
-        |    SELECT doc_id, unnest(string_split(text, ' ')) AS token
-        |    FROM documents)
-        |  GROUP BY 1, 2),
-        |idx AS (
-        |  SELECT token, doc_id, tf FROM (
-        |    SELECT token, doc_id, tf,
-        |           row_number() OVER (PARTITION BY token
-        |                              ORDER BY tf DESC, doc_id ASC) AS prk
-        |    FROM post)
-        |  WHERE prk <= 1000),
-        |vocab AS (
-        |  SELECT token, count(*) AS df FROM post GROUP BY 1),
-        |nd AS (SELECT count(DISTINCT doc_id) AS n_docs FROM documents),
-        |g AS (
-        |  SELECT 'hash' AS token, 0 AS ord
-        |  UNION ALL SELECT 'join', 1
-        |  UNION ALL SELECT 'window', 2),
-        |sc AS (
-        |  SELECT i.doc_id AS doc_id, g.ord AS ord,
-        |         (11 * i.tf * (2 * n_docs - 2 * v.df + 1))::DOUBLE
-        |         / ((5 * i.tf + 6) * (2 * v.df + 1))::DOUBLE AS s
-        |  FROM idx i JOIN g USING (token) JOIN vocab v USING (token), nd),
-        |p AS (
-        |  SELECT doc_id, count(*)::BIGINT AS n_terms_hit,
-        |         max(CASE WHEN ord = 0 THEN s END) AS s0,
-        |         max(CASE WHEN ord = 1 THEN s END) AS s1,
-        |         max(CASE WHEN ord = 2 THEN s END) AS s2
-        |  FROM sc GROUP BY doc_id),
-        |top AS (
-        |  SELECT doc_id, n_terms_hit, rk FROM (
-        |    SELECT doc_id, n_terms_hit,
-        |           row_number() OVER (
-        |             ORDER BY coalesce(s0, 0.0) + coalesce(s1, 0.0)
-        |               + coalesce(s2, 0.0) DESC, doc_id ASC) AS rk
-        |    FROM p)
-        |  WHERE rk <= 20),
-        |wd AS (
-        |  SELECT t.doc_id AS doc_id, t.rk AS rk,
-        |         t.n_terms_hit AS n_terms_hit,
-        |         string_split(d.text, ' ') AS ws
-        |  FROM top t JOIN documents d USING (doc_id)),
-        |anch AS (
-        |  SELECT doc_id, rk, n_terms_hit, ws, i,
-        |         len(list_distinct(list_filter(
-        |           ws[greatest(1, i - 2):least(len(ws), i + 2)],
-        |           x -> list_contains(['hash', 'join', 'window'], x))))
-        |           AS c
-        |  FROM (
-        |    SELECT doc_id, rk, n_terms_hit, ws,
-        |           unnest(list_filter(generate_series(1, len(ws)),
-        |             i -> list_contains(['hash', 'join', 'window'],
-        |                                ws[i]))) AS i
-        |    FROM wd)),
-        |best AS (
-        |  SELECT * FROM (
-        |    SELECT *, row_number() OVER (
-        |      PARTITION BY doc_id ORDER BY c DESC, i ASC) AS brn
-        |    FROM anch)
-        |  WHERE brn = 1)
-        |SELECT doc_id, rk, n_terms_hit, (i - 1)::BIGINT AS anchor,
-        |       c::BIGINT AS n_window_terms,
-        |       array_to_string(
-        |         ws[greatest(1, i - 2):least(len(ws), i + 2)], ' ')
-        |         AS snippet
-        |FROM best""".stripMargin,
-
-    // the q282 chunk scoring with the q284 qid pivot: three queries,
-    // one chunk-index derivation, per-query MaxP + partitioned rank
-    "q295_passage_batch" ->
-      """WITH w AS (
-        |  SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
-        |s0 AS (
-        |  SELECT doc_id, ws,
-        |         unnest(generate_series(0, greatest(len(ws) - 1 - 8, 0),
-        |                                24)) AS sw
-        |  FROM w),
-        |ch AS (
-        |  SELECT doc_id * 100000 + (sw // 24) AS cid,
-        |         array_to_string(ws[sw + 1 : sw + 32], ' ') AS chunk
-        |  FROM s0),
-        |post AS (
-        |  SELECT token, cid, count(*) AS tf FROM (
-        |    SELECT cid, unnest(string_split(chunk, ' ')) AS token
-        |    FROM ch)
-        |  GROUP BY 1, 2),
-        |idx AS (
-        |  SELECT token, cid, tf FROM (
-        |    SELECT token, cid, tf,
-        |           row_number() OVER (PARTITION BY token
-        |                              ORDER BY tf DESC, cid ASC) AS prk
-        |    FROM post)
-        |  WHERE prk <= 1000),
-        |tvocab AS (
-        |  SELECT token, count(*) AS df FROM post GROUP BY 1),
-        |nd AS (SELECT count(*) AS n_chunks FROM ch),
-        |g AS (
-        |  SELECT 0 AS qid, 'hash' AS token, 0 AS ord
-        |  UNION ALL SELECT 0, 'join', 1
-        |  UNION ALL SELECT 0, 'window', 2
-        |  UNION ALL SELECT 1, 'sort', 0
-        |  UNION ALL SELECT 1, 'merge', 1
-        |  UNION ALL SELECT 2, 'filter', 0
-        |  UNION ALL SELECT 2, 'scan', 1),
-        |sc AS (
-        |  SELECT g.qid AS qid, i.cid AS cid, g.ord AS ord,
-        |         (11 * i.tf * (2 * n_chunks - 2 * v.df + 1))::DOUBLE
-        |         / ((5 * i.tf + 6) * (2 * v.df + 1))::DOUBLE AS s
-        |  FROM idx i JOIN g USING (token) JOIN tvocab v USING (token), nd),
-        |p AS (
-        |  SELECT qid, cid, count(*)::BIGINT AS n_terms_hit,
-        |         max(CASE WHEN ord = 0 THEN s END) AS s0,
-        |         max(CASE WHEN ord = 1 THEN s END) AS s1,
-        |         max(CASE WHEN ord = 2 THEN s END) AS s2
-        |  FROM sc GROUP BY qid, cid),
-        |dec AS (
-        |  SELECT qid, cid // 100000 AS d, cid % 100000 AS ch_id,
-        |         n_terms_hit,
-        |         coalesce(s0, 0.0) + coalesce(s1, 0.0)
-        |           + coalesce(s2, 0.0) AS sc0
-        |  FROM p),
-        |best AS (
-        |  SELECT qid, d, ch_id, n_terms_hit, sc0 FROM (
-        |    SELECT *, row_number() OVER (
-        |      PARTITION BY qid, d ORDER BY sc0 DESC, ch_id ASC) AS brn
-        |    FROM dec)
-        |  WHERE brn = 1)
-        |SELECT qid::BIGINT AS qid, d AS doc_id,
-        |       ch_id::BIGINT AS chunk_id, n_terms_hit,
-        |       round(sc0, 6) AS score, rk::BIGINT AS rk FROM (
-        |  SELECT *, row_number() OVER (
-        |    PARTITION BY qid ORDER BY sc0 DESC, d ASC) AS rk
-        |  FROM best)
-        |WHERE rk <= 10""".stripMargin,
-
-    // the band derivation replayed for both sides: the gen-3 slice's
-    // bands joined to the gen<=2 store buckets, store-side over-cap
-    // buckets dropped, pair rows counted per shared bucket
-    "q296_neardup_ingest" ->
-      s"""$duckBandsCte,
-         |nb AS (SELECT doc_id AS new_id, band_id, band_hash
-         |       FROM b WHERE doc_id % 4 = 3),
-         |st AS (SELECT doc_id AS corpus_id, band_id, band_hash
-         |       FROM b WHERE doc_id % 4 <= 2),
-         |sz AS (SELECT band_id, band_hash, count(*) AS c
-         |       FROM st GROUP BY 1, 2)
-         |SELECT new_id, corpus_id, count(*)::BIGINT AS n_bands FROM (
-         |  SELECT nb.new_id, st.corpus_id
-         |  FROM nb JOIN st USING (band_id, band_hash)
-         |  JOIN sz USING (band_id, band_hash)
-         |  WHERE sz.c <= 10000 AND nb.new_id <> st.corpus_id)
-         |GROUP BY 1, 2""".stripMargin,
-
-    // the incremental map must equal the FULL-corpus rebuild — the
-    // q275 component walk verbatim
-    "q297_dupmap_ingest" ->
-      s"""$duckBandsCte,
-         |$duckEdgesBody,
-         |walk AS (
-         |  WITH RECURSIVE w(v, l) AS (
-         |    SELECT s, s FROM edges
-         |    UNION
-         |    SELECT e.s, w.l FROM edges e JOIN w ON e.t = w.v)
-         |  SELECT * FROM w),
-         |comp AS (SELECT v AS doc_id, min(l) AS rep FROM walk GROUP BY v)
-         |SELECT doc_id, rep FROM comp""".stripMargin,
-
-  )
 }

@@ -1,5 +1,9 @@
 package graft
 
+import java.util.concurrent.{ExecutionException, Executors, TimeUnit, TimeoutException}
+
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.ops.{Bucketing, Dedup, Graph, Pq, TextAnalysis}
@@ -334,6 +338,26 @@ object Stores {
     }
   }
 
+  /** The corpus's most frequent word n-gram — ONE derivation for the
+    * deterministic query-term statistics (the bigram pair q209/q238
+    * share, the trigram q257 serves): count-desc with full (w1..wn)
+    * lexicographic tie-break so every SF picks the same phrase.
+    */
+  private def topCorpusNgram(d: DataFrame, n: Int): DataFrame = {
+    require(n >= 2, "an n-gram statistic needs n >= 2")
+    val fields = (1 to n).map(i =>
+      s"element_at(split(text, ' '), i + $i) AS w$i").mkString(", ")
+    d.filter(size(split(col("text"), " ")) >= n)
+      .select(explode(expr(
+        s"transform(sequence(0, size(split(text, ' ')) - $n), " +
+          s"i -> struct($fields))")).as("g"))
+      .groupBy((1 to n).map(i => col(s"g.w$i").as(s"w$i")): _*)
+      .agg(count(lit(1)).as("c"))
+      .orderBy(col("c").desc +: (1 to n).map(i => col(s"w$i").asc): _*)
+      .limit(1)
+      .select((1 to n).map(i => col(s"w$i")): _*)
+  }
+
   /** The corpus's most frequent word bigram persisted as a 1-row
     * statistics table — the deterministic query-term derivation the
     * whole phrase/proximity family shares (q209/q238/q249/q250/q254).
@@ -344,7 +368,7 @@ object Stores {
   def topBigram(s: SparkSession, dir: String): DataFrame = {
     val t = s"graft_bigram_${key(dir)}"
     serve(s, t) {
-      SparkEntry.topCorpusBigram(Tables.documents(s, dir))
+      topCorpusNgram(Tables.documents(s, dir), 2)
         .write.mode("overwrite").format("parquet").saveAsTable(t)
     }
   }
@@ -355,7 +379,7 @@ object Stores {
   def topTrigram(s: SparkSession, dir: String): DataFrame = {
     val t = s"graft_trigram_${key(dir)}"
     serve(s, t) {
-      SparkEntry.topCorpusTrigram(Tables.documents(s, dir))
+      topCorpusNgram(Tables.documents(s, dir), 3)
         .write.mode("overwrite").format("parquet").saveAsTable(t)
     }
   }
@@ -680,7 +704,7 @@ object Stores {
 
   /** The transition-EDGE warehouse over `events`: src-bucketed
     * (slice, src, dst, w) slices from [[Graph.edgeSlices]] over the
-    * shared [[SparkEntry.transitionPairs]] pair log. The per-user
+    * shared [[queries.GraphQueries.transitionPairs]] pair log. The per-user
     * ordering Window that derives transitions runs ONCE here (the
     * ingest-time transform); every graph read — PageRank, cohesion,
     * k-hop, next-item — folds the store through [[Graph.edgeMerge]]
@@ -1129,7 +1153,7 @@ object Stores {
   def transitions(s: SparkSession, dir: String): DataFrame = {
     val t = s"graft_trans_${key(dir)}"
     serve(s, t) {
-      SparkEntry.transitionPairs(s, dir)
+      queries.GraphQueries.transitionPairs(s, dir)
         .write.mode("overwrite").format("parquet").saveAsTable(t)
     }
   }
@@ -1285,9 +1309,13 @@ object Stores {
     * wanting the same table build it once and nested builds always
     * acquire locks in dependency order (no cycles, no deadlock). Job
     * descriptions are thread-local, so each build labels its own jobs.
-    * A build failure is swallowed here: the first query that needs the
-    * table retries the build and surfaces the real error in its own
-    * timed/verified context instead of aborting the whole bench.
+    * A build that throws a non-fatal error is logged by name and left
+    * to the first query that needs the table, which retries the build
+    * and surfaces the real error in its own timed/verified context
+    * instead of aborting the whole bench. Fatal errors and interrupts
+    * are not caught, and each wait is bounded by
+    * [[PrewarmWaitMinutes]]: either one fails the prewarm, naming the
+    * store.
     */
   def prewarm(s: SparkSession, dir: String, parallelism: Int): Unit = {
     val builders: Seq[(String, () => Any)] = Seq(
@@ -1333,22 +1361,38 @@ object Stores {
       "nbLangLabels" -> (() => nbLangLabels(s, dir)),
       "nbGateModel" -> (() => nbGateModel(s, dir)),
       "nbGateLabels" -> (() => nbGateLabels(s, dir)),
-      "erasedMerges" -> (() => SparkEntry.prewarmErased(s, dir)))
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(
-      math.max(1, parallelism))
+      "erasedMerges" -> (() => queries.ForgetQueries.prewarmErased(s, dir)))
+    val pool = Executors.newFixedThreadPool(math.max(1, parallelism))
     try {
       val fs = builders.map { case (name, build) =>
-        pool.submit(new Runnable {
+        name -> pool.submit(new Runnable {
           def run(): Unit = {
             try {
               s.sparkContext.setJobDescription(s"prewarm: $name @ $dir")
               build()
-            } catch { case _: Throwable => () }
-            finally s.sparkContext.setJobDescription(null)
+            } catch { case NonFatal(e) =>
+              System.err.println(s"[prewarm] $name @ $dir failed: $e")
+            } finally s.sparkContext.setJobDescription(null)
           }
         })
       }
-      fs.foreach(_.get())
-    } finally pool.shutdown()
+      fs.foreach { case (name, f) =>
+        try f.get(PrewarmWaitMinutes, TimeUnit.MINUTES)
+        catch {
+          case e: InterruptedException =>
+            Thread.currentThread().interrupt()
+            throw e
+          case _: TimeoutException =>
+            throw new TimeoutException(s"Stores.prewarm: $name @ $dir " +
+              s"still building after $PrewarmWaitMinutes min")
+          case e: ExecutionException =>
+            throw new IllegalStateException(
+              s"Stores.prewarm: $name @ $dir died", e.getCause)
+        }
+      }
+    } finally pool.shutdownNow()
   }
+
+  /** Bound on the wait for any one store's prewarm build. */
+  private val PrewarmWaitMinutes = 30L
 }

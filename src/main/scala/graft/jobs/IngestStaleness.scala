@@ -15,13 +15,14 @@ import graft.ops.Similarity
   * rewrite (centroids are the store's physical layout, so retraining
   * IS a rewrite — the IVF trade).
   *
-  * Shape (the RecallSweep convention): history = 80% of the corpus,
+  * Shape: history = 80% of the corpus,
   * centroids k-means-trained on history only; the corpus then grows by
   * the held-out 20%; recall@5 vs the exact cosine top-5 on the GROWN
   * corpus is measured per nprobe for (a) the stale history-trained
   * centroids — what the ingested store serves — and (b) centroids
   * retrained on the grown corpus — what a rewrite would serve. Both
-  * sides share every other parameter (the r12 de-confound rule).
+  * sides share every other parameter, so the gap is the centroids'
+  * alone.
   *
   * Usage: runMain graft.jobs.IngestStaleness [sfDir] [nprobe*...]
   * Prints one JSON line per nprobe. Diagnostic main (StreamBench's
@@ -32,8 +33,10 @@ import graft.ops.Similarity
 object IngestStaleness {
 
   /** Mean recall@5 of `approx` vs `exact` (both (query_id,
-    * neighbor_id) frames, exact having 5 rows per query) — the
-    * RecallSweep uncovered-as-zero convention.
+    * neighbor_id) frames, exact having 5 rows per query). A query
+    * whose approximate result is empty counts as recall 0, not as a
+    * dropped term: averaging only covered queries would flatter the
+    * configurations with the worst coverage.
     */
   private def recallAt5(approx: DataFrame, exact: DataFrame): Double =
     exact.groupBy(col("query_id"))

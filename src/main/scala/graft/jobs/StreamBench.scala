@@ -85,7 +85,7 @@ object StreamBench {
     // executor's memory at target state size); override with
     // SPARK_GRAFT_STREAM_STATE_PARTITIONS for a cluster-sized run.
     spark.conf.set("spark.sql.shuffle.partitions",
-      sys.env.getOrElse("SPARK_GRAFT_STREAM_STATE_PARTITIONS", "8"))
+      graft.Mains.envInt("SPARK_GRAFT_STREAM_STATE_PARTITIONS", 8).toLong)
 
     // replicate the file REPLICAS times with each copy's timestamps
     // shifted past the previous copy's end, so per-query startup
@@ -156,8 +156,7 @@ object StreamBench {
     // minimum is the steady-state rate the baseline comparison wants.
     // Each attempt's own watermark-drop count rides with its wall so
     // the chosen attempt's rate subtracts its own drops.
-    val streamReps = math.max(1,
-      sys.env.getOrElse("SPARK_GRAFT_STREAM_REPS", "2").toInt)
+    val streamReps = math.max(1, graft.Mains.envInt("SPARK_GRAFT_STREAM_REPS", 2))
     def bestOf(run: () => (Double, Long)): (Double, Long) =
       (1 to streamReps).map(_ => run()).minBy(_._1)
 
@@ -213,21 +212,21 @@ object StreamBench {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse(
       sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
+    val cpus = graft.Mains.envInt("SPARK_GRAFT_CPUS", 8)
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.shuffle.partitions", cpus.toLong)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
-    val replicas = sys.env.getOrElse("SPARK_GRAFT_STREAM_REPLICAS", "10").toInt
+    val replicas = graft.Mains.envInt("SPARK_GRAFT_STREAM_REPLICAS", 10)
     val r = measure(spark, dir, replicas)
-    val perCore = r.statefulRate / cpus.toInt
+    val perCore = r.statefulRate / cpus
     println(s"""{"metric":"stream_events_per_sec","value":${r.statefulRate},""" +
       s""""per_core":$perCore,"rocksdb_events_per_sec":${r.rocksRate},""" +
-      s""""per_core_rocksdb":${r.rocksRate / cpus.toInt},""" +
+      s""""per_core_rocksdb":${r.rocksRate / cpus},""" +
       s""""windowed_events_per_sec":${r.windowRate},""" +
       s""""events":${r.events},"dropped_late":${r.dropped},""" +
       s""""stateful_sec":${r.statefulSec},"stateful_rocksdb_sec":${r.rocksSec},""" +

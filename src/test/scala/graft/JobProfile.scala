@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
 
 /** Profiling harness (test scope, never shipped): runs named queries
@@ -14,20 +13,7 @@ object JobProfile {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val names = args.drop(1).toSeq
     require(names.nonEmpty, "name at least one query")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      // match the Bench AQE posture so profiles attribute the plans
-      // the bench actually runs
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        sys.env.getOrElse("SPARK_GRAFT_PARALLELISM_FIRST", "false"))
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes",
-        sys.env.getOrElse("SPARK_GRAFT_ADVISORY_MB", "8") + "m")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Mains.session(Mains.envInt("SPARK_GRAFT_CPUS", 32))
     spark.sparkContext.setLogLevel("WARN")
 
     case class J(id: Int, t0: Long, name: String)

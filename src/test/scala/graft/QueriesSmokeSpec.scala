@@ -3,6 +3,8 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.queries.{BandTwin, Oracle, Query}
+
 /** Smoke: every declared query runs end-to-end on sf0.001 and the
   * entry() flagship returns rows (mirrors the driver's t1 gate).
   * Cross-checks a few closed-form invariants of the test data.
@@ -28,19 +30,21 @@ class QueriesSmokeSpec extends AnyFunSuite {
     }
   }
 
-  test("oracleSql keys are a subset of queries keys") {
-    val missing = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
-    assert(missing.isEmpty, s"oracle without query: $missing")
+  test("query names are unique and number 300") {
+    val names = SparkEntry.all.map(_.name)
+    val dups = names.diff(names.distinct)
+    assert(dups.isEmpty, s"declared more than once: $dups")
+    assert(names.size === 300)
   }
 
   test("coveredBy is total over the no-oracle queries and every twin is oracled") {
-    val noOracle = SparkEntry.queries.keySet -- SparkEntry.oracleSql.keySet
-    assert(noOracle === SparkEntry.coveredBy.keySet,
-      "every query without a direct oracle must name its oracled "
-        + s"band twin (uncovered: ${noOracle -- SparkEntry.coveredBy.keySet}; "
-        + s"stale: ${SparkEntry.coveredBy.keySet -- noOracle})")
-    val badTwin = SparkEntry.coveredBy.values.toSet --
-      SparkEntry.oracleSql.keySet
+    val oracles = SparkEntry.all.collect { case Query(n, _, Oracle(sql)) => n -> sql }
+    // a family val that reads a SQL fragment declared after it sees null
+    val empty = oracles.collect { case (n, sql) if sql == null || sql.trim.isEmpty => n }
+    assert(empty.isEmpty, s"empty oracle SQL: $empty")
+    val badTwin = SparkEntry.all.collect {
+      case Query(n, _, BandTwin(twin)) if !oracles.exists(_._1 == twin) => s"$n -> $twin"
+    }
     assert(badTwin.isEmpty, s"twin without an oracle: $badTwin")
   }
 

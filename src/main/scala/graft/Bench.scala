@@ -75,17 +75,15 @@ object Bench {
     // back-fills the idle cores and cuts the untimed bootstrap wall
     // (~318 s -> measured in OPTIMIZATION_r22.md). Untimed space only:
     // the timed reps below still measure each query against fully
-    // built stores, exactly as before. 0/1 disables the pool; focused
-    // SPARK_GRAFT_BENCH_ONLY runs skip it (building every store for a
-    // two-query profiling session would invert the saving).
-    val prewarmThreads =
-      if (only.nonEmpty) 1
-      else math.max(1, Mains.envInt("SPARK_GRAFT_PREWARM_THREADS", 4))
+    // built stores, exactly as before. Focused SPARK_GRAFT_BENCH_ONLY
+    // runs skip it (building every store for a two-query profiling
+    // session would invert the saving).
+    val prewarm = only.isEmpty
 
     // warmup: full pass at the small scale factor (codegen compilation,
     // classloading, a cheap preflight that catches a crashing query in
     // milliseconds of data instead of minutes)
-    if (prewarmThreads > 1) Stores.prewarm(spark, warmDir, prewarmThreads)
+    if (prewarm) Stores.prewarm(spark, warmDir, PrewarmThreads)
     names.foreach { n => run(n, warmDir); clean() }
 
     // steady-state warmup at the BENCH scale (r20 verdict item 1 — the
@@ -103,7 +101,7 @@ object Bench {
     // `warm_sf_sec` so the store-build cost stays visible as its own
     // line item instead of polluting an arbitrary query's number.
     val tWarm = System.nanoTime()
-    if (prewarmThreads > 1) Stores.prewarm(spark, sfDir, prewarmThreads)
+    if (prewarm) Stores.prewarm(spark, sfDir, PrewarmThreads)
     names.foreach { n => run(n, sfDir); clean() }
     val warmSfSec = (System.nanoTime() - tWarm) / 1e9
 
@@ -165,4 +163,7 @@ object Bench {
     println(s"""{"metric":"total","value":${fmt(total)},"unit":"sec","reps":$reps,"warm_sf_sec":${fmt(warmSfSec)},"queries":$qs$errField$streamField,"sf":"$sfDir"}""")
     spark.stop()
   }
+
+  /** Threads of the warm passes' [[Stores.prewarm]] pool. */
+  private val PrewarmThreads = 4
 }

@@ -1,6 +1,6 @@
 package graft.jobs
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.ops.{Bucketing, Checkpoints, Dedup, Sampling, TextAnalysis}
@@ -218,24 +218,5 @@ object CorpusPipeline {
       if ((repKept ne qualityKept) && (repKept ne mixed)) repKept.unpersist()
     }
     (mixed, counts.result())
-  }
-
-  def main(args: Array[String]): Unit = {
-    val dir = args.headOption.getOrElse("/root/testdata/sf0.01")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val (_, counts) = run(graft.Tables.documents(spark, dir),
-      sampleFraction = 0.8,
-      mixture = Map("src0" -> 2.0, "src1" -> 1.0, "src2" -> 1.0),
-      embeddings = Some(graft.Tables.embeddings(spark, dir)),
-      cosineThreshold = 0.3)  // synthetic embeddings are near-orthogonal
-    counts.foreach { case (stage, n) => println(s"$stage: $n") }
-    spark.stop()
   }
 }

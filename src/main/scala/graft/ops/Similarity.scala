@@ -391,9 +391,9 @@ object Similarity {
     * The trade this inherits: ingested vectors are assigned at the
     * STORE's centroids. As the corpus drifts, recall against a
     * brute-force baseline decays vs what retrained centroids would
-    * give — measure it with [[graft.jobs.IngestStaleness]] (recall@5
-    * per nprobe of history-trained vs retrained centroids on the
-    * grown corpus; PLANS.md carries the measured table) and
+    * give (recall@5 per nprobe of history-trained vs retrained
+    * centroids on the grown corpus: PLANS.md § "q167 incremental
+    * ANN-store ingest" records the measured table) — and
     * rewrite via [[writeIvfBucketed]] when the gap warrants; centroids
     * are the store's physical layout, so re-centroiding is a rewrite
     * everywhere (the IVF trade).

@@ -1446,17 +1446,6 @@ object TextAnalysis {
         col("_cf").as("cf"))
       .filter(col("df") > 0)
 
-  /** Incremental dictionary ingest — [[indexIngest]] for the
-    * dictionary store: aggregate ONLY the new slice's posting rows
-    * through [[dictSlices]] and APPEND; history files stay untouched.
-    * STREAMING: call per micro-batch inside `foreachBatch` with the
-    * batch's [[indexSlices]] frame.
-    */
-  def dictIngest(postingSlices: DataFrame, table: String,
-                 buckets: Int): Unit =
-    Bucketing.appendBucketed(dictSlices(postingSlices), table,
-      Seq("token"), buckets, sortCols = Seq("token"))
-
   /** Prefix autocomplete — the search-box suggestion read: dictionary
     * terms starting with the literal `prefix`, ranked by df (ties by
     * token). Serving shape: a pushed `StartsWith` predicate on the

@@ -76,16 +76,6 @@ object WindowedAgg {
       .agg(approx_count_distinct(col(distinctCol), rsd).as(cntName))
       .select(bounds ++ keys.map(col) :+ col(cntName): _*)
 
-  /** Tumbling-window sum of a measure, decimal-exact then rounded to 2
-    * digits — keeps distributed double summation order-independent.
-    */
-  def tumblingSum(df: DataFrame, tsCol: String, duration: String,
-                  valueCol: String, keys: Seq[String] = Nil,
-                  sumName: String = "total"): DataFrame =
-    df.groupBy(window(col(tsCol), duration) +: keys.map(col): _*)
-      .agg(round(sum(col(valueCol).cast("decimal(28,10)")), 2).cast("double").as(sumName))
-      .select(bounds ++ keys.map(col) :+ col(sumName): _*)
-
   /** Mergeable distinct-count ROLLUP via DataSketches HLL: fine windows
     * aggregate each to ONE sketch (`hll_sketch_agg`), coarse windows
     * UNION the fine sketches (`hll_union_agg`) — the raw events are

@@ -164,10 +164,9 @@ object DedupQueries {
     // derivation); the adaptive contract is preserved — a >64-word
     // corpus takes the same inverted-index path it always did
     Query("q24_ngram_jaccard", (s, dir) =>
-      if (Stores.tagVocab(s, dir).length <= 64)
-        Dedup.jaccardPairsFromMasks(Stores.wordMasks(s, dir), 0.5)
-      else Dedup.jaccardPairs(Tables.documents(s, dir), "doc_id", "text",
-        "source", 0.5, probeVocab = true),
+      Stores.wordMasks(s, dir).map(Dedup.jaccardPairsFromMasks(_, 0.5))
+        .getOrElse(Dedup.jaccardPairs(Tables.documents(s, dir), "doc_id",
+          "text", "source", 0.5, probeVocab = true)),
       Oracle(
         """WITH w AS (
         |  SELECT doc_id, source, list_distinct(string_split(text, ' ')) AS ws
@@ -470,11 +469,10 @@ object DedupQueries {
     // length filter, so before this every same-block pair re-derived
     // masks per query on top of the scoring join
     Query("q160_containment", (s, dir) =>
-      if (Stores.tagVocab(s, dir).length <= 64)
-        Dedup.containmentPairsFromMasks(Stores.wordMasks(s, dir),
-          threshold = 0.8)
-      else Dedup.containmentPairs(Tables.documents(s, dir), "doc_id",
-        "text", "source", threshold = 0.8, probeVocab = true),
+      Stores.wordMasks(s, dir)
+        .map(Dedup.containmentPairsFromMasks(_, threshold = 0.8))
+        .getOrElse(Dedup.containmentPairs(Tables.documents(s, dir),
+          "doc_id", "text", "source", threshold = 0.8, probeVocab = true)),
       // both directions from one |A∩B|; the filter reads the ROUNDED
       // values on both engines (the subquery aliases)
       Oracle(

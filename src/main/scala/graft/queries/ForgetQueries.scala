@@ -3,6 +3,8 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.{Stores, Tables}
+import graft.Stores.{erasedChunksMerged, erasedIndexCapped, erasedIndexMerged,
+  erasedPositionalMerged, erasedWarehouse}
 import graft.ops._
 import DedupQueries.{duckBandsCte, duckEdgesBody}
 import PqQueries.duckPqBody
@@ -13,79 +15,6 @@ import SearchQueries.{bigramTokens, phraseMatchExpr, posOracle}
   * post-forget reads of each store family.
   */
 object ForgetQueries {
-  /** The standing erasure request (doc_id % 97 = 0 — the q276/q279
-    * contract) applied through the single-call [[Forget.erase]]
-    * cascade over the WRITTEN stores: every post-forget read
-    * (q286–q291) picks its family's frame off this one derivation, so
-    * the per-family erasure mechanics cannot drift between reads.
-    * Laziness means a read executes only its own family's erasure;
-    * the forgotten texts are ONE request-bounded broadcast semi-join
-    * of the corpus (the q279 content-tombstone derivation).
-    */
-  private def erasedWarehouse(s: SparkSession, dir: String): Forget.Erased = {
-    val ids = Stores.norms(s, dir).filter(col("doc_id") % 97 === 0)
-      .select(col("doc_id"))
-    val forgotten = Tables.documents(s, dir)
-      .join(broadcast(ids), Seq("doc_id"), "left_semi")
-      .select(col("doc_id"), col("text"))
-    Forget.erase(Stores.index(s, dir), Stores.positional(s, dir),
-      Stores.chunkSlices(s, dir), Stores.norms(s, dir),
-      Stores.docMeta(s, dir), Stores.facetIndex(s, dir),
-      Stores.pqCodes(s, dir), Stores.dupMap(s, dir),
-      forgotten, tombSlice = 99L, forgetIds = Some(ids))
-  }
-
-  /** The standing erasure request's POST-FORGET index merges,
-    * materialized once per process: before these,
-    * every forget-family read (q286–q291) re-folded its family's
-    * tombstone merge — the same slice-agnostic tf sum / position union
-    * — per query. The merges derive from [[erasedWarehouse]] (one
-    * erasure code path), so the stored rows are exactly what each
-    * query's inline fold produced; only the request-scale row-erased
-    * families (norms, metadata, facets, codes, dup map — broadcast
-    * anti-joins) still derive inline.
-    */
-  private def erasedIndexMerged(s: SparkSession, dir: String): DataFrame =
-    Stores.materialized(s, dir, "fidxm") {
-      TextAnalysis.indexMergeSlices(erasedWarehouse(s, dir).index)
-    }
-
-  /** The post-forget CAPPED serving index (maxPostings = 1000) — the
-    * shared artifact of the q288/q289 reads: the per-token rank Window
-    * runs once at build, exactly the [[Stores.cappedIndex]] posture
-    * applied to the erased warehouse.
-    */
-  private def erasedIndexCapped(s: SparkSession, dir: String): DataFrame =
-    Stores.materialized(s, dir, "fcidx1000") {
-      TextAnalysis.cappedIndex(erasedIndexMerged(s, dir),
-        maxPostings = 1000)
-    }
-
-  private def erasedChunksMerged(s: SparkSession, dir: String): DataFrame =
-    Stores.materialized(s, dir, "fchm") {
-      TextAnalysis.indexMergeSlices(erasedWarehouse(s, dir).chunks)
-    }
-
-  private def erasedPositionalMerged(s: SparkSession,
-                                     dir: String): DataFrame =
-    Stores.materialized(s, dir, "fpidxm") {
-      TextAnalysis.positionalMergeSlices(erasedWarehouse(s, dir).positional)
-    }
-
-  /** Build the four post-forget materialized merges — the
-    * [[Stores.prewarm]] hook for the erased family (they live here,
-    * not in Stores, because the standing erasure request is the
-    * forget family's contract). Same safety as every prewarm build:
-    * each build is serve()-locked per table, and the one internal
-    * dependency (capped → merged index) acquires locks in order.
-    */
-  private[graft] def prewarmErased(s: SparkSession, dir: String): Unit = {
-    erasedIndexMerged(s, dir)
-    erasedIndexCapped(s, dir)
-    erasedChunksMerged(s, dir)
-    erasedPositionalMerged(s, dir)
-  }
-
   val all: Seq[Query] = Seq(
     // right-to-be-forgotten cascade audit: one erasure request
     // (doc_id % 97 = 0) audited against EVERY warehouse family — the

@@ -13,17 +13,6 @@ import DedupQueries.{duckBandsCte, duckEdgesBody}
   * faceted, filtered, hybrid and passage retrieval.
   */
 object SearchQueries {
-  /** The capped serving view over the WRITTEN inverted-index store
-    * ([[Stores.index]]): bucket-file read → zero-Exchange tf-sum merge
-    * → the shared capped read body. The retrieval family's index
-    * source (q203/q206/q207/q223) — postings come off disk, never a
-    * per-query corpus rescan (the store is built once per process;
-    * real engines build it once per ingest, ever).
-    */
-  private def storedIndex(s: SparkSession, dir: String,
-                          maxPostings: Int): DataFrame =
-    Stores.cappedIndex(s, dir, maxPostings)
-
   /** The phrase/proximity serving view: the positional store
     * PREFILTERED to the caller's query-token frame (a broadcast
     * semi-join on token — the bucket scan streams through it) BEFORE
@@ -138,7 +127,7 @@ object SearchQueries {
     // top-20 by combined tf; everything after the vocab argmax runs
     // at serving scale, and the corpus text is never rescanned
     Query("q203_and_query", (s, dir) =>
-      TextAnalysis.andQuery(storedIndex(s, dir, maxPostings = 1000),
+      TextAnalysis.andQuery(Stores.cappedIndex(s, dir),
         k = 20),
       // the capped-index read replayed end-to-end: same cap (1000),
       // same top-2-df term pick, same combined-tf ranking
@@ -276,7 +265,7 @@ object SearchQueries {
     // index AND corpus count both come off the store pair (postings +
     // norms file) — the query plan touches no corpus text at all
     Query("q206_bm25", (s, dir) =>
-      TextAnalysis.bm25Query(storedIndex(s, dir, maxPostings = 1000),
+      TextAnalysis.bm25Query(Stores.cappedIndex(s, dir),
         Stores.norms(s, dir)
           .agg(countDistinct(col("doc_id")).as("n_docs")), k = 20),
       // the BM25 read replayed: same capped postings, same top-2-df term
@@ -331,7 +320,7 @@ object SearchQueries {
     // score is ONE correctly-rounded division of exact integers and
     // the OR sum ONE addition in fixed order — bit-exact both engines
     Query("q207_bm25_full", (s, dir) =>
-      TextAnalysis.bm25FullQuery(storedIndex(s, dir, maxPostings = 1000),
+      TextAnalysis.bm25FullQuery(Stores.cappedIndex(s, dir),
         Stores.norms(s, dir), k = 20),
       // full BM25 replayed: same integer numerator/denominator per
       // term, one division + one fixed-order addition of doubles
@@ -464,7 +453,7 @@ object SearchQueries {
     // oracle is the EXHAUSTIVE q206 scoring: green = the pruned read
     // provably returns the exhaustive top-20
     Query("q223_ta_topk", (s, dir) =>
-      TextAnalysis.taTopK(storedIndex(s, dir, maxPostings = 1000),
+      TextAnalysis.taTopK(Stores.cappedIndex(s, dir),
         Stores.norms(s, dir)
           .agg(countDistinct(col("doc_id")).as("n_docs")),
         k = 20, m = 256),
@@ -643,7 +632,7 @@ object SearchQueries {
     // test is a hash aggregate (distinct matched tokens == k), never
     // a k-way join chain; served from the materialized capped index
     Query("q259_and_trigram", (s, dir) =>
-      TextAnalysis.andQueryK(storedIndex(s, dir, maxPostings = 1000),
+      TextAnalysis.andQueryK(Stores.cappedIndex(s, dir),
         trigramTerms(s, dir),
         k = 20),
       // AND-k over the capped index replayed: same capped postings as
@@ -695,7 +684,7 @@ object SearchQueries {
     // the identical float expression tree; served from the
     // materialized capped index + norms store
     Query("q260_bm25_trigram", (s, dir) =>
-      TextAnalysis.bm25QueryK(storedIndex(s, dir, maxPostings = 1000),
+      TextAnalysis.bm25QueryK(Stores.cappedIndex(s, dir),
         Stores.norms(s, dir)
           .agg(countDistinct(col("doc_id")).as("n_docs")),
         trigramTerms(s, dir),
@@ -761,7 +750,7 @@ object SearchQueries {
     // index + norms store. The user story every other retrieval
     // entry's deterministic term pick stands in for
     Query("q262_search_literal", (s, dir) =>
-      TextAnalysis.bm25QueryK(storedIndex(s, dir, maxPostings = 1000),
+      TextAnalysis.bm25QueryK(Stores.cappedIndex(s, dir),
         Stores.norms(s, dir)
           .agg(countDistinct(col("doc_id")).as("n_docs")),
         TextAnalysis.searchTerms(s, "hash join window"),
@@ -958,7 +947,7 @@ object SearchQueries {
     // BM25 read — three written stores composed (delneigh → cidx +
     // norms), the corpus touched by none of them
     Query("q267_corrected_search", (s, dir) =>
-      TextAnalysis.bm25QueryK(storedIndex(s, dir, maxPostings = 1000),
+      TextAnalysis.bm25QueryK(Stores.cappedIndex(s, dir),
         Stores.norms(s, dir)
           .agg(countDistinct(col("doc_id")).as("n_docs")),
         TextAnalysis.fuzzyTerms(Stores.deletions(s, dir), "sow", k = 1)
@@ -1016,7 +1005,7 @@ object SearchQueries {
     // drop — scoring 0, as an unknown word should), and the corrected
     // frame runs the q262 k-term BM25 body off the capped index
     Query("q268_typo_search", (s, dir) =>
-      TextAnalysis.bm25QueryK(storedIndex(s, dir, maxPostings = 1000),
+      TextAnalysis.bm25QueryK(Stores.cappedIndex(s, dir),
         Stores.norms(s, dir)
           .agg(countDistinct(col("doc_id")).as("n_docs")),
         TextAnalysis.correctTerms(Stores.deletions(s, dir),
@@ -1081,7 +1070,7 @@ object SearchQueries {
     // nowhere; one join + one aggregate for both facet dimensions
     Query("q269_faceted_search", (s, dir) =>
       TextAnalysis.facetCounts(
-        storedIndex(s, dir, maxPostings = 1000)
+        Stores.cappedIndex(s, dir)
           .join(broadcast(TextAnalysis.searchTerms(s, "hash join window")
             .select(col("token"))), Seq("token")),
         Stores.docMeta(s, dir), Seq("lang", "source")),
@@ -1119,7 +1108,7 @@ object SearchQueries {
     // restriction is a semi-join on the cap-bounded hit set, scoring
     // statistics stay global, and the rank runs within the filter
     Query("q270_filtered_search", (s, dir) =>
-      TextAnalysis.bm25QueryK(storedIndex(s, dir, maxPostings = 1000),
+      TextAnalysis.bm25QueryK(Stores.cappedIndex(s, dir),
         Stores.norms(s, dir)
           .agg(countDistinct(col("doc_id")).as("n_docs")),
         TextAnalysis.searchTerms(s, "hash join window"),
@@ -1181,7 +1170,7 @@ object SearchQueries {
     // stacks fuse this way
     Query("q271_hybrid_rrf", (s, dir) =>
       Similarity.rrfFuse(
-        TextAnalysis.bm25QueryK(storedIndex(s, dir, maxPostings = 1000),
+        TextAnalysis.bm25QueryK(Stores.cappedIndex(s, dir),
           Stores.norms(s, dir)
             .agg(countDistinct(col("doc_id")).as("n_docs")),
           TextAnalysis.searchTerms(s, "hash join window"),
@@ -1316,7 +1305,7 @@ object SearchQueries {
     // read with the seed excluded; one pushed doc fetch + dictionary
     // probes + the cap-bounded retrieval, corpus rescanned nowhere
     Query("q273_more_like_this", (s, dir) =>
-      TextAnalysis.moreLikeThis(storedIndex(s, dir, maxPostings = 1000),
+      TextAnalysis.moreLikeThis(Stores.cappedIndex(s, dir),
         Stores.norms(s, dir)
           .agg(countDistinct(col("doc_id")).as("n_docs")),
         Stores.vocab(s, dir),
@@ -1383,7 +1372,7 @@ object SearchQueries {
     // rerank) vs q271's rank-only fusion of two independent lists
     Query("q274_rerank_cosine", (s, dir) =>
       Similarity.rerankCosine(
-        TextAnalysis.bm25QueryK(storedIndex(s, dir, maxPostings = 1000),
+        TextAnalysis.bm25QueryK(Stores.cappedIndex(s, dir),
           Stores.norms(s, dir)
             .agg(countDistinct(col("doc_id")).as("n_docs")),
           TextAnalysis.searchTerms(s, "hash join window"),
@@ -1463,7 +1452,7 @@ object SearchQueries {
     // each cluster represented by its best-scoring doc — the "group
     // similar results" read off two stores, corpus touched nowhere
     Query("q275_collapse_search", (s, dir) =>
-      TextAnalysis.collapseSearch(storedIndex(s, dir, maxPostings = 1000),
+      TextAnalysis.collapseSearch(Stores.cappedIndex(s, dir),
         Stores.norms(s, dir)
           .agg(countDistinct(col("doc_id")).as("n_docs")),
         TextAnalysis.searchTerms(s, "hash join window"),
@@ -1537,7 +1526,7 @@ object SearchQueries {
     // its two best partners through the k-term BM25 read; one pushed
     // store probe, dictionary-scale work before the cap-bounded read
     Query("q278_expansion_search", (s, dir) =>
-      TextAnalysis.bm25QueryK(storedIndex(s, dir, maxPostings = 1000),
+      TextAnalysis.bm25QueryK(Stores.cappedIndex(s, dir),
         Stores.norms(s, dir)
           .agg(countDistinct(col("doc_id")).as("n_docs")),
         TextAnalysis.expandTerms(Stores.collocations(s, dir),
@@ -1657,7 +1646,7 @@ object SearchQueries {
     // probe on the written store, then the semi-down/anti-back
     // broadcast pattern — no doc-scale shuffle)
     Query("q281_negative_search", (s, dir) =>
-      TextAnalysis.bm25QueryK(storedIndex(s, dir, maxPostings = 1000),
+      TextAnalysis.bm25QueryK(Stores.cappedIndex(s, dir),
         Stores.norms(s, dir)
           .agg(countDistinct(col("doc_id")).as("n_docs")),
         TextAnalysis.searchTerms(s, "hash join"),
@@ -1714,7 +1703,7 @@ object SearchQueries {
     // best chunk (MaxP), and the winning chunk_id rides along
     Query("q282_passage_search", (s, dir) =>
       TextAnalysis.passageSearch(
-        Stores.chunkIndex(s, dir, maxPostings = 1000),
+        Stores.chunkIndex(s, dir),
         Stores.chunkStats(s, dir),
         TextAnalysis.searchTerms(s, "hash join window"),
         nTerms = 3, k = 10, chunkKeyBase = Stores.ChunkKeyBase),
@@ -1834,7 +1823,7 @@ object SearchQueries {
     // (WindowGroupLimit — more queries = more partitions, never more
     // single-task work)
     Query("q284_search_batch", (s, dir) =>
-      TextAnalysis.bm25QueryBatch(storedIndex(s, dir, maxPostings = 1000),
+      TextAnalysis.bm25QueryBatch(Stores.cappedIndex(s, dir),
         Stores.norms(s, dir)
           .agg(countDistinct(col("doc_id")).as("n_docs")),
         TextAnalysis.searchTermsBatch(s,
@@ -1895,7 +1884,7 @@ object SearchQueries {
     Query("q283_rag_context", (s, dir) =>
       Stores.chunkTable(s, dir)
         .join(broadcast(TextAnalysis.passageSearch(
-          Stores.chunkIndex(s, dir, maxPostings = 1000),
+          Stores.chunkIndex(s, dir),
           Stores.chunkStats(s, dir),
           TextAnalysis.searchTerms(s, "hash join window"),
           nTerms = 3, k = 5, chunkKeyBase = Stores.ChunkKeyBase)),
@@ -2111,7 +2100,7 @@ object SearchQueries {
     Query("q294_term_snippets", (s, dir) =>
       TextAnalysis.termSnippets(
         Tables.documents(s, dir),
-        TextAnalysis.bm25QueryK(storedIndex(s, dir, maxPostings = 1000),
+        TextAnalysis.bm25QueryK(Stores.cappedIndex(s, dir),
           Stores.norms(s, dir)
             .agg(countDistinct(col("doc_id")).as("n_docs")),
           TextAnalysis.searchTerms(s, "hash join window"),
@@ -2198,7 +2187,7 @@ object SearchQueries {
     // qid-partitioned WindowGroupLimit
     Query("q295_passage_batch", (s, dir) =>
       TextAnalysis.passageSearchBatch(
-        Stores.chunkIndex(s, dir, maxPostings = 1000),
+        Stores.chunkIndex(s, dir),
         Stores.chunkStats(s, dir),
         TextAnalysis.searchTermsBatch(s,
           Seq("hash join window", "sort merge", "filter scan")),

@@ -665,8 +665,9 @@ object SimilarityQueries {
     // assignment with q25's zero-norm guard). `ingested` tags which
     // lifecycle path produced each row; AnnStoreSpec drives the
     // PHYSICAL append (old bucket files untouched, post-ingest search
-    // ≡ rebuilt-store search); jobs.IngestStaleness measures the
-    // recall decay that tells the operator when to re-centroid
+    // ≡ rebuilt-store search); PLANS.md § "q167 incremental ANN-store
+    // ingest" records the recall decay that tells the operator when
+    // to re-centroid
     Query("q167_ivf_ingest", (s, dir) => {
       val emb = Tables.embeddings(s, dir)
       val centroids = emb.filter(col("vec_id") < 8)

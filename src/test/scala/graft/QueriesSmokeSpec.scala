@@ -48,6 +48,25 @@ class QueriesSmokeSpec extends AnyFunSuite {
     assert(badTwin.isEmpty, s"twin without an oracle: $badTwin")
   }
 
+  test("prewarm builds every declared store: reading them afterwards adds no table") {
+    // a fresh copy of the fixture, so prewarm is the only builder of its
+    // stores (prewarm logs and swallows a store's non-fatal build error)
+    val copy = java.nio.file.Files.createTempDirectory("graft-prewarm-")
+    try {
+      org.apache.commons.io.FileUtils.copyDirectory(new java.io.File(dir), copy.toFile)
+      val d = copy.toString
+      Stores.prewarm(spark, d, 2)
+      def tables = spark.catalog.listTables().collect().map(_.name).toSet
+      val built = tables
+      Stores.declared.foreach(_.invoke(Stores, spark, d))
+      assert(tables -- built === Set.empty[String])
+      val k = Stores.key(d)
+      val forgetAndQ298 = Seq("fidxm", "fcidx1000", "fchm", "fpidxm")
+        .map(f => s"graft_${f}_$k") :+ s"graft_q298_${k}_pq"
+      assert(forgetAndQ298.filterNot(built) === Nil)
+    } finally org.apache.commons.io.FileUtils.deleteQuietly(copy.toFile)
+  }
+
   test("pv windows sum to total view count") {
     import org.apache.spark.sql.functions._
     val views = Tables.events(spark, dir)
